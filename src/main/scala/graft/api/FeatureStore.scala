@@ -269,7 +269,8 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     val (sNs, sName) = parseName(srcFullName)
     val (dNs, dName) = parseName(destFullName)
     catalog.cloneFeature(sNs, sName, dNs, dName)
-    store(namespaceOf(sNs)).copy(sName, dName, store(namespaceOf(dNs)))
+    val (sNsObj, f) = featureOf(srcFullName)
+    store(sNsObj).copy(sName, dName, store(namespaceOf(dNs)), pinnedType(f), f.partition)
   }
 
   /** Collapse a feature's append history to one row per time (optionally
@@ -581,7 +582,7 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
           """SELECT 0L AS n, CAST(NULL AS TIMESTAMP) AS tmin, CAST(NULL AS TIMESTAMP) AS tmax,
             |  CAST(NULL AS DOUBLE) AS vmin, CAST(NULL AS DOUBLE) AS vmax""".stripMargin)
       case _ =>
-        st.read(f.name, valueType = valueTypeOf(f))
+        st.read(f.name, valueType = pinnedType(f), partitionStyle = f.partition)
           .agg(count(lit(1)).as("n"),
             min(col("time")).as("tmin"), max(col("time")).as("tmax"),
             min(col("value")).as("vmin"), max(col("value")).as("vmax"))
@@ -634,9 +635,13 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     (nsObj, f)
   }
 
-  private def valueTypeOf(f: Feature): DataType =
-    if (f.serialized) StringType
-    else f.valueType.map(DataType.fromJson).getOrElse(DoubleType)
+  /** The stored value type the catalog pins for `f` — serialized
+    * features always store JSON strings — or None before the first real
+    * save. Plain-backend reads open typed with it and skip inference. */
+  private def pinnedType(f: Feature): Option[DataType] =
+    if (f.serialized) Some(StringType) else f.valueType.map(DataType.fromJson)
+
+  private def valueTypeOf(f: Feature): DataType = pinnedType(f).getOrElse(DoubleType)
 
   /** One feature's deduped (time, value) series; recursive for transforms
     * with cycle detection (_model.py:186-228). `clipFrom` is deferred when
@@ -686,7 +691,7 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
           f.name,
           from = effFrom,
           to = to,
-          valueType = valueTypeOf(f),
+          valueType = pinnedType(f),
           partitionStyle = f.partition,
           asOfVersion = asOfVersion)
         postProcess(raw, f, timeTravel)
@@ -695,20 +700,32 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
 
   /** Shared read-side pipeline: time travel -> last-writer-wins dedup ->
     * serialized-envelope unwrap (reference deserializes on load,
-    * dask.py:123-131). Used by loadSeries and the first/last endpoint
-    * lookups so the two paths can never drift.
+    * dask.py:123-131). The endpoint lookups run the same travel and
+    * unwrap around [[TimeseriesOps.endpointRow]], which picks the same
+    * winner as the dedup (see [[endpointOf]]).
     */
   private def postProcess(
       raw: DataFrame,
       f: Feature,
-      timeTravel: Option[String]): DataFrame = {
-    val traveled = timeTravel.map(d => TimeseriesOps.timeTravel(raw, d)).getOrElse(raw)
-    val deduped = TimeseriesOps.dedupLatest(traveled)
-    val unwrapped =
-      if (f.serialized) deduped.withColumn("value", get_json_object(col("value"), "$.v"))
-      else deduped
-    unwrapped.select("time", "value")
-  }
+      timeTravel: Option[String]): DataFrame =
+    unwrap(TimeseriesOps.dedupLatest(travel(raw, timeTravel)), f)
+
+  private def travel(raw: DataFrame, timeTravel: Option[String]): DataFrame =
+    timeTravel.map(d => TimeseriesOps.timeTravel(raw, d)).getOrElse(raw)
+
+  private def unwrap(deduped: DataFrame, f: Feature): DataFrame =
+    (if (f.serialized) deduped.withColumn("value", get_json_object(col("value"), "$.v"))
+     else deduped).select("time", "value")
+
+  /** The (time, value) row [[postProcess]] would put at the head or
+    * tail of `raw`, found in one top-1 pass with no dedup shuffle. */
+  private def endpointOf(
+      raw: DataFrame,
+      f: Feature,
+      timeTravel: Option[String],
+      fromTail: Boolean): Option[org.apache.spark.sql.Row] =
+    unwrap(TimeseriesOps.endpointRow(travel(raw, timeTravel), fromTail), f)
+      .collect().headOption
 
   /** Flagship read (core.py:246-276): wide frame, one column per feature
     * named `namespace/name`, outer-joined on time and forward-filled;
@@ -948,6 +965,12 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     * point lookup on a years-deep feature touches a few days'
     * directories instead of scanning history. Transformed features fall
     * back to the full DAG load.
+    *
+    * Each width is ONE Spark job with no shuffle: the read opens with
+    * the catalog-pinned schema (no inference job; an unpinned feature
+    * keeps the inferring open) and [[TimeseriesOps.endpointRow]] picks
+    * the last-writer-wins winner at the newest time in a single top-1
+    * pass instead of deduplicating every boundary row first.
     */
   def last(features: Seq[String], timeTravel: Option[String] = None): Map[String, Option[Any]] =
     endpoint(features, timeTravel, fromTail = true)
@@ -1021,8 +1044,7 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
       val row = f.transform match {
         case Some(_) =>
           val df = loadSeries(full, None, None, timeTravel, clipFrom = true, Nil)
-          (if (fromTail) TimeseriesOps.lastRow(df) else TimeseriesOps.firstRow(df))
-            .collect().headOption
+          TimeseriesOps.endpointRow(df, fromTail).collect().headOption
         case None => endpointLookup(nsObj, f, timeTravel, fromTail)._1
       }
       full -> row.map(_.get(1)).filter(_ != null)
@@ -1063,10 +1085,8 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     val read = scala.collection.mutable.ArrayBuffer[Int]()
     val row = widths.iterator.map { w =>
       read += w
-      val raw = st.readPartitions(f.name, parts.take(w), valueTypeOf(f))
-      val df = postProcess(raw, f, timeTravel)
-      (w, (if (fromTail) TimeseriesOps.lastRow(df) else TimeseriesOps.firstRow(df))
-        .collect().headOption)
+      val raw = st.readPartitions(f.name, parts.take(w), pinnedType(f), f.partition)
+      (w, endpointOf(raw, f, timeTravel, fromTail))
     }.collectFirst {
       case (w, Some(r)) if timeTravel.isEmpty || w == parts.length ||
         endpointSettled(r.getTimestamp(0), parts(w), f.partition, fromTail) => Some(r)
@@ -1105,10 +1125,9 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     if (parts.isEmpty) return None
     val widths = Seq(3, 9, parts.length).filter(w => w > 0 && w <= parts.length).distinct
     widths.iterator.map { w =>
-      val raw = st.readPartitions(f.name, parts.take(w), valueTypeOf(f))
+      val raw = st.readPartitions(f.name, parts.take(w), pinnedType(f), f.partition)
         .filter(col("time") < lit(from))
-      val df = postProcess(raw, f, timeTravel)
-      (w, TimeseriesOps.lastRow(df).collect().headOption)
+      (w, endpointOf(raw, f, timeTravel, fromTail = true))
     }.collectFirst {
       case (w, Some(r)) if w == parts.length ||
         endpointSettled(r.getTimestamp(0), parts(w), f.partition, fromTail = true) =>

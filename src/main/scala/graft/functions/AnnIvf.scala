@@ -103,6 +103,8 @@ object AnnIvf {
     // arithmetic is unchanged term for term — same zip_with product,
     // same ascending left-fold sum, same round-6, same larger-j tie via
     // the struct sort — so scores and ranks stay bit-identical.
+    // an empty codebook would plan fine and fail only when executed
+    require(index.centers.nonEmpty, "probeCells needs at least one centroid")
     val cents = typedLit(index.centers.map(_.toSeq))
     val halves = typedLit(index.centers.map(c => c.map(x => x * x).sum / 2))
     val scored = transform(sequence(lit(0), lit(index.centers.size - 1)), j =>

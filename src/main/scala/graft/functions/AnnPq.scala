@@ -153,6 +153,8 @@ object AnnPq {
     * [[encodeKernel]] (AnnPqSpec pins both).
     */
   def encodeExpr(cb: Codebooks, v: Column): Column = {
+    // an empty codebook would plan fine and fail only when executed
+    require(cb.m > 0 && cb.k > 0, "encodeExpr needs at least one subspace and one centroid")
     val books = booksLit(cb)
     val halves = halvesLit(cb)
     transform(sequence(lit(0), lit(cb.m - 1)), mi => {

@@ -448,6 +448,9 @@ object SimilarityOps {
     // disjoint powers of two, so the left-fold sum (with its 0 seed)
     // equals the unrolled reduce bit for bit; the per-plane dot,
     // round-6 and sign cut are unchanged.
+    // sequence(0, -1) counts DOWN to [0, -1]: an empty plane set would
+    // plan fine and fail only when executed
+    require(planes.nonEmpty, "signBucket needs at least one hyperplane")
     val planesL = typedLit(planes.map(_.toSeq))
     val pows = typedLit(planes.indices.map(j => 1 << j))
     aggregate(sequence(lit(0), lit(planes.size - 1)), lit(0), (acc, j) =>
@@ -457,6 +460,7 @@ object SimilarityOps {
 
   /** Long-packed variant for > 30 planes (wide multi-band keys). */
   def signBucketLong(v: Column, planes: Seq[Array[Double]]): Column = {
+    require(planes.nonEmpty, "signBucketLong needs at least one hyperplane")
     val planesL = typedLit(planes.map(_.toSeq))
     val pows = typedLit(planes.indices.map(j => 1L << j))
     aggregate(sequence(lit(0), lit(planes.size - 1)), lit(0L), (acc, j) =>

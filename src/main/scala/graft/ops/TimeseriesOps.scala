@@ -91,6 +91,28 @@ object TimeseriesOps {
   }
 
   // ---------------------------------------------------------------------
+  // A3/O3: endpoint row (point lookup for inference, dask.py:196-221, and
+  // Store.first, _storage/_base.py:33-39) — the dedupLatest winner at the
+  // newest (`fromTail`) or oldest time, WITHOUT the dedup shuffle: top-k
+  // with k=1, which Spark plans as one TakeOrderedAndProject pass.
+  // Same tie rule as dedupLatest: among rows at the endpoint time, max
+  // `created_time`, then the remaining orderable columns descending in
+  // column order. Descending sorts put nulls last and NaN first — the
+  // order max() uses — so the result equals dedupLatest followed by a
+  // time sort. Apply time travel BEFORE this, as before dedup.
+  // ---------------------------------------------------------------------
+  def endpointRow(
+      df: DataFrame,
+      fromTail: Boolean,
+      timeCol: String = TimeCol,
+      createdCol: String = CreatedCol): DataFrame = {
+    val tie = (createdCol +: df.columns.toSeq).distinct
+      .filter(c => c != timeCol && df.columns.contains(c) && isOrderable(df.schema(c).dataType))
+    val byTime = if (fromTail) col(timeCol).desc else col(timeCol).asc
+    df.orderBy(byTime +: tie.map(col(_).desc): _*).limit(1)
+  }
+
+  // ---------------------------------------------------------------------
   // P3: time travel — "as known at time + delta" (dask.py:119-122).
   // delta is a pandas-style alias, e.g. "-15min". Applied BEFORE dedup.
   // ---------------------------------------------------------------------
@@ -956,17 +978,6 @@ object TimeseriesOps {
         w.rangeBetween(Window.unboundedPreceding, Window.currentRow)))
       .drop("__new_session")
   }
-
-  // ---------------------------------------------------------------------
-  // A3/O3: last row by time (point lookup for inference, dask.py:196-221).
-  // Top-k with k=1 — Spark plans a TakeOrderedAndProject, no full sort.
-  // ---------------------------------------------------------------------
-  def lastRow(df: DataFrame, timeCol: String = TimeCol): DataFrame =
-    df.orderBy(col(timeCol).desc).limit(1)
-
-  /** First row by time (Store.first, _storage/_base.py:33-39). */
-  def firstRow(df: DataFrame, timeCol: String = TimeCol): DataFrame =
-    df.orderBy(col(timeCol).asc).limit(1)
 
   /** Largest-triangle downsampling for visualization (LTTB, Steinarsson
     * 2013) in its BUCKET-ANCHOR, fully parallel variant. The classic

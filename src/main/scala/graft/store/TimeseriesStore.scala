@@ -42,6 +42,14 @@ final case class TableStats(
   * an object-store LIST per load). A log-backed feature directory must
   * be read THROUGH the store — raw `spark.read.parquet` on it would
   * see compacted-away duplicates that the log has retired.
+  *
+  * Read schemas: the txlog backend takes its schema from the log's
+  * declared epochs. The plain backend takes it from the caller — the
+  * facade passes the catalog-pinned value type, and `read`,
+  * `readPartitions` and `copy` then open the feature root with that
+  * schema and run no inference job. A caller with no pinned type (an
+  * unpinned tree, e.g. one a stream sink wrote) gets today's inferring
+  * open; the store never guesses a value type for data it reads.
   */
 class TimeseriesStore(
     spark: SparkSession,
@@ -121,18 +129,39 @@ class TimeseriesStore(
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema(valueType))
 
-  /** Plain-backend parquet open honoring the empty contract: a feature
-    * directory can exist with no data files (a crashed first append's
-    * `_temporary`, an external mkdir) — schema inference then throws
-    * where the documented behavior is the empty envelope.
+  /** Plain-backend parquet open of the feature root (so a stream sink's
+    * `_spark_metadata` log still decides the file set).
+    *
+    * With the catalog's pinned value type the schema is KNOWN — `time`,
+    * `created_time`, `value: <pinned>`, plus `partition` as a string
+    * (date style) or int (year style) — and passing it skips the
+    * per-open footer-inference job. A file-less directory then reads as
+    * zero rows of that schema.
+    *
+    * Without a pinned type (a tree written outside the facade, e.g. by
+    * `EventStreams.featureSink`) the open infers, as a guessed type
+    * could misread every value. A feature directory can exist with no
+    * data files (a crashed first append's `_temporary`, an external
+    * mkdir) — inference then throws where the documented behavior is
+    * the empty envelope.
     */
-  private def parquetOrEmpty(name: String, valueType: DataType): DataFrame =
-    try spark.read.options(storageOptions).parquet(featurePath(name))
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-        if Option(e.getCondition).exists(_.startsWith("UNABLE_TO_INFER_SCHEMA")) =>
-        emptyFrame(valueType)
-    }
+  private def parquetOrEmpty(
+      name: String,
+      valueType: Option[DataType],
+      partitionStyle: String): DataFrame = valueType match {
+    case Some(vt) =>
+      val pType = if (partitionStyle == "year") IntegerType else StringType
+      spark.read.options(storageOptions)
+        .schema(emptySchema(vt).add("partition", pType))
+        .parquet(featurePath(name))
+    case None =>
+      try spark.read.options(storageOptions).parquet(featurePath(name))
+      catch {
+        case e: org.apache.spark.sql.AnalysisException
+          if Option(e.getCondition).exists(_.startsWith("UNABLE_TO_INFER_SCHEMA")) =>
+          emptyFrame(DoubleType)
+      }
+  }
 
   /** S3 (save validation + normalization, dask.py:223-263):
     *  - `time` and `value` columns required, nothing else but
@@ -658,18 +687,22 @@ class TimeseriesStore(
   /** S1 + P1/P2: scan with time-range predicate AND the derived partition
     * predicate so directory pruning kicks in before row-group pushdown.
     * Returns the 3-column envelope (partition dropped, dask.py:116-117).
+    * `valueType` is the catalog-pinned value type: on the plain backend
+    * it makes the open schema-typed (see [[parquetOrEmpty]]); None
+    * infers, and types an empty envelope as double.
     */
   def read(
       name: String,
       from: Option[Timestamp] = None,
       to: Option[Timestamp] = None,
-      valueType: DataType = DoubleType,
+      valueType: Option[DataType] = None,
       partitionStyle: String = "date",
       asOfVersion: Option[Long] = None): DataFrame = {
-    if (!exists(name)) return emptyFrame(valueType)
-    if (logBacked) return txRead(name, from, to, valueType, partitionStyle, asOfVersion)
+    val emptyType = valueType.getOrElse(DoubleType)
+    if (!exists(name)) return emptyFrame(emptyType)
+    if (logBacked) return txRead(name, from, to, emptyType, partitionStyle, asOfVersion)
     require(asOfVersion.isEmpty, "asOfVersion requires the txlog backend")
-    val df = parquetOrEmpty(name, valueType)
+    val df = parquetOrEmpty(name, valueType, partitionStyle)
     if (!df.columns.contains("partition")) return df // empty-contract frame
     // Partition bounds are widened by one unit each side and anchored on
     // UTC — NOT the reader's session zone. Partition strings were derived
@@ -773,18 +806,23 @@ class TimeseriesStore(
     * final partition(s)" intent, _model.py:251-254): a point lookup on a
     * 100 TB feature touches one day's directory, not the history.
     */
-  def readPartitions(name: String, parts: Seq[String], valueType: DataType): DataFrame = {
-    if (!exists(name) || parts.isEmpty) return emptyFrame(valueType)
+  def readPartitions(
+      name: String,
+      parts: Seq[String],
+      valueType: Option[DataType] = None,
+      partitionStyle: String = "date"): DataFrame = {
+    val emptyType = valueType.getOrElse(DoubleType)
+    if (!exists(name) || parts.isEmpty) return emptyFrame(emptyType)
     if (logBacked) {
       val wanted = parts.toSet
       val log = txLog(name)
       val adds = log.snapshot().filter(a => wanted(a.partition))
-      if (adds.isEmpty) return emptyFrame(valueType)
+      if (adds.isEmpty) return emptyFrame(emptyType)
       val schemas = log.schemaHistory()
-      return openAdds(name, adds, schemas, partitionStyle = "date")
+      return openAdds(name, adds, schemas, partitionStyle)
         .select(dataCols(schemas).map(col).toIndexedSeq: _*)
     }
-    val df = parquetOrEmpty(name, valueType)
+    val df = parquetOrEmpty(name, valueType, partitionStyle)
     if (!df.columns.contains("partition")) return df // empty-contract frame
     df.filter(col("partition").cast(StringType).isin(parts: _*))
       .select(TimeCol, CreatedCol, ValueCol)
@@ -1459,18 +1497,24 @@ class TimeseriesStore(
     * Backend-aware on both ends: a log-backed source reads its LIVE
     * snapshot (raw directory parquet would resurrect compacted-away
     * duplicates), and the destination's `write` commits through its own
-    * backend.
+    * backend. A plain source opens with the source feature's pinned
+    * `valueType` when it has one (see [[parquetOrEmpty]]).
     */
-  def copy(name: String, toName: String, dest: TimeseriesStore): Unit = {
+  def copy(
+      name: String,
+      toName: String,
+      dest: TimeseriesStore,
+      valueType: Option[DataType] = None,
+      partitionStyle: String = "date"): Unit = {
     if (exists(name)) {
       val df =
         if (logBacked) {
           val log = txLog(name)
           val adds = log.snapshot()
           if (adds.isEmpty) return
-          openAdds(name, adds, log.schemaHistory(), partitionStyle = "date")
-        } else parquetOrEmpty(name, DoubleType)
-      if (!df.columns.contains("partition")) return // file-less dir: nothing to copy
+          openAdds(name, adds, log.schemaHistory(), partitionStyle)
+        } else parquetOrEmpty(name, valueType, partitionStyle)
+      if (df.inputFiles.isEmpty) return // file-less dir: nothing to copy
       // carry every data column (an evolved source clones its full
       // latest schema; the destination declares it on first write)
       dest.write(toName, df.select(

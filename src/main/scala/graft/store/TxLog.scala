@@ -583,7 +583,7 @@ class TxLog(
         if (a.fsize.isDefined) a
         else try a.copy(fsize =
           Some(fs.getFileStatus(new Path(tableDir, a.path)).getLen))
-        catch { case _: java.io.IOException => a }
+        catch { case scala.util.control.NonFatal(_) => a }
       }
       val lines = (TxAction(commitTs = Some(commitTs)) +:
         (schemas.map(sj => TxAction(schemaJson = Some(sj))) ++

@@ -45,4 +45,11 @@ class AnnIvfStoredSpec extends SparkSpec {
       .select("q_id", "c_id", "cosine", "rank").collect().map(_.toSeq).toSet
     assert(mem == st && st.nonEmpty)
   }
+
+  test("probeCells rejects an empty codebook when the plan is built") {
+    val empty = AnnIvf.Index(Nil, corpus, "embedding")
+    val e = intercept[IllegalArgumentException](
+      AnnIvf.probeCells(empty, col("embedding").cast("array<double>"), nProbe = 1))
+    assert(e.getMessage.contains("at least one centroid"))
+  }
 }

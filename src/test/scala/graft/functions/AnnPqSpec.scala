@@ -112,4 +112,11 @@ class AnnPqSpec extends SparkSpec {
       assert(lutE === lutK, s"lutOf/lutExpr disagree at k=$k")
     }
   }
+
+  test("encodeExpr rejects an empty codebook when the plan is built") {
+    for (cb <- Seq(AnnPq.Codebooks(2, Nil), AnnPq.Codebooks(2, Seq(Nil, Nil)))) {
+      val e = intercept[IllegalArgumentException](AnnPq.encodeExpr(cb, col("v")))
+      assert(e.getMessage.contains("at least one subspace and one centroid"))
+    }
+  }
 }

@@ -207,4 +207,14 @@ class SimilarityOpsSpec extends SparkSpec {
     assert(SimilarityOps.sizedPlanesPerBand(1L << 40) == 20) // cap clamp
     intercept[IllegalArgumentException](SimilarityOps.sizedPlanesPerBand(0))
   }
+
+  test("signBucket rejects an empty plane set when the plan is built") {
+    val e = intercept[IllegalArgumentException](SimilarityOps.signBucket(col("v"), Nil))
+    assert(e.getMessage.contains("at least one hyperplane"))
+  }
+
+  test("signBucketLong rejects an empty plane set when the plan is built") {
+    val e = intercept[IllegalArgumentException](SimilarityOps.signBucketLong(col("v"), Nil))
+    assert(e.getMessage.contains("at least one hyperplane"))
+  }
 }

@@ -147,4 +147,21 @@ class ScaleSpec extends SparkSpec {
       Scale.heavyHitters(rows.toDF("k"), "k", capacity = 3, minShare = 0.2)
     }
   }
+
+  test("PartitionEstimate declines a scan under a partition-column filter") {
+    import org.apache.spark.sql.graftbridge.PartitionEstimate.leafScanPartitions
+    val dir = tmpDir("graft-estimate")
+    spark.range(400).select(col("id"), (col("id") % 4).as("p"))
+      .write.mode("overwrite").partitionBy("p").parquet(dir)
+    val df = spark.read.parquet(dir)
+    val all = leafScanPartitions(df)
+    assert(all.exists(_ >= 1L))
+    // a data-column filter prunes no directory: the listing estimate holds
+    assert(leafScanPartitions(df.filter(col("id") > 10)) == all)
+    // a partition filter does — directly, through a rename, and through
+    // one side of a union — so the full listing would overcount
+    assert(leafScanPartitions(df.filter(col("p") === 1)).isEmpty)
+    assert(leafScanPartitions(df.select(col("id"), col("p").as("q")).filter(col("q") === 1)).isEmpty)
+    assert(leafScanPartitions(df.union(spark.read.parquet(dir)).filter(col("p") === 1)).isEmpty)
+  }
 }

@@ -210,14 +210,46 @@ class TimeseriesOpsSpec extends SparkSpec {
       narrow.orderBy("time").collect().map(_.toSeq).toSeq)
   }
 
-  test("lastRow and timeBounds") {
+  test("endpointRow and timeBounds") {
     val df = series(
       ("2021-01-01 00:00:00", "2021-01-01 00:00:00", 1.0),
       ("2021-01-05 00:00:00", "2021-01-01 00:00:00", 5.0))
-    assert(TimeseriesOps.lastRow(df).collect().head.getDouble(2) == 5.0)
+    assert(TimeseriesOps.endpointRow(df, fromTail = true).collect().head.getDouble(2) == 5.0)
+    assert(TimeseriesOps.endpointRow(df, fromTail = false).collect().head.getDouble(2) == 1.0)
     val (lo, hi) = TimeseriesOps.timeBounds(df)
     assert(lo.contains(ts("2021-01-01")) && hi.contains(ts("2021-01-05")))
     assert(TimeseriesOps.timeBounds(df.filter(lit(false))) == (None, None))
+  }
+
+  test("endpointRow picks the dedupLatest winner at either end of the series") {
+    val t1 = "2021-01-01 00:00:00"
+    val t9 = "2021-01-09 00:00:00"
+    // each end: a created_time rewrite, a created_time tie between
+    // values, a NaN and a null — in both orders across the ends
+    val df = Seq[(String, String, java.lang.Double, String)](
+      (t1, "2021-01-01 00:00:00", 1.0, "a"),
+      (t1, "2021-01-01 02:00:00", Double.NaN, "a"),
+      (t1, "2021-01-01 02:00:00", null, "z"),
+      ("2021-01-05 00:00:00", "2021-01-05 00:00:00", 5.0, "m"),
+      (t9, "2021-01-09 01:00:00", 3.0, "b"),
+      (t9, "2021-01-09 01:00:00", 7.0, "a"),
+      (t9, "2021-01-09 01:00:00", null, "c"),
+      (t9, "2021-01-09 00:00:00", 9.0, "d")).toDF("t", "c", "value", "tag")
+      .select(col("t").cast("timestamp").as("time"),
+        col("c").cast("timestamp").as("created_time"), col("value"), col("tag"))
+    def str(rows: Array[Row]) = rows.map(_.toSeq.map(String.valueOf)).toSeq
+    for (in <- Seq(df, df.drop("tag"), TimeseriesOps.timeTravel(df, "0s"));
+         fromTail <- Seq(true, false)) {
+      val sorted = TimeseriesOps.dedupLatest(in)
+        .orderBy(if (fromTail) col("time").desc else col("time").asc).limit(1)
+      assert(str(TimeseriesOps.endpointRow(in, fromTail).collect()) == str(sorted.collect()),
+        s"fromTail=$fromTail cols=${in.columns.mkString(",")}")
+    }
+    assert(TimeseriesOps.endpointRow(df, fromTail = true).head().getDouble(2) == 7.0)
+    assert(TimeseriesOps.endpointRow(df, fromTail = false).head().getDouble(2).isNaN)
+    // the top-1 is one ordered take: no exchange in the physical plan
+    val plan = TimeseriesOps.endpointRow(df, fromTail = true).queryExecution.executedPlan.toString
+    assert(plan.contains("TakeOrderedAndProject") && !plan.contains("Exchange"), plan)
   }
 
   test("asofJoin attaches latest right value at-or-before each left row, per key") {
