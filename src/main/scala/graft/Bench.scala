@@ -167,7 +167,10 @@ object Bench {
     // every forked line with "[info] " (fixed via run/outputStrategy in
     // build.sbt). Last + unprefixed makes head-grep, tail-grep and
     // last-JSON-line consumers all land on a complete parseable object
-    // carrying EVERY gate.
+    // carrying EVERY gate. The line is NOT bounded: a consumer reading a
+    // tail window of stdout needs one that holds the whole line (~9 KB at
+    // 258 gates); one with a smaller window reads bench_results.json,
+    // which carries the identical line.
     println(line)
     spark.stop()
     // A crashed query must surface as a failed RUN, not just a JSON field:

@@ -147,11 +147,11 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
       storeCache.get(ns.name) match {
         case Some((cached, st)) if cached == ns => return st
         case None =>
-          val st = new TimeseriesStore(spark, ns.url, ns.storageOptions, ns.backend)
+          val st = new TimeseriesStore(spark, ns.url, ns.storageOptions)
           if (storeCache.putIfAbsent(ns.name, (ns, st)).isEmpty) return st
           st.close() // lost the publish race; nobody ever saw these handles
         case Some(stale) =>
-          val st = new TimeseriesStore(spark, ns.url, ns.storageOptions, ns.backend)
+          val st = new TimeseriesStore(spark, ns.url, ns.storageOptions)
           if (storeCache.replace(ns.name, stale, (ns, st))) {
             retiredStores.add((System.currentTimeMillis(), stale._2))
             return st
@@ -184,6 +184,11 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
 
   // -------------------------------------------------------------- catalog
 
+  /** Register a namespace whose features live under `url`. Every
+    * namespace uses the one log-backed layout
+    * ([[graft.store.TimeseriesStore]]); `backend` is recorded in the
+    * catalog for the reference API (`spark`, `dask`, `pandas`, `txlog`)
+    * and chooses nothing. */
   def createNamespace(
       name: String,
       url: String,
@@ -270,7 +275,7 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     val (dNs, dName) = parseName(destFullName)
     catalog.cloneFeature(sNs, sName, dNs, dName)
     val (sNsObj, f) = featureOf(srcFullName)
-    store(sNsObj).copy(sName, dName, store(namespaceOf(dNs)), pinnedType(f), f.partition)
+    store(sNsObj).copy(sName, dName, store(namespaceOf(dNs)), f.partition)
   }
 
   /** Collapse a feature's append history to one row per time (optionally
@@ -285,7 +290,7 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
 
   /** Re-pack a feature's undersized files into ~targetBytes outputs
     * without changing any row (the OPTIMIZE to `compactFeature`'s
-    * dedup): txlog-backed namespaces only. Returns files retired.
+    * dedup). Returns files retired.
     */
   def optimizeFeature(fullName: String, targetBytes: Long = 128L * 1024 * 1024): Long = {
     val (nsObj, f) = featureOf(fullName)
@@ -293,8 +298,8 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     store(nsObj).optimize(f.name, targetBytes)
   }
 
-  /** Row-level transactional delete on a stored feature (txlog
-    * backend) — the GDPR erasure path: predicate over the normalized
+  /** Row-level transactional delete on a stored feature — the GDPR
+    * erasure path: predicate over the normalized
     * columns (time, created_time, value, partition); only files with
     * matches rewrite, one atomic commit. Bytes of pre-delete versions
     * persist for time travel until [[vacuumFeature]] — strict erasure
@@ -306,7 +311,7 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     store(nsObj).deleteWhere(f.name, predicate)
   }
 
-  /** Row-level transactional UPDATE (txlog backend): rows matching
+  /** Row-level transactional UPDATE: rows matching
     * `predicate` take `newValue`; only files with matches rewrite, one
     * atomic commit. Returns rows updated. */
   def updateRows(fullName: String, predicate: Column, newValue: Column): Long = {
@@ -315,7 +320,7 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     store(nsObj).updateWhere(f.name, predicate, newValue)
   }
 
-  /** Widen a stored feature's value type (txlog backend): evolves the
+  /** Widen a stored feature's value type: evolves the
     * TABLE schema and the catalog's pinned value type IN STEP — evolving
     * only the table would leave saveDataFrame preparing batches at the
     * old (narrow) pin and silently truncating before the store could
@@ -332,9 +337,9 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     v
   }
 
-  /** Declare (or replace) a named CHECK constraint on a stored feature
-    * (txlog backend): every future save/merge batch must satisfy the
-    * boolean SQL expression on every row or the write is rejected
+  /** Declare (or replace) a named CHECK constraint on a stored
+    * feature: every future save/merge batch must satisfy the boolean
+    * SQL expression on every row or the write is rejected
     * before anything becomes visible; existing rows are validated at
     * declaration time. Declare "true" to drop. */
   def addFeatureCheck(fullName: String, constraintName: String, boolExpr: String): Long = {
@@ -349,7 +354,7 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     store(nsObj).tableChecks(f.name)
   }
 
-  /** Lakehouse RESTORE (txlog backend): roll a stored feature back to
+  /** Lakehouse RESTORE: roll a stored feature back to
     * table version `v` as a NEW commit — the undo button for a bad
     * merge/delete/append; original bytes, nothing rewritten, itself
     * time-travelable. Fails loudly if vacuum already reclaimed v's
@@ -360,7 +365,7 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     store(nsObj).restore(f.name, version)
   }
 
-  /** Lakehouse MERGE (txlog backend): physical upsert keyed on `time` —
+  /** Lakehouse MERGE: physical upsert keyed on `time` —
     * matched times collapse to the source rows, unseen times insert,
     * one atomic commit, only matched files rewrite. The in-place
     * alternative to save()'s append+LWW for reference-style features
@@ -372,7 +377,7 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     store(nsObj).mergeInto(f.name, source, f.partition)
   }
 
-  /** Rows added between two table versions (CDC-lite, txlog backend) —
+  /** Rows added between two table versions (CDC-lite) —
     * incremental downstream consumption without a table re-scan.
     *
     * The feed is ADD-ONLY: a file rewritten by [[deleteRows]] /
@@ -390,13 +395,13 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     store(nsObj).readChanges(f.name, fromVersion, toVersion, valueTypeOf(f))
   }
 
-  /** Current table version of a stored feature (txlog backend). */
+  /** Current table version of a stored feature. */
   def featureVersion(fullName: String): Long = {
     val (nsObj, f) = featureOf(fullName)
     store(nsObj).tableVersion(f.name)
   }
 
-  /** AS OF TIMESTAMP → table version (txlog backend): the version the
+  /** AS OF TIMESTAMP → table version: the version the
     * table had at the wall-clock instant; compose with the
     * version-taking read/changes APIs. */
   def featureVersionAt(fullName: String, at: java.sql.Timestamp): Long = {
@@ -468,17 +473,17 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     store(nsObj).syncSnapshotIceberg(f.name, dstDir)
   }
 
-  /** Garbage-collect data files retired by compaction. Only meaningful
-    * on a txlog-backed namespace, where compaction retires files
-    * logically (readers with older snapshots keep working) and vacuum
-    * reclaims the bytes; returns the number of files deleted.
+  /** Garbage-collect data files retired by compaction and rewrites:
+    * those retire files logically (readers with older snapshots keep
+    * working) and vacuum reclaims the bytes; returns the number of
+    * files deleted.
     */
   def vacuumFeature(fullName: String, retentionMs: Long = 3600000L): Long = {
     val (nsObj, f) = featureOf(fullName)
     store(nsObj).vacuum(f.name, retentionMs)
   }
 
-  /** OPTIMIZE ZORDER for a stored feature (txlog backend): rewrite its
+  /** OPTIMIZE ZORDER for a stored feature: rewrite its
     * live files clustered on the (day, value) Morton key so ranged
     * reads skip files on time AND [[loadFeatureValueRange]] skips on
     * value. Rows are unchanged; old versions stay time-travelable
@@ -488,7 +493,7 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     store(nsObj).optimizeZorder(f.name, bits)
   }
 
-  /** One-call table maintenance (txlog backend) — the nightly verb:
+  /** One-call table maintenance — the nightly verb:
     * re-pack small files (`zorder = true` instead runs the z-clustered
     * FULL rewrite, refreshing value locality after a day of appends),
     * then vacuum bytes retired longer than `retentionMs` ago. Returns
@@ -553,7 +558,7 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
         col("min"), col("max"), col("p50"))
   }
 
-  /** Metadata-only table statistics (txlog backend): one row
+  /** Metadata-only table statistics: one row
     * (n, tmin, tmax, vmin, vmax) — exact stored-row count, event-time
     * bounds, and value bounds answered from the transaction log alone,
     * ZERO Spark jobs and zero file opens (Delta's numRecords fast
@@ -589,7 +594,7 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     }
   }
 
-  /** Value-predicate scan with file skipping (txlog backend): rows of
+  /** Value-predicate scan with file skipping: rows of
     * `fullName` whose value lies in [vlo, vhi] — on a z-ordered table
     * only the files whose recorded value bounds intersect the range
     * are opened; on an append layout it degrades to a plain ranged
@@ -637,7 +642,8 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
 
   /** The stored value type the catalog pins for `f` — serialized
     * features always store JSON strings — or None before the first real
-    * save. Plain-backend reads open typed with it and skip inference. */
+    * save. Reads take their schema from the feature's log; this types
+    * the empty envelope of a feature with no data yet. */
   private def pinnedType(f: Feature): Option[DataType] =
     if (f.serialized) Some(StringType) else f.valueType.map(DataType.fromJson)
 
@@ -730,10 +736,9 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
   /** Flagship read (core.py:246-276): wide frame, one column per feature
     * named `namespace/name`, outer-joined on time and forward-filled;
     * optional resample onto a regular [from, to] grid step `freq`.
-    * `asOfVersion` time-travels by TABLE version (txlog-backed
-    * namespaces only — the plain parquet backend has no version
-    * history and rejects it): the load resolves every requested
-    * feature, including transform arguments, at that snapshot.
+    * `asOfVersion` time-travels by TABLE version: the load resolves
+    * every requested feature, including transform arguments, at that
+    * snapshot of its log.
     */
   def loadDataFrame(
       features: Seq[String],
@@ -959,18 +964,19 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
   /** Point lookup for inference (core.py:315-331): last value per feature,
     * transforms evaluated at the tail (tested test_featurestore.py:665-672).
     *
-    * Plain features read boundary partitions only — width 3, then
-    * (under timeTravel) 9, then all, stopping as soon as the skew
-    * contract proves the candidate safe (see [[endpointLookup]]) — so a
-    * point lookup on a years-deep feature touches a few days'
-    * directories instead of scanning history. Transformed features fall
-    * back to the full DAG load.
+    * Stored (untransformed) features read boundary partitions only —
+    * width 3, then (under timeTravel) 9, then all, stopping as soon as
+    * the skew contract proves the candidate safe (see
+    * [[endpointLookup]]) — so a point lookup on a years-deep feature
+    * opens a few days' files, picked from the log's partition values,
+    * instead of scanning history. Transformed features fall back to the
+    * full DAG load.
     *
-    * Each width is ONE Spark job with no shuffle: the read opens with
-    * the catalog-pinned schema (no inference job; an unpinned feature
-    * keeps the inferring open) and [[TimeseriesOps.endpointRow]] picks
-    * the last-writer-wins winner at the newest time in a single top-1
-    * pass instead of deduplicating every boundary row first.
+    * Each width is ONE Spark job with no shuffle: the read's schema and
+    * file index come from the feature's log (no inference or listing
+    * job) and [[TimeseriesOps.endpointRow]] picks the last-writer-wins
+    * winner at the newest time in a single top-1 pass instead of
+    * deduplicating every boundary row first.
     */
   def last(features: Seq[String], timeTravel: Option[String] = None): Map[String, Option[Any]] =
     endpoint(features, timeTravel, fromTail = true)

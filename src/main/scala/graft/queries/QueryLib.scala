@@ -746,10 +746,9 @@ object QueryLib {
 
   private val fsStoreTxlog = Q(
     "fs_store_txlog",
-    // the SAME facade path as fs_store_roundtrip but on the
-    // transaction-log backend (TxLog: Delta-protocol-style atomic
-    // commits over the hive parquet layout), with the FULL maintenance
-    // lifecycle in the middle: 2 small appends (the micro-batch
+    // the SAME facade path as fs_store_roundtrip (TxLog:
+    // Delta-protocol-style atomic commits over the hive parquet
+    // layout), with the FULL maintenance lifecycle in the middle: 2 small appends (the micro-batch
     // accumulation shape) -> OPTIMIZE (bin-pack small files, rows
     // preserved exactly) -> compact (dedup, retire + publish in one
     // commit) -> vacuum -> snapshot read with log-metadata pruning
@@ -791,7 +790,7 @@ object QueryLib {
     // import turns up as extra rows and the hash goes red.
     (s, dir) => {
       val tmp = scratchDir("exp")
-      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse", backend = "txlog")
+      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse")
       val src = T(s, dir, "events").filter(col("event_type") === "purchase")
         .select(col("ts").as("time"), col("value"))
       st.save("purchase", src.filter(col("time") < ts("2024-01-16")))
@@ -825,7 +824,7 @@ object QueryLib {
     // date_format the store derived at write time).
     (s, dir) => {
       val tmp = scratchDir("expdl")
-      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse", backend = "txlog")
+      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse")
       val src = T(s, dir, "events").filter(col("event_type") === "click")
         .select(col("ts").as("time"), col("value"))
       st.save("clicks", src.filter(col("time") < ts("2024-01-16")))
@@ -856,7 +855,7 @@ object QueryLib {
     // directory-listing reader would ingest it.
     (s, dir) => {
       val tmp = scratchDir("expib")
-      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse", backend = "txlog")
+      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse")
       val src = T(s, dir, "events").filter(col("event_type") === "view")
         .select(col("ts").as("time"), col("value"))
       st.save("views", src.filter(col("time") < ts("2024-01-16")))
@@ -888,7 +887,7 @@ object QueryLib {
     // matters: a daily sync moves the day's files, never the table.
     (s, dir) => {
       val tmp = scratchDir("dlsync")
-      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse", backend = "txlog")
+      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse")
       val src = T(s, dir, "events").filter(col("event_type") === "click")
         .select(col("ts").as("time"), col("value"))
       st.save("clicks", src.filter(col("time") < ts("2024-01-16")))
@@ -918,7 +917,7 @@ object QueryLib {
     // plus one manifest + one metadata json, never the table.
     (s, dir) => {
       val tmp = scratchDir("ibsync")
-      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse", backend = "txlog")
+      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse")
       val src = T(s, dir, "events").filter(col("event_type") === "signup")
         .select(col("ts").as("time"), col("value"))
       st.save("signups", src.filter(col("time") < ts("2024-01-16")))
@@ -990,7 +989,7 @@ object QueryLib {
     // cannot satisfy a widened read) — spec-pinned, not gated.
     (s, dir) => {
       val tmp = scratchDir("ibevo")
-      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse", backend = "txlog")
+      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse")
       val src = T(s, dir, "events").filter(col("event_type") === "purchase")
         .select(col("ts").as("time"), col("value"))
       val d15 = ts("2024-01-15")
@@ -1404,7 +1403,7 @@ object QueryLib {
     (s, dir) => {
       import org.apache.spark.sql.types.DoubleType
       val tmp = scratchDir("evolve")
-      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse", backend = "txlog")
+      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse")
       val src = T(s, dir, "events").filter(col("event_type") === "purchase")
         .select(col("ts").as("time"), col("ts").as("created_time"), col("value"))
       val d15 = ts("2024-01-15")
@@ -1445,7 +1444,7 @@ object QueryLib {
     // checks count as violations (the data-pipeline reading of CHECK).
     (s, dir) => {
       val tmp = scratchDir("check")
-      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse", backend = "txlog")
+      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse")
       val p = T(s, dir, "events").filter(col("event_type") === "purchase")
         .select(col("ts").as("time"), col("ts").as("created_time"),
           abs(col("value")).as("value"))
@@ -1474,7 +1473,7 @@ object QueryLib {
     // adds/removes), O(files), zero data IO.
     (s, dir) => {
       val tmp = scratchDir("restore")
-      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse", backend = "txlog")
+      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse")
       val p = T(s, dir, "events").filter(col("event_type") === "purchase")
         .select(col("ts").as("time"), col("ts").as("created_time"), col("value"))
       st.save("r", p)
@@ -1499,7 +1498,7 @@ object QueryLib {
     // generation of a matched time collapses to the source's.
     (s, dir) => {
       val tmp = scratchDir("merge")
-      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse", backend = "txlog")
+      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse")
       val p = T(s, dir, "events").filter(col("event_type") === "purchase")
         .select(col("ts").as("time"), col("ts").as("created_time"), col("value"))
       st.save("m", p)
@@ -1603,7 +1602,7 @@ object QueryLib {
       // micro-batch appends a contiguous ~week instead of scattering
       // over the full half-month — fewer files per commit, same rows
       early.repartitionByRange(2, col("time")).write.parquet(sdir)
-      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse", backend = "txlog")
+      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse")
       def drain(): Unit = {
         val stream = s.readStream.schema(src.schema)
           .option("maxFilesPerTrigger", "1").parquet(sdir)
@@ -1652,7 +1651,7 @@ object QueryLib {
       val sdir = s"$tmp/stream_src"
       // time-ranged halves — see fs_stream_delta
       early.repartitionByRange(2, col("time")).write.parquet(sdir)
-      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse", backend = "txlog")
+      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse")
       def drain(): Unit = {
         val stream = s.readStream.schema(src.schema)
           .option("maxFilesPerTrigger", "1").parquet(sdir)
@@ -7975,7 +7974,7 @@ object QueryLib {
     (s, dir) => {
       import org.apache.spark.sql.types.LongType
       val tmp = scratchDir("bloomskip")
-      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse", backend = "txlog")
+      val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse")
       val src = T(s, dir, "events").filter(col("event_type") === "purchase")
         .select(col("ts").as("time"), col("ts").as("created_time"),
           col("value"), col("user_id"))

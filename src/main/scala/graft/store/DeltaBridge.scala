@@ -3,6 +3,7 @@ package graft.store
 import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 import scala.util.matching.Regex
 
 import org.apache.hadoop.conf.Configuration
@@ -146,10 +147,18 @@ object DeltaBridge {
     try {
       implicit val ec: scala.concurrent.ExecutionContextExecutorService =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
+      // every outcome comes back as a value: a Future body that dies of
+      // a FATAL error (OOM, VirtualMachineError) never completes its
+      // promise, so awaiting the bare futures would hang forever. The
+      // caller's thread rethrows the first failure in input order.
       scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(
-          items.map(a => scala.concurrent.Future(f(a)))),
+        scala.concurrent.Future.sequence(items.map(a => scala.concurrent.Future(
+          try Right(f(a)) catch { case t: Throwable => Left(t) }))),
         scala.concurrent.duration.Duration.Inf)
+        .map {
+          case Right(b) => b
+          case Left(t)  => throw t
+        }
     } finally pool.shutdown()
   }
 
@@ -284,7 +293,7 @@ object DeltaBridge {
           "minValues" -> mins.toMap, "maxValues" -> maxs.toMap,
           "nullCount" -> nulls.toMap)))
       } finally r.close()
-    } catch { case _: Throwable => None } // a file without stats is never skipped
+    } catch { case NonFatal(_) => None } // a file without stats is never skipped
 
   /** Write `_delta_log/00000000000000000000.json` describing every
     * `*.parquet` data file already under `dir`. Partition columns and
@@ -885,7 +894,7 @@ object DeltaBridge {
           case (Some(a0), Some(b0)) => b0.asDouble() >= lo && a0.asDouble() <= hi
           case _ => true // no stats for the column: must scan
         }
-      } catch { case _: Throwable => true } // unreadable stats: must scan
+      } catch { case NonFatal(_) => true } // unreadable stats: must scan
     }, conf)
 
   private def readPruned(

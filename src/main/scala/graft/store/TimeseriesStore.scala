@@ -2,8 +2,11 @@ package graft.store
 
 import java.sql.Timestamp
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.sinks.FileStreamSinkLog
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,44 +23,46 @@ final case class TableStats(
     vmin: Option[Double] = None,
     vmax: Option[Double] = None)
 
-/** Physical storage of one namespace: each feature is a hive-partitioned
-  * snappy-parquet directory `<url>/feature/<name>/partition=<p>/...`,
-  * mirroring the reference layout (`/root/reference/bytehub/_storage/
-  * dask.py:62-83`). All IO through the Hadoop FileSystem API so any
-  * `fs.defaultFS`-reachable store works (local, HDFS, S3A, ...).
+/** Physical storage of one namespace, in ONE layout: each feature is a
+  * hive-partitioned snappy-parquet directory
+  * `<url>/feature/<name>/partition=<p>/...` (the reference layout,
+  * `bytehub/_storage/dask.py:62-83`) governed by a
+  * per-feature transaction log in `<name>/_txlog` ([[TxLog]], the
+  * Delta-protocol idea). All IO goes through the Hadoop FileSystem API,
+  * so any `fs.defaultFS`-reachable store works (local, HDFS, S3A, ...).
   *
-  * Scale notes: reads carry BOTH the `time` range predicate (parquet
-  * row-group pushdown) and the derived `partition` predicate (directory
-  * pruning) — the derived-predicate rewrite the reference hand-rolls at
-  * dask.py:89-106. Writes append hive partitions so a 100 TB feature is
-  * split across ~days × files and a bounded load touches only its range.
+  * The log decides what a feature holds. Appends, compactions and
+  * rewrites stage their files invisibly and publish them in one atomic
+  * commit; readers replay the log to a consistent file set (never a
+  * half-applied compaction); old versions stay readable until `vacuum`.
+  * Reads prune on log metadata — partition values, then per-file time
+  * (and value, bloom) bounds — and build their file index from it, so a
+  * bounded load of a 100 TB feature lists no directories and opens only
+  * its range. A feature directory must be read THROUGH the store: raw
+  * `spark.read.parquet` on it would see compacted-away duplicates the
+  * log has retired.
   *
-  * Backends: `"spark"` (default) is the plain hive-layout store above.
-  * `"txlog"` layers a per-feature transaction log ([[TxLog]], the
-  * Delta-protocol idea) over the SAME file layout: appends and
-  * compactions become atomic commits, readers replay the log to a
-  * consistent file set (never a half-applied compaction), old versions
-  * stay readable until `vacuum`, and partition pruning happens against
-  * log metadata instead of directory listings (one small-file read vs
-  * an object-store LIST per load). A log-backed feature directory must
-  * be read THROUGH the store — raw `spark.read.parquet` on it would
-  * see compacted-away duplicates that the log has retired.
+  * Read schemas come from the log: the first write declares the batch's
+  * schema as epoch 0 and [[evolveSchema]] appends later epochs, so a
+  * read runs no schema-inference job (only a log written before schema
+  * declarations existed still infers). `valueType` arguments only type
+  * the empty envelope of a feature with no data yet.
   *
-  * Read schemas: the txlog backend takes its schema from the log's
-  * declared epochs. The plain backend takes it from the caller — the
-  * facade passes the catalog-pinned value type, and `read`,
-  * `readPartitions` and `copy` then open the feature root with that
-  * schema and run no inference job. A caller with no pinned type (an
-  * unpinned tree, e.g. one a stream sink wrote) gets today's inferring
-  * open; the store never guesses a value type for data it reads.
+  * Legacy trees: a feature directory written before the store became
+  * log-only (plain `df.write.partitionBy("partition").parquet(...)`, or
+  * a parquet file-sink stream) has data but no `_txlog`. Opening one
+  * fails fast naming the migration rather than reading as empty: move
+  * the directory aside and [[importSnapshot]] it under the feature's
+  * name (one atomic commit of the same rows). Such writers leave Spark
+  * committer markers (`_SUCCESS`, `_spark_metadata`) at the feature
+  * root, where a staged install never puts anything — so a crashed
+  * first install (files renamed in, commit never written) still reads
+  * as its committed, empty state.
   */
 class TimeseriesStore(
     spark: SparkSession,
     url: String,
-    storageOptions: Map[String, String] = Map.empty,
-    backend: String = "spark") {
-
-  private val logBacked = backend == "txlog"
+    storageOptions: Map[String, String] = Map.empty) {
 
   /** Per-namespace Hadoop configuration: the namespace's storage
     * options laid over the session conf. The reference threads
@@ -129,40 +134,6 @@ class TimeseriesStore(
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema(valueType))
 
-  /** Plain-backend parquet open of the feature root (so a stream sink's
-    * `_spark_metadata` log still decides the file set).
-    *
-    * With the catalog's pinned value type the schema is KNOWN — `time`,
-    * `created_time`, `value: <pinned>`, plus `partition` as a string
-    * (date style) or int (year style) — and passing it skips the
-    * per-open footer-inference job. A file-less directory then reads as
-    * zero rows of that schema.
-    *
-    * Without a pinned type (a tree written outside the facade, e.g. by
-    * `EventStreams.featureSink`) the open infers, as a guessed type
-    * could misread every value. A feature directory can exist with no
-    * data files (a crashed first append's `_temporary`, an external
-    * mkdir) — inference then throws where the documented behavior is
-    * the empty envelope.
-    */
-  private def parquetOrEmpty(
-      name: String,
-      valueType: Option[DataType],
-      partitionStyle: String): DataFrame = valueType match {
-    case Some(vt) =>
-      val pType = if (partitionStyle == "year") IntegerType else StringType
-      spark.read.options(storageOptions)
-        .schema(emptySchema(vt).add("partition", pType))
-        .parquet(featurePath(name))
-    case None =>
-      try spark.read.options(storageOptions).parquet(featurePath(name))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-          if Option(e.getCondition).exists(_.startsWith("UNABLE_TO_INFER_SCHEMA")) =>
-          emptyFrame(DoubleType)
-      }
-  }
-
   /** S3 (save validation + normalization, dask.py:223-263):
     *  - `time` and `value` columns required, nothing else but
     *    `created_time` allowed;
@@ -173,10 +144,22 @@ class TimeseriesStore(
   def normalizeForSave(df: DataFrame, partitionStyle: String): DataFrame =
     TimeseriesStore.normalize(df, partitionStyle)
 
-  private def txLog(name: String): TxLog =
-    new TxLog(hadoopConf, featurePath(name), Some(fs(featurePath(name))))
+  /** The feature's log, refusing a legacy tree (see the class doc):
+    * a log-backed feature pays one existence check, and only a
+    * directory without `_txlog` is probed for committer markers. */
+  private def txLog(name: String): TxLog = {
+    val root = new Path(featurePath(name))
+    val f = fs(root.toString)
+    if (!f.exists(new Path(root, TxLog.LogDirName)) &&
+        Seq("_SUCCESS", "_spark_metadata").exists(m => f.exists(new Path(root, m))))
+      throw new IllegalStateException(
+        s"feature '$name' at $root is a plain parquet tree with no transaction log " +
+          "(written before the store became log-only); move the directory aside and " +
+          "importSnapshot it under this name to migrate it")
+    new TxLog(hadoopConf, root.toString, Some(f))
+  }
 
-  // ---- schema evolution (txlog backend) -------------------------------
+  // ---- schema evolution -----------------------------------------------
   //
   // The table's logical schema (time, created_time, value[, extras...])
   // is DECLARED in the log — first write records the batch's schema as
@@ -212,7 +195,6 @@ class TimeseriesStore(
     * None = legacy table (pre-evolution log) — uniform files, inferred
     * schema, exactly today's read path. */
   def tableSchema(name: String, asOfVersion: Option[Long] = None): Option[StructType] = {
-    require(logBacked, "tableSchema requires the txlog backend")
     if (!exists(name)) None
     else txLog(name).schemaHistory(asOfVersion).lastOption.map(schemaOf)
   }
@@ -226,7 +208,6 @@ class TimeseriesStore(
     * optimistic-commit discipline as racing compactions.
     */
   def evolveSchema(name: String, newSchema: StructType): Long = {
-    require(logBacked, "schema evolution requires the txlog backend")
     require(exists(name), s"no such feature: $name")
     require(!newSchema.fieldNames.contains("partition"),
       "the derived partition column cannot be part of the declared schema")
@@ -254,7 +235,6 @@ class TimeseriesStore(
 
   /** Convenience: widen just the value column's type. */
   def evolveValueType(name: String, to: DataType): Long = {
-    require(logBacked, "schema evolution requires the txlog backend")
     val cur = tableSchema(name).getOrElse(emptySchema(DoubleType))
     evolveSchema(name, StructType(cur.fields.map(f =>
       if (f.name == ValueCol) f.copy(dataType = to) else f).toIndexedSeq))
@@ -292,7 +272,6 @@ class TimeseriesStore(
     * exactly like ALTER TABLE ADD CONSTRAINT. Declare `"true"` to
     * effectively drop a constraint. Returns the committed version. */
   def addCheck(name: String, constraintName: String, boolExpr: String): Long = {
-    require(logBacked, "CHECK constraints require the txlog backend")
     require(constraintName.nonEmpty, "constraint name must be non-empty")
     if (exists(name)) {
       val log = txLog(name)
@@ -309,7 +288,6 @@ class TimeseriesStore(
 
   /** Active CHECK constraints on a txlog table, declaration-ordered. */
   def tableChecks(name: String): Seq[(String, String)] = {
-    require(logBacked, "CHECK constraints require the txlog backend")
     if (!exists(name)) Seq.empty else txLog(name).checks()
   }
 
@@ -493,11 +471,11 @@ class TimeseriesStore(
     // same way the footer stats do. A build failure degrades to
     // never-skipped files, never to a failed install.
     val bloomCfg: Option[(String, Int, Int)] =
-      try log.bloomConfig() catch { case _: Throwable => None }
+      try log.bloomConfig() catch { case NonFatal(_) => None }
     val blooms: Map[String, String] = bloomCfg match {
       case Some((bcol, bits, k)) if laid.columns.contains(bcol) =>
         try FileBloom.buildForStage(spark, stage.toString, bcol, bits, k)
-        catch { case _: Throwable => Map.empty }
+        catch { case NonFatal(_) => Map.empty }
       case _ => Map.empty
     }
     val f = fs(url)
@@ -507,19 +485,21 @@ class TimeseriesStore(
     // measured driver-side gap after every staged write — ~10 ms/file of
     // footer IO plus a rename round-trip, ×(files per append) on the
     // commit path of every save/stream micro-batch; on an object store
-    // each round-trip is 10-100× worse). mkdirs stays serial (one per
-    // partition dir); per-thread Configuration clones as everywhere else.
+    // each round-trip is 10-100× worse). The per-partition-dir mkdirs +
+    // listing runs on the pool too, one task per dir (a local mkdirs
+    // forks a chmod, ~3 ms each — serial, a 30-day save spent ~90 ms
+    // there); per-thread Configuration clones as everywhere else.
     // Order, rel paths and add contents are identical to the sequential
-    // loop — parMapOrderedConf preserves input order.
+    // loop — the pool maps preserve input order.
     val staged: Seq[(String, org.apache.hadoop.fs.FileStatus, Path)] =
-      f.listStatus(stage).filter(_.isDirectory).toSeq.flatMap { pdir =>
+      DeltaBridge.parMapOrdered(f.listStatus(stage).filter(_.isDirectory).toSeq) { pdir =>
         val pname = pdir.getPath.getName // "partition=<p>"
         val destDir = new Path(featureRoot, pname)
         if (!f.exists(destDir)) f.mkdirs(destDir)
         f.listStatus(pdir.getPath).toSeq
           .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
           .map(st => (pname, st, new Path(destDir, st.getPath.getName)))
-      }
+      }.flatten
     val adds = DeltaBridge.parMapOrderedConf(staged, hadoopConf) {
       case ((pname, st, dest), conf) =>
         val src = st.getPath
@@ -558,7 +538,11 @@ class TimeseriesStore(
       conf: org.apache.hadoop.conf.Configuration = hadoopConf): FooterStats =
     try {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      // options built from THIS conf: the one-argument open builds its
+      // read options on a fresh Hadoop Configuration, re-reading the
+      // default resources — measured ~9 ms per file against ~0.4 ms
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        in, org.apache.parquet.HadoopReadOptions.builder(conf, p).build())
       try {
         import scala.jdk.CollectionConverters._
         var mn = Long.MaxValue
@@ -602,50 +586,37 @@ class TimeseriesStore(
           if (vOk && vmn != Double.MaxValue) Some(vmn) else None,
           if (vOk && vmn != Double.MaxValue) Some(vmx) else None)
       } finally r.close()
-    } catch { case _: Throwable => FooterStats(None, None, None, None, None) }
+    } catch { case NonFatal(_) => FooterStats(None, None, None, None, None) }
 
-  /** S2: hive-partitioned snappy parquet append; on the txlog backend
-    * the new files become visible in ONE atomic log commit.
+  /** S2: hive-partitioned snappy parquet append; the new files become
+    * visible in ONE atomic log commit.
     */
-  def write(name: String, normalized: DataFrame): Unit =
-    if (logBacked) {
-      val log = txLog(name)
-      val (adds, schemaDecl) = stageForCommit(log, name, normalized)
-      if (adds.nonEmpty) { log.commit(adds, schema = schemaDecl); () }
-    } else
-      layoutForWrite(normalized).write
-        .options(storageOptions)
-        .mode("append")
-        .option("compression", "snappy")
-        .partitionBy("partition")
-        .parquet(featurePath(name))
+  def write(name: String, normalized: DataFrame): Unit = commitBatch(txLog(name), name, normalized)
+
+  private def commitBatch(log: TxLog, name: String, normalized: DataFrame): Unit = {
+    val (adds, schemaDecl) = stageForCommit(log, name, normalized)
+    if (adds.nonEmpty) { log.commit(adds, schema = schemaDecl); () }
+  }
 
   def save(name: String, df: DataFrame, partitionStyle: String = "date"): Unit = {
-    // no-op on empty, dask.py:231-232. The txlog backend gets this FREE
-    // from the stage/commit split (an empty batch stages no partition
-    // dirs → no adds → no commit, and the feature tree is untouched), so
-    // only the plain backend pays the take(1) probe — on the log backend
-    // the probe was a full extra execution of the source plan in front
-    // of EVERY save (guide §1.2: don't compute things you throw away).
-    // INTENTIONAL parity deviation (r19/ADVICE): on the log backend an
-    // EMPTY batch carrying undeclared extra columns now FAILS
-    // normalize's column validation instead of silently no-op'ing — the
-    // stricter behavior (a malformed writer should not pass just
-    // because its first batch was empty); the plain backend keeps the
-    // reference's empty-before-validate order.
-    if (!logBacked && df.isEmpty) return
+    val log = txLog(name)
     // columns beyond the 3-column envelope pass validation ONLY when a
     // declared (evolved) schema names them — Delta-without-autoMerge:
     // new columns enter through evolveSchema, never through a save
-    val declaredExtras: Set[String] =
-      if (logBacked && exists(name))
-        tableSchema(name).map(_.fieldNames.toSet -- Set(TimeCol, CreatedCol, ValueCol))
-          .getOrElse(Set.empty)
-      else Set.empty
-    write(name, TimeseriesStore.normalize(df, partitionStyle, declaredExtras))
+    val declaredExtras: Set[String] = log.schemaHistory().lastOption
+      .map(schemaOf(_).fieldNames.toSet -- Set(TimeCol, CreatedCol, ValueCol))
+      .getOrElse(Set.empty)
+    // An empty batch is a no-op BEFORE column validation (the reference
+    // order, dask.py:231-232). The emptiness probe is a Spark job, so it
+    // runs only for a batch that fails validation: a valid empty batch
+    // stages no partition dirs, so it commits nothing anyway.
+    val normalized =
+      try TimeseriesStore.normalize(df, partitionStyle, declaredExtras)
+      catch { case e: IllegalArgumentException => if (df.isEmpty) return else throw e }
+    commitBatch(log, name, normalized)
   }
 
-  /** Idempotent transactional append (txlog backend): commits the batch
+  /** Idempotent transactional append: commits the batch
     * tagged with `txnId` UNLESS a commit with that id already landed —
     * the exactly-once primitive for restartable writers (a streaming
     * micro-batch re-delivered after a checkpoint recovery re-offers the
@@ -653,7 +624,6 @@ class TimeseriesStore(
     * committed.
     */
   def writeTx(name: String, normalized: DataFrame, txnId: String): Boolean = {
-    require(logBacked, "writeTx requires the txlog backend")
     val log = txLog(name)
     if (log.txnSeen(txnId)) false // fast path: skip the staging work
     else {
@@ -674,7 +644,6 @@ class TimeseriesStore(
     * per stream, which Structured Streaming's are.
     */
   def writeTx(name: String, normalized: DataFrame, streamId: String, batchId: Long): Boolean = {
-    require(logBacked, "writeTx requires the txlog backend")
     val log = txLog(name)
     if (log.txnSeen(streamId, batchId)) false // fast path: skip staging
     else {
@@ -684,12 +653,15 @@ class TimeseriesStore(
     }
   }
 
-  /** S1 + P1/P2: scan with time-range predicate AND the derived partition
-    * predicate so directory pruning kicks in before row-group pushdown.
-    * Returns the 3-column envelope (partition dropped, dask.py:116-117).
-    * `valueType` is the catalog-pinned value type: on the plain backend
-    * it makes the open schema-typed (see [[parquetOrEmpty]]); None
-    * infers, and types an empty envelope as double.
+  /** S1 + P1/P2: ranged scan returning the data columns (the 3-column
+    * envelope unless an evolved schema adds more; partition dropped,
+    * dask.py:116-117). The live file set comes from a snapshot replay,
+    * and pruning happens against the LOG — partition values widened
+    * ±1 unit for writer/reader zone skew, then per-file time bounds —
+    * before Spark lists or opens anything; the exact `time` predicate
+    * then drops the extra rows. Old snapshots stay readable through
+    * `asOfVersion` until vacuumed. `valueType` types the envelope of a
+    * feature with no data (default double).
     */
   def read(
       name: String,
@@ -698,52 +670,6 @@ class TimeseriesStore(
       valueType: Option[DataType] = None,
       partitionStyle: String = "date",
       asOfVersion: Option[Long] = None): DataFrame = {
-    val emptyType = valueType.getOrElse(DoubleType)
-    if (!exists(name)) return emptyFrame(emptyType)
-    if (logBacked) return txRead(name, from, to, emptyType, partitionStyle, asOfVersion)
-    require(asOfVersion.isEmpty, "asOfVersion requires the txlog backend")
-    val df = parquetOrEmpty(name, valueType, partitionStyle)
-    if (!df.columns.contains("partition")) return df // empty-contract frame
-    // Partition bounds are widened by one unit each side and anchored on
-    // UTC — NOT the reader's session zone. Partition strings were derived
-    // in the WRITER's session zone; writer and reader can sit up to 26h
-    // apart (UTC+14 vs UTC-12), which crosses TWO date boundaries, so a
-    // reader-zone ±1-day widening can still prune a boundary partition
-    // holding in-range rows. Every session zone is within 14h of UTC, so
-    // UTC ±1 day covers all writer/reader combinations (the same
-    // contract as the txlog path's prunePartitionValues). The bounds are
-    // driver-side literals, so Catalyst prunes directories with them;
-    // the exact `time` predicate then drops any extra rows.
-    val ptype = df.schema("partition").dataType
-    val partLo: Timestamp => Column = partitionStyle match {
-      case "date" => ts => lit(PartitionBounds.dateString(ts.toInstant, -1)).cast(ptype)
-      case _      => ts => lit(PartitionBounds.year(ts.toInstant, -1)).cast(ptype)
-    }
-    val partHi: Timestamp => Column = partitionStyle match {
-      case "date" => ts => lit(PartitionBounds.dateString(ts.toInstant, 1)).cast(ptype)
-      case _      => ts => lit(PartitionBounds.year(ts.toInstant, 1)).cast(ptype)
-    }
-    val preds =
-      from.map(f => col(TimeCol) >= lit(f) && col("partition") >= partLo(f)) ++
-      to.map(t => col(TimeCol) <= lit(t) && col("partition") <= partHi(t))
-    preds.reduceOption(_ && _).map(df.filter).getOrElse(df)
-      .select(TimeCol, CreatedCol, ValueCol)
-  }
-
-  /** Log-backed scan: the live file set comes from a snapshot replay,
-    * and file-level partition pruning happens against the LOG's
-    * partition values (Delta-style metadata skipping) before Spark ever
-    * lists or opens anything — the widened ±1-unit bounds mirror the
-    * directory-pruning path below. Old snapshots stay readable through
-    * `asOfVersion` until vacuumed.
-    */
-  private def txRead(
-      name: String,
-      from: Option[Timestamp],
-      to: Option[Timestamp],
-      valueType: DataType,
-      partitionStyle: String,
-      asOfVersion: Option[Long]): DataFrame = {
     val log = txLog(name)
     val adds = log.snapshot(asOfVersion)
     // the schema in effect AT THE READ VERSION: an old snapshot reads
@@ -753,20 +679,22 @@ class TimeseriesStore(
     // two-level metadata skipping: partition values first, then
     // per-file time bounds (Delta data-skipping shape) — a
     // micro-batch-accumulated day holds many narrow files, and a
-    // ranged read drops the non-overlapping ones from the LOG alone,
-    // before Spark lists or opens anything
+    // ranged read drops the non-overlapping ones from the LOG alone
     val pruned = prunePartitionValues(adds, from, to, partitionStyle)
       .filter(fileStatsOverlap(_, from, to))
-    if (pruned.isEmpty)
-      return schemas.lastOption.map(sj =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf(sj)))
-        .getOrElse(emptyFrame(valueType))
+    if (pruned.isEmpty) return emptyOf(schemas, valueType.getOrElse(DoubleType))
     val df = openAdds(name, pruned, schemas, partitionStyle)
     val preds = from.map(f => col(TimeCol) >= lit(f)) ++ to.map(t => col(TimeCol) <= lit(t))
     preds.reduceOption(_ && _).map(df.filter).getOrElse(df)
       .select(dataCols(schemas).map(col).toIndexedSeq: _*)
   }
+
+  /** Zero rows of the declared schema, or the envelope typed
+    * `valueType` when the table declares none yet. */
+  private def emptyOf(schemas: Seq[String], valueType: DataType): DataFrame =
+    schemas.lastOption.map(sj =>
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf(sj)))
+      .getOrElse(emptyFrame(valueType))
 
   /** File-level data skipping over log metadata: does the add's
     * recorded event-time range intersect [from, to]? Files without
@@ -781,9 +709,10 @@ class TimeseriesStore(
   }
 
   /** Driver-side partition-value pruning over log metadata, widened one
-    * unit each side for writer/reader timezone skew (UTC-interpreted
-    * bounds ±1 day cover any session zone, same contract as the
-    * foldable-predicate path).
+    * unit each side and anchored on UTC, not the reader's session zone:
+    * partition strings were derived in the WRITER's zone, writer and
+    * reader can sit up to 26h apart (UTC+14 vs UTC-12), and every zone
+    * is within 14h of UTC, so UTC ±1 unit covers every combination.
     */
   private def prunePartitionValues(
       adds: Seq[TxAdd],
@@ -804,7 +733,7 @@ class TimeseriesStore(
   /** Scan restricted to an explicit partition subset — the tail-read
     * primitive behind `last()` (the reference's "restrict scan to the
     * final partition(s)" intent, _model.py:251-254): a point lookup on a
-    * 100 TB feature touches one day's directory, not the history.
+    * 100 TB feature touches one day's files, not the history.
     */
   def readPartitions(
       name: String,
@@ -812,20 +741,14 @@ class TimeseriesStore(
       valueType: Option[DataType] = None,
       partitionStyle: String = "date"): DataFrame = {
     val emptyType = valueType.getOrElse(DoubleType)
-    if (!exists(name) || parts.isEmpty) return emptyFrame(emptyType)
-    if (logBacked) {
-      val wanted = parts.toSet
-      val log = txLog(name)
-      val adds = log.snapshot().filter(a => wanted(a.partition))
-      if (adds.isEmpty) return emptyFrame(emptyType)
-      val schemas = log.schemaHistory()
-      return openAdds(name, adds, schemas, partitionStyle)
-        .select(dataCols(schemas).map(col).toIndexedSeq: _*)
-    }
-    val df = parquetOrEmpty(name, valueType, partitionStyle)
-    if (!df.columns.contains("partition")) return df // empty-contract frame
-    df.filter(col("partition").cast(StringType).isin(parts: _*))
-      .select(TimeCol, CreatedCol, ValueCol)
+    if (parts.isEmpty) return emptyFrame(emptyType)
+    val wanted = parts.toSet
+    val log = txLog(name)
+    val adds = log.snapshot().filter(a => wanted(a.partition))
+    if (adds.isEmpty) return emptyFrame(emptyType)
+    val schemas = log.schemaHistory()
+    openAdds(name, adds, schemas, partitionStyle)
+      .select(dataCols(schemas).map(col).toIndexedSeq: _*)
   }
 
   /** S4: feature directories present in storage. */
@@ -836,94 +759,28 @@ class TimeseriesStore(
     else f.listStatus(base).filter(_.isDirectory).map(_.getPath.getName).toSeq.sorted
   }
 
-  /** S4: hive partition values for a feature, sorted; `reverse` + `n` give
-    * the "last n partitions" read used by last() (dask.py:38-50).
+  /** S4: partition values of a feature's live files, sorted; `reverse`
+    * + `n` give the "last n partitions" read used by last()
+    * (dask.py:38-50). Log metadata, not a directory listing: one
+    * small-file replay instead of an object-store LIST, and retired
+    * partitions (all files removed) disappear immediately.
     */
   def listPartitions(name: String, n: Int = Int.MaxValue, reverse: Boolean = false): Seq[String] = {
-    val p = new Path(featurePath(name))
-    val f = fs(url)
-    if (!f.exists(p)) Seq.empty
-    else if (logBacked) {
-      // log metadata, not directory listing: one small-file replay
-      // instead of an object-store LIST, and retired partitions (all
-      // files removed) disappear from the listing immediately
-      val parts = txLog(name).snapshot().map(_.partition).distinct.sorted
-      (if (reverse) parts.reverse else parts).take(n)
-    } else {
-      val parts = f.listStatus(p).filter(_.isDirectory)
-        .map(_.getPath.getName).filter(_.startsWith("partition="))
-        .map(_.stripPrefix("partition=")).toSeq.sorted
-      (if (reverse) parts.reverse else parts).take(n)
-    }
+    val parts = txLog(name).snapshot().map(_.partition).distinct.sorted
+    (if (reverse) parts.reverse else parts).take(n)
   }
 
   /** Compaction: collapse a feature's append history to one deduped row
     * per time (the reference never compacts and pays the dedup on every
     * read, SURVEY §7.5.3). Restricted to `partitions` when given, so a
     * years-deep feature with a few fresh appends rewrites only the
-    * affected day directories, never the history. The deduped output is
-    * staged in a sibling directory and swapped in per partition through
-    * a trash dir, so no committed row is ever deleted before its
-    * replacement exists: a crash mid-swap can leave a partition
-    * temporarily missing from listings but its bytes recoverable from
-    * `.compact-trash`. Contract: single writer per feature during
-    * compaction — an append racing the swap can be trashed with the old
-    * generation (the reference has no compaction at all; full
-    * transactionality is table-format territory, e.g. Delta).
+    * affected days, never the history. The target partitions' live
+    * files are deduped into new files, then retired + published in ONE
+    * commit — a reader replaying the log sees the pre- or
+    * post-compaction file set, never a partition with its replacement
+    * missing. Old files stay on disk for time travel until `vacuum`.
     */
   def compact(name: String, partitions: Seq[String] = Nil): Unit = {
-    if (!exists(name)) return
-    if (logBacked) return compactTx(name, partitions)
-    val targetParts = if (partitions.nonEmpty) partitions else listPartitions(name)
-    if (targetParts.isEmpty) return
-    val src = spark.read.options(storageOptions).parquet(featurePath(name))
-      .filter(col("partition").cast(StringType).isin(targetParts: _*))
-    // group by (partition, time): time determines partition, so this is
-    // plain per-time dedup with the partition column carried through
-    val deduped = graft.ops.TimeseriesOps.dedupLatest(src, keyCols = Seq("partition"))
-    val f = fs(url)
-    // staged outside feature/ so listings and namespace GC never see it
-    val tmp = new Path(s"$url/.compact/$name")
-    f.delete(tmp, true)
-    deduped.select(col(TimeCol), col(CreatedCol), col(ValueCol), col("partition"))
-      .write.options(storageOptions).option("compression", "snappy")
-      .partitionBy("partition")
-      .parquet(tmp.toString)
-    val trash = new Path(s"$url/.compact-trash/$name")
-    f.delete(trash, true)
-    f.mkdirs(trash)
-    targetParts.foreach { p =>
-      val newDir = new Path(tmp, s"partition=$p")
-      val liveDir = new Path(featurePath(name), s"partition=$p")
-      val trashDir = new Path(trash, s"partition=$p")
-      if (f.exists(newDir)) {
-        // FileSystem.rename signals failure by RETURNING false, not by
-        // throwing — every step is checked so a failed swap aborts with
-        // the data intact (restored from trash if already moved) rather
-        // than silently deleting a partition's only copy
-        if (f.exists(liveDir) && !f.rename(liveDir, trashDir))
-          throw new java.io.IOException(
-            s"compact aborted: could not stage $liveDir to $trashDir")
-        if (!f.rename(newDir, liveDir)) {
-          if (f.exists(trashDir)) f.rename(trashDir, liveDir) // restore
-          throw new java.io.IOException(
-            s"compact aborted: could not install $newDir as $liveDir (old data restored)")
-        }
-      }
-    }
-    f.delete(tmp, true)
-    f.delete(trash, true)
-  }
-
-  /** Transactional compaction (txlog backend): dedup the target
-    * partitions' live files into new files, then retire old + publish
-    * new in ONE commit — a reader replaying the log sees the
-    * pre-compaction or post-compaction file set, never a partition with
-    * its replacement missing (the window the rename-swap protocol below
-    * documents away). Old files stay on disk for time travel until
-    * `vacuum`.
-    */
-  private def compactTx(name: String, partitions: Seq[String]): Unit = {
     val log = txLog(name)
     val all = log.snapshot()
     if (all.isEmpty) return
@@ -943,8 +800,8 @@ class TimeseriesStore(
     log.commit(adds, victims.map(a => TxRemove(a.path)))
   }
 
-  /** Small-file bin-packing compaction (the Delta paper's OPTIMIZE;
-    * txlog backend): coalesce each partition's undersized live files
+  /** Small-file bin-packing compaction (the Delta paper's OPTIMIZE):
+    * coalesce each partition's undersized live files
     * into ~`targetBytes` outputs WITHOUT changing a single row — unlike
     * `compact` there is no dedup, so row counts, generation history and
     * every `asOfVersion` read are preserved exactly; only the file
@@ -963,7 +820,6 @@ class TimeseriesStore(
     * Returns the number of files retired (0 = nothing worth packing).
     */
   def optimize(name: String, targetBytes: Long = 128L * 1024 * 1024): Long = {
-    require(logBacked, "optimize requires the txlog backend")
     if (!exists(name)) return 0L
     val log = txLog(name)
     val live = log.snapshot()
@@ -1014,7 +870,7 @@ class TimeseriesStore(
     victims.size.toLong
   }
 
-  /** OPTIMIZE ZORDER (txlog backend): rewrite the table's live files
+  /** OPTIMIZE ZORDER: rewrite the table's live files
     * clustered on the Morton interleave of (event-day, value) so that
     * per-file min/max stats get tight on BOTH dimensions — after the
     * rewrite, a ranged read skips files by time (as always) AND a
@@ -1037,7 +893,6 @@ class TimeseriesStore(
       name: String,
       bits: Int = 16,
       targetBytes: Long = 128L * 1024 * 1024): Long = {
-    require(logBacked, "optimizeZorder requires the txlog backend")
     if (!exists(name)) return 0L
     val log = txLog(name)
     val live = log.snapshot()
@@ -1080,13 +935,12 @@ class TimeseriesStore(
       vhi: Double,
       from: Option[Timestamp] = None,
       to: Option[Timestamp] = None): Seq[TxAdd] = {
-    require(logBacked, "value-range skipping requires the txlog backend")
     txLog(name).snapshot()
       .filter(fileStatsOverlap(_, from, to))
       .filter(a => a.vmax.forall(_ >= vlo) && a.vmin.forall(_ <= vhi))
   }
 
-  /** Ranged scan with VALUE data skipping (txlog backend): prune files
+  /** Ranged scan with VALUE data skipping: prune files
     * by partition values + time bounds + recorded value bounds from
     * the LOG alone, then apply the exact residual predicates. On a
     * z-ordered table ([[optimizeZorder]]) a narrow value slice opens a
@@ -1103,17 +957,12 @@ class TimeseriesStore(
       vhi: Double,
       from: Option[Timestamp] = None,
       to: Option[Timestamp] = None): DataFrame = {
-    require(logBacked, "readValueRange requires the txlog backend")
     if (!exists(name)) return emptyFrame(org.apache.spark.sql.types.DoubleType)
     val log = txLog(name)
     val schemas = log.schemaHistory()
     val pruned = prunePartitionValues(
       candidateFilesForValueRange(name, vlo, vhi, from, to), from, to, "date")
-    if (pruned.isEmpty)
-      return schemas.lastOption.map(sj =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf(sj)))
-        .getOrElse(emptyFrame(org.apache.spark.sql.types.DoubleType))
+    if (pruned.isEmpty) return emptyOf(schemas, DoubleType)
     val df = openAdds(name, pruned, schemas, partitionStyle = "date")
     val preds = Seq(col(ValueCol) >= lit(vlo), col(ValueCol) <= lit(vhi)) ++
       from.map(t => col(TimeCol) >= lit(t)) ++ to.map(t => col(TimeCol) <= lit(t))
@@ -1121,7 +970,7 @@ class TimeseriesStore(
       .select(dataCols(schemas).map(col).toIndexedSeq: _*)
   }
 
-  /** Declare a Bloom-filter index over `column` (txlog backend; the
+  /** Declare a Bloom-filter index over `column` (the
     * Delta bloom-filter-index table property): every subsequent write
     * — appends AND rewrite ops, since both route through the staged
     * install — attaches a `bits`-bit / `k`-hash [[FileBloom]] over the
@@ -1131,7 +980,6 @@ class TimeseriesStore(
     * `bits = 0` drops the index. Returns the committed log version.
     */
   def declareBloomIndex(name: String, column: String, bits: Int = 8192, k: Int = 6): Long = {
-    require(logBacked, "bloom indexes require the txlog backend")
     require(bits == 0 || (bits % 64 == 0 && bits > 0),
       s"bloom bits must be 0 (drop) or a positive multiple of 64: $bits")
     txLog(name).commit(Nil, bloom = Some((column, bits, k)))
@@ -1149,13 +997,12 @@ class TimeseriesStore(
       value: String,
       from: Option[Timestamp] = None,
       to: Option[Timestamp] = None): Seq[TxAdd] = {
-    require(logBacked, "bloom skipping requires the txlog backend")
     txLog(name).snapshot()
       .filter(fileStatsOverlap(_, from, to))
       .filter(FileBloom.addMightContain(_, column, value))
   }
 
-  /** Point-lookup scan with BLOOM file skipping (txlog backend): prune
+  /** Point-lookup scan with BLOOM file skipping: prune
     * files by partition values + time bounds + per-file blooms from the
     * log alone, then apply the exact equality predicate. The shape
     * min/max stats cannot give: on an append-ordered table every file's
@@ -1179,17 +1026,12 @@ class TimeseriesStore(
         value.isInstanceOf[Boolean],
       s"unsupported probe type ${value.getClass.getName}: the bloom hashed the column's " +
         "STRING rendering, which only integral/string/boolean types reproduce exactly")
-    require(logBacked, "readKeyEquals requires the txlog backend")
     if (!exists(name)) return emptyFrame(org.apache.spark.sql.types.DoubleType)
     val log = txLog(name)
     val schemas = log.schemaHistory()
     val pruned = prunePartitionValues(
       candidateFilesForKey(name, column, value.toString, from, to), from, to, "date")
-    if (pruned.isEmpty)
-      return schemas.lastOption.map(sj =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf(sj)))
-        .getOrElse(emptyFrame(org.apache.spark.sql.types.DoubleType))
+    if (pruned.isEmpty) return emptyOf(schemas, DoubleType)
     val df = openAdds(name, pruned, schemas, partitionStyle = "date")
     val preds = Seq(col(column) === lit(value)) ++
       from.map(t => col(TimeCol) >= lit(t)) ++ to.map(t => col(TimeCol) <= lit(t))
@@ -1197,7 +1039,7 @@ class TimeseriesStore(
       .select(dataCols(schemas).map(col).toIndexedSeq: _*)
   }
 
-  /** Metadata-only table statistics (txlog backend): exact stored-row
+  /** Metadata-only table statistics: exact stored-row
     * count and event-time bounds computed from the LOG alone — zero
     * Spark jobs, zero file opens; at 100 TB this is the difference
     * between an O(1) driver answer and a full-table count scan
@@ -1212,7 +1054,6 @@ class TimeseriesStore(
   def tableStatsFast(
       name: String,
       asOfVersion: Option[Long] = None): Option[TableStats] = {
-    require(logBacked, "tableStatsFast requires the txlog backend")
     if (!exists(name)) return None
     val adds = txLog(name).snapshot(asOfVersion)
     if (adds.isEmpty) return Some(TableStats(0L, None, None))
@@ -1228,7 +1069,7 @@ class TimeseriesStore(
   }
 
   /** Row-level transactional delete (the lakehouse DELETE / GDPR
-    * right-to-be-forgotten op; txlog backend): rewrite ONLY the live
+    * right-to-be-forgotten op): rewrite ONLY the live
     * files that contain matching rows, drop the matches, and retire +
     * publish in ONE commit — a reader replays the pre- or post-delete
     * file set, never a mix. Files without matches are untouched (no
@@ -1246,7 +1087,7 @@ class TimeseriesStore(
       vsrc.filter(!predicate || predicate.isNull)
     }
 
-  /** Row-level transactional UPDATE (txlog backend): rows matching the
+  /** Row-level transactional UPDATE: rows matching the
     * predicate get `newValue` as their value; same only-matching-files
     * rewrite + single retire/publish commit as [[deleteWhere]].
     * `newValue` may reference the normalized columns (e.g.
@@ -1268,7 +1109,6 @@ class TimeseriesStore(
     */
   private def rewriteMatchingFiles(name: String, predicate: Column)(
       rewrite: DataFrame => DataFrame): Long = {
-    require(logBacked, "row-level rewrites require the txlog backend")
     if (!exists(name)) return 0L
     val log = txLog(name)
     val live = log.snapshot()
@@ -1296,7 +1136,7 @@ class TimeseriesStore(
     } finally vsrc.unpersist(blocking = false)
   }
 
-  /** Lakehouse MERGE INTO (txlog backend): physical upsert keyed on
+  /** Lakehouse MERGE INTO: physical upsert keyed on
     * `time` — target rows whose time appears in `source` are REPLACED
     * by the source rows (every stored generation of a matched time
     * collapses), times the target has never seen insert, and the whole
@@ -1320,7 +1160,6 @@ class TimeseriesStore(
       name: String,
       source: DataFrame, // time, value [, created_time, declared extras]
       partitionStyle: String = "date"): (Long, Long) = {
-    require(logBacked, "mergeInto requires the txlog backend")
     val declaredExtras: Set[String] =
       if (exists(name))
         tableSchema(name).map(_.fieldNames.toSet -- Set(TimeCol, CreatedCol, ValueCol))
@@ -1371,7 +1210,7 @@ class TimeseriesStore(
     } finally srcTimes.unpersist(blocking = false)
   }
 
-  /** Incremental change feed (CDC-lite; txlog backend): the rows ADDED
+  /** Incremental change feed (CDC-lite): the rows ADDED
     * between two table versions — the files `toVersion`'s snapshot
     * references that `fromVersion`'s does not. For the append-dominant
     * feature-store workload this is exactly the new data, letting a
@@ -1386,7 +1225,6 @@ class TimeseriesStore(
       fromVersion: Long,
       toVersion: Option[Long] = None,
       valueType: DataType = DoubleType): DataFrame = {
-    require(logBacked, "readChanges requires the txlog backend")
     if (!exists(name)) return emptyFrame(valueType)
     val log = txLog(name)
     val before = log.snapshot(Some(fromVersion)).map(_.path).toSet
@@ -1398,7 +1236,7 @@ class TimeseriesStore(
       .select(dataCols(schemas).map(col).toIndexedSeq: _*)
   }
 
-  /** Lakehouse RESTORE (txlog backend): make version `v`'s file set
+  /** Lakehouse RESTORE: make version `v`'s file set
     * the LATEST state again — as a NEW commit (removes of files v
     * doesn't reference + re-adds of files it does), so the rollback is
     * itself time-travelable and nothing is ever rewritten: the
@@ -1413,7 +1251,6 @@ class TimeseriesStore(
     * file set is already live).
     */
   def restore(name: String, v: Long): Long = {
-    require(logBacked, "restore requires the txlog backend")
     require(exists(name), s"no such feature: $name")
     val log = txLog(name)
     val target = log.snapshot(Some(v))
@@ -1436,16 +1273,14 @@ class TimeseriesStore(
     * `readChanges`. Delta's commit-mtime fallback rule; see
     * [[TxLog.versionAt]] for the portability caveat. */
   def versionAt(name: String, tsMillis: Long): Long = {
-    require(logBacked, "versionAt requires the txlog backend")
     txLog(name).versionAt(tsMillis)
   }
 
-  /** Garbage-collect files retired by compaction (txlog backend):
+  /** Garbage-collect files retired by compaction:
     * deletes bytes unreferenced by the LATEST snapshot. Time travel to
     * vacuumed versions stops working — the standard retention trade.
     */
   def vacuum(name: String, retentionMs: Long = 3600000L): Long = {
-    require(logBacked, "vacuum requires the txlog backend")
     if (!exists(name)) return 0L
     var removed = txLog(name).vacuum(retentionMs)
     // a writer that crashed between staging and install leaves its
@@ -1482,7 +1317,6 @@ class TimeseriesStore(
     * commits yet) — the handle `read(asOfVersion = ...)` time-travels to.
     */
   def tableVersion(name: String): Long = {
-    require(logBacked, "tableVersion requires the txlog backend")
     txLog(name).latestVersion()
   }
 
@@ -1493,33 +1327,20 @@ class TimeseriesStore(
     if (f.exists(p)) { f.delete(p, true); () }
   }
 
-  /** S6: clone data between stores (export/import, _base.py:46-57).
-    * Backend-aware on both ends: a log-backed source reads its LIVE
-    * snapshot (raw directory parquet would resurrect compacted-away
-    * duplicates), and the destination's `write` commits through its own
-    * backend. A plain source opens with the source feature's pinned
-    * `valueType` when it has one (see [[parquetOrEmpty]]).
+  /** S6: clone data between stores (export/import, _base.py:46-57):
+    * the source's LIVE snapshot (raw directory parquet would resurrect
+    * compacted-away duplicates) is committed through the destination's
+    * `write`, carrying every data column — an evolved source clones its
+    * full latest schema, which the destination declares on first write.
+    * A feature with no live files copies nothing.
     */
-  def copy(
-      name: String,
-      toName: String,
-      dest: TimeseriesStore,
-      valueType: Option[DataType] = None,
-      partitionStyle: String = "date"): Unit = {
-    if (exists(name)) {
-      val df =
-        if (logBacked) {
-          val log = txLog(name)
-          val adds = log.snapshot()
-          if (adds.isEmpty) return
-          openAdds(name, adds, log.schemaHistory(), partitionStyle)
-        } else parquetOrEmpty(name, valueType, partitionStyle)
-      if (df.inputFiles.isEmpty) return // file-less dir: nothing to copy
-      // carry every data column (an evolved source clones its full
-      // latest schema; the destination declares it on first write)
-      dest.write(toName, df.select(
-        (df.columns.filterNot(_ == "partition").map(col) :+ col("partition")).toIndexedSeq: _*))
-    }
+  def copy(name: String, toName: String, dest: TimeseriesStore, partitionStyle: String = "date"): Unit = {
+    val log = txLog(name)
+    val adds = log.snapshot()
+    if (adds.isEmpty) return
+    val df = openAdds(name, adds, log.schemaHistory(), partitionStyle)
+    dest.write(toName, df.select(
+      (df.columns.filterNot(_ == "partition").map(col) :+ col("partition")).toIndexedSeq: _*))
   }
 
   // --- open-format bridge -----------------------------------------------
@@ -1548,7 +1369,6 @@ class TimeseriesStore(
     * source version. Returns the exported version.
     */
   def exportSnapshot(name: String, dstDir: String, asOfVersion: Option[Long] = None): Long = {
-    require(logBacked, "exportSnapshot requires the txlog backend")
     val log = txLog(name)
     val v = asOfVersion.getOrElse(log.latestVersion())
     require(v >= 0, s"feature '$name' has no committed version to export")
@@ -1632,7 +1452,6 @@ class TimeseriesStore(
     * drift. Returns the synced txlog version; no-ops when idle.
     */
   def syncSnapshotIceberg(name: String, dstDir: String): Long = {
-    require(logBacked, "syncSnapshotIceberg requires the txlog backend")
     val dst = new Path(dstDir)
     val dstFs = dst.getFileSystem(hadoopConf)
     val manifestPath = new Path(dst, TimeseriesStore.ManifestName)
@@ -1731,7 +1550,6 @@ class TimeseriesStore(
     * format doesn't promise.
     */
   def syncSnapshotDelta(name: String, dstDir: String, checkpointEvery: Int = 10): Long = {
-    require(logBacked, "syncSnapshotDelta requires the txlog backend")
     val dst = new Path(dstDir)
     val dstFs = dst.getFileSystem(hadoopConf)
     val manifestPath = new Path(dst, TimeseriesStore.ManifestName)
@@ -1792,7 +1610,8 @@ class TimeseriesStore(
   }
 
   /** Import an [[exportSnapshot]] tree (or any plain hive-partitioned
-    * `partition=<p>/` parquet tree) as feature `name`: ONE atomic
+    * `partition=<p>/` parquet tree, a parquet file-sink tree through
+    * its sink log even after a move) as feature `name`: ONE atomic
     * commit containing every staged file, declaring the manifest's
     * schema when present (an aligned export re-declares its evolved
     * columns; a bare tree infers). The inverse bridge: a warehouse
@@ -1801,7 +1620,6 @@ class TimeseriesStore(
     * version.
     */
   def importSnapshot(name: String, srcDir: String): Long = {
-    require(logBacked, "importSnapshot requires the txlog backend")
     require(!exists(name) || txLog(name).latestVersion() < 0,
       s"feature '$name' already has commits; import into a fresh name")
     val src = new Path(srcDir)
@@ -1825,6 +1643,8 @@ class TimeseriesStore(
         DeltaBridge.read(spark, srcDir, hadoopConf)
       else if (srcFs.exists(new Path(src, "metadata/version-hint.text")))
         IcebergBridge.read(spark, srcDir, hadoopConf)
+      else if (srcFs.exists(new Path(src, "_spark_metadata")))
+        fileSinkRead(srcDir)
       else spark.read.options(storageOptions)
         .option("basePath", srcDir).parquet(srcDir)
     require(df.columns.contains("partition"),
@@ -1836,6 +1656,26 @@ class TimeseriesStore(
     require(adds.nonEmpty, s"no rows found under $srcDir")
     log.commit(adds, schema = schemaJson.orElse(Some(structJson(
       df.drop("partition")))))
+  }
+
+  /** A parquet file-sink tree's committed files, listed by its sink log
+    * (`_spark_metadata`) and re-rooted at `srcDir`. The log records
+    * absolute paths, so a plain `spark.read` of a tree moved aside for
+    * import (the legacy-tree migration) looks for every file at the old
+    * location; the log, not a listing, still decides which files count,
+    * so files a failed micro-batch left behind stay out. */
+  private def fileSinkRead(srcDir: String): DataFrame = {
+    val src = new Path(srcDir)
+    val files = new FileStreamSinkLog(FileStreamSinkLog.VERSION, spark,
+      new Path(src, "_spark_metadata").toString).allFiles().toSeq.map { s =>
+        val p = new Path(new java.net.URI(s.path))
+        val part = p.getParent.getName
+        require(part.startsWith("partition="),
+          s"$srcDir is not a hive-partitioned export (sink file ${s.path})")
+        new Path(new Path(src, part), p.getName).toString
+      }
+    require(files.nonEmpty, s"no rows found under $srcDir")
+    spark.read.options(storageOptions).option("basePath", srcDir).parquet(files: _*)
   }
 
 }
@@ -1851,11 +1691,11 @@ object TimeseriesStore {
       .addModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
       .build()
 
-  /** S3 envelope normalization, STATIC so the streaming feature sink
-    * applies the exact same casts, extraneous-column rejection, and
-    * partition derivation as the batch writer — two normalizers would
-    * inevitably drift and a stream could write a layout the batch
-    * reader rejects.
+  /** S3 envelope normalization, the ONE normalizer behind `save`,
+    * `mergeInto` and (through `normalizeForSave`) the exactly-once
+    * stream sink: the same casts, extraneous-column rejection and
+    * partition derivation everywhere — two normalizers would drift and
+    * a stream could write a layout the batch reader rejects.
     */
   private[graft] def normalize(
       df: DataFrame,

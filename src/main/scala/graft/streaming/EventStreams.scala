@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming extension (SURVEY §2.10: the reference has no streaming —
   * this is additive scope mapping the `events` table onto Structured
@@ -567,7 +567,7 @@ object EventStreams {
       }
   }
 
-  /** Streaming ingest into a txlog-backed feature with exactly-once
+  /** Streaming ingest into a stored feature with exactly-once
     * table semantics: each micro-batch is normalized like the batch
     * writer and committed atomically via `TimeseriesStore.writeTx`
     * under the structured `(streamId, batchId)` transaction. Structured
@@ -602,33 +602,4 @@ object EventStreams {
           streamId, batchId)
         ()
       }
-
-  /** Streaming ingest into the feature-store layout: the envelope goes
-    * through the SAME normalizer as the batch writer
-    * (`TimeseriesStore.normalize` — timestamp casts, extraneous-column
-    * rejection, created_time default, partition derivation for BOTH
-    * styles), so a stream can never write a layout the batch reader
-    * rejects; a hand-rolled copy here had already drifted (no casts,
-    * date-only partitions). Each micro-batch is hash-repartitioned on
-    * `partition` before the write — without it every shuffle task
-    * writes a file into every hive partition it touches, the
-    * small-files disease `layoutForWrite` fixes on the batch path
-    * (range repartition samples, which streaming plans don't allow).
-    */
-  def featureSink(
-      series: DataFrame, // time, value (+ optional created_time)
-      featureDir: String,
-      checkpointDir: String,
-      watermark: String = "10 minutes",
-      partitionStyle: String = "date"): DataStreamWriter[Row] =
-    graft.store.TimeseriesStore.normalize(series, partitionStyle)
-      .withWatermark("time", watermark)
-      .repartition(col("partition"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .format("parquet")
-      .partitionBy("partition")
-      .option("path", featureDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime("10 seconds"))
 }

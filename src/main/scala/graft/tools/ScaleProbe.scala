@@ -378,7 +378,7 @@ object ScaleProbe {
     // size — in exactly one commit, with the final multiset exact.
     timed("txlog MERGE INTO: 1M rows / 30 partitions, 3-day overlap + inserts, one commit") {
       val dir = java.nio.file.Files.createTempDirectory("graft-merge-probe").toString
-      val store = new graft.store.TimeseriesStore(spark, dir, backend = "txlog")
+      val store = new graft.store.TimeseriesStore(spark, dir)
       val base = 1704067200000L // 2024-01-01 UTC
       store.save("f", spark.range(1000000).select(
         timestamp_millis(lit(base) + (col("id") % 30) * 86400000L +
@@ -425,7 +425,7 @@ object ScaleProbe {
     timed("txlog schema evolution: epoch-mixed 2M-row read after int->double widen") {
       import org.apache.spark.sql.types.DoubleType
       val dir = java.nio.file.Files.createTempDirectory("graft-evolve-probe").toString
-      val store = new graft.store.TimeseriesStore(spark, dir, backend = "txlog")
+      val store = new graft.store.TimeseriesStore(spark, dir)
       val base = 1704067200000L
       store.save("f", spark.range(1000000).select(
         timestamp_millis(lit(base) + col("id") * 1000L).as("time"),
@@ -452,7 +452,7 @@ object ScaleProbe {
     // nightly maintenance job would pay per feature.
     timed("txlog OPTIMIZE: 120 small commits re-packed in one pass") {
       val dir = java.nio.file.Files.createTempDirectory("graft-opt-probe").toString
-      val store = new graft.store.TimeseriesStore(spark, dir, backend = "txlog")
+      val store = new graft.store.TimeseriesStore(spark, dir)
       val batches = 120
       (0 until batches).foreach { i =>
         store.save("f", spark.range(50).select(
@@ -736,7 +736,7 @@ object ScaleProbe {
     // never the table.
     timed("txlog DELETE: 1M rows / 30 partitions, single-day erasure rewrites 1 partition") {
       val dir = java.nio.file.Files.createTempDirectory("graft-del-probe").toString
-      val st = new graft.store.TimeseriesStore(spark, dir, backend = "txlog")
+      val st = new graft.store.TimeseriesStore(spark, dir)
       val day0 = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
       st.save("f", spark.range(1000000L).select(
         timestamp_millis(lit(day0) + (col("id") % 30L) * 86400000L +
@@ -820,7 +820,7 @@ object ScaleProbe {
     // return exactly the predicate's rows.
     timed("txlog OPTIMIZE ZORDER: 1M rows / 30 partitions, 2% value-slice skipping") {
       val dir = java.nio.file.Files.createTempDirectory("graft-zorder-probe").toString
-      val st = new graft.store.TimeseriesStore(spark, dir, backend = "txlog")
+      val st = new graft.store.TimeseriesStore(spark, dir)
       val day0 = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
       st.save("f", spark.range(1000000L).select(
         timestamp_millis(lit(day0) + (col("id") % 30L) * 86400000L +
@@ -1162,7 +1162,7 @@ object ScaleProbe {
       // small fraction of the initial export, and the Delta commit it
       // writes must name only the changed files
       val dir = java.nio.file.Files.createTempDirectory("graft-dlsync-probe").toString
-      val st = new graft.store.TimeseriesStore(spark, s"$dir/wh", backend = "txlog")
+      val st = new graft.store.TimeseriesStore(spark, s"$dir/wh")
       val rows = spark.range(1000000).select(
         timestamp_millis(lit(base) + (col("id") % 90) * 86400000L +
           (col("id") / 90).cast("long") * 7000L).as("time"),
@@ -1193,7 +1193,7 @@ object ScaleProbe {
     }
     timed("bloom point-lookup file skipping: 1M rows / 90 daily files") {
       val dir = java.nio.file.Files.createTempDirectory("graft-bloom-probe").toString
-      val st = new graft.store.TimeseriesStore(spark, dir, backend = "txlog")
+      val st = new graft.store.TimeseriesStore(spark, dir)
       // keys interleave across every file BY CONSTRUCTION (id mod),
       // so min/max stats can never prune a probe — the bloom's case
       st.save("t", spark.range(4).select(

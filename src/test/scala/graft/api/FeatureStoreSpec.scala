@@ -573,6 +573,26 @@ class FeatureStoreSpec extends SparkSpec {
     assert(swapped.head ne instances.head)
   }
 
+  test("every reference backend name gets table versions, AS OF loads and restore") {
+    // the catalog records the name; every namespace is log-backed
+    for (backend <- Seq("spark", "dask", "pandas")) {
+      val dir = tmpDir(s"graft-fs-$backend")
+      val fs = new FeatureStore(spark, s"$dir/catalog.json")
+      fs.createNamespace("b", s"$dir/warehouse", backend = backend)
+      assert(fs.listNamespaces(Some("^b$")).head.backend == backend)
+      fs.createFeature("b/f")
+      fs.saveDataFrame(dailySeries("2024-01-01", 3, _.toDouble), Some("b/f"))
+      fs.saveDataFrame(dailySeries("2024-01-01", 3, 10.0 + _), Some("b/f"))
+      assert(fs.featureVersion("b/f") == 1L, backend)
+      def values(asOf: Option[Long]) = fs.loadDataFrame(Seq("b/f"), asOfVersion = asOf)
+        .orderBy("time").collect().map(_.getDouble(1)).toSeq
+      assert(values(Some(0L)) == Seq(0.0, 1.0, 2.0), backend)
+      assert(values(None) == Seq(10.0, 11.0, 12.0), backend)
+      assert(fs.restoreFeature("b/f", 0L) == 2L, backend)
+      assert(values(None) == Seq(0.0, 1.0, 2.0), backend)
+    }
+  }
+
   test("save validation: extraneous columns rejected, empty save is a no-op") {
     val fs = freshStore()
     fs.createFeature("test/val")

@@ -1,70 +1,23 @@
 package graft.api
 
 import java.sql.Timestamp
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{JobCounting, SparkSpec}
 import graft.ops.TimeseriesOps
-import graft.streaming.EventStreams
 
 /** Serve-path reads: what `last()` and short `loadDataFrame` windows
   * cost in Spark jobs, that the one-pass endpoint lookup returns the
-  * dedup winner, and the opens that must keep inferring their schema.
+  * dedup winner under every reference backend name, and how feature
+  * directories without a committed log open: empty when nothing was
+  * committed, refused (naming the migration) when a pre-log writer left
+  * data there.
   */
-class ServeReadSpec extends SparkSpec {
+class ServeReadSpec extends SparkSpec with JobCounting {
   import spark.implicits._
-
-  /** One job's totals, in job-id (= submission) order. */
-  final case class JobStat(id: Int, var records: Long = 0L, var shuffleBytes: Long = 0L)
-
-  /** Runs `body` under a private job group and returns every Spark job
-    * it started. A marker job in a second group drains the listener
-    * bus: events reach a listener in order, so once the marker's end
-    * arrives every earlier task and job event has too. */
-  private def jobsOf[T](body: => T): (T, Seq[JobStat]) = {
-    val sc = spark.sparkContext
-    val group = s"serve-spec-${java.util.UUID.randomUUID()}"
-    val jobs = new ConcurrentHashMap[Int, JobStat]()
-    val stageJob = new ConcurrentHashMap[Int, JobStat]()
-    val drainJob = new java.util.concurrent.atomic.AtomicInteger(-1)
-    val drained = new CountDownLatch(1)
-    def groupOf(e: SparkListenerJobStart) =
-      Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (groupOf(e).contains(group)) {
-          val j = JobStat(e.jobId)
-          jobs.put(e.jobId, j)
-          e.stageIds.foreach(stageJob.put(_, j))
-        } else if (groupOf(e).contains(s"$group-drain")) drainJob.set(e.jobId)
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        Option(stageJob.get(e.stageId)).foreach { j =>
-          j.synchronized {
-            Option(e.taskMetrics).foreach { m =>
-              j.records += m.inputMetrics.recordsRead
-              j.shuffleBytes += m.shuffleWriteMetrics.bytesWritten
-            }
-          }
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == drainJob.get) drained.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "serve-spec")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-drain", "drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      import scala.jdk.CollectionConverters._
-      (out, jobs.values.asScala.toSeq.sortBy(_.id))
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def freshStore(backend: String = "spark"): (FeatureStore, String) = {
     val dir = tmpDir("graft-serve")
@@ -169,17 +122,82 @@ class ServeReadSpec extends SparkSpec {
     }
   }
 
+  test("a plain parquet tree without a transaction log fails fast naming importSnapshot") {
+    implicit val sqlCtx = spark.sqlContext
+    val (fs, warehouse) = freshStore()
+    val ns = fs.catalog.getNamespace("s").get
+    // a tree written the pre-log way: one plain partitioned write
+    val rows = trickyRows("2024-01-01T12:00:00", "2024-01-20T12:00:00")
+    rows.withColumn("partition", date_format(col("time"), "yyyy-MM-dd"))
+      .write.partitionBy("partition").parquet(s"$warehouse/feature/legacy")
+    // and one a parquet file-sink stream wrote (`_spark_metadata`)
+    val mem = MemoryStream[(Timestamp, Double)]
+    val q = mem.toDF().toDF("time", "value")
+      .withColumn("created_time", col("time"))
+      .withColumn("partition", date_format(col("time"), "yyyy-MM-dd"))
+      .writeStream.format("parquet").partitionBy("partition")
+      .option("path", s"$warehouse/feature/sunk")
+      .option("checkpointLocation", tmpDir("graft-serve-ckpt")).start()
+    mem.addData((ts("2024-01-01T10:00:00"), 1.0), (ts("2024-01-02T10:00:00"), 2.0))
+    q.processAllAvailable()
+    q.stop()
+    for (name <- Seq("legacy", "sunk")) {
+      fs.createFeature(s"s/$name")
+      // refused when the read is BUILT, never read as an empty feature
+      val load = intercept[IllegalStateException](fs.loadDataFrame(Seq(s"s/$name")))
+      assert(load.getMessage.contains("importSnapshot"), load.getMessage)
+      val last = intercept[IllegalStateException](fs.last(s"s/$name"))
+      assert(last.getMessage.contains("importSnapshot"), last.getMessage)
+      // and a save must not bury the tree under a fresh log
+      intercept[IllegalStateException](
+        fs.saveDataFrame(daily("2024-02-01", 1), Some(s"s/$name")))
+    }
+    // the migration: move the tree aside, import it under the same name
+    val moved = s"${tmpDir("graft-serve-legacy")}/legacy"
+    assert(new java.io.File(s"$warehouse/feature/legacy")
+      .renameTo(new java.io.File(moved)))
+    fs.importFeature("s/legacy", moved)
+    def sorted(df: DataFrame) = df.select("time", "created_time", "value")
+      .orderBy("time", "created_time", "value").collect().map(_.toSeq.map(String.valueOf)).toSeq
+    assert(sorted(fs.store(ns).read("legacy")) == sorted(rows))
+    assert(fs.last(Seq("s/legacy"), Some("1h"))("s/legacy").contains(7.0))
+    // files renamed in by an install whose commit never landed carry
+    // no committer marker: the feature reads as its committed state
+    val crashed = new java.io.File(s"$warehouse/feature/crashed")
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(moved), crashed)
+    new java.io.File(crashed, "_SUCCESS").delete()
+    fs.createFeature("s/crashed")
+    assert(fs.loadDataFrame(Seq("s/crashed")).count() == 0)
+    assert(fs.last("s/crashed").isEmpty)
+  }
+
   test("an unpinned plain tree written by featureSink reads back through the facade") {
     implicit val sqlCtx = spark.sqlContext
     val (fs, warehouse) = freshStore()
     fs.createFeature("s/sunk")
+    // the layout the pre-log featureSink wrote: normalized envelope,
+    // parquet file sink, no transaction log
     val mem = MemoryStream[(Timestamp, String)]
-    val q = EventStreams.featureSink(mem.toDF().toDF("time", "value"),
-      s"$warehouse/feature/sunk", tmpDir("graft-serve-ckpt")).start()
+    val q = graft.store.TimeseriesStore.normalize(mem.toDF().toDF("time", "value"), "date")
+      .writeStream.format("parquet").partitionBy("partition")
+      .option("path", s"$warehouse/feature/sunk")
+      .option("checkpointLocation", tmpDir("graft-serve-ckpt")).start()
     mem.addData((ts("2024-01-01T10:00:00"), "alpha"), (ts("2024-01-02T10:00:00"), "beta"))
     q.processAllAvailable()
     q.stop()
     assert(fs.catalog.getFeature("s", "sunk").get.valueType.isEmpty)
+    val moved = s"${tmpDir("graft-serve-sunk")}/sunk"
+    assert(new java.io.File(s"$warehouse/feature/sunk").renameTo(new java.io.File(moved)))
+    // a file a failed micro-batch left behind: on disk, not in the sink log
+    val orphanDir = tmpDir("graft-serve-orphan")
+    Seq((ts("2024-01-02T11:00:00"), ts("2024-01-02T11:00:00"), "orphan"))
+      .toDF("time", "created_time", "value").write.mode("overwrite").parquet(orphanDir)
+    val orphan = new java.io.File(orphanDir).listFiles().filter(_.getName.endsWith(".parquet")).head
+    org.apache.commons.io.FileUtils.copyFile(orphan,
+      new java.io.File(s"$moved/partition=2024-01-02/part-orphan.snappy.parquet"))
+    // the sink log's absolute paths name the old location; the import
+    // re-roots them at the moved tree
+    fs.importFeature("s/sunk", moved)
     // string values: a guessed double schema could not read them back
     val rows = fs.loadDataFrame(Seq("s/sunk")).orderBy("time").collect()
     assert(rows.map(_.getString(1)).toSeq == Seq("alpha", "beta"))
@@ -218,8 +236,7 @@ class ServeReadSpec extends SparkSpec {
     fs.createFeature("s/bare")
     new java.io.File(s"$warehouse/feature/bare").mkdirs()
     for (name <- Seq("gone", "bare")) {
-      val raw = fs.store(ns).read(name, valueType =
-        fs.catalog.getFeature("s", name).get.valueType.map(org.apache.spark.sql.types.DataType.fromJson))
+      val raw = fs.store(ns).read(name)
       assert(raw.columns.toSeq == Seq("time", "created_time", "value") && raw.count() == 0, name)
       assert(fs.loadDataFrame(Seq(s"s/$name")).count() == 0, name)
       assert(fs.last(s"s/$name").isEmpty, name)

@@ -17,7 +17,7 @@ class DeltaBridgeSpec extends SparkSpec {
     // as a Spark job over executors; the JSON log is deterministic, so
     // the two paths must produce byte-identical commits
     def doExport(root: String): Unit = {
-      val st = new TimeseriesStore(spark, s"$root/wh", backend = "txlog")
+      val st = new TimeseriesStore(spark, s"$root/wh")
       st.save("f", Seq(
         (ts("2024-01-01T01:00:00"), 1.0),
         (ts("2024-01-02T02:00:00"), 2.0)).toDF("time", "value"))
@@ -42,7 +42,7 @@ class DeltaBridgeSpec extends SparkSpec {
 
   test("exportSnapshotDelta roundtrips through DeltaBridge.read, pinned version honored") {
     val root = tmpDir("deltart")
-    val st = new TimeseriesStore(spark, s"$root/wh", backend = "txlog")
+    val st = new TimeseriesStore(spark, s"$root/wh")
     val a = Seq(
       (ts("2024-01-01T01:00:00"), 1.0),
       (ts("2024-01-02T02:00:00"), 2.0)).toDF("time", "value")
@@ -84,7 +84,7 @@ class DeltaBridgeSpec extends SparkSpec {
 
   test("importSnapshot routes a delta-logged tree through the log") {
     val root = tmpDir("deltaimp")
-    val st = new TimeseriesStore(spark, s"$root/wh", backend = "txlog")
+    val st = new TimeseriesStore(spark, s"$root/wh")
     st.save("f", Seq(
       (ts("2024-02-01T01:00:00"), 4.0),
       (ts("2024-02-02T02:00:00"), 5.0)).toDF("time", "value"))
@@ -148,7 +148,7 @@ class DeltaBridgeSpec extends SparkSpec {
 
   test("syncSnapshotDelta publishes txlog deltas as one Delta commit; no-ops when idle") {
     val root = tmpDir("deltasync")
-    val st = new TimeseriesStore(spark, s"$root/wh", backend = "txlog")
+    val st = new TimeseriesStore(spark, s"$root/wh")
     st.save("f", Seq(
       (ts("2024-03-01T01:00:00"), 1.0),
       (ts("2024-03-02T02:00:00"), 2.0)).toDF("time", "value"))
@@ -204,7 +204,7 @@ class DeltaBridgeSpec extends SparkSpec {
 
   test("writeCheckpoint bounds replay: read seeds from the parquet checkpoint") {
     val root = tmpDir("deltackpt")
-    val st = new TimeseriesStore(spark, s"$root/wh", backend = "txlog")
+    val st = new TimeseriesStore(spark, s"$root/wh")
     st.save("f", Seq((ts("2024-04-01T01:00:00"), 1.0)).toDF("time", "value"))
     st.exportSnapshotDelta("f", s"$root/delta")
     st.save("f", Seq((ts("2024-04-02T02:00:00"), 2.0)).toDF("time", "value"))
@@ -242,7 +242,7 @@ class DeltaBridgeSpec extends SparkSpec {
 
   test("vacuum deletes only expired tombstones; live files and the window survive") {
     val root = tmpDir("deltavac")
-    val st = new TimeseriesStore(spark, s"$root/wh", backend = "txlog")
+    val st = new TimeseriesStore(spark, s"$root/wh")
     st.save("f", Seq(
       (ts("2024-05-01T01:00:00"), 1.0),
       (ts("2024-05-02T02:00:00"), 2.0)).toDF("time", "value"))
@@ -267,7 +267,7 @@ class DeltaBridgeSpec extends SparkSpec {
 
   test("readWhere/readRange prune files from log metadata before the scan") {
     val root = tmpDir("deltaprune")
-    val st = new TimeseriesStore(spark, s"$root/wh", backend = "txlog")
+    val st = new TimeseriesStore(spark, s"$root/wh")
     st.save("f", Seq(
       (ts("2024-06-01T01:00:00"), 1.0),
       (ts("2024-06-02T02:00:00"), 5.0),
@@ -366,7 +366,7 @@ class DeltaBridgeSpec extends SparkSpec {
 
   test("third-party shapes: multi-part checkpoint seeds the replay") {
     val root = tmpDir("deltamp")
-    val st = new TimeseriesStore(spark, s"$root/wh", backend = "txlog")
+    val st = new TimeseriesStore(spark, s"$root/wh")
     st.save("f", Seq(
       (ts("2024-01-01T01:00:00"), 1.0),
       (ts("2024-01-02T02:00:00"), 2.0),

@@ -18,7 +18,7 @@ class DeltaSyncLawsSpec extends SparkSpec {
 
   test("after every sync, the Delta tree equals the txlog snapshot (8 random ops)") {
     val root = tmpDir("dlaws")
-    val st = new TimeseriesStore(spark, s"$root/wh", backend = "txlog")
+    val st = new TimeseriesStore(spark, s"$root/wh")
     val rnd = new scala.util.Random(42)
 
     def batch(day: Int, n: Int): org.apache.spark.sql.DataFrame =

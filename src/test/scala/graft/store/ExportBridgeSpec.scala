@@ -23,7 +23,7 @@ class ExportBridgeSpec extends SparkSpec {
 
   test("verbatim export is a file copy: same bytes, raw-readable, pinned version") {
     val dir = tmpDir("graft-export-verbatim")
-    val tx = new TimeseriesStore(spark, s"$dir/tx", backend = "txlog")
+    val tx = new TimeseriesStore(spark, s"$dir/tx")
     tx.save("f", series(
       ("2024-01-01 10:00:00", "2024-01-01 10:00:00", 1.0),
       ("2024-01-02 10:00:00", "2024-01-02 10:00:00", 2.0)))
@@ -53,7 +53,7 @@ class ExportBridgeSpec extends SparkSpec {
 
   test("mixed-epoch export ALIGNS to the pinned schema; import re-declares it") {
     val dir = tmpDir("graft-export-aligned")
-    val tx = new TimeseriesStore(spark, s"$dir/tx", backend = "txlog")
+    val tx = new TimeseriesStore(spark, s"$dir/tx")
     // epoch 0: INT values
     tx.write("f", Seq(("2024-01-01 10:00:00", 1), ("2024-01-02 10:00:00", 2))
       .toDF("t", "v").select(
@@ -94,7 +94,7 @@ class ExportBridgeSpec extends SparkSpec {
 
   test("refusal edges: non-empty destination, import over existing commits") {
     val dir = tmpDir("graft-export-refuse")
-    val tx = new TimeseriesStore(spark, s"$dir/tx", backend = "txlog")
+    val tx = new TimeseriesStore(spark, s"$dir/tx")
     tx.save("f", series(("2024-01-01 10:00:00", "2024-01-01 10:00:00", 1.0)))
     tx.exportSnapshot("f", s"$dir/out")
     // destination holds data -> refuse (a second export cannot silently
@@ -102,8 +102,7 @@ class ExportBridgeSpec extends SparkSpec {
     intercept[IllegalArgumentException](tx.exportSnapshot("f", s"$dir/out"))
     // import refuses to append to a table that already has commits
     intercept[IllegalArgumentException](tx.importSnapshot("f", s"$dir/out"))
-    // plain (non-txlog) stores have no snapshot to pin
-    val plain = new TimeseriesStore(spark, s"$dir/plain")
-    intercept[IllegalArgumentException](plain.exportSnapshot("f", s"$dir/out2"))
+    // a feature with no committed version has no snapshot to pin
+    intercept[IllegalArgumentException](tx.exportSnapshot("never", s"$dir/out2"))
   }
 }

@@ -47,7 +47,7 @@ class FileBloomSpec extends SparkSpec {
 
   test("store: probes prune to the files that can hold the key; results exact") {
     val dir = tmpDir("graft-bloom")
-    val st = new TimeseriesStore(spark, s"$dir/wh", backend = "txlog")
+    val st = new TimeseriesStore(spark, s"$dir/wh")
     // epoch 0 without the key column — these files can never be skipped
     st.save("e", entities(1, Seq(100L)).drop("user_id"))
     st.evolveSchema("e", st.tableSchema("e").get.add("user_id", LongType))
@@ -72,7 +72,7 @@ class FileBloomSpec extends SparkSpec {
 
   test("store: blooms survive compaction rewrites and the declaration survives checkpoints") {
     val dir = tmpDir("graft-bloom-rw")
-    val st = new TimeseriesStore(spark, s"$dir/wh", backend = "txlog")
+    val st = new TimeseriesStore(spark, s"$dir/wh")
     st.save("e", entities(1, Seq(1L, 2L, 3L)).drop("user_id"))
     st.evolveSchema("e", st.tableSchema("e").get.add("user_id", LongType))
     st.declareBloomIndex("e", "user_id")

@@ -15,7 +15,7 @@ class IcebergBridgeSpec extends SparkSpec {
   import spark.implicits._
 
   private def export(root: String): TimeseriesStore = {
-    val st = new TimeseriesStore(spark, s"$root/wh", backend = "txlog")
+    val st = new TimeseriesStore(spark, s"$root/wh")
     val a = Seq(
       (ts("2024-01-01T01:00:00"), 1.0),
       (ts("2024-01-02T02:00:00"), 2.0)).toDF("time", "value")
@@ -174,7 +174,7 @@ class IcebergBridgeSpec extends SparkSpec {
 
   test("syncSnapshotIceberg publishes append+delete as one new snapshot; time travel holds") {
     val root = tmpDir("ibsync")
-    val st = new TimeseriesStore(spark, s"$root/wh", backend = "txlog")
+    val st = new TimeseriesStore(spark, s"$root/wh")
     st.save("f", Seq(
       (ts("2024-01-01T01:00:00"), 1.0),
       (ts("2024-01-02T02:00:00"), 2.0)).toDF("time", "value"))
@@ -208,7 +208,7 @@ class IcebergBridgeSpec extends SparkSpec {
 
   test("importSnapshot routes an iceberg-metadata tree through the manifests") {
     val root = tmpDir("ibimp")
-    val st = new TimeseriesStore(spark, s"$root/wh", backend = "txlog")
+    val st = new TimeseriesStore(spark, s"$root/wh")
     export(root)
     // decoy: invisible to a manifest-driven import, fatal to a raw read
     Seq((ts("2024-09-09T09:00:00"), 99.0)).toDF("time", "value")
@@ -333,7 +333,7 @@ class IcebergBridgeSpec extends SparkSpec {
     // sync writing its own id onto carried files would make external
     // incremental/changelog consumers misattribute them
     val root = tmpDir("ibcarry")
-    val st = new TimeseriesStore(spark, s"$root/wh", backend = "txlog")
+    val st = new TimeseriesStore(spark, s"$root/wh")
     st.save("f", Seq((ts("2024-01-01T01:00:00"), 1.0)).toDF("time", "value"))
     st.exportSnapshotIceberg("f", s"$root/ib") // snapshot 1
     val metaV1 = Files.readString(Paths.get(s"$root/ib/metadata/v1.metadata.json"))
@@ -497,7 +497,7 @@ class IcebergBridgeSpec extends SparkSpec {
   test("sync across add-column evolution: new schema-id, pinned snapshot keeps its epoch") {
     import org.apache.spark.sql.types.{DoubleType, LongType}
     val root = tmpDir("ibevolve")
-    val st = new TimeseriesStore(spark, s"$root/wh", backend = "txlog")
+    val st = new TimeseriesStore(spark, s"$root/wh")
     st.save("f", Seq((ts("2024-01-01T01:00:00"), 1.0)).toDF("time", "value"))
     st.exportSnapshotIceberg("f", s"$root/ib") // snapshot 1, schema 0
     val snap1 = IcebergBridge.currentSnapshotId(spark, s"$root/ib")
@@ -528,7 +528,7 @@ class IcebergBridgeSpec extends SparkSpec {
     // a TYPE change refuses (the verbatim parquet can't satisfy it):
     // int -> double is a store-legal widening but not syncable
     val root2 = tmpDir("ibevolvebad")
-    val st2 = new TimeseriesStore(spark, s"$root2/wh", backend = "txlog")
+    val st2 = new TimeseriesStore(spark, s"$root2/wh")
     st2.save("g", Seq((ts("2024-01-01T01:00:00"), 1))
       .toDF("time", "value").withColumn("value", col("value").cast("int")))
     st2.exportSnapshotIceberg("g", s"$root2/ib")
@@ -542,7 +542,7 @@ class IcebergBridgeSpec extends SparkSpec {
   test("position deletes: merge-on-read snapshot drops rows; travel, pruning, stacking, equality refuse") {
     import scala.jdk.CollectionConverters._
     val root = tmpDir("ibposdel")
-    val st = new TimeseriesStore(spark, s"$root/wh", backend = "txlog")
+    val st = new TimeseriesStore(spark, s"$root/wh")
     st.save("f", Seq(
       (ts("2024-01-01T01:00:00"), 1.0),
       (ts("2024-01-01T02:00:00"), 2.0),
@@ -615,7 +615,7 @@ class IcebergBridgeSpec extends SparkSpec {
 
   test("equality deletes: CDC-shaped row kills by key, null-safe match, stacks with position deletes") {
     val root = tmpDir("ibeqdel")
-    val st = new TimeseriesStore(spark, s"$root/wh", backend = "txlog")
+    val st = new TimeseriesStore(spark, s"$root/wh")
     st.save("f", Seq(
       (ts("2024-01-01T01:00:00"), 1.0),
       (ts("2024-01-01T02:00:00"), 2.0),
@@ -654,7 +654,7 @@ class IcebergBridgeSpec extends SparkSpec {
   test("compactDeletes rewrites only affected files, drops delete manifests, re-enables sync") {
     import scala.jdk.CollectionConverters._
     val root = tmpDir("ibcompact")
-    val st = new TimeseriesStore(spark, s"$root/wh", backend = "txlog")
+    val st = new TimeseriesStore(spark, s"$root/wh")
     st.save("f", Seq(
       (ts("2024-01-01T01:00:00"), 1.0),
       (ts("2024-01-01T02:00:00"), 2.0),
@@ -708,7 +708,7 @@ class IcebergBridgeSpec extends SparkSpec {
 
   test("delete snapshots commit under an unpartitioned spec and carry parquet field ids") {
     val root = tmpDir("ibdelspec")
-    val st = new TimeseriesStore(spark, s"$root/wh", backend = "txlog")
+    val st = new TimeseriesStore(spark, s"$root/wh")
     st.save("f", Seq(
       (ts("2024-01-01T01:00:00"), 1.0),
       (ts("2024-01-01T02:00:00"), 2.0),
@@ -796,7 +796,7 @@ class IcebergBridgeSpec extends SparkSpec {
 
   test("foreign partition-scoped equality deletes apply only within their partition") {
     val root = tmpDir("ibscoped")
-    val st = new TimeseriesStore(spark, s"$root/wh", backend = "txlog")
+    val st = new TimeseriesStore(spark, s"$root/wh")
     st.save("f", Seq(
       (ts("2024-01-01T01:00:00"), 1.0),
       (ts("2024-01-01T02:00:00"), 2.0),
@@ -946,7 +946,7 @@ class IcebergBridgeSpec extends SparkSpec {
     assert(canonMeta(r1) === canonMeta(r2))
     assert(readBack(s"$r1/ib") === expected)
     // sync's ADDED entries take the job path too
-    val st = new TimeseriesStore(spark, s"$r1/wh", backend = "txlog")
+    val st = new TimeseriesStore(spark, s"$r1/wh")
     st.save("f", Seq((ts("2024-01-05T05:00:00"), 5.0)).toDF("time", "value"))
     spark.conf.set("graft.bridge.describeJobThreshold", "1")
     try st.syncSnapshotIceberg("f", s"$r1/ib")

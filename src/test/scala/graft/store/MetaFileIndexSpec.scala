@@ -19,7 +19,7 @@ class MetaFileIndexSpec extends SparkSpec {
 
   private def mkStore(): (TimeseriesStore, String) = {
     val dir = tmpDir("metaidx")
-    (new TimeseriesStore(spark, dir, backend = "txlog"), dir)
+    (new TimeseriesStore(spark, dir), dir)
   }
 
   private def sampleDf = (0 until 200).map { i =>
@@ -108,7 +108,7 @@ class MetaFileIndexSpec extends SparkSpec {
         java.nio.file.Files.write(p, stripped.getBytes("UTF-8"))
       }
     }
-    val st2 = new TimeseriesStore(spark, dir, backend = "txlog")
+    val st2 = new TimeseriesStore(spark, dir)
     val df = st2.read("f")
     val scan = df.queryExecution.executedPlan
       .collectFirst { case s: FileSourceScanExec => s }.get
@@ -132,7 +132,7 @@ class MetaFileIndexSpec extends SparkSpec {
     }
     // drive the log to its next checkpoint boundary with empty-ish
     // appends; the rewrite must stat + backfill the stripped adds
-    val st2 = new TimeseriesStore(spark, dir, backend = "txlog")
+    val st2 = new TimeseriesStore(spark, dir)
     val preScan = st2.read("f").queryExecution.executedPlan
       .collectFirst { case s: FileSourceScanExec => s }.get
     assert(preScan.relation.location.getClass.getSimpleName != "MetaFileIndex")
@@ -157,7 +157,7 @@ class MetaFileIndexSpec extends SparkSpec {
       val real = java.nio.file.Files.size(java.nio.file.Paths.get(dir, "feature", "f", a.path))
       assert(a.fsize.contains(real), s"${a.path}: fsize ${a.fsize} != $real")
     }
-    val st3 = new TimeseriesStore(spark, dir, backend = "txlog")
+    val st3 = new TimeseriesStore(spark, dir)
     val df = st3.read("f")
     val scan = df.queryExecution.executedPlan
       .collectFirst { case s: FileSourceScanExec => s }.get

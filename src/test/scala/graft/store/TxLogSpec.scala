@@ -5,10 +5,9 @@ import org.apache.spark.sql.types.DoubleType
 
 import graft.SparkSpec
 
-/** The transaction-log backend: append/read parity with the plain
-  * parquet store, atomic compaction (retire + publish in one commit),
-  * time travel by version, vacuum, optimistic commit-conflict retry,
-  * and log-metadata partition pruning.
+/** The transaction-log store: ranged append/read, atomic compaction
+  * (retire + publish in one commit), time travel by version, vacuum,
+  * optimistic commit-conflict retry, and log-metadata partition pruning.
   */
 class TxLogSpec extends SparkSpec {
   import spark.implicits._
@@ -19,26 +18,19 @@ class TxLogSpec extends SparkSpec {
       col("ct").cast("timestamp").as("created_time"),
       col("v").as("value"))
 
-  private def freshStores(): (TimeseriesStore, TimeseriesStore) = {
-    val dir = tmpDir("graft-tx")
-    (new TimeseriesStore(spark, s"$dir/plain"),
-      new TimeseriesStore(spark, s"$dir/tx", backend = "txlog"))
-  }
+  private def freshStore(): TimeseriesStore = new TimeseriesStore(spark, tmpDir("graft-tx"))
 
-  test("append + ranged read parity with the parquet backend") {
-    val (plain, tx) = freshStores()
-    val batch1 = series(
+  test("append + ranged read returns exactly the in-range rows of every append") {
+    val tx = freshStore()
+    tx.save("f", series(
       ("2024-01-01 10:00:00", "2024-01-01 10:00:00", 1.0),
-      ("2024-01-02 10:00:00", "2024-01-02 10:00:00", 2.0))
-    val batch2 = series(("2024-01-03 10:00:00", "2024-01-03 10:00:00", 3.0))
-    Seq(plain, tx).foreach { st =>
-      st.save("f", batch1); st.save("f", batch2)
-    }
-    val q = (st: TimeseriesStore) =>
-      st.read("f", from = Some(ts("2024-01-02")), to = Some(ts("2024-01-03T23:00:00")))
-        .orderBy("time").collect().map(r => (r.getTimestamp(0), r.getDouble(2))).toSeq
-    assert(q(tx) == q(plain))
-    assert(q(tx).map(_._2) == Seq(2.0, 3.0))
+      ("2024-01-02 10:00:00", "2024-01-02 10:00:00", 2.0)))
+    tx.save("f", series(("2024-01-03 10:00:00", "2024-01-03 10:00:00", 3.0)))
+    val got = tx.read("f", from = Some(ts("2024-01-02")), to = Some(ts("2024-01-03T23:00:00")))
+      .orderBy("time").collect().map(r => (r.getTimestamp(0), r.getTimestamp(1), r.getDouble(2))).toSeq
+    assert(got == Seq(
+      (ts("2024-01-02T10:00:00"), ts("2024-01-02T10:00:00"), 2.0),
+      (ts("2024-01-03T10:00:00"), ts("2024-01-03T10:00:00"), 3.0)))
     assert(tx.listPartitions("f") == Seq("2024-01-01", "2024-01-02", "2024-01-03"))
   }
 
@@ -68,7 +60,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("log-metadata pruning: out-of-range files never reach the scan") {
-    val (_, tx) = freshStores()
+    val tx = freshStore()
     tx.save("f", series(
       ("2024-01-01 10:00:00", "2024-01-01 10:00:00", 1.0),
       ("2024-06-01 10:00:00", "2024-06-01 10:00:00", 6.0)))
@@ -84,7 +76,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("compaction is one atomic commit; time travel + vacuum") {
-    val (_, tx) = freshStores()
+    val tx = freshStore()
     // two generations of the same timestamp across two appends
     tx.save("f", series(("2024-01-01 10:00:00", "2024-01-01 10:00:00", 1.0)))
     tx.save("f", series(("2024-01-01 10:00:00", "2024-01-01 11:00:00", 9.0)))
@@ -107,7 +99,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("deleteWhere rewrites only matching files in one commit; time travel sees pre-delete") {
-    val (_, tx) = freshStores()
+    val tx = freshStore()
     // two partitions (days) in separate appends -> separate files
     tx.save("f", series(
       ("2024-01-01 10:00:00", "2024-01-01 10:00:00", 1.0),
@@ -138,7 +130,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("updateWhere rewrites matching rows in one commit; readChanges feeds increments") {
-    val (_, tx) = freshStores()
+    val tx = freshStore()
     tx.save("f", series(
       ("2024-01-01 10:00:00", "2024-01-01 10:00:00", 1.0),
       ("2024-01-02 10:00:00", "2024-01-02 10:00:00", 3.0)))
@@ -167,7 +159,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("AS OF TIMESTAMP resolves to the version live at the instant") {
-    val (_, tx) = freshStores()
+    val tx = freshStore()
     tx.save("f", series(("2024-01-01 10:00:00", "2024-01-01 10:00:00", 1.0)))
     val v1 = tx.tableVersion("f")
     Thread.sleep(30) // mtime granularity
@@ -184,7 +176,7 @@ class TxLogSpec extends SparkSpec {
 
   test("versionAt anchors on a surviving checkpoint and embedded instants, not mtimes") {
     val dir = tmpDir("graft-tx-anchor")
-    val tx = new TimeseriesStore(spark, s"$dir/tx", backend = "txlog")
+    val tx = new TimeseriesStore(spark, s"$dir/tx")
     for (i <- 1 to 11) // versions 0..10: the checkpoint lands at v10
       tx.save("f", series((f"2024-01-$i%02d 10:00:00", f"2024-01-$i%02d 10:00:00", i.toDouble)))
     assert(tx.tableVersion("f") == 10L)
@@ -215,7 +207,7 @@ class TxLogSpec extends SparkSpec {
 
   test("file-level time stats skip non-overlapping files from log metadata") {
     val dir = tmpDir("graft-tx-skip")
-    val tx = new TimeseriesStore(spark, s"$dir/tx", backend = "txlog")
+    val tx = new TimeseriesStore(spark, s"$dir/tx")
     // ONE day accumulated over 4 micro-batch-style appends: the single
     // partition holds 4 time-sliced files (150 minutes each)
     (0 until 4).foreach { b =>
@@ -241,7 +233,7 @@ class TxLogSpec extends SparkSpec {
 
   test("CHECK constraints: declared in the log, enforced on save/merge, survive checkpoints") {
     val dir = tmpDir("graft-tx-check")
-    val tx = new TimeseriesStore(spark, s"$dir/tx", backend = "txlog")
+    val tx = new TimeseriesStore(spark, s"$dir/tx")
     tx.save("f", series(("2024-01-01 10:00:00", "2024-01-01 10:00:00", 1.0)))
     tx.addCheck("f", "positive", "value >= 0")
     assert(tx.tableChecks("f") == Seq(("positive", "value >= 0")))
@@ -267,7 +259,7 @@ class TxLogSpec extends SparkSpec {
 
   test("restore rolls back as a new commit; vacuumed restores refuse") {
     val dir = tmpDir("graft-tx-restore")
-    val tx = new TimeseriesStore(spark, s"$dir/tx", backend = "txlog")
+    val tx = new TimeseriesStore(spark, s"$dir/tx")
     tx.save("f", series(
       ("2024-01-01 10:00:00", "2024-01-01 10:00:00", 1.0),
       ("2024-01-02 10:00:00", "2024-01-02 10:00:00", 2.0)))
@@ -293,7 +285,7 @@ class TxLogSpec extends SparkSpec {
 
   test("mergeInto: physical upsert in one commit; only matched files rewrite") {
     val dir = tmpDir("graft-tx-merge")
-    val tx = new TimeseriesStore(spark, s"$dir/tx", backend = "txlog")
+    val tx = new TimeseriesStore(spark, s"$dir/tx")
     // three day-partitions, two generations on day 2
     tx.save("f", series(
       ("2024-01-01 10:00:00", "2024-01-01 10:00:00", 1.0),
@@ -344,7 +336,7 @@ class TxLogSpec extends SparkSpec {
   test("schema evolution: type widen + add column, versioned reads keep old schema") {
     import org.apache.spark.sql.types._
     val dir = tmpDir("graft-tx-evolve")
-    val tx = new TimeseriesStore(spark, s"$dir/tx", backend = "txlog")
+    val tx = new TimeseriesStore(spark, s"$dir/tx")
     // epoch 0: INT values (first write declares the schema)
     val intBatch = Seq(("2024-01-01 10:00:00", 1), ("2024-01-02 10:00:00", 2))
       .toDF("t", "v").select(
@@ -407,7 +399,7 @@ class TxLogSpec extends SparkSpec {
 
   test("optimize bin-packs small files in one commit without changing a row") {
     val dir = tmpDir("graft-optimize")
-    val tx = new TimeseriesStore(spark, dir, backend = "txlog")
+    val tx = new TimeseriesStore(spark, dir)
     // 8 tiny appends to one day + 2 to another: the micro-batch-sink
     // accumulation shape
     (0 until 8).foreach { i =>
@@ -443,7 +435,7 @@ class TxLogSpec extends SparkSpec {
 
   test("optimize converges: half-target files and repacked outputs never re-qualify") {
     val dir = tmpDir("graft-opt-conv")
-    val tx = new TimeseriesStore(spark, dir, backend = "txlog")
+    val tx = new TimeseriesStore(spark, dir)
     (0 until 4).foreach(i =>
       tx.save("f", series((s"2024-01-01 10:0$i:00", "2024-01-01 10:00:00", i.toDouble))))
     import scala.jdk.CollectionConverters._
@@ -463,7 +455,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("tableStatsFast: metadata-only count/bounds track saves, deletes, rewrites") {
-    val (_, tx) = freshStores()
+    val tx = freshStore()
     tx.save("fast", series(
       ("2024-01-01 10:00:00", "2024-01-01 10:00:00", 1.0),
       ("2024-01-02 11:30:00", "2024-01-02 11:30:00", 2.0)))
@@ -597,11 +589,11 @@ class TxLogSpec extends SparkSpec {
 
   test("streaming writeTx by (streamId, batchId) is exactly-once across store instances") {
     val dir = tmpDir("graft-sinktx")
-    val store = new TimeseriesStore(spark, s"$dir/tx", backend = "txlog")
+    val store = new TimeseriesStore(spark, s"$dir/tx")
     val batch = series(("2024-01-01 10:00:00", "2024-01-01 10:00:00", 1.0))
     assert(store.writeTx("f", store.normalizeForSave(batch, "date"), "sink", 0L))
     // the zombie's replacement replays batch 0 through a FRESH store
-    val store2 = new TimeseriesStore(spark, s"$dir/tx", backend = "txlog")
+    val store2 = new TimeseriesStore(spark, s"$dir/tx")
     assert(!store2.writeTx("f", store.normalizeForSave(batch, "date"), "sink", 0L))
     assert(store2.writeTx("f",
       store2.normalizeForSave(series(("2024-01-01 11:00:00", "2024-01-01 11:00:00", 2.0)), "date"),
@@ -669,7 +661,7 @@ class TxLogSpec extends SparkSpec {
 
   test("vacuum reaps crashed stage batches; file-less feature dirs read as empty") {
     val dir = tmpDir("graft-stage")
-    val tx = new TimeseriesStore(spark, dir, backend = "txlog")
+    val tx = new TimeseriesStore(spark, dir)
     tx.save("f", series(("2024-01-01 10:00:00", "2024-01-01 10:00:00", 1.0)))
     // a writer that died between staging and install leaves its batch
     // under .stage — outside the table dir the log vacuum walks
@@ -696,14 +688,11 @@ class TxLogSpec extends SparkSpec {
     java.nio.file.Files.setLastModifiedTime(inflight, oldT)
     tx.vacuum("f")
     assert(java.nio.file.Files.exists(inflight))
-    // plain backend: a feature dir holding no parquet (crashed first
-    // append, external mkdir) honors the documented empty contract
-    // instead of throwing schema-inference errors forever
-    val plain = new TimeseriesStore(spark, s"$dir/plain")
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(s"$dir/plain", "feature", "g"))
-    assert(plain.read("g").isEmpty)
-    assert(plain.read("g").columns.toSeq == Seq("time", "created_time", "value"))
+    // a feature dir holding no log and no parquet (external mkdir)
+    // honors the documented empty contract
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "feature", "g"))
+    assert(tx.read("g").isEmpty)
+    assert(tx.read("g").columns.toSeq == Seq("time", "created_time", "value"))
   }
 
   test("checkpoint bounds replay and preserves the snapshot") {
@@ -723,7 +712,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("year-style partitions: log-metadata pruning widens one year each side") {
-    val (_, tx) = freshStores()
+    val tx = freshStore()
     tx.save("f", series(
       ("2019-06-01 00:00:00", "2019-06-01 00:00:00", 1.0),
       ("2021-06-01 00:00:00", "2021-06-01 00:00:00", 2.0),
@@ -789,12 +778,13 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("copy from a log-backed store carries the LIVE snapshot only") {
-    val (plain, tx) = freshStores()
+    val (tx, dest) = (freshStore(), freshStore())
     tx.save("f", series(("2024-01-01 10:00:00", "2024-01-01 10:00:00", 1.0)))
     tx.save("f", series(("2024-01-01 10:00:00", "2024-01-01 11:00:00", 9.0)))
     tx.compact("f")
-    tx.copy("f", "g", plain)
+    tx.copy("f", "g", dest)
     // a raw-directory copy would have resurrected both generations
-    assert(plain.read("g").collect().map(_.getDouble(2)).toSeq == Seq(9.0))
+    assert(dest.read("g").collect().map(_.getDouble(2)).toSeq == Seq(9.0))
+    assert(dest.tableVersion("g") == 0L) // one commit in the destination's log
   }
 }

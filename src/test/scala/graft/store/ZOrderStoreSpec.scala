@@ -14,7 +14,7 @@ class ZOrderStoreSpec extends SparkSpec {
 
   test("optimizeZorder: value skipping, unchanged rows, time travel") {
     val dir = tmpDir("graft-zorder")
-    val st = new TimeseriesStore(spark, s"$dir/tx", backend = "txlog")
+    val st = new TimeseriesStore(spark, s"$dir/tx")
     // 30 days x 400 rows, values uniform in [0, 500) — each append file
     // spans a narrow time range but the FULL value range
     val rnd = new java.util.Random(7)

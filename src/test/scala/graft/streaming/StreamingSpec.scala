@@ -235,30 +235,10 @@ class StreamingSpec extends SparkSpec {
     assert(out.toSeq == Seq((1L, Some("gold")), (9L, None)))
   }
 
-  test("featureSink writes the feature-store envelope continuously") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = tmpDir("graft-stream")
-    val mem = MemoryStream[Ev]
-    val series = mem.toDF().select(col("ts").as("time"), col("value"))
-    val q = EventStreams.featureSink(series, s"$dir/feature/s1", s"$dir/ckpt").start()
-    mem.addData(mkEvents(
-      ("2024-01-01T00:01:00", 1, "x", 1.0),
-      ("2024-01-02T00:01:00", 1, "x", 2.0)): _*)
-    q.processAllAvailable()
-    q.stop()
-    val written = spark.read.parquet(s"$dir/feature/s1")
-    assert(written.count() == 2)
-    assert(written.columns.toSet == Set("time", "created_time", "value", "partition"))
-    // hive partition dirs derived from event time, like the batch writer
-    val parts = new java.io.File(s"$dir/feature/s1").listFiles()
-      .filter(_.isDirectory).map(_.getName).filter(_.startsWith("partition=")).sorted
-    assert(parts.toSeq == Seq("partition=2024-01-01", "partition=2024-01-02"))
-  }
-
   test("featureSinkTx: exactly-once micro-batch commits into the txlog table") {
     implicit val sqlCtx = spark.sqlContext
     val dir = tmpDir("graft-stream-tx")
-    val store = new graft.store.TimeseriesStore(spark, dir, backend = "txlog")
+    val store = new graft.store.TimeseriesStore(spark, dir)
     val mem = MemoryStream[Ev]
     val series = mem.toDF().select(col("ts").as("time"), col("value"))
     val q = EventStreams.featureSinkTx(series, store, "s1", s"$dir/ckpt", "specstream").start()
@@ -270,6 +250,16 @@ class StreamingSpec extends SparkSpec {
     // two micro-batches -> two commits, both rows visible via snapshot
     assert(store.read("s1").orderBy("time").collect().map(_.getDouble(2)).toSeq == Seq(1.0, 2.0))
     assert(store.tableVersion("s1") == 1L)
+    // the feature-store envelope, through the batch writer's normalizer:
+    // created_time defaulted, and hive partition dirs derived from event
+    // time like the batch writer's
+    val written = spark.read.parquet(s"$dir/feature/s1")
+    assert(written.count() == 2)
+    assert(written.columns.toSet == Set("time", "created_time", "value", "partition"))
+    assert(written.filter(col("created_time").isNull).isEmpty)
+    val parts = new java.io.File(s"$dir/feature/s1").listFiles()
+      .filter(_.isDirectory).map(_.getName).filter(_.startsWith("partition=")).sorted
+    assert(parts.toSeq == Seq("partition=2024-01-01", "partition=2024-01-02"))
     // a re-delivered batch (checkpoint recovery replays the last one)
     // re-offers its (streamId, batchId) and must be a NO-OP, not a
     // duplicate — as must any OLDER batch a zombie driver replays
@@ -291,7 +281,7 @@ class StreamingSpec extends SparkSpec {
     // stream without either side rewriting the table
     implicit val sqlCtx = spark.sqlContext
     val dir = tmpDir("graft-stream-delta")
-    val store = new graft.store.TimeseriesStore(spark, s"$dir/wh", backend = "txlog")
+    val store = new graft.store.TimeseriesStore(spark, s"$dir/wh")
     val mem = MemoryStream[Ev]
     val series = mem.toDF().select(col("ts").as("time"), col("value"))
     val q = EventStreams.featureSinkTx(series, store, "s1", s"$dir/ckpt", "dstream").start()
