@@ -682,13 +682,12 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
         // Widen-from-last (the reference's seed-scan pruning,
         // dask.py:142-148, Spark-first): a deferred-clip load needs
         // pre-range rows ONLY as the fill seed — the LAST surviving row
-        // before `from`. Resolve that row's time with a tail-partition
-        // ladder (a metadata listing plus ≤ 9 partition directories in
-        // the dense case, see [[lastTimeBefore]]) and lower-bound the
+        // before `from`. Resolve that row's time with the log-driven
+        // endpoint search (see [[lastTimeBefore]]) and lower-bound the
         // real scan at it, so a resample over the last week of a
         // years-deep feature scans days, not history. asOfVersion reads
-        // keep the unbounded seed scan: the ladder walks the LATEST
-        // snapshot's partitions, which an old version need not match.
+        // keep the unbounded seed scan: the search reads the LATEST
+        // snapshot, which an old version need not match.
         val effFrom =
           if (clipFrom) from
           else if (asOfVersion.isDefined) None
@@ -706,9 +705,10 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
 
   /** Shared read-side pipeline: time travel -> last-writer-wins dedup ->
     * serialized-envelope unwrap (reference deserializes on load,
-    * dask.py:123-131). The endpoint lookups run the same travel and
-    * unwrap around [[TimeseriesOps.endpointRow]], which picks the same
-    * winner as the dedup (see [[endpointOf]]).
+    * dask.py:123-131). The endpoint lookups run the same travel (in the
+    * store's search) and the same unwrap around the
+    * [[TimeseriesOps.endpointRow]] winner, which is the dedup's winner
+    * (see [[endpointLookup]]).
     */
   private def postProcess(
       raw: DataFrame,
@@ -722,16 +722,6 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
   private def unwrap(deduped: DataFrame, f: Feature): DataFrame =
     (if (f.serialized) deduped.withColumn("value", get_json_object(col("value"), "$.v"))
      else deduped).select("time", "value")
-
-  /** The (time, value) row [[postProcess]] would put at the head or
-    * tail of `raw`, found in one top-1 pass with no dedup shuffle. */
-  private def endpointOf(
-      raw: DataFrame,
-      f: Feature,
-      timeTravel: Option[String],
-      fromTail: Boolean): Option[org.apache.spark.sql.Row] =
-    unwrap(TimeseriesOps.endpointRow(travel(raw, timeTravel), fromTail), f)
-      .collect().headOption
 
   /** Flagship read (core.py:246-276): wide frame, one column per feature
     * named `namespace/name`, outer-joined on time and forward-filled;
@@ -945,44 +935,37 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
       if (f.serialized) df.withColumn("value", to_json(struct(col("value").as("v"))))
       else df
     val vt = prepared.schema("value").dataType
-    f.valueType match {
-      case Some(json) if !f.serialized =>
-        require(DataType.fromJson(json) == vt,
-          s"schema change on append to '$full': stored ${json}, got ${vt.json} " +
-            "(create the feature with serialized=true to allow drift)")
-      case Some(_) => // serialized: already pinned to string, nothing to update
-      case None =>
-        // pin only when this save actually writes: an empty first batch
-        // (store.save no-ops on it) must not permanently pin a wrong or
-        // NullType and reject every future real append — there is no
-        // facade API to unpin
-        if (!prepared.isEmpty) catalog.pinValueType(ns, nm, vt.json)
+    f.valueType.filter(_ => !f.serialized).foreach { json =>
+      require(DataType.fromJson(json) == vt,
+        s"schema change on append to '$full': stored ${json}, got ${vt.json} " +
+          "(create the feature with serialized=true to allow drift)")
     }
-    store(nsObj).save(nm, prepared, f.partition)
+    // pin only once the store has committed: an empty first batch (a
+    // no-op) must not permanently pin a wrong or NullType and reject
+    // every future real append — there is no facade API to unpin — and
+    // a save the store refuses (legacy tree, CHECK violation) must
+    // leave the catalog as it was
+    if (store(nsObj).save(nm, prepared, f.partition) && f.valueType.isEmpty)
+      catalog.pinValueType(ns, nm, vt.json)
   }
 
   /** Point lookup for inference (core.py:315-331): last value per feature,
     * transforms evaluated at the tail (tested test_featurestore.py:665-672).
     *
-    * Stored (untransformed) features read boundary partitions only —
-    * width 3, then (under timeTravel) 9, then all, stopping as soon as
-    * the skew contract proves the candidate safe (see
-    * [[endpointLookup]]) — so a point lookup on a years-deep feature
-    * opens a few days' files, picked from the log's partition values,
-    * instead of scanning history. Transformed features fall back to the
-    * full DAG load.
-    *
-    * Each width is ONE Spark job with no shuffle: the read's schema and
-    * file index come from the feature's log (no inference or listing
-    * job) and [[TimeseriesOps.endpointRow]] picks the last-writer-wins
-    * winner at the newest time in a single top-1 pass instead of
-    * deduplicating every boundary row first.
+    * A stored (untransformed) feature is served from its log (see
+    * [[endpointLookup]]): one replay picks the files whose recorded
+    * `tmax` can hold the newest row — without timeTravel, the files at
+    * the maximum, one in the common case — and the driver reads them
+    * with Spark's parquet reader, so the lookup starts no Spark job and
+    * opens O(1) files however long the history. Transformed features
+    * fall back to the full DAG load and one top-1 job.
     */
   def last(features: Seq[String], timeTravel: Option[String] = None): Map[String, Option[Any]] =
     endpoint(features, timeTravel, fromTail = true)
 
   /** Mirror of `last()` at the head of each series (Store.first,
-    * _storage/_base.py:33-39).
+    * _storage/_base.py:33-39): the same search ordered by each file's
+    * `tmin`.
     */
   def first(features: Seq[String], timeTravel: Option[String] = None): Map[String, Option[Any]] =
     endpoint(features, timeTravel, fromTail = false)
@@ -1056,115 +1039,46 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
       full -> row.map(_.get(1)).filter(_ != null)
     }.toMap
 
-  /** Partition-bounded endpoint point-lookup; returns the row and the
-    * window widths it actually read (the latter so specs can pin the
-    * read amplification).
+  /** Endpoint point-lookup on a stored feature: the store's log-driven
+    * search ([[graft.store.TimeseriesStore.endpoint]]) applies the
+    * travel filter and picks [[TimeseriesOps.endpointRow]]'s winner,
+    * then the serialized unwrap runs on that one row. Returns the
+    * (time, value) row and the files the search read (so specs can pin
+    * the read amplification).
     *
-    * Minimum width 3, not 1: partition strings are WRITER-session-zone
-    * dates, and under the ±1-day skew the store's range reads already
-    * widen for, the true endpoint row can sit up to two partition
-    * values away from the lexical endpoint — a width-1 read could
-    * return a stale row and stop. Three boundary partitions still beats
-    * scanning a years-deep history.
-    *
-    * Without timeTravel a found row settles the lookup outright: the
-    * boundary partition is never filtered, so nothing deeper can beat
-    * it. Under timeTravel that argument breaks (a filtered-away prefix
-    * can mask a deeper true endpoint), so the lookup widens 3 → 9 → all
-    * and stops early only when the SKEW CONTRACT proves the candidate
-    * safe: a partition value p only contains event times in
-    * [p-1unit, p+2units) interpreted in UTC (the store's ±1-unit
-    * widening doctrine), so a tail candidate at or past the first
-    * unread value's exclusive sup — or a head candidate strictly below
-    * its inf — cannot be displaced by anything deeper.
+    * Without timeTravel the files whose `tmax` is the newest settle the
+    * lookup. Under timeTravel a masked tail widens file tier by file
+    * tier until the best surviving row is newer than every unread
+    * file's `tmax` — the bound the log records per file, in place of
+    * the partition-value skew argument the old 3 → 9 → all ladder
+    * needed.
     */
   private[graft] def endpointLookup(
       nsObj: Namespace,
       f: Feature,
       timeTravel: Option[String],
-      fromTail: Boolean): (Option[org.apache.spark.sql.Row], Seq[Int]) = {
-    val st = store(nsObj)
-    val parts = st.listPartitions(f.name, reverse = fromTail)
-    val ladder = if (timeTravel.isDefined) Seq(3, 9, parts.length)
-                 else Seq(3, parts.length)
-    val widths = ladder.filter(w => w > 0 && w <= parts.length).distinct
-    val read = scala.collection.mutable.ArrayBuffer[Int]()
-    val row = widths.iterator.map { w =>
-      read += w
-      val raw = st.readPartitions(f.name, parts.take(w), pinnedType(f), f.partition)
-      (w, endpointOf(raw, f, timeTravel, fromTail))
-    }.collectFirst {
-      case (w, Some(r)) if timeTravel.isEmpty || w == parts.length ||
-        endpointSettled(r.getTimestamp(0), parts(w), f.partition, fromTail) => Some(r)
-      case (w, None) if w == parts.length => None
-    }.flatten
-    (row, read.toSeq)
+      fromTail: Boolean): (Option[org.apache.spark.sql.Row], graft.store.EndpointReads) = {
+    val (winner, reads) = store(nsObj).endpoint(f.name, fromTail, timeTravel,
+      valueType = pinnedType(f))
+    (unwrap(winner, f).collect().headOption, reads)
   }
 
   /** Last SURVIVING event time strictly before `from` — the fill-seed
     * anchor for widen-from-last (reference dask.py:142-148): instead of
     * scanning a feature's full history to seed a forward fill, find the
-    * seed row's time with a tail-partition ladder and let the caller
-    * lower-bound the real scan at it.
-    *
-    * Only partitions whose value precedes `from`+1unit can hold rows
-    * before `from` (the skew contract: value p holds times in
-    * [p-1unit, p+2units)), so the ladder walks those newest-first in
-    * widths 3 → 9 → all — the same discipline as [[endpointLookup]] —
-    * and settles once [[endpointSettled]] proves no deeper partition
-    * can beat the candidate. Dense daily data settles at width 3; the
-    * full-width leg only runs when the history under `from` is sparse
-    * (few partitions) or empty. Survival means post-[[postProcess]]:
-    * a timeTravel-filtered row can never be returned as the seed.
+    * seed row's time with the same log-driven endpoint search as
+    * [[endpointLookup]], bounded below `from` (files whose `tmin` is at
+    * or past `from` are never candidates, and a file spanning `from` is
+    * bounded by it), and let the caller lower-bound the real scan at it.
+    * Survival means post-travel: a timeTravel-filtered row can never be
+    * returned as the seed.
     */
-  private def lastTimeBefore(
+  private[graft] def lastTimeBefore(
       nsObj: Namespace,
       f: Feature,
       from: Timestamp,
-      timeTravel: Option[String]): Option[Timestamp] = {
-    val st = store(nsObj)
-    val cutoff = f.partition match {
-      case "year" => graft.store.PartitionBounds.year(from.toInstant, 1).toString
-      case _      => graft.store.PartitionBounds.dateString(from.toInstant, 1)
-    }
-    val parts = st.listPartitions(f.name, reverse = true).filter(_ <= cutoff)
-    if (parts.isEmpty) return None
-    val widths = Seq(3, 9, parts.length).filter(w => w > 0 && w <= parts.length).distinct
-    widths.iterator.map { w =>
-      val raw = st.readPartitions(f.name, parts.take(w), pinnedType(f), f.partition)
-        .filter(col("time") < lit(from))
-      (w, endpointOf(raw, f, timeTravel, fromTail = true))
-    }.collectFirst {
-      case (w, Some(r)) if w == parts.length ||
-        endpointSettled(r.getTimestamp(0), parts(w), f.partition, fromTail = true) =>
-        Some(r.getTimestamp(0))
-      case (w, None) if w == parts.length => None
-    }.flatten
-  }
-
-  /** Can any partition deeper than `nextUnread` still beat the
-    * candidate endpoint time? Bounds follow the skew contract above;
-    * an unparseable partition value yields false (keep widening — the
-    * safe direction).
-    */
-  private def endpointSettled(
-      candidate: Timestamp,
-      nextUnread: String,
-      style: String,
-      fromTail: Boolean): Boolean =
-    try {
-      val bound = style match {
-        case "year" =>
-          val y = nextUnread.toInt
-          if (fromTail) java.time.LocalDate.of(y + 2, 1, 1)
-          else java.time.LocalDate.of(y - 1, 1, 1)
-        case _ =>
-          val d = java.time.LocalDate.parse(nextUnread)
-          if (fromTail) d.plusDays(2) else d.minusDays(1)
-      }
-      val boundMs = bound.atStartOfDay(java.time.ZoneOffset.UTC).toInstant.toEpochMilli
-      if (fromTail) candidate.getTime >= boundMs else candidate.getTime < boundMs
-    } catch {
-      case _: NumberFormatException | _: java.time.DateTimeException => false
-    }
+      timeTravel: Option[String]): Option[Timestamp] =
+    store(nsObj).endpoint(f.name, fromTail = true, timeTravel, before = Some(from),
+      valueType = pinnedType(f))
+      ._1.collect().headOption.map(_.getAs[Timestamp]("time"))
 }

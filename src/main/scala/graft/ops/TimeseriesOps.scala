@@ -105,11 +105,21 @@ object TimeseriesOps {
       df: DataFrame,
       fromTail: Boolean,
       timeCol: String = TimeCol,
-      createdCol: String = CreatedCol): DataFrame = {
+      createdCol: String = CreatedCol): DataFrame =
+    df.orderBy(endpointOrder(df, fromTail, timeCol, createdCol): _*).limit(1)
+
+  /** [[endpointRow]]'s sort keys: the first row under this order is the
+    * endpoint. Exposed so a driver-side top-1 ranks rows by the very
+    * same order. */
+  def endpointOrder(
+      df: DataFrame,
+      fromTail: Boolean,
+      timeCol: String = TimeCol,
+      createdCol: String = CreatedCol): Seq[Column] = {
     val tie = (createdCol +: df.columns.toSeq).distinct
       .filter(c => c != timeCol && df.columns.contains(c) && isOrderable(df.schema(c).dataType))
     val byTime = if (fromTail) col(timeCol).desc else col(timeCol).asc
-    df.orderBy(byTime +: tie.map(col(_).desc): _*).limit(1)
+    byTime +: tie.map(col(_).desc)
   }
 
   // ---------------------------------------------------------------------

@@ -241,58 +241,54 @@ object DeltaBridge {
     */
   private def fileStats(p: Path, hc: Configuration): Option[String] =
     try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hc)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        var rows = 0L
-        val mins = mutable.LinkedHashMap.empty[String, Any]
-        val maxs = mutable.LinkedHashMap.empty[String, Any]
-        val nulls = mutable.LinkedHashMap.empty[String, Long]
-        val bad = mutable.Set.empty[String] // any block without stats poisons the column
-        r.getFooter.getBlocks.forEach { b =>
-          rows += b.getRowCount
-          b.getColumns.forEach { cc =>
-            val path = cc.getPath.toArray
-            if (path.length == 1) {
-              val name = path.head
-              val pt = cc.getPrimitiveType
-              import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-              val numeric = (pt.getPrimitiveTypeName match {
-                case INT32 | INT64 | FLOAT | DOUBLE => true
-                case _ => false
-              }) && (pt.getLogicalTypeAnnotation match {
-                case null => true
-                case _: org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation => true
-                case _ => false // dates, timestamps, decimals: skip
-              })
-              val st = cc.getStatistics
-              if (!numeric || st == null || !st.hasNonNullValue || st.getNumNulls < 0)
-                bad += name
-              else {
-                def asNum(v: AnyRef): Any = v match {
-                  case n: java.lang.Number => n
-                  case other => other.toString
-                }
-                val mn = asNum(st.genericGetMin.asInstanceOf[AnyRef])
-                val mx = asNum(st.genericGetMax.asInstanceOf[AnyRef])
-                def lt(a: Any, b: Any): Boolean = (a, b) match {
-                  case (x: java.lang.Number, y: java.lang.Number) =>
-                    x.doubleValue < y.doubleValue
-                  case _ => false
-                }
-                if (!mins.contains(name) || lt(mn, mins(name))) mins(name) = mn
-                if (!maxs.contains(name) || lt(maxs(name), mx)) maxs(name) = mx
-                nulls(name) = nulls.getOrElse(name, 0L) + st.getNumNulls
+      var rows = 0L
+      val mins = mutable.LinkedHashMap.empty[String, Any]
+      val maxs = mutable.LinkedHashMap.empty[String, Any]
+      val nulls = mutable.LinkedHashMap.empty[String, Long]
+      val bad = mutable.Set.empty[String] // any block without stats poisons the column
+      ParquetFooter.read(p, hc).getBlocks.forEach { b =>
+        rows += b.getRowCount
+        b.getColumns.forEach { cc =>
+          val path = cc.getPath.toArray
+          if (path.length == 1) {
+            val name = path.head
+            val pt = cc.getPrimitiveType
+            import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+            val numeric = (pt.getPrimitiveTypeName match {
+              case INT32 | INT64 | FLOAT | DOUBLE => true
+              case _ => false
+            }) && (pt.getLogicalTypeAnnotation match {
+              case null => true
+              case _: org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation => true
+              case _ => false // dates, timestamps, decimals: skip
+            })
+            val st = cc.getStatistics
+            if (!numeric || st == null || !st.hasNonNullValue || st.getNumNulls < 0)
+              bad += name
+            else {
+              def asNum(v: AnyRef): Any = v match {
+                case n: java.lang.Number => n
+                case other => other.toString
               }
+              val mn = asNum(st.genericGetMin.asInstanceOf[AnyRef])
+              val mx = asNum(st.genericGetMax.asInstanceOf[AnyRef])
+              def lt(a: Any, b: Any): Boolean = (a, b) match {
+                case (x: java.lang.Number, y: java.lang.Number) =>
+                  x.doubleValue < y.doubleValue
+                case _ => false
+              }
+              if (!mins.contains(name) || lt(mn, mins(name))) mins(name) = mn
+              if (!maxs.contains(name) || lt(maxs(name), mx)) maxs(name) = mx
+              nulls(name) = nulls.getOrElse(name, 0L) + st.getNumNulls
             }
           }
         }
-        bad.foreach { n => mins.remove(n); maxs.remove(n); nulls.remove(n) }
-        Some(mapper.writeValueAsString(Map(
-          "numRecords" -> rows,
-          "minValues" -> mins.toMap, "maxValues" -> maxs.toMap,
-          "nullCount" -> nulls.toMap)))
-      } finally r.close()
+      }
+      bad.foreach { n => mins.remove(n); maxs.remove(n); nulls.remove(n) }
+      Some(mapper.writeValueAsString(Map(
+        "numRecords" -> rows,
+        "minValues" -> mins.toMap, "maxValues" -> maxs.toMap,
+        "nullCount" -> nulls.toMap)))
     } catch { case NonFatal(_) => None } // a file without stats is never skipped
 
   /** Write `_delta_log/00000000000000000000.json` describing every

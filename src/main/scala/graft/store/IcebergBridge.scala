@@ -291,65 +291,61 @@ object IcebergBridge {
     * missing one only costs pruning).
     */
   private def footerStats(p: Path, hc: Configuration): (Long, Map[String, ColStats]) = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hc)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      var rows = 0L
-      val acc = mutable.LinkedHashMap.empty[String, ColStats]
-      val bad = mutable.Set.empty[String]
-      r.getFooter.getBlocks.forEach { b =>
-        rows += b.getRowCount
-        b.getColumns.forEach { cc =>
-          val path = cc.getPath.toArray
-          if (path.length == 1) {
-            val name = path.head
-            val pt = cc.getPrimitiveType
-            import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-            val tn = pt.getPrimitiveTypeName match {
-              case INT32 => "int"
-              case INT64 => "long"
-              case FLOAT => "float"
-              case DOUBLE => "double"
-              case _ => null
-            }
-            val numeric = tn != null && (pt.getLogicalTypeAnnotation match {
-              case null => true
-              case _: org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation => true
-              case _ => false // dates/timestamps/decimals: skip bounds
-            })
-            val st = cc.getStatistics
-            if (!numeric || st == null || !st.hasNonNullValue || st.getNumNulls < 0)
-              bad += name
-            else {
-              val mn = st.genericGetMin.asInstanceOf[java.lang.Number]
-              val mx = st.genericGetMax.asInstanceOf[java.lang.Number]
-              acc.get(name) match {
-                case None =>
-                  acc(name) = ColStats(mn, mx, st.getNumNulls, b.getRowCount, tn)
-                case Some(prev) =>
-                  // EXACT comparison per physical type: int64 values
-                  // above 2^53 collapse under a double round-trip and
-                  // a wrong bound silently loses rows in a skipping
-                  // reader — the one failure this file must never have
-                  def lt(a: Any, b0: Any): Boolean = tn match {
-                    case "int" | "long" =>
-                      a.asInstanceOf[java.lang.Number].longValue() <
-                        b0.asInstanceOf[java.lang.Number].longValue()
-                    case _ =>
-                      a.asInstanceOf[java.lang.Number].doubleValue() <
-                        b0.asInstanceOf[java.lang.Number].doubleValue()
-                  }
-                  acc(name) = ColStats(
-                    if (lt(mn, prev.min)) mn else prev.min,
-                    if (lt(prev.max, mx)) mx else prev.max,
-                    prev.nulls + st.getNumNulls, prev.values + b.getRowCount, tn)
-              }
+    var rows = 0L
+    val acc = mutable.LinkedHashMap.empty[String, ColStats]
+    val bad = mutable.Set.empty[String]
+    ParquetFooter.read(p, hc).getBlocks.forEach { b =>
+      rows += b.getRowCount
+      b.getColumns.forEach { cc =>
+        val path = cc.getPath.toArray
+        if (path.length == 1) {
+          val name = path.head
+          val pt = cc.getPrimitiveType
+          import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+          val tn = pt.getPrimitiveTypeName match {
+            case INT32 => "int"
+            case INT64 => "long"
+            case FLOAT => "float"
+            case DOUBLE => "double"
+            case _ => null
+          }
+          val numeric = tn != null && (pt.getLogicalTypeAnnotation match {
+            case null => true
+            case _: org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation => true
+            case _ => false // dates/timestamps/decimals: skip bounds
+          })
+          val st = cc.getStatistics
+          if (!numeric || st == null || !st.hasNonNullValue || st.getNumNulls < 0)
+            bad += name
+          else {
+            val mn = st.genericGetMin.asInstanceOf[java.lang.Number]
+            val mx = st.genericGetMax.asInstanceOf[java.lang.Number]
+            acc.get(name) match {
+              case None =>
+                acc(name) = ColStats(mn, mx, st.getNumNulls, b.getRowCount, tn)
+              case Some(prev) =>
+                // EXACT comparison per physical type: int64 values
+                // above 2^53 collapse under a double round-trip and
+                // a wrong bound silently loses rows in a skipping
+                // reader — the one failure this file must never have
+                def lt(a: Any, b0: Any): Boolean = tn match {
+                  case "int" | "long" =>
+                    a.asInstanceOf[java.lang.Number].longValue() <
+                      b0.asInstanceOf[java.lang.Number].longValue()
+                  case _ =>
+                    a.asInstanceOf[java.lang.Number].doubleValue() <
+                      b0.asInstanceOf[java.lang.Number].doubleValue()
+                }
+                acc(name) = ColStats(
+                  if (lt(mn, prev.min)) mn else prev.min,
+                  if (lt(prev.max, mx)) mx else prev.max,
+                  prev.nulls + st.getNumNulls, prev.values + b.getRowCount, tn)
             }
           }
         }
       }
-      (rows, (acc -- bad).toMap)
-    } finally r.close()
+    }
+    (rows, (acc -- bad).toMap)
   }
 
   /** Iceberg single-value serialization: little-endian fixed-width

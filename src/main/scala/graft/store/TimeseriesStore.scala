@@ -8,6 +8,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.sinks.FileStreamSinkLog
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{LocalParquetReader, MetaFileIndex}
 import org.apache.spark.sql.types._
 
 import graft.ops.TimeseriesOps._
@@ -23,6 +24,12 @@ final case class TableStats(
     vmin: Option[Double] = None,
     vmax: Option[Double] = None)
 
+/** What one endpoint search ([[TimeseriesStore.endpoint]]) read: the
+  * candidate files opened on the driver, tier by tier, and the files
+  * handed to the one Spark job past the driver's byte bound (empty when
+  * the driver settled the search). Paths are relative to the feature. */
+final case class EndpointReads(driverTiers: Seq[Seq[String]], sparkFiles: Seq[String])
+
 /** Physical storage of one namespace, in ONE layout: each feature is a
   * hive-partitioned snappy-parquet directory
   * `<url>/feature/<name>/partition=<p>/...` (the reference layout,
@@ -33,14 +40,17 @@ final case class TableStats(
   *
   * The log decides what a feature holds. Appends, compactions and
   * rewrites stage their files invisibly and publish them in one atomic
-  * commit; readers replay the log to a consistent file set (never a
-  * half-applied compaction); old versions stay readable until `vacuum`.
-  * Reads prune on log metadata — partition values, then per-file time
-  * (and value, bloom) bounds — and build their file index from it, so a
-  * bounded load of a 100 TB feature lists no directories and opens only
-  * its range. A feature directory must be read THROUGH the store: raw
-  * `spark.read.parquet` on it would see compacted-away duplicates the
-  * log has retired.
+  * commit; readers replay the log ONCE per read to a consistent file set
+  * and schema history (never a half-applied compaction); old versions
+  * stay readable until `vacuum`. Reads prune on log metadata — partition
+  * values, then per-file time (and value, bloom) bounds — and build
+  * their file index from it, so a bounded load of a 100 TB feature lists
+  * no directories and opens only its range. An endpoint lookup
+  * ([[endpoint]], behind `last()`/`first()`) goes further: the per-file
+  * time bounds pick its few candidate files, which the driver reads
+  * itself, with no Spark job. A feature directory must be read THROUGH
+  * the store: raw `spark.read.parquet` on it would see compacted-away
+  * duplicates the log has retired.
   *
   * Read schemas come from the log: the first write declares the batch's
   * schema as epoch 0 and [[evolveSchema]] appends later epochs, so a
@@ -274,10 +284,9 @@ class TimeseriesStore(
   def addCheck(name: String, constraintName: String, boolExpr: String): Long = {
     require(constraintName.nonEmpty, "constraint name must be non-empty")
     if (exists(name)) {
-      val log = txLog(name)
-      val live = log.snapshot()
+      val TxSnapshot(live, schemas) = txLog(name).state()
       if (live.nonEmpty) {
-        val cur = openAdds(name, live, log.schemaHistory(), partitionStyle = "date")
+        val cur = openAdds(name, live, schemas, partitionStyle = "date")
         val bad = cur.filter(!expr(boolExpr) || expr(boolExpr).isNull).count()
         require(bad == 0,
           s"cannot add CHECK '$constraintName' ($boolExpr): $bad existing rows violate it")
@@ -365,7 +374,7 @@ class TimeseriesStore(
         // the table). Pre-upgrade adds (no fsize) keep the listing read.
         val df =
           if (group.forall(_.fsize.isDefined))
-            org.apache.spark.sql.graftbridge.MetaFileIndex.read(
+            MetaFileIndex.read(
               spark,
               group.map(a => (new Path(path(a)), a.fsize.get,
                 if (pType == IntegerType) a.partition.toInt else a.partition)),
@@ -375,15 +384,20 @@ class TimeseriesStore(
           else spark.read.options(storageOptions).option("basePath", root)
             .schema(StructType(fileSchema.fields.toIndexedSeq :+ StructField("partition", pType)))
             .parquet(group.map(path): _*)
-        val aligned = target.fields.map { f =>
-          if (fileSchema.fieldNames.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-          else lit(null).cast(f.dataType).as(f.name)
-        } :+ col("partition")
+        val aligned = alignTo(fileSchema, target) :+ col("partition")
         val base = if (withFilePath) aligned :+ col("_metadata.file_path").as("_f") else aligned
         df.select(base.toIndexedSeq: _*)
       }.reduce(_ unionByName _)
     }
   }
+
+  /** One epoch's columns aligned to the `target` epoch: widening casts,
+    * nulls for columns declared after the file was written. */
+  private def alignTo(fileSchema: StructType, target: StructType): Seq[Column] =
+    target.fields.toSeq.map { f =>
+      if (fileSchema.fieldNames.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
+      else lit(null).cast(f.dataType).as(f.name)
+    }
 
   /** Data columns a read should surface: the declared schema's fields,
     * or the classic 3-column envelope for legacy tables. */
@@ -537,68 +551,70 @@ class TimeseriesStore(
       p: Path,
       conf: org.apache.hadoop.conf.Configuration = hadoopConf): FooterStats =
     try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-      // options built from THIS conf: the one-argument open builds its
-      // read options on a fresh Hadoop Configuration, re-reading the
-      // default resources — measured ~9 ms per file against ~0.4 ms
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        in, org.apache.parquet.HadoopReadOptions.builder(conf, p).build())
-      try {
-        import scala.jdk.CollectionConverters._
-        var mn = Long.MaxValue
-        var mx = Long.MinValue
-        var vmn = Double.MaxValue
-        var vmx = Double.MinValue
-        var rows = 0L
-        var tOk = true
-        var vOk = true
-        val blocks = r.getFooter.getBlocks
-        if (blocks.isEmpty) { tOk = false; vOk = false }
-        blocks.forEach { b =>
-          rows += b.getRowCount
-          b.getColumns.asScala.find(_.getPath.toDotString == TimeCol) match {
-            case Some(c) =>
-              val st = c.getStatistics
-              if (st == null || st.isEmpty || !st.hasNonNullValue) tOk = false
-              else (st.genericGetMin, st.genericGetMax) match {
-                case (a: java.lang.Long, z: java.lang.Long) =>
-                  mn = math.min(mn, a.longValue); mx = math.max(mx, z.longValue)
-                case _ => tOk = false
-              }
-            case None => tOk = false
-          }
-          b.getColumns.asScala.find(_.getPath.toDotString == ValueCol) match {
-            case Some(c) =>
-              val st = c.getStatistics
-              if (st == null || st.isEmpty || !st.hasNonNullValue) vOk = false
-              else (st.genericGetMin, st.genericGetMax) match {
-                case (a: java.lang.Double, z: java.lang.Double) =>
-                  vmn = math.min(vmn, a.doubleValue); vmx = math.max(vmx, z.doubleValue)
-                case _ => vOk = false
-              }
-            case None => vOk = false
-          }
+      import scala.jdk.CollectionConverters._
+      var mn = Long.MaxValue
+      var mx = Long.MinValue
+      var vmn = Double.MaxValue
+      var vmx = Double.MinValue
+      var rows = 0L
+      var tOk = true
+      var vOk = true
+      val blocks = ParquetFooter.read(p, conf).getBlocks
+      if (blocks.isEmpty) { tOk = false; vOk = false }
+      blocks.forEach { b =>
+        rows += b.getRowCount
+        b.getColumns.asScala.find(_.getPath.toDotString == TimeCol) match {
+          case Some(c) =>
+            val st = c.getStatistics
+            if (st == null || st.isEmpty || !st.hasNonNullValue) tOk = false
+            else (st.genericGetMin, st.genericGetMax) match {
+              case (a: java.lang.Long, z: java.lang.Long) =>
+                mn = math.min(mn, a.longValue); mx = math.max(mx, z.longValue)
+              case _ => tOk = false
+            }
+          case None => tOk = false
         }
-        FooterStats(
-          if (tOk && mn != Long.MaxValue) Some(mn) else None,
-          if (tOk && mn != Long.MaxValue) Some(mx) else None,
-          Some(rows),
-          if (vOk && vmn != Double.MaxValue) Some(vmn) else None,
-          if (vOk && vmn != Double.MaxValue) Some(vmx) else None)
-      } finally r.close()
+        b.getColumns.asScala.find(_.getPath.toDotString == ValueCol) match {
+          case Some(c) =>
+            val st = c.getStatistics
+            if (st == null || st.isEmpty || !st.hasNonNullValue) vOk = false
+            else (st.genericGetMin, st.genericGetMax) match {
+              case (a: java.lang.Double, z: java.lang.Double) =>
+                vmn = math.min(vmn, a.doubleValue); vmx = math.max(vmx, z.doubleValue)
+              case _ => vOk = false
+            }
+          case None => vOk = false
+        }
+      }
+      FooterStats(
+        if (tOk && mn != Long.MaxValue) Some(mn) else None,
+        if (tOk && mn != Long.MaxValue) Some(mx) else None,
+        Some(rows),
+        if (vOk && vmn != Double.MaxValue) Some(vmn) else None,
+        if (vOk && vmn != Double.MaxValue) Some(vmx) else None)
     } catch { case NonFatal(_) => FooterStats(None, None, None, None, None) }
 
   /** S2: hive-partitioned snappy parquet append; the new files become
     * visible in ONE atomic log commit.
     */
-  def write(name: String, normalized: DataFrame): Unit = commitBatch(txLog(name), name, normalized)
-
-  private def commitBatch(log: TxLog, name: String, normalized: DataFrame): Unit = {
-    val (adds, schemaDecl) = stageForCommit(log, name, normalized)
-    if (adds.nonEmpty) { log.commit(adds, schema = schemaDecl); () }
+  def write(name: String, normalized: DataFrame): Unit = {
+    commitBatch(txLog(name), name, normalized)
+    ()
   }
 
-  def save(name: String, df: DataFrame, partitionStyle: String = "date"): Unit = {
+  /** Stage and commit one batch; true iff it committed (a batch with
+    * no rows stages no files and commits nothing). */
+  private def commitBatch(log: TxLog, name: String, normalized: DataFrame): Boolean = {
+    val (adds, schemaDecl) = stageForCommit(log, name, normalized)
+    if (adds.nonEmpty) log.commit(adds, schema = schemaDecl)
+    adds.nonEmpty
+  }
+
+  /** Validate, normalize and append `df`; returns true iff a commit
+    * landed — false for an empty batch, which is a no-op. A refused
+    * batch (legacy tree, CHECK violation, bad columns) throws and
+    * commits nothing. */
+  def save(name: String, df: DataFrame, partitionStyle: String = "date"): Boolean = {
     val log = txLog(name)
     // columns beyond the 3-column envelope pass validation ONLY when a
     // declared (evolved) schema names them — Delta-without-autoMerge:
@@ -612,7 +628,7 @@ class TimeseriesStore(
     // stages no partition dirs, so it commits nothing anyway.
     val normalized =
       try TimeseriesStore.normalize(df, partitionStyle, declaredExtras)
-      catch { case e: IllegalArgumentException => if (df.isEmpty) return else throw e }
+      catch { case e: IllegalArgumentException => if (df.isEmpty) return false else throw e }
     commitBatch(log, name, normalized)
   }
 
@@ -670,12 +686,10 @@ class TimeseriesStore(
       valueType: Option[DataType] = None,
       partitionStyle: String = "date",
       asOfVersion: Option[Long] = None): DataFrame = {
-    val log = txLog(name)
-    val adds = log.snapshot(asOfVersion)
-    // the schema in effect AT THE READ VERSION: an old snapshot reads
-    // the old (pre-evolution) schema — columns added later are absent,
-    // the value keeps its narrow type
-    val schemas = log.schemaHistory(asOfVersion)
+    // one replay: the live files and the schema in effect AT THE READ
+    // VERSION — an old snapshot reads the old (pre-evolution) schema,
+    // columns added later are absent, the value keeps its narrow type
+    val TxSnapshot(adds, schemas) = txLog(name).state(asOfVersion)
     // two-level metadata skipping: partition values first, then
     // per-file time bounds (Delta data-skipping shape) — a
     // micro-batch-accumulated day holds many narrow files, and a
@@ -702,11 +716,13 @@ class TimeseriesStore(
     * micros — no widening needed, the bounds are the file's actual
     * min/max of the same column the read filters on. */
   private def fileStatsOverlap(
-      a: TxAdd, from: Option[Timestamp], to: Option[Timestamp]): Boolean = {
-    def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos % 1000000L) / 1000L
+      a: TxAdd, from: Option[Timestamp], to: Option[Timestamp]): Boolean =
     from.forall(f => a.tmax.forall(_ >= micros(f))) &&
       to.forall(t => a.tmin.forall(_ <= micros(t)))
-  }
+
+  /** Epoch micros of `t`: the unit of the log's time stats. */
+  private def micros(t: Timestamp): Long =
+    t.getTime * 1000L + (t.getNanos % 1000000L) / 1000L
 
   /** Driver-side partition-value pruning over log metadata, widened one
     * unit each side and anchored on UTC, not the reader's session zone:
@@ -730,26 +746,146 @@ class TimeseriesStore(
     case other => throw new IllegalArgumentException(s"unknown partition style: $other")
   }
 
-  /** Scan restricted to an explicit partition subset — the tail-read
-    * primitive behind `last()` (the reference's "restrict scan to the
-    * final partition(s)" intent, _model.py:251-254): a point lookup on a
-    * 100 TB feature touches one day's files, not the history.
+  /** The endpoint row of a feature: its last (`fromTail`) or first
+    * surviving row in [[graft.ops.TimeseriesOps.endpointRow]]'s order —
+    * the winner `dedupLatest` plus a time sort would pick — found by a
+    * file-level bound-and-stop search over the log (the top-1 search
+    * with per-item upper bounds of REPOSE, ICDE 2021):
+    *
+    *  - one replay yields the live files and the schema epochs;
+    *  - each file's recorded `tmax` (`tmin` at the head) bounds the time
+    *    it can contribute, and files are read in tiers of equal bound,
+    *    newest (oldest) first; a file without the stat is unbounded and
+    *    read first;
+    *  - the search stops once the best surviving row's time is strictly
+    *    past the next unread bound: no unread file can hold a later row,
+    *    nor one at the same time that would win the created_time tie.
+    *    Without `timeTravel` the first tier settles it — the files whose
+    *    `tmax` is the maximum.
+    *
+    * Tiers are read on the driver by Spark's own parquet reader, one per
+    * schema epoch, and ranked with the same epoch alignment,
+    * travel filter and sort keys the Spark path runs, so a stored
+    * endpoint starts no job. The driver reads at most
+    * `spark.sql.files.maxPartitionBytes` of files per call — what one
+    * scan task reads. Past that bound, or at a file whose size the log
+    * does not record, the candidates that can still win go to ONE
+    * `endpointRow` job over a log-built scan, so a masked history, or
+    * one without stats, never pulls unbounded data onto the driver.
+    * `before` (tail only) restricts the search to rows strictly before
+    * it: the fill seed of a resample.
+    *
+    * Returns the winner, zero or one row of the declared columns as a
+    * local frame (collecting it, or a projection of it, runs no job),
+    * and what the search read.
     */
-  def readPartitions(
+  private[graft] def endpoint(
       name: String,
-      parts: Seq[String],
-      valueType: Option[DataType] = None,
-      partitionStyle: String = "date"): DataFrame = {
-    val emptyType = valueType.getOrElse(DoubleType)
-    if (parts.isEmpty) return emptyFrame(emptyType)
-    val wanted = parts.toSet
-    val log = txLog(name)
-    val adds = log.snapshot().filter(a => wanted(a.partition))
-    if (adds.isEmpty) return emptyFrame(emptyType)
-    val schemas = log.schemaHistory()
-    openAdds(name, adds, schemas, partitionStyle)
-      .select(dataCols(schemas).map(col).toIndexedSeq: _*)
+      fromTail: Boolean,
+      timeTravel: Option[String] = None,
+      before: Option[Timestamp] = None,
+      valueType: Option[DataType] = None): (DataFrame, EndpointReads) = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    require(before.isEmpty || fromTail, "an endpoint search bounded by `before` runs from the tail")
+    val TxSnapshot(live, schemas) = txLog(name).state()
+    val cols = dataCols(schemas).map(col)
+    def prepare(df: DataFrame): DataFrame = {
+      val in = df.select(cols: _*)
+      val cut = before.map(b => in.filter(col(TimeCol) < lit(b))).getOrElse(in)
+      timeTravel.map(graft.ops.TimeseriesOps.timeTravel(cut, _)).getOrElse(cut)
+    }
+    def sparkTop(adds: Seq[TxAdd]): DataFrame =
+      endpointRow(prepare(openAdds(name, adds, schemas, partitionStyle = "date")), fromTail)
+    if (live.isEmpty && schemas.isEmpty)
+      return (MetaFileIndex.localFrame(spark, emptySchema(valueType.getOrElse(DoubleType)), Nil),
+        EndpointReads(Nil, Nil))
+    if (schemas.isEmpty) {
+      // a log from before schema declarations: its files infer their
+      // schema, so there is no typed driver read — one job over them all
+      val top = sparkTop(live)
+      return (spark.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema),
+        EndpointReads(Nil, live.map(_.path)))
+    }
+    val target = schemaOf(schemas.last)
+    val shape = prepare(MetaFileIndex.localFrame(spark, target, Nil))
+    val order = shape.orderBy(endpointOrder(shape, fromTail): _*).queryExecution.analyzed match {
+      case s: org.apache.spark.sql.catalyst.plans.logical.Sort =>
+        org.apache.spark.sql.catalyst.expressions.RowOrdering.create(s.order, s.child.output)
+      case other => throw new IllegalStateException(s"unexpected endpoint plan: $other")
+    }
+    val timeAt = shape.columns.indexOf(TimeCol)
+    val cap = before.map(micros(_) - 1)
+    def bound(a: TxAdd): Option[Long] = if (fromTail) a.tmax else a.tmin
+    // tiers of equal bound, capped below `before`; unbounded first, then
+    // newest (oldest) first
+    val tiers: List[(Option[Long], Seq[TxAdd])] = live
+      .filter(a => cap.forall(c => a.tmin.forall(_ <= c)))
+      .groupBy(a => bound(a).map(t => cap.fold(t)(math.min(t, _)))).toList
+      .sortBy { case (k, _) => (k.isDefined, k.map(t => if (fromTail) -t else t)) }
+    var best = Option.empty[InternalRow]
+    def keep(rows: Iterable[InternalRow]): Unit =
+      best = (best ++ rows).reduceOption((a, b) => if (order.compare(a, b) <= 0) a else b)
+    // can a file bounded by k still displace the best row? A row at the
+    // same time can, through the created_time tie
+    def canBeat(k: Option[Long]): Boolean = best match {
+      case Some(b) if !b.isNullAt(timeAt) =>
+        k.forall(t => if (fromTail) t >= b.getLong(timeAt) else t <= b.getLong(timeAt))
+      case _ => true
+    }
+    // without travel, a tier holding a file whose own stat is the bound
+    // surely yields a row at that bound: nothing past it can win
+    def settles(tier: (Option[Long], Seq[TxAdd])): Boolean =
+      timeTravel.isEmpty && tier._1.isDefined && tier._2.exists(a => bound(a) == tier._1)
+    def onDriver(tier: Seq[TxAdd]): Seq[InternalRow] =
+      tier.groupBy(_.sv.getOrElse(0L)).toSeq.flatMap { case (sv, group) =>
+        val fileSchema = schemaOf(schemas(sv.toInt))
+        val rows = localReader(fileSchema)
+          .read(group.map(a => (new Path(s"${featurePath(name)}/${a.path}"), a.fsize.get)))
+        prepare(rows.select(alignTo(fileSchema, target): _*)).queryExecution.executedPlan.executeCollect()
+      }
+    val budget = MetaFileIndex.maxPartitionBytes(spark)
+    var spent = 0L
+    var rest = tiers
+    val driverTiers = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+    var sparkFiles = Seq.empty[String]
+    while (rest.nonEmpty && canBeat(rest.head._1)) {
+      val tier = rest.head._2
+      if (tier.forall(_.fsize.isDefined) && spent + tier.flatMap(_.fsize).sum <= budget) {
+        spent += tier.flatMap(_.fsize).sum
+        keep(onDriver(tier))
+        driverTiers += tier.map(_.path)
+        rest = rest.tail
+      } else {
+        val candidates = rest.takeWhile(t => canBeat(t._1))
+        val upTo = candidates.indexWhere(settles)
+        val adds = (if (upTo < 0) candidates else candidates.take(upTo + 1)).flatMap(_._2)
+        val top = sparkTop(adds)
+        val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToCatalystConverter(top.schema)
+        keep(top.collect().map(r => toInternal(r).asInstanceOf[InternalRow]))
+        sparkFiles = adds.map(_.path)
+        rest = Nil
+      }
+    }
+    (MetaFileIndex.localFrame(spark, shape.schema, best.toSeq),
+      EndpointReads(driverTiers.toSeq, sparkFiles))
   }
+
+  // Driver-side parquet readers by physical schema. Building one
+  // broadcasts the Hadoop conf (measured ~14 ms, more than the read it
+  // serves), so they live as long as the store; each captured the
+  // session's SQL conf when built, so a conf change rebuilds them all.
+  private var localReaders = (Map.empty[String, String], Map.empty[StructType, LocalParquetReader])
+
+  private def localReader(schema: StructType): LocalParquetReader =
+    synchronized {
+      val conf = spark.conf.getAll
+      val cached = if (localReaders._1 == conf) localReaders._2 else Map.empty[StructType, LocalParquetReader]
+      val reader = cached.getOrElse(schema,
+        new LocalParquetReader(spark, schema, storageOptions, hadoopConf))
+      localReaders = (conf, cached + (schema -> reader))
+      reader
+    }
 
   /** S4: feature directories present in storage. */
   def ls(): Seq[String] = {
@@ -760,10 +896,11 @@ class TimeseriesStore(
   }
 
   /** S4: partition values of a feature's live files, sorted; `reverse`
-    * + `n` give the "last n partitions" read used by last()
-    * (dask.py:38-50). Log metadata, not a directory listing: one
+    * + `n` give the "last n partitions" (the reference's listing,
+    * dask.py:38-50). Log metadata, not a directory listing: one
     * small-file replay instead of an object-store LIST, and retired
-    * partitions (all files removed) disappear immediately.
+    * partitions (all files removed) disappear immediately. Endpoint
+    * lookups no longer walk partitions: see [[endpoint]].
     */
   def listPartitions(name: String, n: Int = Int.MaxValue, reverse: Boolean = false): Seq[String] = {
     val parts = txLog(name).snapshot().map(_.partition).distinct.sorted
@@ -782,13 +919,12 @@ class TimeseriesStore(
     */
   def compact(name: String, partitions: Seq[String] = Nil): Unit = {
     val log = txLog(name)
-    val all = log.snapshot()
+    val TxSnapshot(all, schemas) = log.state()
     if (all.isEmpty) return
     val targetParts: Set[String] =
       if (partitions.nonEmpty) partitions.toSet else all.map(_.partition).toSet
     val victims = all.filter(a => targetParts(a.partition))
     if (victims.isEmpty) return
-    val schemas = log.schemaHistory()
     // epoch-aware open + rewrite at the LATEST schema (the Delta
     // rewrite convention); pre-compaction versions still read their
     // own epochs from the retired files until vacuum
@@ -822,7 +958,7 @@ class TimeseriesStore(
   def optimize(name: String, targetBytes: Long = 128L * 1024 * 1024): Long = {
     if (!exists(name)) return 0L
     val log = txLog(name)
-    val live = log.snapshot()
+    val TxSnapshot(live, schemas) = log.state()
     if (live.isEmpty) return 0L
     val f = fs(url)
     val root = featurePath(name)
@@ -861,7 +997,6 @@ class TimeseriesStore(
     if (victims.isEmpty) return 0L
     val totalBytes = victims.map(_._2).sum
     val outParts = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    val schemas = log.schemaHistory()
     val src = openAdds(name, victims.map(_._1), schemas, partitionStyle = "date")
       .select((dataCols(schemas).map(col) :+ col("partition")).toIndexedSeq: _*)
     val adds = stageInstall(log, name, src, outPartitions = Some(outParts))
@@ -895,7 +1030,7 @@ class TimeseriesStore(
       targetBytes: Long = 128L * 1024 * 1024): Long = {
     if (!exists(name)) return 0L
     val log = txLog(name)
-    val live = log.snapshot()
+    val TxSnapshot(live, schemas) = log.state()
     if (live.isEmpty) return 0L
     val f = fs(url)
     val root = featurePath(name)
@@ -905,7 +1040,6 @@ class TimeseriesStore(
       catch { case _: java.io.FileNotFoundException => 0L }
     }.sum
     val outFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    val schemas = log.schemaHistory()
     val src = openAdds(name, live, schemas, partitionStyle = "date")
       .select((dataCols(schemas).map(col) :+ col("partition")).toIndexedSeq: _*)
     require(src.schema(ValueCol).dataType == org.apache.spark.sql.types.DoubleType,
@@ -934,11 +1068,14 @@ class TimeseriesStore(
       vlo: Double,
       vhi: Double,
       from: Option[Timestamp] = None,
-      to: Option[Timestamp] = None): Seq[TxAdd] = {
-    txLog(name).snapshot()
-      .filter(fileStatsOverlap(_, from, to))
+      to: Option[Timestamp] = None): Seq[TxAdd] =
+    valueRangeCandidates(txLog(name).snapshot(), vlo, vhi, from, to)
+
+  private def valueRangeCandidates(
+      live: Seq[TxAdd], vlo: Double, vhi: Double,
+      from: Option[Timestamp], to: Option[Timestamp]): Seq[TxAdd] =
+    live.filter(fileStatsOverlap(_, from, to))
       .filter(a => a.vmax.forall(_ >= vlo) && a.vmin.forall(_ <= vhi))
-  }
 
   /** Ranged scan with VALUE data skipping: prune files
     * by partition values + time bounds + recorded value bounds from
@@ -958,10 +1095,9 @@ class TimeseriesStore(
       from: Option[Timestamp] = None,
       to: Option[Timestamp] = None): DataFrame = {
     if (!exists(name)) return emptyFrame(org.apache.spark.sql.types.DoubleType)
-    val log = txLog(name)
-    val schemas = log.schemaHistory()
+    val TxSnapshot(live, schemas) = txLog(name).state()
     val pruned = prunePartitionValues(
-      candidateFilesForValueRange(name, vlo, vhi, from, to), from, to, "date")
+      valueRangeCandidates(live, vlo, vhi, from, to), from, to, "date")
     if (pruned.isEmpty) return emptyOf(schemas, DoubleType)
     val df = openAdds(name, pruned, schemas, partitionStyle = "date")
     val preds = Seq(col(ValueCol) >= lit(vlo), col(ValueCol) <= lit(vhi)) ++
@@ -996,11 +1132,14 @@ class TimeseriesStore(
       column: String,
       value: String,
       from: Option[Timestamp] = None,
-      to: Option[Timestamp] = None): Seq[TxAdd] = {
-    txLog(name).snapshot()
-      .filter(fileStatsOverlap(_, from, to))
+      to: Option[Timestamp] = None): Seq[TxAdd] =
+    keyCandidates(txLog(name).snapshot(), column, value, from, to)
+
+  private def keyCandidates(
+      live: Seq[TxAdd], column: String, value: String,
+      from: Option[Timestamp], to: Option[Timestamp]): Seq[TxAdd] =
+    live.filter(fileStatsOverlap(_, from, to))
       .filter(FileBloom.addMightContain(_, column, value))
-  }
 
   /** Point-lookup scan with BLOOM file skipping: prune
     * files by partition values + time bounds + per-file blooms from the
@@ -1027,10 +1166,9 @@ class TimeseriesStore(
       s"unsupported probe type ${value.getClass.getName}: the bloom hashed the column's " +
         "STRING rendering, which only integral/string/boolean types reproduce exactly")
     if (!exists(name)) return emptyFrame(org.apache.spark.sql.types.DoubleType)
-    val log = txLog(name)
-    val schemas = log.schemaHistory()
+    val TxSnapshot(live, schemas) = txLog(name).state()
     val pruned = prunePartitionValues(
-      candidateFilesForKey(name, column, value.toString, from, to), from, to, "date")
+      keyCandidates(live, column, value.toString, from, to), from, to, "date")
     if (pruned.isEmpty) return emptyOf(schemas, DoubleType)
     val df = openAdds(name, pruned, schemas, partitionStyle = "date")
     val preds = Seq(col(column) === lit(value)) ++
@@ -1111,9 +1249,8 @@ class TimeseriesStore(
       rewrite: DataFrame => DataFrame): Long = {
     if (!exists(name)) return 0L
     val log = txLog(name)
-    val live = log.snapshot()
+    val TxSnapshot(live, schemas) = log.state()
     if (live.isEmpty) return 0L
-    val schemas = log.schemaHistory()
     // driver-size by construction: one row per LIVE FILE with a match,
     // bounded by the snapshot size (same class as snapshot() itself)
     val victimUris =
@@ -1169,14 +1306,14 @@ class TimeseriesStore(
     val log = txLog(name)
     // the MERGE source is new data like any save batch — same CHECKs
     enforceChecks(log, name, normalized)
-    val live = if (exists(name)) log.snapshot() else Seq.empty
+    val TxSnapshot(live, schemas) =
+      if (exists(name)) log.state() else TxSnapshot(Seq.empty, Seq.empty)
     if (live.isEmpty) {
       // empty target: MERGE degenerates to plain insert
       val n = normalized.count()
       if (n > 0) write(name, normalized)
       return (0L, n)
     }
-    val schemas = log.schemaHistory()
     val srcTimes = normalized.select(col(TimeCol)).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1228,10 +1365,9 @@ class TimeseriesStore(
     if (!exists(name)) return emptyFrame(valueType)
     val log = txLog(name)
     val before = log.snapshot(Some(fromVersion)).map(_.path).toSet
-    val after = log.snapshot(toVersion)
+    val TxSnapshot(after, schemas) = log.state(toVersion)
     val fresh = after.filterNot(a => before(a.path))
     if (fresh.isEmpty) return emptyFrame(valueType)
-    val schemas = log.schemaHistory(toVersion)
     openAdds(name, fresh, schemas, partitionStyle = "date")
       .select(dataCols(schemas).map(col).toIndexedSeq: _*)
   }
@@ -1335,10 +1471,9 @@ class TimeseriesStore(
     * A feature with no live files copies nothing.
     */
   def copy(name: String, toName: String, dest: TimeseriesStore, partitionStyle: String = "date"): Unit = {
-    val log = txLog(name)
-    val adds = log.snapshot()
+    val TxSnapshot(adds, schemas) = txLog(name).state()
     if (adds.isEmpty) return
-    val df = openAdds(name, adds, log.schemaHistory(), partitionStyle)
+    val df = openAdds(name, adds, schemas, partitionStyle)
     dest.write(toName, df.select(
       (df.columns.filterNot(_ == "partition").map(col) :+ col("partition")).toIndexedSeq: _*))
   }
@@ -1372,8 +1507,7 @@ class TimeseriesStore(
     val log = txLog(name)
     val v = asOfVersion.getOrElse(log.latestVersion())
     require(v >= 0, s"feature '$name' has no committed version to export")
-    val adds = log.snapshot(Some(v))
-    val schemas = log.schemaHistory(Some(v))
+    val TxSnapshot(adds, schemas) = log.state(Some(v))
     val f = fs(url)
     val dst = new Path(dstDir)
     val dstFs = dst.getFileSystem(hadoopConf)
@@ -1476,8 +1610,7 @@ class TimeseriesStore(
     if (v == prevV) return v
     require(v > prevV, s"table '$name' is at version $v but $dstDir was " +
       s"exported at $prevV — a newer tree cannot sync backwards")
-    val adds = log.snapshot(Some(v))
-    val schemas = log.schemaHistory(Some(v))
+    val TxSnapshot(adds, schemas) = log.state(Some(v))
     // schema drift since the export: ADD-COLUMN-only evolution syncs —
     // Iceberg's own evolution semantics make the mixed-epoch tree
     // readable (old files lack the new column; readers null-fill via
@@ -1574,8 +1707,7 @@ class TimeseriesStore(
     if (v == prevV) return v
     require(v > prevV, s"table '$name' is at version $v but $dstDir was " +
       s"exported at $prevV — a newer tree cannot sync backwards")
-    val adds = log.snapshot(Some(v))
-    val schemas = log.schemaHistory(Some(v))
+    val TxSnapshot(adds, schemas) = log.state(Some(v))
     require(schemas.lastOption == prevSchema,
       s"schema of '$name' changed since the export; re-export (sync " +
         "cannot mix physical schema epochs in a plain-parquet tree)")

@@ -55,6 +55,10 @@ final case class TxAdd(
     // which fall back to the listing read path only
     fsize: Option[Long] = None)
 
+/** A table version as one replay yields it: the live files and the
+  * ordered schema declarations their `sv` epochs index. */
+final case class TxSnapshot(adds: Seq[TxAdd], schemas: Seq[String])
+
 /** One file logically deleted from the table (bytes stay on disk until
   * `vacuum`, so readers holding an older snapshot keep working).
   */
@@ -146,14 +150,6 @@ class TxLog(
   // TimeseriesStore.fs)
   private def fs = fsOverride.getOrElse(logDir.getFileSystem(hadoopConf))
 
-  // NON_ABSENT: a log line carries only the action fields it uses
-  // (an add line must not spell out null txn markers — at checkpoint
-  // scale the nulls would dominate the bytes); absent fields read back
-  // as None either way, so both spellings stay readable
-  private val mapper = JsonMapper.builder().addModule(DefaultScalaModule)
-    .serializationInclusion(com.fasterxml.jackson.annotation.JsonInclude.Include.NON_ABSENT)
-    .build()
-
   /** Numbered versions present in the log, ascending. */
   private def versions(): Seq[(Long, Boolean)] = { // (version, isCheckpoint)
     if (!fs.exists(logDir)) return Seq.empty
@@ -240,6 +236,15 @@ class TxLog(
     * apply in version order, and within a commit in line order.
     */
   def snapshot(asOf: Option[Long] = None): Seq[TxAdd] = replay(asOf)._1
+
+  /** Live files AND schema declarations at `asOf` (default: latest)
+    * from ONE replay — one log listing where [[snapshot]] followed by
+    * [[schemaHistory]] pays two. What every read that opens files
+    * needs. */
+  def state(asOf: Option[Long] = None): TxSnapshot = {
+    val r = replay(asOf)
+    TxSnapshot(r._1, r._4)
+  }
 
   /** Ordered table-schema declarations visible at `asOf` (default:
     * latest) — the last entry is the schema in effect; an add's `sv`
@@ -669,8 +674,7 @@ object TxLog {
   // Jackson cannot see through Option[Long]'s erasure and would box a
   // small txnVer as Integer (ClassCastException at first use); the
   // introspector registration pins the reference type. Runs before any
-  // mapper use: the class body touches LogDirName (forcing this object)
-  // ahead of its mapper val.
+  // mapper use: the registrations precede the mapper val below.
   com.fasterxml.jackson.module.scala.introspect.ScalaAnnotationIntrospectorModule
     .registerReferencedValueType(classOf[TxAction], "txnVer", classOf[Long])
   com.fasterxml.jackson.module.scala.introspect.ScalaAnnotationIntrospectorModule
@@ -689,6 +693,16 @@ object TxLog {
     .registerReferencedValueType(classOf[TxAdd], "nrec", classOf[Long])
   com.fasterxml.jackson.module.scala.introspect.ScalaAnnotationIntrospectorModule
     .registerReferencedValueType(classOf[TxAdd], "fsize", classOf[Long])
+
+  // NON_ABSENT: a log line carries only the action fields it uses
+  // (an add line must not spell out null txn markers — at checkpoint
+  // scale the nulls would dominate the bytes); absent fields read back
+  // as None either way, so both spellings stay readable. One mapper for
+  // every log (it is thread-safe once built): a per-instance one re-ran
+  // the action-class introspection on each replay of a fresh TxLog.
+  private val mapper = JsonMapper.builder().addModule(DefaultScalaModule)
+    .serializationInclusion(com.fasterxml.jackson.annotation.JsonInclude.Include.NON_ABSENT)
+    .build()
 
   val LogDirName = "_txlog"
   val CheckpointEvery = 10

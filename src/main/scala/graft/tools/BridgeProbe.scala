@@ -43,10 +43,9 @@ object BridgeProbe {
       val rows = graft.store.DeltaBridge.parMapOrdered(files.toSeq) { p0 =>
         val hcl = confs.poll()
         try {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p0, hcl)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try { var n = 0L; r.getFooter.getBlocks.forEach(b => n += b.getRowCount); n }
-          finally r.close()
+          var n = 0L
+          graft.store.ParquetFooter.read(p0, hcl).getBlocks.forEach(b => n += b.getRowCount)
+          n
         } finally confs.add(hcl)
       }
       require(rows.sum == nFiles.toLong * 10)
@@ -59,9 +58,7 @@ object BridgeProbe {
       val it = fs2.listFiles(rootP, true)
       while (it.hasNext && files.size < 100) { val st = it.next(); if (st.getPath.getName.endsWith(".parquet")) files += st.getPath }
       files.foreach { p0 =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p0, hc)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getFooter.getBlocks.size() finally r.close()
+        graft.store.ParquetFooter.read(p0, hc).getBlocks.size()
       }
     }
     // pool vs executor-job describe paths on the same tree: the pool

@@ -4,9 +4,12 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, BoundReference, Expression, Predicate}
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.unsafe.types.UTF8String
 
 /** A [[FileIndex]] materialized from TABLE-LOG METADATA instead of a
@@ -92,5 +95,59 @@ object MetaFileIndex {
       fileFormat = new ParquetFileFormat,
       options = options)(cs)
     org.apache.spark.sql.classic.Dataset.ofRows(cs, LogicalRelation(relation))
+  }
+
+  /** `rows` (internal form, laid out as `schema`) as a LocalRelation
+    * frame — the driver-side twin of a scan's output. */
+  def localFrame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** Spark's configured split size, `spark.sql.files.maxPartitionBytes`:
+    * what one scan task reads. */
+  def maxPartitionBytes(spark: SparkSession): Long =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.filesMaxPartitionBytes
+}
+
+/** Whole-file parquet reads ON THE DRIVER with Spark's own
+  * [[ParquetFileFormat]] reader — the same decoding, rebase and
+  * vectorized paths a scan task runs, without scheduling one. Built
+  * once per physical schema (the reader setup broadcasts the Hadoop
+  * conf), then reused for every file read under that schema. Meant for
+  * a few small files whose total the caller bounds: every row lands in
+  * driver memory.
+  *
+  * `hadoopConf` is copied, never mutated (the reader setup writes its
+  * read-support keys into the conf it is given), so a store's
+  * per-namespace options reach the file opens exactly as they reach a
+  * scan's.
+  */
+final class LocalParquetReader(
+    spark: SparkSession,
+    dataSchema: StructType,
+    options: Map[String, String],
+    hadoopConf: org.apache.hadoop.conf.Configuration) {
+
+  private val reader = new ParquetFileFormat().buildReaderWithPartitionValues(
+    spark, dataSchema, new StructType(), dataSchema, Nil,
+    // rows, not columnar batches: the caller materializes every row
+    options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
+    new org.apache.hadoop.conf.Configuration(hadoopConf))
+
+  /** Every row of `files` (absolute path, byte size), as a local frame
+    * of `dataSchema`: Project and Filter over it fold into a
+    * LocalRelation at optimization, so collecting them runs no job. */
+  def read(files: Seq[(Path, Long)]): DataFrame = {
+    val rows = files.flatMap { case (p, len) =>
+      val it = reader(PartitionedFile(InternalRow.empty, SparkPath.fromPath(p), 0L, len,
+        Array.empty[String], 0L, len))
+      // the scan closes its reader from a task-completion listener; the
+      // driver has no task, so close here whether or not the read finished
+      try it.map(_.copy()).toVector
+      finally it match { case c: java.io.Closeable => c.close(); case _ => () }
+    }
+    MetaFileIndex.localFrame(spark, dataSchema, rows)
   }
 }

@@ -1,0 +1,97 @@
+package graft
+
+import java.net.URI
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FilterFileSystem, FutureDataInputStreamBuilder, Path, RawLocalFileSystem}
+
+/** Local filesystem under the `countfs` scheme that counts every file
+  * open and directory listing by path, for specs that pin what an
+  * operation touches. A store reaches it through its namespace's
+  * storage options ([[CountingFs.options]]): the scheme resolves only
+  * through `fs.countfs.impl`, so a read that drops the namespace's
+  * options fails instead of passing silently.
+  *
+  * With `graft.countfs.fatalStagedOpens` set, opens of STAGED parquet
+  * files (the store's per-file footer reads during an install) die of
+  * a fatal error, as an OOM in the middle of an install would.
+  */
+class CountingFs extends FilterFileSystem(new RawLocalFileSystem {
+  override def getUri: URI = CountingFs.Uri
+}) {
+  private var fatalStagedOpens = false
+
+  override def getScheme: String = CountingFs.Uri.getScheme
+
+  override def initialize(name: URI, conf: Configuration): Unit = {
+    super.initialize(name, conf)
+    fatalStagedOpens = conf.getBoolean(CountingFs.FatalStagedOpens, false)
+  }
+
+  private def opened(p: Path): Unit = {
+    if (fatalStagedOpens && p.toString.contains("/.stage/") && p.getName.endsWith(".parquet"))
+      throw new CountingFs.InjectedFatal(p)
+    CountingFs.count(CountingFs.opens, p)
+  }
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    opened(f)
+    super.open(f, bufferSize)
+  }
+  override def openFile(path: Path): FutureDataInputStreamBuilder = {
+    opened(path)
+    super.openFile(path)
+  }
+  override def listStatus(f: Path): Array[FileStatus] = {
+    CountingFs.count(CountingFs.lists, f)
+    super.listStatus(f)
+  }
+}
+
+object CountingFs {
+  val Uri: URI = URI.create("countfs:///")
+  val FatalStagedOpens = "graft.countfs.fatalStagedOpens"
+
+  final class InjectedFatal(p: Path) extends VirtualMachineError(s"injected fatal error opening $p")
+
+  private val opens = new ConcurrentHashMap[String, AtomicInteger]()
+  private val lists = new ConcurrentHashMap[String, AtomicInteger]()
+
+  private def count(m: ConcurrentHashMap[String, AtomicInteger], p: Path): Unit = {
+    m.computeIfAbsent(p.toUri.getPath, _ => new AtomicInteger()).incrementAndGet()
+    ()
+  }
+
+  /** Storage options that route a namespace through this filesystem.
+    * The cache stays off so every handle is built from the options of
+    * the store asking for it. */
+  def options(fatalStagedOpens: Boolean = false): Map[String, String] =
+    Map("fs.countfs.impl" -> classOf[CountingFs].getName,
+      "fs.countfs.impl.disable.cache" -> "true") ++
+      (if (fatalStagedOpens) Map(FatalStagedOpens -> "true") else Map.empty)
+
+  /** `dir` (a local path) as a `countfs` URL. */
+  def url(dir: String): String = s"countfs://$dir"
+
+  private def under(m: ConcurrentHashMap[String, AtomicInteger], dir: String): Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    m.asScala.collect { case (p, n) if p.startsWith(dir) => p -> n.get }.toMap
+  }
+
+  /** Opens per path below local directory `dir` during `body`. */
+  def opensDuring[T](dir: String)(body: => T): (T, Map[String, Int]) =
+    during(opens, dir)(body)
+
+  /** Listings per path below local directory `dir` during `body`. */
+  def listsDuring[T](dir: String)(body: => T): (T, Map[String, Int]) =
+    during(lists, dir)(body)
+
+  private def during[T](m: ConcurrentHashMap[String, AtomicInteger], dir: String)(
+      body: => T): (T, Map[String, Int]) = {
+    val before = under(m, dir)
+    val out = body
+    (out, under(m, dir).map { case (p, n) => p -> (n - before.getOrElse(p, 0)) }.filter(_._2 > 0))
+  }
+}

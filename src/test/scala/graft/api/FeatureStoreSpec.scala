@@ -505,7 +505,7 @@ class FeatureStoreSpec extends SparkSpec {
       Map("graft.test.credential" -> "new-secret"))
   }
 
-  test("timeTravel endpoint lookup widens 3 -> 9 -> all and stops when settled") {
+  test("timeTravel endpoint lookup reads file tiers newest first until settled") {
     val fs = freshStore()
     val ns = fs.listNamespaces(Some("^test$")).head
     def save(name: String, backfilledFrom: Int): Unit = {
@@ -519,32 +519,41 @@ class FeatureStoreSpec extends SparkSpec {
       }.toDF("time", "created_time", "value")
       fs.saveDataFrame(rows, Some(s"test/$name"))
     }
+    // one file per day: the day each read file holds, in read order
+    def days(r: graft.store.EndpointReads): Seq[Int] = {
+      assert(r.sparkFiles.isEmpty, r)
+      r.driverTiers.map { tier =>
+        assert(tier.size == 1, r)
+        val d = java.time.LocalDate.parse(tier.head.stripPrefix("partition=").takeWhile(_ != '/'))
+        (d.toEpochDay - java.time.LocalDate.parse("2024-01-01").toEpochDay).toInt
+      }
+    }
     save("tt", backfilledFrom = 56)
     val f = fs.catalog.getFeature("test", "tt").get
-    // no travel: settled in the 3 boundary partitions, one read
-    val (plain, w0) = fs.endpointLookup(ns, f, None, fromTail = true)
-    assert(plain.get.getDouble(1) == 59.0 && w0 == Seq(3))
-    // travel: the 4 backfilled rows vanish; width 3 comes back empty,
-    // width 9 finds day 55 and the skew guard proves nothing deeper can
-    // beat it — the 60-partition history is never scanned
-    val (traveled, w1) = fs.endpointLookup(ns, f, Some("0s"), fromTail = true)
-    assert(traveled.get.getDouble(1) == 55.0 && w1 == Seq(3, 9))
-    // head lookups take the symmetric bound: backfill the EARLIEST rows
+    // no travel: the newest file settles it, one file read
+    val (plain, r0) = fs.endpointLookup(ns, f, None, fromTail = true)
+    assert(plain.get.getDouble(1) == 59.0 && days(r0) == Seq(59))
+    // travel: the 4 backfilled rows vanish; the search reads days 59
+    // down to 55 and stops — day 55 is newer than every unread file's
+    // tmax — so the 60-file history is never read
+    val (traveled, r1) = fs.endpointLookup(ns, f, Some("0s"), fromTail = true)
+    assert(traveled.get.getDouble(1) == 55.0 && days(r1) == (55 to 59).reverse)
+    // head lookups order by tmin: backfill the EARLIEST rows
     save("tt2", backfilledFrom = 0)
     val f2 = fs.catalog.getFeature("test", "tt2").get
-    val (_, w2) = fs.endpointLookup(ns, f2, None, fromTail = false)
-    assert(w2 == Seq(3))
+    val (_, r2) = fs.endpointLookup(ns, f2, None, fromTail = false)
+    assert(days(r2) == Seq(0))
     // tt2 has every row backfilled, so travel masks the WHOLE feature:
-    // the ladder exhausts honestly to the full width and returns None
-    // rather than a wrong endpoint
-    val (none, w3) = fs.endpointLookup(ns, f2, Some("0s"), fromTail = true)
-    assert(none.isEmpty && w3 == Seq(3, 9, 60))
-    // and a mask deeper than 9 falls through to the bounded full read
+    // the search reads every file and returns None rather than a wrong
+    // endpoint
+    val (none, r3) = fs.endpointLookup(ns, f2, Some("0s"), fromTail = true)
+    assert(none.isEmpty && days(r3) == (0 until 60).reverse)
+    // a deeper mask widens file by file to the first survivor
     save("tt3", backfilledFrom = 48)
     val f3 = fs.catalog.getFeature("test", "tt3").get
-    val (deep, w4) = fs.endpointLookup(ns, f3, Some("0s"), fromTail = true)
-    assert(deep.get.getDouble(1) == 47.0 && w4 == Seq(3, 9, 60))
-    // facade answer under travel is unchanged by the widening
+    val (deep, r4) = fs.endpointLookup(ns, f3, Some("0s"), fromTail = true)
+    assert(deep.get.getDouble(1) == 47.0 && days(r4) == (47 to 59).reverse)
+    // facade answer under travel
     assert(fs.last(Seq("test/tt"), timeTravel = Some("0s"))("test/tt").contains(55.0))
   }
 

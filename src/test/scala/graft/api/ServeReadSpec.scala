@@ -6,8 +6,9 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.{JobCounting, SparkSpec}
+import graft.{CountingFs, JobCounting, SparkSpec}
 import graft.ops.TimeseriesOps
+import graft.store.{TxAdd, TxLog}
 
 /** Serve-path reads: what `last()` and short `loadDataFrame` windows
   * cost in Spark jobs, that the one-pass endpoint lookup returns the
@@ -30,7 +31,7 @@ class ServeReadSpec extends SparkSpec with JobCounting {
     (0 until days).map(i => (new Timestamp(ts(from).getTime + i * 86400000L), i.toDouble))
       .toDF("time", "value")
 
-  test("plain last() on a pinned feature is one job with no shuffle") {
+  test("plain last() and first() on a pinned feature start no Spark job") {
     val (fs, _) = freshStore()
     fs.createFeature("s/f")
     fs.saveDataFrame(daily("2024-01-01", 10), Some("s/f"))
@@ -38,11 +39,18 @@ class ServeReadSpec extends SparkSpec with JobCounting {
     // last-writer-wins winner
     fs.saveDataFrame(Seq((ts("2024-01-10"), ts("2030-01-01"), 99.0))
       .toDF("time", "created_time", "value"), Some("s/f"))
-    fs.last("s/f") // warm the session's caches
-    val (got, jobs) = jobsOf(fs.last("s/f"))
-    assert(got.contains(99.0))
-    assert(jobs.size == 1, s"jobs: $jobs")
-    assert(jobs.map(_.shuffleBytes).sum == 0L, s"jobs: $jobs")
+    fs.createFeature("s/ser", serialized = true)
+    fs.saveDataFrame(daily("2024-01-01", 3).withColumn("value", col("value").cast("string")),
+      Some("s/ser"))
+    // the winner is read on the driver: no job, cold or warm
+    for (_ <- 1 to 2) {
+      val (got, jobs) = jobsOf(fs.last("s/f"))
+      assert(got.contains(99.0) && jobs.isEmpty, s"jobs: $jobs")
+      val (head, headJobs) = jobsOf(fs.first(Seq("s/f"))("s/f"))
+      assert(head.contains(0.0) && headJobs.isEmpty, s"jobs: $headJobs")
+      val (ser, serJobs) = jobsOf(fs.last("s/ser"))
+      assert(ser.contains("2.0") && serJobs.isEmpty, s"jobs: $serJobs")
+    }
   }
 
   test("a 4-feature ranged loadDataFrame starts no 0-record job before its scans") {
@@ -93,25 +101,40 @@ class ServeReadSpec extends SparkSpec with JobCounting {
       .select("time", "value").limit(1).collect().headOption
   }
 
+  /** num, ser and yr: the tricky rows as a double, a serialized and a
+    * year-partitioned feature. */
+  private def saveTricky(fs: FeatureStore): Unit = {
+    fs.createFeature("s/num")
+    fs.saveDataFrame(trickyRows("2024-01-01T12:00:00", "2024-01-20T12:00:00"), Some("s/num"))
+    fs.createFeature("s/ser", serialized = true)
+    fs.saveDataFrame(trickyRows("2024-01-01T12:00:00", "2024-01-20T12:00:00")
+      .withColumn("value", col("value").cast("string")), Some("s/ser"))
+    fs.createFeature("s/yr", partition = "year")
+    fs.saveDataFrame(trickyRows("2022-12-27T12:00:00", "2023-01-10T12:00:00"), Some("s/yr"))
+  }
+
+  private val travels = Seq(None, Some("0s"), Some("1h"))
+
+  /** The search's head and tail under every travel equal the dedup's;
+    * returns what each lookup read. */
+  private def assertEndpoints(fs: FeatureStore, names: Seq[String], clue: String = "")
+      : Map[(String, Option[String], Boolean), graft.store.EndpointReads] = {
+    val ns = fs.catalog.getNamespace("s").get
+    (for (name <- names; tt <- travels; fromTail <- Seq(true, false)) yield {
+      val f = fs.catalog.getFeature("s", name).get
+      val (got, reads) = fs.endpointLookup(ns, f, tt, fromTail)
+      val want = viaDedup(fs, name, tt, fromTail)
+      assert(got.map(_.toSeq.map(String.valueOf)) == want.map(_.toSeq.map(String.valueOf)),
+        s"$clue s/$name tt=$tt fromTail=$fromTail")
+      (name, tt, fromTail) -> reads
+    }).toMap
+  }
+
   test("endpoint lookups equal dedupLatest plus a time sort on both backends") {
     for (backend <- Seq("spark", "txlog")) {
       val (fs, _) = freshStore(backend)
-      val ns = fs.catalog.getNamespace("s").get
-      fs.createFeature("s/num")
-      fs.saveDataFrame(trickyRows("2024-01-01T12:00:00", "2024-01-20T12:00:00"), Some("s/num"))
-      fs.createFeature("s/ser", serialized = true)
-      fs.saveDataFrame(trickyRows("2024-01-01T12:00:00", "2024-01-20T12:00:00")
-        .withColumn("value", col("value").cast("string")), Some("s/ser"))
-      fs.createFeature("s/yr", partition = "year")
-      fs.saveDataFrame(trickyRows("2022-12-27T12:00:00", "2023-01-10T12:00:00"), Some("s/yr"))
-      for (name <- Seq("num", "ser", "yr"); tt <- Seq(None, Some("0s"), Some("1h"));
-           fromTail <- Seq(true, false)) {
-        val f = fs.catalog.getFeature("s", name).get
-        val (got, _) = fs.endpointLookup(ns, f, tt, fromTail)
-        val want = viaDedup(fs, name, tt, fromTail)
-        val clue = s"$backend s/$name tt=$tt fromTail=$fromTail"
-        assert(got.map(_.toSeq.map(String.valueOf)) == want.map(_.toSeq.map(String.valueOf)), clue)
-      }
+      saveTricky(fs)
+      assertEndpoints(fs, Seq("num", "ser", "yr"), backend)
       // the winners themselves: no travel keeps the latest-created NaN
       // (NaN sorts above every double, null below), a 1h travel keeps
       // the created_time tie's larger value, 0s keeps the original
@@ -244,5 +267,178 @@ class ServeReadSpec extends SparkSpec with JobCounting {
     // nothing to copy: the clone gets no data directory
     fs.cloneFeature("s/gone2", "s/gone")
     assert(!new java.io.File(s"$warehouse/feature/gone2").exists())
+  }
+
+  /** Rewrites feature `name`'s log by hand: one commit that re-adds
+    * the given live files as `strip` leaves them. */
+  private def handWritten(warehouse: String, name: String)(strip: Seq[TxAdd] => Seq[TxAdd]): Seq[TxAdd] = {
+    val root = s"$warehouse/feature/$name"
+    val log = new TxLog(spark.sparkContext.hadoopConfiguration, root)
+    val stripped = strip(log.snapshot())
+    def opt(k: String, v: Option[Long]) = v.map(x => s""","$k":$x""").getOrElse("")
+    val lines = stripped.flatMap { a =>
+      Seq(s"""{"remove":{"path":"${a.path}"}}""",
+        s"""{"add":{"path":"${a.path}","partition":"${a.partition}","sv":0""" +
+          opt("tmin", a.tmin) + opt("tmax", a.tmax) + opt("fsize", a.fsize) + "}}")
+    }
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(f"$root/_txlog/${log.latestVersion() + 1}%020d.json"),
+      lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    stripped
+  }
+
+  private def liveAdds(warehouse: String, name: String): Seq[TxAdd] =
+    new TxLog(spark.sparkContext.hadoopConfiguration, s"$warehouse/feature/$name").snapshot()
+
+  /** `days` daily noon rows from 2024-01-01 valued by index; rows at or
+    * past `maskedFrom` were created a month after their time. */
+  private def backfilled(days: Int, maskedFrom: Int): DataFrame =
+    (0 until days).map { i =>
+      val t = new Timestamp(ts("2024-01-01T12:00:00").getTime + i * 86400000L)
+      (t, if (i >= maskedFrom) new Timestamp(t.getTime + 30L * 86400000L) else t, i.toDouble)
+    }.toDF("time", "created_time", "value")
+
+  /** The features the loose-bounds cases run on. */
+  private def saveLoose(fs: FeatureStore, warehouse: String): Unit = {
+    val st = fs.store(fs.catalog.getNamespace("s").get)
+    // adds without stats: a middle file loses tmin, tmax and fsize, the
+    // tail file its time bounds only
+    fs.createFeature("s/bare")
+    fs.saveDataFrame(trickyRows("2024-01-01T12:00:00", "2024-01-10T12:00:00"), Some("s/bare"))
+    handWritten(warehouse, "bare") { live =>
+      val byTime = live.sortBy(_.tmax)
+      Seq(byTime(byTime.size / 2).copy(tmin = None, tmax = None, fsize = None),
+        byTime.last.copy(tmin = None, tmax = None))
+    }
+    // four files tied at the tail's tmax, with created_time rewrites
+    // and a created_time tie broken by value
+    fs.createFeature("s/tied")
+    fs.saveDataFrame(backfilled(5, maskedFrom = 5), Some("s/tied"))
+    val t = ts("2024-01-05T12:00:00")
+    for ((hours, v) <- Seq((3, 30.0), (1, 10.0), (2, 20.0), (3, 31.0)))
+      fs.saveDataFrame(Seq((t, new Timestamp(t.getTime + hours * 3600000L), v))
+        .toDF("time", "created_time", "value"), Some("s/tied"))
+    // an evolved schema: int values in epoch 0 (created now, so any
+    // travel masks them), then double values and an added column whose
+    // rows reach back to the head and rewrite the tail's time
+    fs.createFeature("s/evo")
+    fs.saveDataFrame((5 to 10).map(i => (ts(f"2024-01-$i%02dT12:00:00"), i)).toDF("time", "value"),
+      Some("s/evo"))
+    st.evolveSchema("evo", org.apache.spark.sql.types.StructType.fromDDL(
+      "time timestamp, created_time timestamp, value double, q string"))
+    st.save("evo", (Seq(1, 2, 3, 4, 10).map(i => (ts(f"2024-01-$i%02dT12:00:00"), 100.0 + i, s"q$i")))
+      .toDF("time", "value", "q").withColumn("created_time", col("time")))
+    // travel masking the whole tail tier, and every row
+    fs.createFeature("s/masked")
+    fs.saveDataFrame(backfilled(10, maskedFrom = 7), Some("s/masked"))
+    fs.createFeature("s/allmasked")
+    fs.saveDataFrame(backfilled(10, maskedFrom = 0), Some("s/allmasked"))
+    // empty features: never saved, and every row deleted
+    fs.createFeature("s/empty")
+    fs.createFeature("s/erased")
+    fs.saveDataFrame(daily("2024-01-01", 3), Some("s/erased"))
+    fs.deleteRows("s/erased", lit(true))
+  }
+
+  private val looseNames = Seq("bare", "tied", "evo", "masked", "allmasked", "empty", "erased")
+
+  test("the endpoint search equals dedupLatest on missing stats, ties, epochs and masks") {
+    val (fs, warehouse) = freshStore()
+    saveLoose(fs, warehouse)
+    val reads = assertEndpoints(fs, looseNames)
+    // a file without a size cannot be read on the driver: the candidates
+    // that can win (the stat-less files and the newest bounded tier) go
+    // to the one Spark job
+    val bare = reads(("bare", None, true))
+    assert(bare.driverTiers.isEmpty && bare.sparkFiles.size == 3, bare)
+    // the tail day's file and its four rewrites tie at tmax: one tier,
+    // read together
+    assert(reads(("tied", None, true)).driverTiers.map(_.size) == Seq(5))
+    assert(fs.last("s/tied").contains(31.0))
+    assert(fs.last(Seq("s/tied"), Some("1h"))("s/tied").contains(10.0))
+    // the evolved tail: epoch 0's int row, widened; under travel the
+    // epoch-1 rewrite of the same time
+    assert(fs.last("s/evo").contains(10.0))
+    assert(fs.last(Seq("s/evo"), Some("0s"))("s/evo").contains(110.0))
+    assert(fs.first(Seq("s/evo"))("s/evo").contains(101.0))
+    // the masked tail tiers are read and passed over
+    assert(reads(("masked", Some("0s"), true)).driverTiers.size == 4)
+    assert(fs.last(Seq("s/masked"), Some("0s"))("s/masked").contains(6.0))
+    assert(fs.last(Seq("s/allmasked"), Some("0s"))("s/allmasked").isEmpty)
+    assert(fs.last("s/empty").isEmpty && fs.last("s/erased").isEmpty)
+    assert(reads(("empty", None, true)) == graft.store.EndpointReads(Nil, Nil))
+  }
+
+  test("lastTimeBefore seeds equal the dedup's last surviving time before the start") {
+    val (fs, warehouse) = freshStore()
+    saveTricky(fs)
+    saveLoose(fs, warehouse)
+    val ns = fs.catalog.getNamespace("s").get
+    val froms = Seq("2022-01-01T00:00:00", "2023-01-01T00:00:00", "2024-01-01T12:00:00",
+      "2024-01-05T12:00:00", "2024-01-05T12:00:01", "2024-01-08T00:00:00", "2025-01-01T00:00:00")
+    for (name <- Seq("num", "ser", "yr") ++ looseNames; tt <- travels; from <- froms.map(ts)) {
+      val f = fs.catalog.getFeature("s", name).get
+      val raw = fs.store(ns).read(name, partitionStyle = f.partition)
+      val deduped = TimeseriesOps.dedupLatest(tt.map(TimeseriesOps.timeTravel(raw, _)).getOrElse(raw))
+      val want = deduped.filter(col("time") < lit(from)).agg(max("time")).collect().head
+      assert(fs.lastTimeBefore(ns, f, from, tt) == Option(want.getTimestamp(0)),
+        s"s/$name tt=$tt from=$from")
+    }
+    // the seed a resample fills from: day 6 is the last row a 0s travel
+    // keeps, so the grid from day 8 carries it
+    val grid = fs.loadDataFrame(Seq("s/masked"), Some(ts("2024-01-08T12:00:00")),
+      Some(ts("2024-01-10T12:00:00")), freq = Some("1d"), timeTravel = Some("0s"))
+      .collect()
+    assert(grid.nonEmpty && grid.forall(_.getDouble(1) == 6.0), grid.toSeq)
+  }
+
+  test("past spark.sql.files.maxPartitionBytes the search runs one Spark job, same answers") {
+    val (fs, warehouse) = freshStore()
+    saveTricky(fs)
+    saveLoose(fs, warehouse)
+    val names = Seq("num", "ser", "yr") ++ looseNames
+    val smallest = names.flatMap(liveAdds(warehouse, _)).flatMap(_.fsize).min
+    val key = "spark.sql.files.maxPartitionBytes"
+    try {
+      // below every file: every candidate goes to the Spark job
+      spark.conf.set(key, smallest - 1)
+      val reads = assertEndpoints(fs, names, "all via Spark")
+      assert(reads.forall { case (_, r) => r.driverTiers.isEmpty }, reads)
+      assert(reads(("num", None, true)).sparkFiles.nonEmpty)
+      val (got, jobs) = jobsOf(fs.last("s/num"))
+      assert(got.exists(_.asInstanceOf[Double].isNaN))
+      assert(jobs.size == 1 && jobs.head.shuffleBytes == 0L, s"jobs: $jobs")
+      // room for the first tier only: the masked tail is read on the
+      // driver, the rest of the search goes to the job
+      val first = liveAdds(warehouse, "masked").flatMap(a => a.tmax.map(_ -> a.fsize.get))
+        .groupBy(_._1).toSeq.maxBy(_._1)._2.map(_._2).sum
+      spark.conf.set(key, first)
+      val mixed = assertEndpoints(fs, Seq("masked"), "driver then Spark")(("masked", Some("0s"), true))
+      assert(mixed.driverTiers.size == 1 && mixed.sparkFiles.nonEmpty, mixed)
+    } finally spark.conf.unset(key)
+  }
+
+  test("the search opens only its candidate tier, through the namespace's storage options") {
+    val dir = tmpDir("graft-serve-countfs")
+    val fs = new FeatureStore(spark, s"$dir/catalog.json")
+    // the countfs scheme resolves only through the namespace's options:
+    // a driver read on the session's conf could not open these files
+    fs.createNamespace("s", CountingFs.url(s"$dir/warehouse"), storageOptions = CountingFs.options())
+    fs.createFeature("s/m")
+    fs.saveDataFrame(backfilled(10, maskedFrom = 7), Some("s/m"))
+    val root = s"$dir/warehouse/feature/m"
+    def partitionsOpened(opens: Map[String, Int]): Set[String] =
+      opens.keySet.filter(_.endsWith(".parquet")).map(_.stripPrefix(s"$root/").takeWhile(_ != '/'))
+    val ((got, jobs), opens) = CountingFs.opensDuring(root)(jobsOf(fs.last("s/m")))
+    assert(got.contains(9.0) && jobs.isEmpty, s"jobs: $jobs")
+    assert(partitionsOpened(opens) == Set("partition=2024-01-10"), opens)
+    // one replay: the log directory is listed once
+    val (_, lists) = CountingFs.listsDuring(root)(fs.last("s/m"))
+    assert(lists == Map(s"$root/_txlog" -> 1), lists)
+    // under travel the masked tail tiers are opened, and nothing deeper
+    // than the first survivor
+    val (masked, opened) = CountingFs.opensDuring(root)(fs.last(Seq("s/m"), Some("0s"))("s/m"))
+    assert(masked.contains(6.0))
+    assert(partitionsOpened(opened) == (7 to 10).map(d => f"partition=2024-01-$d%02d").toSet, opened)
   }
 }

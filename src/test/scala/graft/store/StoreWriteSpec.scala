@@ -1,40 +1,15 @@
 package graft.store
 
-import java.net.URI
-
-import org.apache.hadoop.fs.{FSDataInputStream, FilterFileSystem, FutureDataInputStreamBuilder, Path, RawLocalFileSystem}
 import org.apache.spark.sql.DataFrame
 
-import graft.{JobCounting, SparkSpec}
-
-/** Local filesystem under the `fatalfooter` scheme whose opens of
-  * STAGED parquet files — the store's per-file footer reads — die of a
-  * fatal error, as an OOM in the middle of an install would. */
-class FatalFooterFs extends FilterFileSystem(new RawLocalFileSystem {
-  override def getUri: URI = FatalFooterFs.Uri
-}) {
-  override def getScheme: String = FatalFooterFs.Uri.getScheme
-  private def refuseStaged(p: Path): Unit =
-    if (p.toString.contains("/.stage/") && p.getName.endsWith(".parquet"))
-      throw new FatalFooterFs.InjectedFatal(p)
-  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
-    refuseStaged(f)
-    super.open(f, bufferSize)
-  }
-  override def openFile(path: Path): FutureDataInputStreamBuilder = {
-    refuseStaged(path)
-    super.openFile(path)
-  }
-}
-
-object FatalFooterFs {
-  val Uri: URI = URI.create("fatalfooter:///")
-  final class InjectedFatal(p: Path) extends VirtualMachineError(s"injected fatal error opening $p")
-}
+import graft.{CountingFs, JobCounting, SparkSpec}
+import graft.api.FeatureStore
 
 /** The write path's contracts on the single log-backed layout: the
   * reference's empty-batch order, the Spark jobs an ordinary save
-  * costs, and that a fatal error during an install never commits. */
+  * costs, that a fatal error during an install never commits, that
+  * each staged file's footer is opened once, and that the facade pins
+  * a feature's value type only after the store committed. */
 class StoreWriteSpec extends SparkSpec with JobCounting {
   import spark.implicits._
 
@@ -76,13 +51,66 @@ class StoreWriteSpec extends SparkSpec with JobCounting {
     val st = new TimeseriesStore(spark, dir)
     st.save("f", days("2024-01-01", 3, 1.0))
     // the same warehouse through the failing filesystem
-    val failing = new TimeseriesStore(spark, s"fatalfooter://$dir",
-      Map("fs.fatalfooter.impl" -> classOf[FatalFooterFs].getName))
-    intercept[FatalFooterFs.InjectedFatal](failing.save("f", days("2024-02-01", 5, 10.0)))
+    val failing = new TimeseriesStore(spark, CountingFs.url(dir),
+      CountingFs.options(fatalStagedOpens = true))
+    intercept[CountingFs.InjectedFatal](failing.save("f", days("2024-02-01", 5, 10.0)))
     assert(st.tableVersion("f") == 0L)
     assert(st.read("f").count() == 3L)
     // nothing half-installed blocks a retry
     st.save("f", days("2024-02-01", 5, 10.0))
     assert(st.tableVersion("f") == 1L && st.read("f").count() == 8L)
+  }
+
+  test("an install opens each staged file's footer exactly once") {
+    val dir = tmpDir("graft-save-footers")
+    val st = new TimeseriesStore(spark, CountingFs.url(dir), CountingFs.options())
+    val (committed, opens) = CountingFs.opensDuring(dir)(st.save("f", days("2024-01-01", 5, 1.0)))
+    assert(committed)
+    val staged = opens.filter { case (p, _) => p.contains("/.stage/") && p.endsWith(".parquet") }
+    // one file per day, each footer read once, and nothing else staged is opened
+    assert(staged.size == 5 && staged.values.forall(_ == 1), s"opens: $opens")
+    assert(st.read("f").count() == 5L)
+  }
+
+  private def facade(prefix: String): (FeatureStore, String) = {
+    val dir = tmpDir(prefix)
+    val fs = new FeatureStore(spark, s"$dir/catalog.json")
+    fs.createNamespace("w", s"$dir/warehouse")
+    (fs, dir)
+  }
+
+  private def catalogBytes(dir: String): Seq[Byte] =
+    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/catalog.json")).toSeq
+
+  test("a facade save the store refuses leaves the catalog byte-identical") {
+    val (fs, dir) = facade("graft-save-refused")
+    // a legacy tree: plain partitioned parquet with no transaction log
+    fs.createFeature("w/legacy")
+    days("2024-01-01", 2, 1.0).withColumn("created_time", org.apache.spark.sql.functions.col("time"))
+      .withColumn("partition", org.apache.spark.sql.functions.date_format(
+        org.apache.spark.sql.functions.col("time"), "yyyy-MM-dd"))
+      .write.partitionBy("partition").parquet(s"$dir/warehouse/feature/legacy")
+    // a CHECK the batch violates, declared before any data
+    fs.createFeature("w/checked")
+    fs.addFeatureCheck("w/checked", "positive", "value > 0")
+    val before = catalogBytes(dir)
+    intercept[IllegalStateException](fs.saveDataFrame(days("2024-02-01", 2, 1.0), Some("w/legacy")))
+    intercept[IllegalArgumentException](
+      fs.saveDataFrame(days("2024-02-01", 2, -5.0), Some("w/checked")))
+    assert(catalogBytes(dir) == before)
+    assert(fs.catalog.getFeature("w", "checked").get.valueType.isEmpty)
+    // a save the store commits pins the type
+    fs.saveDataFrame(days("2024-02-01", 2, 1.0), Some("w/checked"))
+    assert(fs.catalog.getFeature("w", "checked").get.valueType.contains("\"double\""))
+  }
+
+  test("the first facade save of an unpinned feature costs what store.save costs") {
+    val (fs, _) = facade("graft-save-pinjobs")
+    fs.createFeature("w/f")
+    val st = fs.store(fs.catalog.getNamespace("w").get)
+    val (_, viaStore) = jobsOf(st.save("g", days("2024-01-01", 10, 0.0)))
+    val (_, viaFacade) = jobsOf(fs.saveDataFrame(days("2024-01-01", 10, 0.0), Some("w/f")))
+    assert(viaFacade.size == viaStore.size, s"facade: $viaFacade, store: $viaStore")
+    assert(fs.catalog.getFeature("w", "f").get.valueType.contains("\"double\""))
   }
 }
