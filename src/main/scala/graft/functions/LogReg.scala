@@ -55,7 +55,8 @@ object LogReg {
       private[functions] val fy: DataFrame,
       idCol: String) {
 
-    private def warr: Column = array(weights.toIndexedSeq.map(lit): _*)
+    // one array literal, not buckets + 1 literal expressions
+    private def warr: Column = typedLit(weights)
 
     /** Per-document P(label=1) under the trained weights. */
     def scores: DataFrame =
@@ -93,7 +94,7 @@ object LogReg {
     val n = docs.count().toDouble
     val w = Array.fill(buckets + 1)(0.0)
     for (_ <- 1 to epochs) {
-      val warr = array(w.toIndexedSeq.map(lit): _*)
+      val warr = typedLit(w.clone()) // a snapshot: w moves after this epoch
       val resid = fy
         .groupBy(col(idCol))
         .agg(

@@ -5,7 +5,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
 /** The engine's dataflow kernel: every nontrivial semantic of the reference
   * feature store (`/root/reference/bytehub/_storage/dask.py`,
@@ -531,26 +532,36 @@ object TimeseriesOps {
     if (parts <= 2L * nInputs && parts > 4L * cores) u.coalesce(4 * cores) else u
   }
 
-  def alignJoin(dfs: Seq[DataFrame], timeCol: String = TimeCol): DataFrame = {
+  /** alignJoin's input guard, shared with [[alignLocal]]: series names
+    * must be distinct across the inputs. It guards BOTH Spark paths —
+    * the join chain would otherwise fail much later with a cryptic
+    * AMBIGUOUS_REFERENCE deep inside the fill. */
+  private def requireDistinctNames(dfs: Seq[DataFrame], timeCol: String): Unit = {
     require(dfs.nonEmpty, "alignJoin needs at least one input")
-    // guard BOTH paths: the join chain would otherwise fail much later
-    // with a cryptic AMBIGUOUS_REFERENCE deep inside the fill
     val allNames = dfs.flatMap(_.columns.filterNot(_ == timeCol))
     require(allNames.distinct.size == allNames.size,
       s"duplicate series names across alignJoin inputs: $allNames")
-    val singleValued = dfs.forall(_.columns.length == 2)
+  }
+
+  /** Whether [[alignJoin]] aligns `dfs` with the pivot rather than the
+    * join chain. Wide loads of same-typed series align with ONE
+    * shuffle: tag each series, union, and pivot on the tag — versus a
+    * chain of N-1 full outer joins (N-1 shuffles) that dominates a
+    * 100-feature load. Mixed value types (or multi-column inputs) keep
+    * the join chain, since a union would coerce them. Inputs are
+    * expected deduplicated per time (every loadDataFrame series is);
+    * the pivot collapses any residual duplicate deterministically via
+    * max, where the join chain would instead multiply rows. */
+  private def pivotable(dfs: Seq[DataFrame], timeCol: String): Boolean = {
     val valueTypes = dfs.map(df =>
       df.schema.fields.filterNot(_.name == timeCol).map(_.dataType).toSeq)
-    // Wide loads of same-typed series align with ONE shuffle: tag each
-    // series, union, and pivot on the tag — versus a chain of N-1 full
-    // outer joins (N-1 shuffles) that dominates a 100-feature load.
-    // Mixed value types (or multi-column inputs) keep the join chain,
-    // since a union would coerce them. Inputs are expected deduplicated
-    // per time (every loadDataFrame series is); the pivot collapses any
-    // residual duplicate deterministically via max, where the join
-    // chain would instead multiply rows.
-    val pivotable = dfs.length > 2 && singleValued &&
+    dfs.length > 2 && dfs.forall(_.columns.length == 2) &&
       valueTypes.distinct.size == 1 && valueTypes.head.forall(isOrderable)
+  }
+
+  def alignJoin(dfs: Seq[DataFrame], timeCol: String = TimeCol): DataFrame = {
+    requireDistinctNames(dfs, timeCol)
+    val pivotable = this.pivotable(dfs, timeCol)
     val joined =
       if (pivotable) {
         val names = dfs.map(_.columns.filterNot(_ == timeCol).head)
@@ -577,6 +588,48 @@ object TimeseriesOps {
     // the order-insensitive RANGE form
     ffillAuto(joined, valueCols, orderCols = Seq(timeCol), tieFree = pivotable)
       .orderBy(col(timeCol))
+  }
+
+  /** [[alignJoin]]'s driver twin, for small LOCAL inputs (frames whose
+    * rows the driver holds, like
+    * [[graft.store.TimeseriesStore.latestOnDriver]]'s): the same wide
+    * frame, row for row and schema for schema, built without a Spark
+    * job. Inputs must be unique per time, as every deduped series is.
+    *
+    * The fill is alignJoin's, evaluated by a walk: over the sorted
+    * distinct times of all inputs (a null time first, as the sort puts
+    * it), each value column carries its last non-null value — a null
+    * at a time (a deduped null) does not clear the carry, exactly like
+    * the window's `last(ignoreNulls)`. Columns keep each input's own
+    * type, in input order, all nullable; the time column is nullable
+    * as alignJoin's is (an input's own, the pivot's union of them, or
+    * always after the join chain's outer joins). Duplicate names fail
+    * with alignJoin's message.
+    */
+  def alignLocal(dfs: Seq[DataFrame], timeCol: String = TimeCol): DataFrame = {
+    requireDistinctNames(dfs, timeCol)
+    val timeNullable = dfs.exists(_.schema(timeCol).nullable) ||
+      (dfs.size > 1 && !pivotable(dfs, timeCol))
+    val schema = StructType(
+      StructField(timeCol, dfs.head.schema(timeCol).dataType, timeNullable) +:
+        dfs.flatMap(_.schema.fields.filterNot(_.name == timeCol).map(_.copy(nullable = true))))
+    // per input: its rows by time, and (ordinal, type) of its value columns
+    val inputs = dfs.map { df =>
+      val t = df.schema.fieldIndex(timeCol)
+      val rows = df.queryExecution.executedPlan.executeCollect()
+      (rows.map(r => (if (r.isNullAt(t)) None else Some(r.getLong(t))) -> r).toMap,
+        df.schema.fields.indices.filter(_ != t).map(i => (i, df.schema(i).dataType)))
+    }
+    val carry = new Array[Any](schema.length - 1)
+    val rows = inputs.flatMap(_._1.keys).distinct.sorted.map { time =>
+      var at = 0
+      for ((byTime, cols) <- inputs; (i, dt) <- cols) {
+        byTime.get(time).filterNot(_.isNullAt(i)).foreach(r => carry(at) = r.get(i, dt))
+        at += 1
+      }
+      new GenericInternalRow(time.getOrElse(null) +: carry)
+    }
+    org.apache.spark.sql.graftbridge.MetaFileIndex.localFrame(dfs.head.sparkSession, schema, rows)
   }
 
   /** [[alignJoin]] for VERY wide feature sets. Catalyst's optimizer

@@ -6,6 +6,9 @@ import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
+import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.execution.streaming.sinks.FileStreamSinkLog
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.{LocalParquetReader, MetaFileIndex}
@@ -30,6 +33,39 @@ final case class TableStats(
   * the driver settled the search). Paths are relative to the feature. */
 final case class EndpointReads(driverTiers: Seq[Seq[String]], sparkFiles: Seq[String])
 
+/** The files one ranged read opens, chosen by ONE log replay
+  * ([[TimeseriesStore.select]]): the adds live at the read version that
+  * survive partition-value and per-file time pruning, the schema
+  * declarations their epochs index, and the range itself. Opening it
+  * ([[TimeseriesStore.open]] as a Spark scan, or
+  * [[TimeseriesStore.latestOnDriver]] on the driver) replays nothing. */
+final case class ReadSelection(
+    name: String,
+    adds: Seq[TxAdd],
+    schemas: Seq[String],
+    from: Option[Timestamp],
+    to: Option[Timestamp],
+    partitionStyle: String) {
+
+  /** Bytes a driver read of the selection holds once decoded, estimated
+    * the way Spark sizes a LocalRelation: the files' recorded row counts
+    * times 8 plus the declared row's default field sizes — never less
+    * than the files' own bytes, which a long string can outgrow. Row
+    * counts, not file sizes, because a steady or dictionary-encoded
+    * series compresses many times over. None when the driver cannot
+    * read or size it: an add without a recorded row count or size, or
+    * files under a log that declares no schema (they infer theirs). A
+    * selection of no files holds 0. */
+  def decodedBytes: Option[Long] =
+    if (adds.isEmpty) Some(0L)
+    else if (schemas.isEmpty || adds.exists(a => a.nrec.isEmpty || a.fsize.isEmpty)) None
+    else {
+      val width = 8L + DataType.fromJson(schemas.last).asInstanceOf[StructType]
+        .fields.map(_.dataType.defaultSize.toLong).sum
+      Some(math.max(adds.flatMap(_.nrec).sum * width, adds.flatMap(_.fsize).sum))
+    }
+}
+
 /** Physical storage of one namespace, in ONE layout: each feature is a
   * hive-partitioned snappy-parquet directory
   * `<url>/feature/<name>/partition=<p>/...` (the reference layout,
@@ -48,9 +84,13 @@ final case class EndpointReads(driverTiers: Seq[Seq[String]], sparkFiles: Seq[St
   * no directories and opens only its range. An endpoint lookup
   * ([[endpoint]], behind `last()`/`first()`) goes further: the per-file
   * time bounds pick its few candidate files, which the driver reads
-  * itself, with no Spark job. A feature directory must be read THROUGH
-  * the store: raw `spark.read.parquet` on it would see compacted-away
-  * duplicates the log has retired.
+  * itself, with no Spark job. A small ranged load does the same
+  * ([[latestOnDriver]]): when the log's row counts say the selected
+  * files decode to few bytes, the driver reads, travels and dedups
+  * them. Both go through
+  * one driver read, [[driverRows]]. A feature directory must be read
+  * THROUGH the store: raw `spark.read.parquet` on it would see
+  * compacted-away duplicates the log has retired.
   *
   * Read schemas come from the log: the first write declares the batch's
   * schema as epoch 0 and [[evolveSchema]] appends later epochs, so a
@@ -284,7 +324,7 @@ class TimeseriesStore(
   def addCheck(name: String, constraintName: String, boolExpr: String): Long = {
     require(constraintName.nonEmpty, "constraint name must be non-empty")
     if (exists(name)) {
-      val TxSnapshot(live, schemas) = txLog(name).state()
+      val TxSnapshot(live, schemas, _, _) = txLog(name).state()
       if (live.nonEmpty) {
         val cur = openAdds(name, live, schemas, partitionStyle = "date")
         val bad = cur.filter(!expr(boolExpr) || expr(boolExpr).isNull).count()
@@ -297,16 +337,16 @@ class TimeseriesStore(
 
   /** Active CHECK constraints on a txlog table, declaration-ordered. */
   def tableChecks(name: String): Seq[(String, String)] = {
-    if (!exists(name)) Seq.empty else txLog(name).checks()
+    if (!exists(name)) Seq.empty else txLog(name).state().checks
   }
 
   /** Writer-side constraint enforcement: every active check must hold
     * on EVERY batch row (nulls count as violations, the ANSI CHECK
     * reading a data pipeline wants — a null-dodging row is a bug, not
-    * a pass). One combined filter job; rejection names the first
-    * violated constraint and the row count. */
-  private def enforceChecks(log: TxLog, name: String, batch: DataFrame): Unit = {
-    val active = log.checks().filterNot(_._2.trim.equalsIgnoreCase("true"))
+    * a pass). One filter job per active check; rejection names the
+    * first violated constraint and the row count. */
+  private def enforceChecks(checks: Seq[(String, String)], name: String, batch: DataFrame): Unit = {
+    val active = checks.filterNot(_._2.trim.equalsIgnoreCase("true"))
     active.foreach { case (cn, ce) =>
       val bad = batch.filter(!expr(ce) || expr(ce).isNull).count()
       if (bad > 0)
@@ -320,16 +360,18 @@ class TimeseriesStore(
     * to the declared epoch and their adds carry its index. Returns the
     * installed adds plus the schema to declare in the same commit.
     * Active CHECK constraints are enforced HERE — before any file is
-    * staged, so a rejected batch leaves nothing to vacuum. */
-  private def stageForCommit(log: TxLog, name: String, normalized: DataFrame)
+    * staged, so a rejected batch leaves nothing to vacuum. `snap` is
+    * the caller's one replay: checks, epoch and bloom config all come
+    * from the same version. */
+  private def stageForCommit(log: TxLog, snap: TxSnapshot, name: String, normalized: DataFrame)
       : (Seq[TxAdd], Option[String]) = {
-    enforceChecks(log, name, normalized)
-    log.schemaHistory() match {
+    enforceChecks(snap.checks, name, normalized)
+    snap.schemas match {
       case Seq() =>
-        (stageInstall(log, name, normalized).map(_.copy(sv = Some(0L))),
+        (stageInstall(log, name, normalized, snap.bloom).map(_.copy(sv = Some(0L))),
           Some(structJson(normalized)))
       case schemas =>
-        (stageInstall(log, name, conformForWrite(normalized, schemaOf(schemas.last)))
+        (stageInstall(log, name, conformForWrite(normalized, schemaOf(schemas.last)), snap.bloom)
           .map(_.copy(sv = Some(schemas.size - 1L))), None)
     }
   }
@@ -431,12 +473,12 @@ class TimeseriesStore(
     * makes append and compaction atomic.
     */
   private def stageInstall(
-      log: TxLog, // the caller's instance — its replay cache is warm;
-                  // a fresh one here would cold-replay the log PER
-                  // WRITE for the bloom-config lookup (measured 1.8x
-                  // on the multi-commit certification lifecycles)
+      log: TxLog,
       name: String,
       normalized: DataFrame,
+      // the bloom index in effect, from the caller's own replay: a
+      // lookup here would replay (and list) the log once more per write
+      bloomCfg: Option[(String, Int, Int)],
       outPartitions: Option[Int] = None,
       preLaid: Boolean = false): Seq[TxAdd] = {
     val stage = new Path(s"$url/.stage/$name/${java.util.UUID.randomUUID()}")
@@ -484,8 +526,6 @@ class TimeseriesStore(
     // optimize) route through here too, so blooms survive them the
     // same way the footer stats do. A build failure degrades to
     // never-skipped files, never to a failed install.
-    val bloomCfg: Option[(String, Int, Int)] =
-      try log.bloomConfig() catch { case NonFatal(_) => None }
     val blooms: Map[String, String] = bloomCfg match {
       case Some((bcol, bits, k)) if laid.columns.contains(bcol) =>
         try FileBloom.buildForStage(spark, stage.toString, bcol, bits, k)
@@ -598,14 +638,15 @@ class TimeseriesStore(
     * visible in ONE atomic log commit.
     */
   def write(name: String, normalized: DataFrame): Unit = {
-    commitBatch(txLog(name), name, normalized)
+    val log = txLog(name)
+    commitBatch(log, log.state(), name, normalized)
     ()
   }
 
   /** Stage and commit one batch; true iff it committed (a batch with
     * no rows stages no files and commits nothing). */
-  private def commitBatch(log: TxLog, name: String, normalized: DataFrame): Boolean = {
-    val (adds, schemaDecl) = stageForCommit(log, name, normalized)
+  private def commitBatch(log: TxLog, snap: TxSnapshot, name: String, normalized: DataFrame): Boolean = {
+    val (adds, schemaDecl) = stageForCommit(log, snap, name, normalized)
     if (adds.nonEmpty) log.commit(adds, schema = schemaDecl)
     adds.nonEmpty
   }
@@ -616,10 +657,13 @@ class TimeseriesStore(
     * commits nothing. */
   def save(name: String, df: DataFrame, partitionStyle: String = "date"): Boolean = {
     val log = txLog(name)
+    // ONE replay (one `_txlog` listing) serves validation, checks,
+    // staging epoch and bloom config alike
+    val snap = log.state()
     // columns beyond the 3-column envelope pass validation ONLY when a
     // declared (evolved) schema names them — Delta-without-autoMerge:
     // new columns enter through evolveSchema, never through a save
-    val declaredExtras: Set[String] = log.schemaHistory().lastOption
+    val declaredExtras: Set[String] = snap.schemas.lastOption
       .map(schemaOf(_).fieldNames.toSet -- Set(TimeCol, CreatedCol, ValueCol))
       .getOrElse(Set.empty)
     // An empty batch is a no-op BEFORE column validation (the reference
@@ -629,7 +673,7 @@ class TimeseriesStore(
     val normalized =
       try TimeseriesStore.normalize(df, partitionStyle, declaredExtras)
       catch { case e: IllegalArgumentException => if (df.isEmpty) return false else throw e }
-    commitBatch(log, name, normalized)
+    commitBatch(log, snap, name, normalized)
   }
 
   /** Idempotent transactional append: commits the batch
@@ -643,7 +687,7 @@ class TimeseriesStore(
     val log = txLog(name)
     if (log.txnSeen(txnId)) false // fast path: skip the staging work
     else {
-      val (adds, schemaDecl) = stageForCommit(log, name, normalized)
+      val (adds, schemaDecl) = stageForCommit(log, log.state(), name, normalized)
       // commit re-checks the txn id on every rename attempt — if a
       // concurrent writer (zombie driver + replacement replaying the
       // same micro-batch) landed it between the check above and here,
@@ -663,7 +707,7 @@ class TimeseriesStore(
     val log = txLog(name)
     if (log.txnSeen(streamId, batchId)) false // fast path: skip staging
     else {
-      val (adds, schemaDecl) = stageForCommit(log, name, normalized)
+      val (adds, schemaDecl) = stageForCommit(log, log.state(), name, normalized)
       adds.nonEmpty &&
         log.commit(adds, Nil, txnAppVer = Some((streamId, batchId)), schema = schemaDecl) >= 0
     }
@@ -678,6 +722,9 @@ class TimeseriesStore(
     * then drops the extra rows. Old snapshots stay readable through
     * `asOfVersion` until vacuumed. `valueType` types the envelope of a
     * feature with no data (default double).
+    *
+    * Two steps: [[select]] replays the log once and picks the files,
+    * [[open]] scans them.
     */
   def read(
       name: String,
@@ -685,30 +732,113 @@ class TimeseriesStore(
       to: Option[Timestamp] = None,
       valueType: Option[DataType] = None,
       partitionStyle: String = "date",
-      asOfVersion: Option[Long] = None): DataFrame = {
-    // one replay: the live files and the schema in effect AT THE READ
-    // VERSION — an old snapshot reads the old (pre-evolution) schema,
-    // columns added later are absent, the value keeps its narrow type
-    val TxSnapshot(adds, schemas) = txLog(name).state(asOfVersion)
-    // two-level metadata skipping: partition values first, then
-    // per-file time bounds (Delta data-skipping shape) — a
-    // micro-batch-accumulated day holds many narrow files, and a
-    // ranged read drops the non-overlapping ones from the LOG alone
-    val pruned = prunePartitionValues(adds, from, to, partitionStyle)
-      .filter(fileStatsOverlap(_, from, to))
-    if (pruned.isEmpty) return emptyOf(schemas, valueType.getOrElse(DoubleType))
-    val df = openAdds(name, pruned, schemas, partitionStyle)
-    val preds = from.map(f => col(TimeCol) >= lit(f)) ++ to.map(t => col(TimeCol) <= lit(t))
-    preds.reduceOption(_ && _).map(df.filter).getOrElse(df)
-      .select(dataCols(schemas).map(col).toIndexedSeq: _*)
+      asOfVersion: Option[Long] = None): DataFrame =
+    open(select(name, from, to, partitionStyle, asOfVersion), valueType)
+
+  /** [[read]]'s first step: ONE replay yields the live files and the
+    * schema in effect AT THE READ VERSION (an old snapshot reads the
+    * old, pre-evolution schema: columns added later are absent, the
+    * value keeps its narrow type), then two-level metadata skipping
+    * drops files from the LOG alone — partition values first, then
+    * per-file time bounds (the Delta data-skipping shape: a
+    * micro-batch-accumulated day holds many narrow files). Opens
+    * nothing. */
+  private[graft] def select(
+      name: String,
+      from: Option[Timestamp],
+      to: Option[Timestamp],
+      partitionStyle: String = "date",
+      asOfVersion: Option[Long] = None): ReadSelection = {
+    val TxSnapshot(adds, schemas, _, _) = txLog(name).state(asOfVersion)
+    ReadSelection(name,
+      prunePartitionValues(adds, from, to, partitionStyle).filter(fileStatsOverlap(_, from, to)),
+      schemas, from, to, partitionStyle)
   }
+
+  /** [[read]]'s second step: a Spark scan of the selected files, the
+    * exact range predicate dropping the rows pruning kept, the data
+    * columns selected. `valueType` types the envelope of a selection
+    * with no files under a log that declares no schema. */
+  private[graft] def open(sel: ReadSelection, valueType: Option[DataType] = None): DataFrame =
+    if (sel.adds.isEmpty) emptyOf(sel.schemas, valueType.getOrElse(DoubleType))
+    else
+      rangeFilter(openAdds(sel.name, sel.adds, sel.schemas, sel.partitionStyle), sel.from, sel.to)
+        .select(dataCols(sel.schemas).map(col).toIndexedSeq: _*)
+
+  /** The deduped rows of a selection, read on the driver: what
+    * [[open]] followed by `timeTravel` and
+    * [[graft.ops.TimeseriesOps.dedupLatest]] returns, as a time-sorted
+    * local frame of the declared columns (collecting it, or a
+    * projection of it, runs no job). The files go through
+    * [[driverRows]] with the range filter and the travel; the dedup
+    * keeps, per time, the first row under
+    * [[graft.ops.TimeseriesOps.endpointOrder]]'s tie keys — max
+    * `created_time`, then the other orderable columns descending, the
+    * rule `dedupLatest` and `endpointRow` share. The caller bounds the
+    * selection's decoded size ([[ReadSelection.decodedBytes]]), which
+    * must be defined. */
+  private[graft] def latestOnDriver(
+      sel: ReadSelection,
+      timeTravel: Option[String],
+      valueType: Option[DataType] = None): DataFrame = {
+    require(sel.decodedBytes.isDefined, s"'${sel.name}': the selection cannot be read on the driver")
+    val schema = schemaOrEnvelope(sel.schemas, valueType)
+    if (sel.adds.isEmpty) return MetaFileIndex.localFrame(spark, schema, Nil)
+    def prepare(df: DataFrame): DataFrame =
+      travel(rangeFilter(df.select(dataCols(sel.schemas).map(col): _*), sel.from, sel.to), timeTravel)
+    val shape = prepare(MetaFileIndex.localFrame(spark, schema, Nil))
+    val timeAt = shape.columns.indexOf(TimeCol)
+    def time(r: InternalRow): Option[Long] = if (r.isNullAt(timeAt)) None else Some(r.getLong(timeAt))
+    // time ascending, each time's winner first: keep the first row of
+    // each run of equal times
+    val sorted = driverRows(sel.name, sel.adds, sel.schemas, prepare)
+      .sorted(endpointOrdering(shape, fromTail = false)).toIndexedSeq
+    MetaFileIndex.localFrame(spark, shape.schema,
+      sorted.indices.collect { case i if i == 0 || time(sorted(i - 1)) != time(sorted(i)) => sorted(i) })
+  }
+
+  /** Every row of `adds`, read on the driver through the cached
+    * [[LocalParquetReader]]s, one read per schema epoch, each aligned
+    * to the newest epoch ([[alignTo]]) and passed through `prepare`:
+    * Projects and Filters over a LocalRelation, which fold and run no
+    * job. Every add must record its size, and the caller bounds what
+    * they decode to: all the rows land in driver memory. */
+  private def driverRows(
+      name: String,
+      adds: Seq[TxAdd],
+      schemas: Seq[String],
+      prepare: DataFrame => DataFrame): Seq[InternalRow] = {
+    val target = schemaOf(schemas.last)
+    adds.groupBy(_.sv.getOrElse(0L)).toSeq.sortBy(_._1).flatMap { case (sv, group) =>
+      val fileSchema = schemaOf(schemas(sv.toInt))
+      val rows = localReader(fileSchema)
+        .read(group.map(a => (new Path(s"${featurePath(name)}/${a.path}"), a.fsize.get)))
+      prepare(rows.select(alignTo(fileSchema, target): _*)).queryExecution.executedPlan.executeCollect()
+    }
+  }
+
+  /** [[graft.ops.TimeseriesOps.endpointOrder]] over `shape`'s columns
+    * as a driver-side row ordering: the same sort keys, resolved by the
+    * analyzer, ranking InternalRows of `shape`'s schema. */
+  private def endpointOrdering(shape: DataFrame, fromTail: Boolean): Ordering[InternalRow] =
+    shape.orderBy(endpointOrder(shape, fromTail): _*).queryExecution.analyzed match {
+      case s: Sort => RowOrdering.create(s.order, s.child.output)
+      case other   => throw new IllegalStateException(s"unexpected endpoint plan: $other")
+    }
+
+  private def travel(df: DataFrame, timeTravel: Option[String]): DataFrame =
+    timeTravel.map(graft.ops.TimeseriesOps.timeTravel(df, _)).getOrElse(df)
 
   /** Zero rows of the declared schema, or the envelope typed
     * `valueType` when the table declares none yet. */
   private def emptyOf(schemas: Seq[String], valueType: DataType): DataFrame =
-    schemas.lastOption.map(sj =>
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf(sj)))
-      .getOrElse(emptyFrame(valueType))
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      schemaOrEnvelope(schemas, Some(valueType)))
+
+  /** The declared schema, or the envelope typed `valueType` (default
+    * double) when the table declares none yet. */
+  private def schemaOrEnvelope(schemas: Seq[String], valueType: Option[DataType]): StructType =
+    schemas.lastOption.map(schemaOf).getOrElse(emptySchema(valueType.getOrElse(DoubleType)))
 
   /** File-level data skipping over log metadata: does the add's
     * recorded event-time range intersect [from, to]? Files without
@@ -763,10 +893,10 @@ class TimeseriesStore(
     *    Without `timeTravel` the first tier settles it — the files whose
     *    `tmax` is the maximum.
     *
-    * Tiers are read on the driver by Spark's own parquet reader, one per
-    * schema epoch, and ranked with the same epoch alignment,
-    * travel filter and sort keys the Spark path runs, so a stored
-    * endpoint starts no job. The driver reads at most
+    * Tiers are read on the driver by [[driverRows]] — Spark's own
+    * parquet reader, one read per schema epoch — and ranked with the
+    * same epoch alignment, travel filter and sort keys the Spark path
+    * runs, so a stored endpoint starts no job. The driver reads at most
     * `spark.sql.files.maxPartitionBytes` of files per call — what one
     * scan task reads. Past that bound, or at a file whose size the log
     * does not record, the candidates that can still win go to ONE
@@ -785,14 +915,12 @@ class TimeseriesStore(
       timeTravel: Option[String] = None,
       before: Option[Timestamp] = None,
       valueType: Option[DataType] = None): (DataFrame, EndpointReads) = {
-    import org.apache.spark.sql.catalyst.InternalRow
     require(before.isEmpty || fromTail, "an endpoint search bounded by `before` runs from the tail")
-    val TxSnapshot(live, schemas) = txLog(name).state()
+    val TxSnapshot(live, schemas, _, _) = txLog(name).state()
     val cols = dataCols(schemas).map(col)
     def prepare(df: DataFrame): DataFrame = {
       val in = df.select(cols: _*)
-      val cut = before.map(b => in.filter(col(TimeCol) < lit(b))).getOrElse(in)
-      timeTravel.map(graft.ops.TimeseriesOps.timeTravel(cut, _)).getOrElse(cut)
+      travel(before.map(b => in.filter(col(TimeCol) < lit(b))).getOrElse(in), timeTravel)
     }
     def sparkTop(adds: Seq[TxAdd]): DataFrame =
       endpointRow(prepare(openAdds(name, adds, schemas, partitionStyle = "date")), fromTail)
@@ -806,13 +934,8 @@ class TimeseriesStore(
       return (spark.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema),
         EndpointReads(Nil, live.map(_.path)))
     }
-    val target = schemaOf(schemas.last)
-    val shape = prepare(MetaFileIndex.localFrame(spark, target, Nil))
-    val order = shape.orderBy(endpointOrder(shape, fromTail): _*).queryExecution.analyzed match {
-      case s: org.apache.spark.sql.catalyst.plans.logical.Sort =>
-        org.apache.spark.sql.catalyst.expressions.RowOrdering.create(s.order, s.child.output)
-      case other => throw new IllegalStateException(s"unexpected endpoint plan: $other")
-    }
+    val shape = prepare(MetaFileIndex.localFrame(spark, schemaOf(schemas.last), Nil))
+    val order = endpointOrdering(shape, fromTail)
     val timeAt = shape.columns.indexOf(TimeCol)
     val cap = before.map(micros(_) - 1)
     def bound(a: TxAdd): Option[Long] = if (fromTail) a.tmax else a.tmin
@@ -836,13 +959,6 @@ class TimeseriesStore(
     // surely yields a row at that bound: nothing past it can win
     def settles(tier: (Option[Long], Seq[TxAdd])): Boolean =
       timeTravel.isEmpty && tier._1.isDefined && tier._2.exists(a => bound(a) == tier._1)
-    def onDriver(tier: Seq[TxAdd]): Seq[InternalRow] =
-      tier.groupBy(_.sv.getOrElse(0L)).toSeq.flatMap { case (sv, group) =>
-        val fileSchema = schemaOf(schemas(sv.toInt))
-        val rows = localReader(fileSchema)
-          .read(group.map(a => (new Path(s"${featurePath(name)}/${a.path}"), a.fsize.get)))
-        prepare(rows.select(alignTo(fileSchema, target): _*)).queryExecution.executedPlan.executeCollect()
-      }
     val budget = MetaFileIndex.maxPartitionBytes(spark)
     var spent = 0L
     var rest = tiers
@@ -852,7 +968,7 @@ class TimeseriesStore(
       val tier = rest.head._2
       if (tier.forall(_.fsize.isDefined) && spent + tier.flatMap(_.fsize).sum <= budget) {
         spent += tier.flatMap(_.fsize).sum
-        keep(onDriver(tier))
+        keep(driverRows(name, tier, schemas, prepare))
         driverTiers += tier.map(_.path)
         rest = rest.tail
       } else {
@@ -919,7 +1035,7 @@ class TimeseriesStore(
     */
   def compact(name: String, partitions: Seq[String] = Nil): Unit = {
     val log = txLog(name)
-    val TxSnapshot(all, schemas) = log.state()
+    val TxSnapshot(all, schemas, _, bloom) = log.state()
     if (all.isEmpty) return
     val targetParts: Set[String] =
       if (partitions.nonEmpty) partitions.toSet else all.map(_.partition).toSet
@@ -931,7 +1047,7 @@ class TimeseriesStore(
     val src = openAdds(name, victims, schemas, partitionStyle = "date")
     val deduped = graft.ops.TimeseriesOps.dedupLatest(src, keyCols = Seq("partition"))
     val adds = stageInstall(log, name,
-      deduped.select((dataCols(schemas).map(col) :+ col("partition")).toIndexedSeq: _*))
+      deduped.select((dataCols(schemas).map(col) :+ col("partition")).toIndexedSeq: _*), bloom)
       .map(_.copy(sv = svTag(schemas)))
     log.commit(adds, victims.map(a => TxRemove(a.path)))
   }
@@ -958,7 +1074,7 @@ class TimeseriesStore(
   def optimize(name: String, targetBytes: Long = 128L * 1024 * 1024): Long = {
     if (!exists(name)) return 0L
     val log = txLog(name)
-    val TxSnapshot(live, schemas) = log.state()
+    val TxSnapshot(live, schemas, _, bloom) = log.state()
     if (live.isEmpty) return 0L
     val f = fs(url)
     val root = featurePath(name)
@@ -999,7 +1115,7 @@ class TimeseriesStore(
     val outParts = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     val src = openAdds(name, victims.map(_._1), schemas, partitionStyle = "date")
       .select((dataCols(schemas).map(col) :+ col("partition")).toIndexedSeq: _*)
-    val adds = stageInstall(log, name, src, outPartitions = Some(outParts))
+    val adds = stageInstall(log, name, src, bloom, outPartitions = Some(outParts))
       .map(_.copy(sv = svTag(schemas)))
     log.commit(adds, victims.map(v => TxRemove(v._1.path)))
     victims.size.toLong
@@ -1030,7 +1146,7 @@ class TimeseriesStore(
       targetBytes: Long = 128L * 1024 * 1024): Long = {
     if (!exists(name)) return 0L
     val log = txLog(name)
-    val TxSnapshot(live, schemas) = log.state()
+    val TxSnapshot(live, schemas, _, bloom) = log.state()
     if (live.isEmpty) return 0L
     val f = fs(url)
     val root = featurePath(name)
@@ -1053,7 +1169,7 @@ class TimeseriesStore(
       .repartitionByRange(outFiles, col("partition"), col("__zkey"))
       .sortWithinPartitions(col("partition"), col("__zkey"))
       .drop("__zkey")
-    val adds = stageInstall(log, name, laid, preLaid = true)
+    val adds = stageInstall(log, name, laid, bloom, preLaid = true)
       .map(_.copy(sv = svTag(schemas)))
     log.commit(adds, live.map(a => TxRemove(a.path)))
     live.size.toLong
@@ -1095,7 +1211,7 @@ class TimeseriesStore(
       from: Option[Timestamp] = None,
       to: Option[Timestamp] = None): DataFrame = {
     if (!exists(name)) return emptyFrame(org.apache.spark.sql.types.DoubleType)
-    val TxSnapshot(live, schemas) = txLog(name).state()
+    val TxSnapshot(live, schemas, _, _) = txLog(name).state()
     val pruned = prunePartitionValues(
       valueRangeCandidates(live, vlo, vhi, from, to), from, to, "date")
     if (pruned.isEmpty) return emptyOf(schemas, DoubleType)
@@ -1166,7 +1282,7 @@ class TimeseriesStore(
       s"unsupported probe type ${value.getClass.getName}: the bloom hashed the column's " +
         "STRING rendering, which only integral/string/boolean types reproduce exactly")
     if (!exists(name)) return emptyFrame(org.apache.spark.sql.types.DoubleType)
-    val TxSnapshot(live, schemas) = txLog(name).state()
+    val TxSnapshot(live, schemas, _, _) = txLog(name).state()
     val pruned = prunePartitionValues(
       keyCandidates(live, column, value.toString, from, to), from, to, "date")
     if (pruned.isEmpty) return emptyOf(schemas, DoubleType)
@@ -1249,7 +1365,7 @@ class TimeseriesStore(
       rewrite: DataFrame => DataFrame): Long = {
     if (!exists(name)) return 0L
     val log = txLog(name)
-    val TxSnapshot(live, schemas) = log.state()
+    val TxSnapshot(live, schemas, _, bloom) = log.state()
     if (live.isEmpty) return 0L
     // driver-size by construction: one row per LIVE FILE with a match,
     // bounded by the snapshot size (same class as snapshot() itself)
@@ -1267,7 +1383,7 @@ class TimeseriesStore(
       val out = rewrite(vsrc)
       val adds =
         if (out.isEmpty) Nil
-        else stageInstall(log, name, out).map(_.copy(sv = svTag(schemas)))
+        else stageInstall(log, name, out, bloom).map(_.copy(sv = svTag(schemas)))
       log.commit(adds, victims.map(a => TxRemove(a.path)))
       matched
     } finally vsrc.unpersist(blocking = false)
@@ -1304,10 +1420,10 @@ class TimeseriesStore(
       else Set.empty
     val normalized = TimeseriesStore.normalize(source, partitionStyle, declaredExtras)
     val log = txLog(name)
-    // the MERGE source is new data like any save batch — same CHECKs
-    enforceChecks(log, name, normalized)
-    val TxSnapshot(live, schemas) =
+    val TxSnapshot(live, schemas, checks, bloom) =
       if (exists(name)) log.state() else TxSnapshot(Seq.empty, Seq.empty)
+    // the MERGE source is new data like any save batch — same CHECKs
+    enforceChecks(checks, name, normalized)
     if (live.isEmpty) {
       // empty target: MERGE degenerates to plain insert
       val n = normalized.count()
@@ -1339,7 +1455,7 @@ class TimeseriesStore(
         val conformedSrc = target.map(conformForWrite(normalized, _)).getOrElse(normalized)
         val keepCols = (dataCols(schemas).map(col) :+ col("partition")).toIndexedSeq
         val adds = stageInstall(log, name,
-          keep.select(keepCols: _*).unionByName(conformedSrc.select(keepCols: _*)))
+          keep.select(keepCols: _*).unionByName(conformedSrc.select(keepCols: _*)), bloom)
           .map(_.copy(sv = svTag(schemas)))
         log.commit(adds, victims.map(a => TxRemove(a.path)))
         (updated, inserted)
@@ -1365,7 +1481,7 @@ class TimeseriesStore(
     if (!exists(name)) return emptyFrame(valueType)
     val log = txLog(name)
     val before = log.snapshot(Some(fromVersion)).map(_.path).toSet
-    val TxSnapshot(after, schemas) = log.state(toVersion)
+    val TxSnapshot(after, schemas, _, _) = log.state(toVersion)
     val fresh = after.filterNot(a => before(a.path))
     if (fresh.isEmpty) return emptyFrame(valueType)
     openAdds(name, fresh, schemas, partitionStyle = "date")
@@ -1471,7 +1587,7 @@ class TimeseriesStore(
     * A feature with no live files copies nothing.
     */
   def copy(name: String, toName: String, dest: TimeseriesStore, partitionStyle: String = "date"): Unit = {
-    val TxSnapshot(adds, schemas) = txLog(name).state()
+    val TxSnapshot(adds, schemas, _, _) = txLog(name).state()
     if (adds.isEmpty) return
     val df = openAdds(name, adds, schemas, partitionStyle)
     dest.write(toName, df.select(
@@ -1507,7 +1623,7 @@ class TimeseriesStore(
     val log = txLog(name)
     val v = asOfVersion.getOrElse(log.latestVersion())
     require(v >= 0, s"feature '$name' has no committed version to export")
-    val TxSnapshot(adds, schemas) = log.state(Some(v))
+    val TxSnapshot(adds, schemas, _, _) = log.state(Some(v))
     val f = fs(url)
     val dst = new Path(dstDir)
     val dstFs = dst.getFileSystem(hadoopConf)
@@ -1610,7 +1726,7 @@ class TimeseriesStore(
     if (v == prevV) return v
     require(v > prevV, s"table '$name' is at version $v but $dstDir was " +
       s"exported at $prevV — a newer tree cannot sync backwards")
-    val TxSnapshot(adds, schemas) = log.state(Some(v))
+    val TxSnapshot(adds, schemas, _, _) = log.state(Some(v))
     // schema drift since the export: ADD-COLUMN-only evolution syncs —
     // Iceberg's own evolution semantics make the mixed-epoch tree
     // readable (old files lack the new column; readers null-fill via
@@ -1707,7 +1823,7 @@ class TimeseriesStore(
     if (v == prevV) return v
     require(v > prevV, s"table '$name' is at version $v but $dstDir was " +
       s"exported at $prevV — a newer tree cannot sync backwards")
-    val TxSnapshot(adds, schemas) = log.state(Some(v))
+    val TxSnapshot(adds, schemas, _, _) = log.state(Some(v))
     require(schemas.lastOption == prevSchema,
       s"schema of '$name' changed since the export; re-export (sync " +
         "cannot mix physical schema epochs in a plain-parquet tree)")
@@ -1783,7 +1899,7 @@ class TimeseriesStore(
       s"$srcDir is not a hive-partitioned export (no partition= directories)")
     val log = txLog(name)
     val adds = stageInstall(log, name,
-      df.withColumn("partition", col("partition").cast(StringType)))
+      df.withColumn("partition", col("partition").cast(StringType)), log.state().bloom)
       .map(_.copy(sv = Some(0L)))
     require(adds.nonEmpty, s"no rows found under $srcDir")
     log.commit(adds, schema = schemaJson.orElse(Some(structJson(

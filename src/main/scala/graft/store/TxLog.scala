@@ -55,9 +55,15 @@ final case class TxAdd(
     // which fall back to the listing read path only
     fsize: Option[Long] = None)
 
-/** A table version as one replay yields it: the live files and the
-  * ordered schema declarations their `sv` epochs index. */
-final case class TxSnapshot(adds: Seq[TxAdd], schemas: Seq[String])
+/** A table version as one replay yields it: the live files, the
+  * ordered schema declarations their `sv` epochs index, the active
+  * CHECK constraints (declaration-ordered) and the bloom-index
+  * declaration in effect, if any. */
+final case class TxSnapshot(
+    adds: Seq[TxAdd],
+    schemas: Seq[String],
+    checks: Seq[(String, String)] = Nil,
+    bloom: Option[(String, Int, Int)] = None)
 
 /** One file logically deleted from the table (bytes stay on disk until
   * `vacuum`, so readers holding an older snapshot keep working).
@@ -237,13 +243,16 @@ class TxLog(
     */
   def snapshot(asOf: Option[Long] = None): Seq[TxAdd] = replay(asOf)._1
 
-  /** Live files AND schema declarations at `asOf` (default: latest)
-    * from ONE replay — one log listing where [[snapshot]] followed by
-    * [[schemaHistory]] pays two. What every read that opens files
-    * needs. */
+  /** Live files, schema declarations, checks and bloom config at
+    * `asOf` (default: latest) from ONE replay — one log listing where
+    * [[snapshot]], [[schemaHistory]] and [[bloomConfig]] pay one each.
+    * The checks are the active CHECK constraints in declaration order:
+    * (name, boolean SQL expr) pairs writers enforce on every incoming
+    * batch. What every read that opens files, and every write that
+    * validates and stages a batch, needs. */
   def state(asOf: Option[Long] = None): TxSnapshot = {
     val r = replay(asOf)
-    TxSnapshot(r._1, r._4)
+    TxSnapshot(r._1, r._4, r._5, r._6.lastOption.filter(_._2 > 0))
   }
 
   /** Ordered table-schema declarations visible at `asOf` (default:
@@ -252,16 +261,10 @@ class TxLog(
     * (pre-evolution logs). */
   def schemaHistory(asOf: Option[Long] = None): Seq[String] = replay(asOf)._4
 
-  /** Active CHECK constraints at `asOf` (default: latest), in
-    * declaration order — (name, boolean SQL expr) pairs writers must
-    * enforce on every incoming batch. */
-  def checks(asOf: Option[Long] = None): Seq[(String, String)] = replay(asOf)._5
-
   /** Active bloom-index declaration at `asOf` (default: latest), if
     * any: (column, bits, hashes). Latest declaration wins; a bits = 0
     * declaration reads back as None (index dropped). */
-  def bloomConfig(asOf: Option[Long] = None): Option[(String, Int, Int)] =
-    replay(asOf)._6.lastOption.filter(_._2 > 0)
+  def bloomConfig(asOf: Option[Long] = None): Option[(String, Int, Int)] = state(asOf).bloom
 
   /** Has a commit carrying this application transaction id ever landed?
     * The restart-idempotence primitive for streaming writers.

@@ -19,4 +19,26 @@ trait SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Runs `body` with session conf `key` set to `value`, then restores
+    * the key's previous value, or unsets it if it had none. */
+  def withConf[T](setting: (String, Any))(body: => T): T = {
+    val (key, value) = setting
+    val prev = spark.conf.getAll.get(key)
+    spark.conf.set(key, value.toString)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
+  /** Runs `body` with `fs`'s driver load bound at `bytes` (-1 pins
+    * loads to the Spark path), then restores the bound. */
+  def withDriverLoadBound[T](fs: graft.api.FeatureStore, bytes: Long)(body: => T): T = {
+    val prev = fs.driverLoadBytes
+    fs.driverLoadBytes = bytes
+    try body
+    finally fs.driverLoadBytes = prev
+  }
 }

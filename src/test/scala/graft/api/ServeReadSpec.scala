@@ -12,7 +12,8 @@ import graft.store.{TxAdd, TxLog}
 
 /** Serve-path reads: what `last()` and short `loadDataFrame` windows
   * cost in Spark jobs, that the one-pass endpoint lookup returns the
-  * dedup winner under every reference backend name, and how feature
+  * dedup winner under every reference backend name, that a window
+  * served on the driver equals the Spark path's frame, and how feature
   * directories without a committed log open: empty when nothing was
   * committed, refused (naming the migration) when a pre-log writer left
   * data there.
@@ -60,12 +61,16 @@ class ServeReadSpec extends SparkSpec with JobCounting {
       fs.createFeature(n)
       fs.saveDataFrame(daily("2024-01-01", 10), Some(n))
     }
-    val (rows, jobs) = jobsOf(
-      fs.loadDataFrame(names, Some(ts("2024-01-04")), Some(ts("2024-01-05"))).collect())
+    def load() = fs.loadDataFrame(names, Some(ts("2024-01-04")), Some(ts("2024-01-05"))).collect()
+    // the Spark path, pinned by turning the driver load path off
+    val (rows, jobs) = withDriverLoadBound(fs, -1)(jobsOf(load()))
     assert(rows.length == 2)
     // a schema-inference probe reads footers only: it shows up as a
     // job with no input records ahead of the first real scan
     assert(jobs.nonEmpty && jobs.head.records > 0, s"jobs: $jobs")
+    // by default the window is served on the driver: no job, same rows
+    val (onDriver, driverJobs) = jobsOf(load())
+    assert(onDriver.toSeq == rows.toSeq && driverJobs.isEmpty, s"jobs: $driverJobs")
   }
 
   /** Raw rows of one feature: the last day carries a created_time
@@ -399,23 +404,23 @@ class ServeReadSpec extends SparkSpec with JobCounting {
     val names = Seq("num", "ser", "yr") ++ looseNames
     val smallest = names.flatMap(liveAdds(warehouse, _)).flatMap(_.fsize).min
     val key = "spark.sql.files.maxPartitionBytes"
-    try {
-      // below every file: every candidate goes to the Spark job
-      spark.conf.set(key, smallest - 1)
+    // below every file: every candidate goes to the Spark job
+    withConf(key -> (smallest - 1)) {
       val reads = assertEndpoints(fs, names, "all via Spark")
       assert(reads.forall { case (_, r) => r.driverTiers.isEmpty }, reads)
       assert(reads(("num", None, true)).sparkFiles.nonEmpty)
       val (got, jobs) = jobsOf(fs.last("s/num"))
       assert(got.exists(_.asInstanceOf[Double].isNaN))
       assert(jobs.size == 1 && jobs.head.shuffleBytes == 0L, s"jobs: $jobs")
-      // room for the first tier only: the masked tail is read on the
-      // driver, the rest of the search goes to the job
-      val first = liveAdds(warehouse, "masked").flatMap(a => a.tmax.map(_ -> a.fsize.get))
-        .groupBy(_._1).toSeq.maxBy(_._1)._2.map(_._2).sum
-      spark.conf.set(key, first)
+    }
+    // room for the first tier only: the masked tail is read on the
+    // driver, the rest of the search goes to the job
+    val first = liveAdds(warehouse, "masked").flatMap(a => a.tmax.map(_ -> a.fsize.get))
+      .groupBy(_._1).toSeq.maxBy(_._1)._2.map(_._2).sum
+    withConf(key -> first) {
       val mixed = assertEndpoints(fs, Seq("masked"), "driver then Spark")(("masked", Some("0s"), true))
       assert(mixed.driverTiers.size == 1 && mixed.sparkFiles.nonEmpty, mixed)
-    } finally spark.conf.unset(key)
+    }
   }
 
   test("the search opens only its candidate tier, through the namespace's storage options") {
@@ -440,5 +445,112 @@ class ServeReadSpec extends SparkSpec with JobCounting {
     val (masked, opened) = CountingFs.opensDuring(root)(fs.last(Seq("s/m"), Some("0s"))("s/m"))
     assert(masked.contains(6.0))
     assert(partitionsOpened(opened) == (7 to 10).map(d => f"partition=2024-01-$d%02d").toSet, opened)
+  }
+
+  /** A load's schema and rows, each value as a string (NaN and null
+    * compare by name). */
+  private def frame(df: DataFrame): (org.apache.spark.sql.types.StructType, Seq[Seq[String]]) =
+    (df.schema, df.collect().map(_.toSeq.map(String.valueOf)).toSeq)
+
+  /** `load` on the default path equals `load` forced onto the Spark
+    * path, and the default path starts no Spark job unless `viaSpark`. */
+  private def assertLoadsAgree(fs: FeatureStore, clue: String, viaSpark: Boolean = false)(
+      load: => DataFrame): Unit = {
+    val want = withDriverLoadBound(fs, -1)(frame(load))
+    val (got, jobs) = jobsOf(frame(load))
+    assert(got == want, clue)
+    assert(jobs.nonEmpty == viaSpark, s"$clue jobs: $jobs")
+  }
+
+  test("a loadDataFrame served on the driver equals the Spark path's frame") {
+    val (fs, warehouse) = freshStore()
+    saveTricky(fs)
+    saveLoose(fs, warehouse)
+    // a rewrite to null: the fill carries the day before over it (the
+    // first save declares a nullable value column)
+    fs.createFeature("s/holes")
+    fs.saveDataFrame((0 until 5).map(i => (ts(f"2024-01-0${i + 1}"), Option(i.toDouble)))
+      .toDF("time", "value"), Some("s/holes"))
+    fs.saveDataFrame(Seq((ts("2024-01-03"), ts("2030-01-01"), Option.empty[Double]))
+      .toDF("time", "created_time", "value"), Some("s/holes"))
+    // declared time columns that are not nullable
+    for (i <- 0 until 3) {
+      fs.createFeature(s"s/strict$i")
+      fs.saveDataFrame(spark.range(3).select(timestamp_seconds(col("id") * 86400 + 1704110400L + i).as("time"),
+        col("id").cast("double").as("value")), Some(s"s/strict$i"))
+    }
+    val ranges = Seq(
+      "full" -> (None, None),
+      "partial" -> (Some(ts("2024-01-03")), Some(ts("2024-01-08T12:00:00"))),
+      "empty" -> (Some(ts("2030-01-01")), Some(ts("2030-02-01"))),
+      "instant" -> (Some(ts("2024-01-05T12:00:00")), Some(ts("2024-01-05T12:00:00"))))
+    val sets = Seq(
+      Seq("num", "ser", "yr"),              // mixed value types: the join chain
+      Seq("num", "yr", "tied", "masked"),   // one value type: the pivot
+      Seq("evo", "allmasked"),              // an int -> double epoch, an added column
+      Seq("empty", "erased", "num"),        // never saved, every row deleted
+      Seq("holes"),                         // alone, a null filled
+      Seq("strict0", "num"),                // time nullable: any input's,
+      Seq("strict0", "strict1"),            // the join chain's outer joins,
+      Seq("strict0", "strict1", "strict2")) // not the pivot's of non-null inputs
+    for (set <- sets; (rn, (from, to)) <- ranges; tt <- travels)
+      assertLoadsAgree(fs, s"$set $rn tt=$tt")(
+        fs.loadDataFrame(set.map("s/" + _), from, to, timeTravel = tt))
+    for (v <- Seq(0L, 2L))
+      assertLoadsAgree(fs, s"asOfVersion $v")(
+        fs.loadDataFrame(Seq("s/tied", "s/evo", "s/num"), asOfVersion = Some(v)))
+    val holes = fs.loadDataFrame(Seq("s/holes")).collect().map(_.getDouble(1)).toSeq
+    assert(holes == Seq(0.0, 1.0, 1.0, 3.0, 4.0), holes)
+    // a file whose size the log does not record: the Spark path
+    assertLoadsAgree(fs, "bare", viaSpark = true)(fs.loadDataFrame(Seq("s/bare", "s/num")))
+    // duplicate names fail alike on both paths
+    def dup() = intercept[IllegalArgumentException](fs.loadDataFrame(Seq("s/num", "s/num"))).getMessage
+    assert(dup() == withDriverLoadBound(fs, -1)(dup()))
+    // the bound is on what the selections decode to: one byte short of
+    // the three features' total takes the Spark path, the total the driver
+    val ns = fs.catalog.getNamespace("s").get
+    def decoded(names: Seq[String]) = names.map(fs.store(ns).select(_, None, None).decodedBytes.get).sum
+    val set = Seq("num", "ser", "yr")
+    val total = decoded(set)
+    for ((bound, viaSpark) <- Seq(total - 1 -> true, total -> false))
+      withDriverLoadBound(fs, bound)(
+        assertLoadsAgree(fs, s"bound $bound", viaSpark)(fs.loadDataFrame(set.map("s/" + _))))
+    // a steady series compresses well: files far under the bound that
+    // decode past it take the Spark path
+    fs.createFeature("s/steady")
+    fs.saveDataFrame(spark.range(5000).select(timestamp_seconds(col("id") * 60 + 1704067200L).as("time"),
+      lit(1.5).as("value")), Some("s/steady"))
+    val fileBytes = liveAdds(warehouse, "steady").flatMap(_.fsize).sum
+    // 5,000 rows of (time, created_time, value), 8 + 3 x 8 bytes each
+    assert(2 * fileBytes < 5000L * 32 && decoded(Seq("steady")) == 5000L * 32, fileBytes)
+    withDriverLoadBound(fs, 2 * fileBytes)(
+      assertLoadsAgree(fs, "steady", viaSpark = true)(fs.loadDataFrame(Seq("s/steady"))))
+    // and by default a load of all of them is small enough for the driver
+    assertLoadsAgree(fs, "default bound")(fs.loadDataFrame((set :+ "steady").map("s/" + _)))
+  }
+
+  test("a driver-served window opens only its selected files, through the namespace's storage options") {
+    val dir = tmpDir("graft-serve-window-countfs")
+    val fs = new FeatureStore(spark, s"$dir/catalog.json")
+    // the countfs scheme resolves only through the namespace's options
+    fs.createNamespace("s", CountingFs.url(s"$dir/warehouse"), storageOptions = CountingFs.options())
+    val names = (0 until 4).map(i => s"s/w$i")
+    names.foreach { n =>
+      fs.createFeature(n)
+      fs.saveDataFrame(daily("2024-01-01", 10), Some(n))
+    }
+    val root = s"$dir/warehouse/feature"
+    def window() = fs.loadDataFrame(names, Some(ts("2024-01-04")), Some(ts("2024-01-05"))).collect()
+    val (((rows, jobs), opens), lists) =
+      CountingFs.listsDuring(root)(CountingFs.opensDuring(root)(jobsOf(window())))
+    assert(rows.map(_.getDouble(1)).toSeq == Seq(3.0, 4.0) && jobs.isEmpty, s"jobs: $jobs")
+    // the log selects each feature's two days in range: those files
+    // alone are opened
+    val opened = opens.keySet.filter(_.endsWith(".parquet"))
+      .map(_.stripPrefix(s"$root/").split('/').take(2).mkString("/"))
+    assert(opened == (0 until 4).flatMap(i => Seq(4, 5).map(d => f"w$i/partition=2024-01-$d%02d")).toSet,
+      opens)
+    // one replay per feature: each log directory listed once, nothing else
+    assert(lists == (0 until 4).map(i => s"$root/w$i/_txlog" -> 1).toMap, lists)
   }
 }

@@ -6,7 +6,8 @@ import graft.SparkSpec
 
 /** Wide-load scale check: a 50-feature `loadDataFrame` must align with
   * the single-shuffle pivot plan (not 49 chained full-outer joins) and
-  * return correct per-feature values.
+  * return correct per-feature values; the driver path, which serves
+  * the same small load by default, returns the same frame.
   */
 class WideLoadSpec extends SparkSpec {
   import spark.implicits._
@@ -30,12 +31,20 @@ class WideLoadSpec extends SparkSpec {
     names.foreach(n => fs.createFeature(n))
     fs.saveDataFrame(spark.createDataFrame(
       spark.sparkContext.parallelize(wide), schema))
-    val out = fs.loadDataFrame(names, Some(ts("2021-01-01")), Some(ts("2021-01-06")))
-    // plan shape: no full-outer join chain
-    assert(!out.queryExecution.optimizedPlan.toString.contains("FullOuter"))
-    val rows = out.orderBy("time").collect()
-    assert(rows.length == 6)
-    assert(rows(2).getDouble(1) == 100.0)   // day 2, f0
-    assert(rows(5).getDouble(50) == 299.0)  // day 5, f49
+    def load() = fs.loadDataFrame(names, Some(ts("2021-01-01")), Some(ts("2021-01-06")))
+    // the Spark path, pinned by turning the driver load path off
+    val viaSpark = withDriverLoadBound(fs, -1) {
+      val out = load()
+      // plan shape: no full-outer join chain
+      assert(!out.queryExecution.optimizedPlan.toString.contains("FullOuter"))
+      val rows = out.orderBy("time").collect()
+      assert(rows.length == 6)
+      assert(rows(2).getDouble(1) == 100.0)   // day 2, f0
+      assert(rows(5).getDouble(50) == 299.0)  // day 5, f49
+      (out.schema, rows.toSeq)
+    }
+    // by default this small load is served on the driver: the same frame
+    val onDriver = load()
+    assert((onDriver.schema, onDriver.collect().toSeq) == viaSpark)
   }
 }

@@ -73,9 +73,7 @@ class ScaleSpec extends SparkSpec {
     // disable auto-broadcast so the sort-merge path is exercised (at
     // real scale neither side broadcasts); bucketing must then align
     // both sides with no shuffle exchange
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> -1) {
       val joined = spark.table("bkt_a").join(spark.table("bkt_b"), "k")
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange hashpartitioning"),
@@ -83,7 +81,6 @@ class ScaleSpec extends SparkSpec {
       assert(plan.contains("SortMergeJoin"), s"expected bucket-local SMJ:\n$plan")
       assert(joined.count() == 1000)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       spark.sql("DROP TABLE IF EXISTS bkt_a")
       spark.sql("DROP TABLE IF EXISTS bkt_b")
     }

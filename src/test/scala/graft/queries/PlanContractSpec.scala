@@ -362,9 +362,7 @@ class PlanContractSpec extends SparkSpec {
       spark.range(100).select((col("id") % 40).as("k"), (col("id") * 2).as("w"))
         .write.option("path", s"$tmp/r").bucketBy(4, "k").sortBy("k")
         .saveAsTable("buckspec_r")
-      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> -1) {
         val p = spark.table("buckspec_l")
           .join(spark.table("buckspec_r"), Seq("k"))
           .queryExecution.executedPlan.toString
@@ -372,7 +370,7 @@ class PlanContractSpec extends SparkSpec {
           s"expected a co-located shuffle-family join:\n$p")
         assert(!p.contains("Exchange"), s"bucketed join shuffles:\n$p")
         assert(count(p, "Bucketed: true") === 2, s"scan not bucket-aware:\n$p")
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      }
     } finally {
       spark.sql("DROP TABLE IF EXISTS buckspec_l")
       spark.sql("DROP TABLE IF EXISTS buckspec_r")

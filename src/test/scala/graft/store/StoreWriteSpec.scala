@@ -113,4 +113,21 @@ class StoreWriteSpec extends SparkSpec with JobCounting {
     assert(viaFacade.size == viaStore.size, s"facade: $viaFacade, store: $viaStore")
     assert(fs.catalog.getFeature("w", "f").get.valueType.contains("\"double\""))
   }
+
+  test("a facade save replays the feature's log once: one _txlog listing") {
+    val dir = tmpDir("graft-save-lists")
+    val fs = new FeatureStore(spark, s"$dir/catalog.json")
+    fs.createNamespace("w", CountingFs.url(s"$dir/warehouse"), storageOptions = CountingFs.options())
+    fs.createFeature("w/f")
+    fs.addFeatureCheck("w/f", "positive", "value > 0")
+    fs.saveDataFrame(days("2024-01-01", 10, 1.0), Some("w/f"))
+    val log = s"$dir/warehouse/feature/f/_txlog"
+    // validation, the check, the staging epoch and the bloom config
+    // all come from one replay
+    val (_, lists) = CountingFs.listsDuring(log)(fs.saveDataFrame(days("2024-01-05", 10, 100.0), Some("w/f")))
+    assert(lists == Map(log -> 1), lists)
+    // and that replay carries the check
+    intercept[IllegalArgumentException](fs.saveDataFrame(days("2024-02-01", 2, -5.0), Some("w/f")))
+    assert(fs.loadDataFrame(Seq("w/f")).count() == 14L)
+  }
 }
