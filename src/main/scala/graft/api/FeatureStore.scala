@@ -3,8 +3,11 @@ package graft.api
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
+import org.apache.spark.sql.graftbridge.LocalRows
+import org.apache.spark.sql.types.{DataType, DoubleType, StringType, StructType}
 
 import graft.catalog.{Catalog, Feature, Namespace, TransformSpec}
 import graft.ops.TimeseriesOps
@@ -737,6 +740,13 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     (if (f.serialized) deduped.withColumn("value", get_json_object(col("value"), "$.v"))
      else deduped).select("time", "value")
 
+  /** [[unwrap]] over rows the driver holds, compiled once per shape by
+    * the store that read them. */
+  private def unwrapRows(st: TimeseriesStore, deduped: LocalRows, f: Feature): LocalRows = {
+    val plan = st.localPlan(deduped.schema, ("unwrap", f.serialized))(unwrap(_, f))
+    LocalRows(plan.schema, plan(deduped.rows.iterator).toVector)
+  }
+
   /** Flagship read (core.py:246-276): wide frame, one column per feature
     * named `namespace/name`, outer-joined on time and forward-filled;
     * optional resample onto a regular [from, to] grid step `freq`.
@@ -749,10 +759,11 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     * files the logs select for the range — one replay per feature —
     * decode, by the log's row counts, to at most
     * [[FeatureStore.DriverLoadBytes]] (1 MB) together. The driver
-    * reads those files, applies the travel, the dedup and the unwrap
-    * ([[graft.store.TimeseriesStore.latestOnDriver]]), and aligns the
-    * series with [[TimeseriesOps.alignLocal]]; the result is a local
-    * frame equal, row for row and in schema, to the Spark path's. A
+    * reads those files, applies the travel and the dedup
+    * ([[graft.store.TimeseriesStore.latestOnDriver]]) and the unwrap
+    * as rows, and aligns the series with [[TimeseriesOps.alignLocal]]
+    * into the one frame it builds: a local frame equal, row for row and
+    * in schema, to the Spark path's. A
     * selection over the bound, or one with a file the log records no
     * row count or size for, takes the Spark path, which opens the same
     * selections; so do resampled loads, transforms and
@@ -784,9 +795,11 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     val decoded = stored.values.map(_._3.decodedBytes)
     if (stored.nonEmpty && driverLoadBytes > 0 && decoded.forall(_.isDefined) &&
         decoded.flatten.sum <= driverLoadBytes)
-      return TimeseriesOps.alignLocal(features.map { full =>
+      return TimeseriesOps.alignLocal(spark, features.map { full =>
         val (f, st, sel) = stored(full)
-        unwrap(st.latestOnDriver(sel, timeTravel, pinnedType(f)), f).withColumnRenamed("value", full)
+        val series = unwrapRows(st, st.latestOnDriver(sel, timeTravel, pinnedType(f)), f)
+        series.copy(schema = StructType(series.schema.map(c =>
+          if (c.name == "value") c.copy(name = full) else c)))
       })
     val series = features.map { full =>
       val s = loadSeries(full, fromDate, toDate, timeTravel, clipFrom = freq.isEmpty, Nil,
@@ -1096,7 +1109,8 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
   /** Endpoint point-lookup on a stored feature: the store's log-driven
     * search ([[graft.store.TimeseriesStore.endpoint]]) applies the
     * travel filter and picks [[TimeseriesOps.endpointRow]]'s winner,
-    * then the serialized unwrap runs on that one row. Returns the
+    * then the serialized unwrap runs on that one row, and the row is
+    * converted as `collect()` would, with no Dataset built. Returns the
     * (time, value) row and the files the search read (so specs can pin
     * the read amplification).
     *
@@ -1112,9 +1126,11 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
       f: Feature,
       timeTravel: Option[String],
       fromTail: Boolean): (Option[org.apache.spark.sql.Row], graft.store.EndpointReads) = {
-    val (winner, reads) = store(nsObj).endpoint(f.name, fromTail, timeTravel,
-      valueType = pinnedType(f))
-    (unwrap(winner, f).collect().headOption, reads)
+    val st = store(nsObj)
+    val (winner, reads) = st.endpoint(f.name, fromTail, timeTravel, valueType = pinnedType(f))
+    val row = unwrapRows(st, winner, f)
+    val toRow = CatalystTypeConverters.createToScalaConverter(row.schema)
+    (row.rows.headOption.map(toRow(_).asInstanceOf[org.apache.spark.sql.Row]), reads)
   }
 
   /** Last SURVIVING event time strictly before `from` — the fill-seed
@@ -1125,14 +1141,18 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     * or past `from` are never candidates, and a file spanning `from` is
     * bounded by it), and let the caller lower-bound the real scan at it.
     * Survival means post-travel: a timeTravel-filtered row can never be
-    * returned as the seed.
+    * returned as the seed. The search's winner row gives the time
+    * directly: no Dataset is built.
     */
   private[graft] def lastTimeBefore(
       nsObj: Namespace,
       f: Feature,
       from: Timestamp,
-      timeTravel: Option[String]): Option[Timestamp] =
-    store(nsObj).endpoint(f.name, fromTail = true, timeTravel, before = Some(from),
-      valueType = pinnedType(f))
-      ._1.collect().headOption.map(_.getAs[Timestamp]("time"))
+      timeTravel: Option[String]): Option[Timestamp] = {
+    val winner = store(nsObj).endpoint(f.name, fromTail = true, timeTravel, before = Some(from),
+      valueType = pinnedType(f))._1
+    val t = winner.schema.fieldIndex("time")
+    // the search keeps only rows before `from`: the winner has a time
+    winner.rows.headOption.map(r => DateTimeUtils.toJavaTimestamp(r.getLong(t)))
+  }
 }

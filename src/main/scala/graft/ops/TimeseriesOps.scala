@@ -2,10 +2,12 @@ package graft.ops
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.graftbridge.LocalRows
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
 /** The engine's dataflow kernel: every nontrivial semantic of the reference
@@ -536,9 +538,9 @@ object TimeseriesOps {
     * must be distinct across the inputs. It guards BOTH Spark paths —
     * the join chain would otherwise fail much later with a cryptic
     * AMBIGUOUS_REFERENCE deep inside the fill. */
-  private def requireDistinctNames(dfs: Seq[DataFrame], timeCol: String): Unit = {
-    require(dfs.nonEmpty, "alignJoin needs at least one input")
-    val allNames = dfs.flatMap(_.columns.filterNot(_ == timeCol))
+  private def requireDistinctNames(schemas: Seq[StructType], timeCol: String): Unit = {
+    require(schemas.nonEmpty, "alignJoin needs at least one input")
+    val allNames = schemas.flatMap(_.fieldNames.filterNot(_ == timeCol))
     require(allNames.distinct.size == allNames.size,
       s"duplicate series names across alignJoin inputs: $allNames")
   }
@@ -552,16 +554,15 @@ object TimeseriesOps {
     * expected deduplicated per time (every loadDataFrame series is);
     * the pivot collapses any residual duplicate deterministically via
     * max, where the join chain would instead multiply rows. */
-  private def pivotable(dfs: Seq[DataFrame], timeCol: String): Boolean = {
-    val valueTypes = dfs.map(df =>
-      df.schema.fields.filterNot(_.name == timeCol).map(_.dataType).toSeq)
-    dfs.length > 2 && dfs.forall(_.columns.length == 2) &&
+  private def pivotable(schemas: Seq[StructType], timeCol: String): Boolean = {
+    val valueTypes = schemas.map(_.fields.filterNot(_.name == timeCol).map(_.dataType).toSeq)
+    schemas.length > 2 && schemas.forall(_.length == 2) &&
       valueTypes.distinct.size == 1 && valueTypes.head.forall(isOrderable)
   }
 
   def alignJoin(dfs: Seq[DataFrame], timeCol: String = TimeCol): DataFrame = {
-    requireDistinctNames(dfs, timeCol)
-    val pivotable = this.pivotable(dfs, timeCol)
+    requireDistinctNames(dfs.map(_.schema), timeCol)
+    val pivotable = this.pivotable(dfs.map(_.schema), timeCol)
     val joined =
       if (pivotable) {
         val names = dfs.map(_.columns.filterNot(_ == timeCol).head)
@@ -590,46 +591,65 @@ object TimeseriesOps {
       .orderBy(col(timeCol))
   }
 
-  /** [[alignJoin]]'s driver twin, for small LOCAL inputs (frames whose
-    * rows the driver holds, like
-    * [[graft.store.TimeseriesStore.latestOnDriver]]'s): the same wide
-    * frame, row for row and schema for schema, built without a Spark
-    * job. Inputs must be unique per time, as every deduped series is.
+  /** [[alignJoin]]'s driver twin, for small inputs the driver holds as
+    * rows (like [[graft.store.TimeseriesStore.latestOnDriver]]'s): the
+    * same wide frame, row for row and schema for schema, built as one
+    * LocalRelation without a Spark job or any other plan. Each input's
+    * rows must be sorted by time, a null time first, and unique per
+    * time, as every deduped series is.
     *
-    * The fill is alignJoin's, evaluated by a walk: over the sorted
+    * The fill is alignJoin's, evaluated by a merge: over the sorted
     * distinct times of all inputs (a null time first, as the sort puts
-    * it), each value column carries its last non-null value — a null
-    * at a time (a deduped null) does not clear the carry, exactly like
-    * the window's `last(ignoreNulls)`. Columns keep each input's own
-    * type, in input order, all nullable; the time column is nullable
-    * as alignJoin's is (an input's own, the pivot's union of them, or
-    * always after the join chain's outer joins). Duplicate names fail
-    * with alignJoin's message.
+    * it), each input's cursor advances past its row at that time, and
+    * each value column carries its last non-null value — a null at a
+    * time (a deduped null) does not clear the carry, exactly like the
+    * window's `last(ignoreNulls)`. Times are compared as primitive
+    * micros. Columns keep each input's own type, in input order, all
+    * nullable; the time column is nullable as alignJoin's is (an
+    * input's own, the pivot's union of them, or always after the join
+    * chain's outer joins). Duplicate names fail with alignJoin's
+    * message.
     */
-  def alignLocal(dfs: Seq[DataFrame], timeCol: String = TimeCol): DataFrame = {
-    requireDistinctNames(dfs, timeCol)
-    val timeNullable = dfs.exists(_.schema(timeCol).nullable) ||
-      (dfs.size > 1 && !pivotable(dfs, timeCol))
+  def alignLocal(spark: SparkSession, inputs: Seq[LocalRows], timeCol: String = TimeCol): DataFrame = {
+    val schemas = inputs.map(_.schema)
+    requireDistinctNames(schemas, timeCol)
+    val timeNullable = schemas.exists(_(timeCol).nullable) ||
+      (schemas.size > 1 && !pivotable(schemas, timeCol))
     val schema = StructType(
-      StructField(timeCol, dfs.head.schema(timeCol).dataType, timeNullable) +:
-        dfs.flatMap(_.schema.fields.filterNot(_.name == timeCol).map(_.copy(nullable = true))))
-    // per input: its rows by time, and (ordinal, type) of its value columns
-    val inputs = dfs.map { df =>
-      val t = df.schema.fieldIndex(timeCol)
-      val rows = df.queryExecution.executedPlan.executeCollect()
-      (rows.map(r => (if (r.isNullAt(t)) None else Some(r.getLong(t))) -> r).toMap,
-        df.schema.fields.indices.filter(_ != t).map(i => (i, df.schema(i).dataType)))
-    }
+      StructField(timeCol, schemas.head(timeCol).dataType, timeNullable) +:
+        schemas.flatMap(_.fields.filterNot(_.name == timeCol).map(_.copy(nullable = true))))
+    // per input: its time ordinal, and (ordinal, type) of its value columns
+    val timeAt = schemas.map(_.fieldIndex(timeCol)).toArray
+    val valueAt = schemas.map(s =>
+      s.fields.indices.filter(_ != s.fieldIndex(timeCol)).map(i => (i, s(i).dataType)))
+    val times = inputs.indices.flatMap { k =>
+      inputs(k).rows.iterator.filterNot(_.isNullAt(timeAt(k))).map(_.getLong(timeAt(k)))
+    }.toArray
+    java.util.Arrays.sort(times)
+    val nullTime = inputs.indices.exists(k => inputs(k).rows.exists(_.isNullAt(timeAt(k))))
+    val keys = (if (nullTime) Seq(None) else Nil) ++
+      times.indices.collect { case i if i == 0 || times(i - 1) != times(i) => Some(times(i)) }
+    val cursor = new Array[Int](inputs.size)
     val carry = new Array[Any](schema.length - 1)
-    val rows = inputs.flatMap(_._1.keys).distinct.sorted.map { time =>
+    // the output row at `time` (None: the null time), advancing every
+    // input whose next row is at it
+    def step(time: Option[Long]): InternalRow = {
+      val t = time.getOrElse(0L)
       var at = 0
-      for ((byTime, cols) <- inputs; (i, dt) <- cols) {
-        byTime.get(time).filterNot(_.isNullAt(i)).foreach(r => carry(at) = r.get(i, dt))
-        at += 1
+      for (k <- inputs.indices) {
+        val rows = inputs(k).rows
+        val r = if (cursor(k) < rows.length) rows(cursor(k)) else null
+        val hit = r != null &&
+          (if (r.isNullAt(timeAt(k))) time.isEmpty else time.isDefined && r.getLong(timeAt(k)) == t)
+        if (hit) cursor(k) += 1
+        for ((i, dt) <- valueAt(k)) {
+          if (hit && !r.isNullAt(i)) carry(at) = r.get(i, dt)
+          at += 1
+        }
       }
       new GenericInternalRow(time.getOrElse(null) +: carry)
     }
-    org.apache.spark.sql.graftbridge.MetaFileIndex.localFrame(dfs.head.sparkSession, schema, rows)
+    LocalRows(schema, keys.map(step).toVector).frame(spark)
   }
 
   /** [[alignJoin]] for VERY wide feature sets. Catalyst's optimizer

@@ -7,14 +7,14 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.RowOrdering
-import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp
 import org.apache.spark.sql.execution.streaming.sinks.FileStreamSinkLog
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{LocalParquetReader, MetaFileIndex}
+import org.apache.spark.sql.graftbridge.{LocalParquetReader, LocalPlan, LocalRows, MetaFileIndex}
 import org.apache.spark.sql.types._
 
 import graft.ops.TimeseriesOps._
+import graft.store.TimeseriesStore.readable
 
 /** Metadata-only table statistics ([[TimeseriesStore.tableStatsFast]]):
   * exact stored-row count, event-time bounds in epoch micros, and —
@@ -225,9 +225,10 @@ class TimeseriesStore(
     DataType.fromJson(json).asInstanceOf[StructType]
 
   /** Logical table schema of a staged frame: everything but the derived
-    * partition column, field order preserved. */
+    * partition column, field order preserved, declared
+    * [[TimeseriesStore.readable]]. */
   private def structJson(normalized: DataFrame): String =
-    StructType(normalized.schema.fields.filterNot(_.name == "partition").toIndexedSeq).json
+    readable(StructType(normalized.schema.fields.filterNot(_.name == "partition").toIndexedSeq)).json
 
   /** The allowed type-widening lattice (the Delta type-widening set
     * restricted to what the feature pipeline uses): a value written at
@@ -406,7 +407,7 @@ class TimeseriesStore(
       val pType = if (partitionStyle == "year") IntegerType else StringType
       val target = schemaOf(schemas.last)
       adds.groupBy(_.sv.getOrElse(0L)).toSeq.sortBy(_._1).map { case (sv, group) =>
-        val fileSchema = schemaOf(schemas(sv.toInt))
+        val fileSchema = readable(schemaOf(schemas(sv.toInt)))
         // log-metadata scan (Delta's TahoeFileIndex shape): when every
         // add carries its byte size, the FileIndex is built straight
         // from the log — partition values from the add, no driver
@@ -767,64 +768,66 @@ class TimeseriesStore(
 
   /** The deduped rows of a selection, read on the driver: what
     * [[open]] followed by `timeTravel` and
-    * [[graft.ops.TimeseriesOps.dedupLatest]] returns, as a time-sorted
-    * local frame of the declared columns (collecting it, or a
-    * projection of it, runs no job). The files go through
-    * [[driverRows]] with the range filter and the travel; the dedup
-    * keeps, per time, the first row under
-    * [[graft.ops.TimeseriesOps.endpointOrder]]'s tie keys — max
-    * `created_time`, then the other orderable columns descending, the
-    * rule `dedupLatest` and `endpointRow` share. The caller bounds the
-    * selection's decoded size ([[ReadSelection.decodedBytes]]), which
-    * must be defined. */
+    * [[graft.ops.TimeseriesOps.dedupLatest]] returns, as time-sorted
+    * rows of the declared columns (a null time first). The files go
+    * through [[driverRows]] with the range and the travel; the dedup
+    * sorts by [[graft.ops.TimeseriesOps.endpointOrder]] and keeps each
+    * time's first row — max `created_time`, then the other orderable
+    * columns descending, the rule `dedupLatest` and `endpointRow`
+    * share. No Dataset is built. The caller bounds the selection's
+    * decoded size ([[ReadSelection.decodedBytes]]), which must be
+    * defined. */
   private[graft] def latestOnDriver(
       sel: ReadSelection,
       timeTravel: Option[String],
-      valueType: Option[DataType] = None): DataFrame = {
+      valueType: Option[DataType] = None): LocalRows = {
     require(sel.decodedBytes.isDefined, s"'${sel.name}': the selection cannot be read on the driver")
     val schema = schemaOrEnvelope(sel.schemas, valueType)
-    if (sel.adds.isEmpty) return MetaFileIndex.localFrame(spark, schema, Nil)
-    def prepare(df: DataFrame): DataFrame =
-      travel(rangeFilter(df.select(dataCols(sel.schemas).map(col): _*), sel.from, sel.to), timeTravel)
-    val shape = prepare(MetaFileIndex.localFrame(spark, schema, Nil))
-    val timeAt = shape.columns.indexOf(TimeCol)
-    def time(r: InternalRow): Option[Long] = if (r.isNullAt(timeAt)) None else Some(r.getLong(timeAt))
-    // time ascending, each time's winner first: keep the first row of
-    // each run of equal times
-    val sorted = driverRows(sel.name, sel.adds, sel.schemas, prepare)
-      .sorted(endpointOrdering(shape, fromTail = false)).toIndexedSeq
-    MetaFileIndex.localFrame(spark, shape.schema,
-      sorted.indices.collect { case i if i == 0 || time(sorted(i - 1)) != time(sorted(i)) => sorted(i) })
+    if (sel.adds.isEmpty) return LocalRows(schema, Vector.empty)
+    val t = schema.fieldIndex(TimeCol)
+    def sameTime(a: InternalRow, b: InternalRow): Boolean =
+      if (a.isNullAt(t)) b.isNullAt(t) else !b.isNullAt(t) && a.getLong(t) == b.getLong(t)
+    val sorted = driverRows(sel.name, sel.adds, sel.schemas, timeTravel,
+      sel.from.map(fromJavaTimestamp), sel.to.map(fromJavaTimestamp))
+      .sorted(endpointOrdering(schema, fromTail = false)).toIndexedSeq
+    LocalRows(schema,
+      sorted.indices.collect { case i if i == 0 || !sameTime(sorted(i - 1), sorted(i)) => sorted(i) })
   }
 
-  /** Every row of `adds`, read on the driver through the cached
-    * [[LocalParquetReader]]s, one read per schema epoch, each aligned
-    * to the newest epoch ([[alignTo]]) and passed through `prepare`:
-    * Projects and Filters over a LocalRelation, which fold and run no
-    * job. Every add must record its size, and the caller bounds what
-    * they decode to: all the rows land in driver memory. */
+  /** Every row of `adds` with a time in [`lo`, `hi`] (epoch micros,
+    * inclusive; a row without a time passes only when neither is set)
+    * that `timeTravel` keeps, as rows of the declared columns. The files
+    * are read by the cached [[LocalParquetReader]]s, one read per schema
+    * epoch, and aligned to the newest epoch ([[alignTo]]) and traveled
+    * by a [[LocalPlan]] compiled once per shape: no Dataset per call.
+    * Every add must record its size, and the caller bounds what they
+    * decode to: all the rows land in driver memory. */
   private def driverRows(
       name: String,
       adds: Seq[TxAdd],
       schemas: Seq[String],
-      prepare: DataFrame => DataFrame): Seq[InternalRow] = {
+      timeTravel: Option[String],
+      lo: Option[Long],
+      hi: Option[Long]): Seq[InternalRow] = {
     val target = schemaOf(schemas.last)
+    val t = target.fieldIndex(TimeCol)
+    def inRange(r: InternalRow): Boolean = (lo.isEmpty && hi.isEmpty) ||
+      !r.isNullAt(t) && lo.forall(r.getLong(t) >= _) && hi.forall(r.getLong(t) <= _)
     adds.groupBy(_.sv.getOrElse(0L)).toSeq.sortBy(_._1).flatMap { case (sv, group) =>
-      val fileSchema = schemaOf(schemas(sv.toInt))
-      val rows = localReader(fileSchema)
-        .read(group.map(a => (new Path(s"${featurePath(name)}/${a.path}"), a.fsize.get)))
-      prepare(rows.select(alignTo(fileSchema, target): _*)).queryExecution.executedPlan.executeCollect()
+      val fileSchema = readable(schemaOf(schemas(sv.toInt)))
+      val plan = localPlan(fileSchema, (target, timeTravel))(df =>
+        travel(df.select(alignTo(fileSchema, target): _*), timeTravel))
+      val files = group.map(a => (new Path(s"${featurePath(name)}/${a.path}"), a.fsize.get))
+      plan(localReader(fileSchema).read(files).iterator).filter(inRange)
     }
   }
 
-  /** [[graft.ops.TimeseriesOps.endpointOrder]] over `shape`'s columns
-    * as a driver-side row ordering: the same sort keys, resolved by the
-    * analyzer, ranking InternalRows of `shape`'s schema. */
-  private def endpointOrdering(shape: DataFrame, fromTail: Boolean): Ordering[InternalRow] =
-    shape.orderBy(endpointOrder(shape, fromTail): _*).queryExecution.analyzed match {
-      case s: Sort => RowOrdering.create(s.order, s.child.output)
-      case other   => throw new IllegalStateException(s"unexpected endpoint plan: $other")
-    }
+  /** [[graft.ops.TimeseriesOps.endpointOrder]] over rows of `schema`,
+    * built once per shape: the same sort keys, resolved by the
+    * analyzer. */
+  private def endpointOrdering(schema: StructType, fromTail: Boolean): Ordering[InternalRow] =
+    driverCached(("order", schema, fromTail))(
+      LocalPlan.ordering(spark, schema)(endpointOrder(_, fromTail)))
 
   private def travel(df: DataFrame, timeTravel: Option[String]): DataFrame =
     timeTravel.map(graft.ops.TimeseriesOps.timeTravel(df, _)).getOrElse(df)
@@ -835,10 +838,11 @@ class TimeseriesStore(
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       schemaOrEnvelope(schemas, Some(valueType)))
 
-  /** The declared schema, or the envelope typed `valueType` (default
-    * double) when the table declares none yet. */
+  /** The declared schema as reads open it ([[TimeseriesStore.readable]]),
+    * or the envelope typed `valueType` (default double) when the table
+    * declares none yet. */
   private def schemaOrEnvelope(schemas: Seq[String], valueType: Option[DataType]): StructType =
-    schemas.lastOption.map(schemaOf).getOrElse(emptySchema(valueType.getOrElse(DoubleType)))
+    readable(schemas.lastOption.map(schemaOf).getOrElse(emptySchema(valueType.getOrElse(DoubleType))))
 
   /** File-level data skipping over log metadata: does the add's
     * recorded event-time range intersect [from, to]? Files without
@@ -847,12 +851,8 @@ class TimeseriesStore(
     * min/max of the same column the read filters on. */
   private def fileStatsOverlap(
       a: TxAdd, from: Option[Timestamp], to: Option[Timestamp]): Boolean =
-    from.forall(f => a.tmax.forall(_ >= micros(f))) &&
-      to.forall(t => a.tmin.forall(_ <= micros(t)))
-
-  /** Epoch micros of `t`: the unit of the log's time stats. */
-  private def micros(t: Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos % 1000000L) / 1000L
+    from.forall(f => a.tmax.forall(_ >= fromJavaTimestamp(f))) &&
+      to.forall(t => a.tmin.forall(_ <= fromJavaTimestamp(t)))
 
   /** Driver-side partition-value pruning over log metadata, widened one
     * unit each side and anchored on UTC, not the reader's session zone:
@@ -896,7 +896,8 @@ class TimeseriesStore(
     * Tiers are read on the driver by [[driverRows]] — Spark's own
     * parquet reader, one read per schema epoch — and ranked with the
     * same epoch alignment, travel filter and sort keys the Spark path
-    * runs, so a stored endpoint starts no job. The driver reads at most
+    * runs, compiled once per shape, so a stored endpoint starts no job
+    * and builds no Dataset. The driver reads at most
     * `spark.sql.files.maxPartitionBytes` of files per call — what one
     * scan task reads. Past that bound, or at a file whose size the log
     * does not record, the candidates that can still win go to ONE
@@ -905,39 +906,34 @@ class TimeseriesStore(
     * `before` (tail only) restricts the search to rows strictly before
     * it: the fill seed of a resample.
     *
-    * Returns the winner, zero or one row of the declared columns as a
-    * local frame (collecting it, or a projection of it, runs no job),
-    * and what the search read.
+    * Returns the winner, zero or one row of the declared columns, and
+    * what the search read.
     */
   private[graft] def endpoint(
       name: String,
       fromTail: Boolean,
       timeTravel: Option[String] = None,
       before: Option[Timestamp] = None,
-      valueType: Option[DataType] = None): (DataFrame, EndpointReads) = {
+      valueType: Option[DataType] = None): (LocalRows, EndpointReads) = {
     require(before.isEmpty || fromTail, "an endpoint search bounded by `before` runs from the tail")
     val TxSnapshot(live, schemas, _, _) = txLog(name).state()
-    val cols = dataCols(schemas).map(col)
-    def prepare(df: DataFrame): DataFrame = {
-      val in = df.select(cols: _*)
-      travel(before.map(b => in.filter(col(TimeCol) < lit(b))).getOrElse(in), timeTravel)
+    def sparkTop(adds: Seq[TxAdd]): LocalRows = {
+      val in = openAdds(name, adds, schemas, partitionStyle = "date").select(dataCols(schemas).map(col): _*)
+      val top = endpointRow(
+        travel(before.map(b => in.filter(col(TimeCol) < lit(b))).getOrElse(in), timeTravel), fromTail)
+      val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToCatalystConverter(top.schema)
+      LocalRows(top.schema, top.collect().map(r => toInternal(r).asInstanceOf[InternalRow]).toIndexedSeq)
     }
-    def sparkTop(adds: Seq[TxAdd]): DataFrame =
-      endpointRow(prepare(openAdds(name, adds, schemas, partitionStyle = "date")), fromTail)
     if (live.isEmpty && schemas.isEmpty)
-      return (MetaFileIndex.localFrame(spark, emptySchema(valueType.getOrElse(DoubleType)), Nil),
-        EndpointReads(Nil, Nil))
-    if (schemas.isEmpty) {
-      // a log from before schema declarations: its files infer their
-      // schema, so there is no typed driver read — one job over them all
-      val top = sparkTop(live)
-      return (spark.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema),
-        EndpointReads(Nil, live.map(_.path)))
-    }
-    val shape = prepare(MetaFileIndex.localFrame(spark, schemaOf(schemas.last), Nil))
-    val order = endpointOrdering(shape, fromTail)
-    val timeAt = shape.columns.indexOf(TimeCol)
-    val cap = before.map(micros(_) - 1)
+      return (LocalRows(schemaOrEnvelope(Nil, valueType), Vector.empty), EndpointReads(Nil, Nil))
+    // a log from before schema declarations: its files infer their
+    // schema, so there is no typed driver read — one job over them all
+    if (schemas.isEmpty) return (sparkTop(live), EndpointReads(Nil, live.map(_.path)))
+    val schema = schemaOrEnvelope(schemas, valueType)
+    val order = endpointOrdering(schema, fromTail)
+    val timeAt = schema.fieldIndex(TimeCol)
+    val cap = before.map(fromJavaTimestamp(_) - 1)
     def bound(a: TxAdd): Option[Long] = if (fromTail) a.tmax else a.tmin
     // tiers of equal bound, capped below `before`; unbounded first, then
     // newest (oldest) first
@@ -968,40 +964,44 @@ class TimeseriesStore(
       val tier = rest.head._2
       if (tier.forall(_.fsize.isDefined) && spent + tier.flatMap(_.fsize).sum <= budget) {
         spent += tier.flatMap(_.fsize).sum
-        keep(driverRows(name, tier, schemas, prepare))
+        keep(driverRows(name, tier, schemas, timeTravel, None, cap))
         driverTiers += tier.map(_.path)
         rest = rest.tail
       } else {
         val candidates = rest.takeWhile(t => canBeat(t._1))
         val upTo = candidates.indexWhere(settles)
         val adds = (if (upTo < 0) candidates else candidates.take(upTo + 1)).flatMap(_._2)
-        val top = sparkTop(adds)
-        val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
-          .createToCatalystConverter(top.schema)
-        keep(top.collect().map(r => toInternal(r).asInstanceOf[InternalRow]))
+        keep(sparkTop(adds).rows)
         sparkFiles = adds.map(_.path)
         rest = Nil
       }
     }
-    (MetaFileIndex.localFrame(spark, shape.schema, best.toSeq),
-      EndpointReads(driverTiers.toSeq, sparkFiles))
+    (LocalRows(schema, best.toVector), EndpointReads(driverTiers.toSeq, sparkFiles))
   }
 
-  // Driver-side parquet readers by physical schema. Building one
-  // broadcasts the Hadoop conf (measured ~14 ms, more than the read it
-  // serves), so they live as long as the store; each captured the
-  // session's SQL conf when built, so a conf change rebuilds them all.
-  private var localReaders = (Map.empty[String, String], Map.empty[StructType, LocalParquetReader])
+  // Driver-read state, built on first use and kept while the session's
+  // SQL conf stays the same (each piece captured it when built; a change
+  // drops them all): the LocalParquetReaders by physical schema, whose
+  // setup broadcasts the Hadoop conf (measured ~14 ms, more than the
+  // read it serves), and the LocalPlans and orderings by shape.
+  private var driverCache = (Map.empty[String, String], Map.empty[Any, AnyRef])
 
-  private def localReader(schema: StructType): LocalParquetReader =
+  private def driverCached[T <: AnyRef](key: Any)(build: => T): T =
     synchronized {
       val conf = spark.conf.getAll
-      val cached = if (localReaders._1 == conf) localReaders._2 else Map.empty[StructType, LocalParquetReader]
-      val reader = cached.getOrElse(schema,
-        new LocalParquetReader(spark, schema, storageOptions, hadoopConf))
-      localReaders = (conf, cached + (schema -> reader))
-      reader
+      val cached = if (driverCache._1 == conf) driverCache._2 else Map.empty[Any, AnyRef]
+      val v = cached.getOrElse(key, build)
+      driverCache = (conf, cached.updated(key, v))
+      v.asInstanceOf[T]
     }
+
+  private[graft] def localReader(schema: StructType): LocalParquetReader =
+    driverCached(("reader", schema))(new LocalParquetReader(spark, schema, storageOptions, hadoopConf))
+
+  /** `build` over rows of `schema`, compiled once per (`schema`, `key`)
+    * ([[LocalPlan]]): `key` names whatever else `build` depends on. */
+  private[graft] def localPlan(schema: StructType, key: Any)(build: DataFrame => DataFrame): LocalPlan =
+    driverCached(("plan", schema, key))(LocalPlan.compile(spark, schema)(build))
 
   /** S4: feature directories present in storage. */
   def ls(): Seq[String] = {
@@ -1938,6 +1938,13 @@ object TimeseriesStore {
     com.fasterxml.jackson.databind.json.JsonMapper.builder()
       .addModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
       .build()
+
+  /** `schema` with every column but `time` nullable: how reads open an
+    * epoch's files and how the first write declares epoch 0. A batch
+    * whose first save held no null in a column must not make a later
+    * null in it read back as a default value. */
+  private[graft] def readable(schema: StructType): StructType =
+    StructType(schema.fields.map(f => if (f.name == TimeCol) f else f.copy(nullable = true)))
 
   /** S3 envelope normalization, the ONE normalizer behind `save`,
     * `mergeInto` and (through `normalizeForSave`) the exactly-once

@@ -1,10 +1,11 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.mapred.JobConf
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, BoundReference, Expression, Predicate}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, BindReferences, BoundReference, Expression, InterpretedOrdering, InterpretedProjection, Predicate}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -97,13 +98,6 @@ object MetaFileIndex {
     org.apache.spark.sql.classic.Dataset.ofRows(cs, LogicalRelation(relation))
   }
 
-  /** `rows` (internal form, laid out as `schema`) as a LocalRelation
-    * frame — the driver-side twin of a scan's output. */
-  def localFrame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
-
   /** Spark's configured split size, `spark.sql.files.maxPartitionBytes`:
     * what one scan task reads. */
   def maxPartitionBytes(spark: SparkSession): Long =
@@ -119,10 +113,12 @@ object MetaFileIndex {
   * a few small files whose total the caller bounds: every row lands in
   * driver memory.
   *
-  * `hadoopConf` is copied, never mutated (the reader setup writes its
-  * read-support keys into the conf it is given), so a store's
+  * The reader setup writes its read-support keys into the conf it is
+  * given, so it gets its own copy of `hadoopConf`, and a store's
   * per-namespace options reach the file opens exactly as they reach a
-  * scan's.
+  * scan's. That copy, [[conf]], is a `JobConf`: each file open wraps it
+  * in a task attempt context, which copies any conf that is not one.
+  * Reads share it and never write to it.
   */
 final class LocalParquetReader(
     spark: SparkSession,
@@ -130,17 +126,18 @@ final class LocalParquetReader(
     options: Map[String, String],
     hadoopConf: org.apache.hadoop.conf.Configuration) {
 
+  val conf: JobConf = new JobConf(hadoopConf)
+
   private val reader = new ParquetFileFormat().buildReaderWithPartitionValues(
     spark, dataSchema, new StructType(), dataSchema, Nil,
     // rows, not columnar batches: the caller materializes every row
     options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
-    new org.apache.hadoop.conf.Configuration(hadoopConf))
+    conf)
 
-  /** Every row of `files` (absolute path, byte size), as a local frame
-    * of `dataSchema`: Project and Filter over it fold into a
-    * LocalRelation at optimization, so collecting them runs no job. */
-  def read(files: Seq[(Path, Long)]): DataFrame = {
-    val rows = files.flatMap { case (p, len) =>
+  /** Every row of `files` (absolute path, byte size), laid out as
+    * `dataSchema`. */
+  def read(files: Seq[(Path, Long)]): Seq[InternalRow] =
+    files.flatMap { case (p, len) =>
       val it = reader(PartitionedFile(InternalRow.empty, SparkPath.fromPath(p), 0L, len,
         Array.empty[String], 0L, len))
       // the scan closes its reader from a task-completion listener; the
@@ -148,6 +145,70 @@ final class LocalParquetReader(
       try it.map(_.copy()).toVector
       finally it match { case c: java.io.Closeable => c.close(); case _ => () }
     }
-    MetaFileIndex.localFrame(spark, dataSchema, rows)
+}
+
+/** Rows the driver holds, in internal form, laid out as `schema`. */
+final case class LocalRows(schema: StructType, rows: IndexedSeq[InternalRow]) {
+
+  /** The rows as a LocalRelation frame: Project and Filter over it fold
+    * into a LocalRelation at optimization, so collecting runs no job. */
+  def frame(spark: SparkSession): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+}
+
+/** A chain of Projects and Filters compiled once and run over driver
+  * rows with no plan per call: `build` applied to an empty local frame
+  * of the input schema and analyzed (never optimized), its operators
+  * bound to their inputs. The rows see exactly the expressions a Spark
+  * plan of `build` evaluates — casts, interval arithmetic, JSON paths —
+  * interpreted. Some of those keep state while they evaluate, as they
+  * may in a task, so each thread binds its own copy on its first call.
+  */
+final class LocalPlan private (val schema: StructType, analyzed: LogicalPlan) {
+
+  private val run = ThreadLocal.withInitial[Iterator[InternalRow] => Iterator[InternalRow]](() =>
+    LocalPlan.bound(analyzed))
+
+  def apply(rows: Iterator[InternalRow]): Iterator[InternalRow] = run.get()(rows)
+}
+
+object LocalPlan {
+
+  /** `build` over an empty local frame of `schema`, compiled. `build`
+    * may only select and filter. */
+  def compile(spark: SparkSession, schema: StructType)(build: DataFrame => DataFrame): LocalPlan = {
+    val df = build(LocalRows(schema, Vector.empty).frame(spark))
+    new LocalPlan(df.schema, df.queryExecution.analyzed)
+  }
+
+  /** The sort keys `order` picks over a frame of `schema`, analyzed once
+    * and bound: a driver-side row ordering with the sort's semantics. */
+  def ordering(spark: SparkSession, schema: StructType)(order: DataFrame => Seq[Column])
+      : Ordering[InternalRow] = {
+    val df = LocalRows(schema, Vector.empty).frame(spark)
+    df.orderBy(order(df): _*).queryExecution.analyzed match {
+      case s: Sort => new InterpretedOrdering(s.order, s.child.output)
+      case other   => throw new IllegalArgumentException(s"not a sort: ${other.nodeName}")
+    }
+  }
+
+  private def bound(plan: LogicalPlan): Iterator[InternalRow] => Iterator[InternalRow] = {
+    def bind(e: Expression, input: Seq[Attribute]): Expression =
+      BindReferences.bindReference(e.clone(), input)
+    plan match {
+      case _: LocalRelation => identity
+      case Project(list, in) =>
+        val p = new InterpretedProjection(list.map(bind(_, in.output)))
+        p.initialize(0)
+        bound(in).andThen(_.map(p))
+      case Filter(cond, in) =>
+        val p = Predicate.createInterpreted(bind(cond, in.output))
+        p.initialize(0)
+        bound(in).andThen(_.filter(p.eval))
+      case other =>
+        throw new IllegalArgumentException(s"a local plan selects and filters only, not ${other.nodeName}")
+    }
   }
 }

@@ -6,19 +6,20 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.{CountingFs, JobCounting, SparkSpec}
+import graft.{CountingFs, JobCounting, PlanCounting, SparkSpec}
 import graft.ops.TimeseriesOps
-import graft.store.{TxAdd, TxLog}
+import graft.store.{TimeseriesStore, TxAdd, TxLog}
 
 /** Serve-path reads: what `last()` and short `loadDataFrame` windows
-  * cost in Spark jobs, that the one-pass endpoint lookup returns the
-  * dedup winner under every reference backend name, that a window
-  * served on the driver equals the Spark path's frame, and how feature
+  * cost in Spark jobs and optimized plans, that the one-pass endpoint
+  * lookup returns the dedup winner under every reference backend name,
+  * that a window served on the driver equals the Spark path's frame,
+  * that a later null reads back as null, and how feature
   * directories without a committed log open: empty when nothing was
   * committed, refused (naming the migration) when a pre-log writer left
   * data there.
   */
-class ServeReadSpec extends SparkSpec with JobCounting {
+class ServeReadSpec extends SparkSpec with JobCounting with PlanCounting {
   import spark.implicits._
 
   private def freshStore(backend: String = "spark"): (FeatureStore, String) = {
@@ -552,5 +553,113 @@ class ServeReadSpec extends SparkSpec with JobCounting {
       opens)
     // one replay per feature: each log directory listed once, nothing else
     assert(lists == (0 until 4).map(i => s"$root/w$i/_txlog" -> 1).toMap, lists)
+  }
+
+  test("driver-served last(), first() and windows optimize no plan but the returned frame's") {
+    val (fs, _) = freshStore()
+    val names = (0 until 4).map(i => s"s/w$i")
+    names.foreach { n =>
+      fs.createFeature(n)
+      fs.saveDataFrame(daily("2024-01-01", 10), Some(n))
+    }
+    fs.createFeature("s/ser", serialized = true)
+    fs.saveDataFrame(daily("2024-01-01", 3).withColumn("value", col("value").cast("string")),
+      Some("s/ser"))
+    // a masked tail: travel reads tier after tier
+    fs.createFeature("s/m")
+    fs.saveDataFrame(backfilled(10, maskedFrom = 7), Some("s/m"))
+    // cold (the first call compiles its shapes) and warm
+    for (round <- 1 to 2) {
+      val (got, plans) = plansOf(
+        (fs.last("s/w0"), fs.first(Seq("s/w1"))("s/w1"), fs.last("s/ser"),
+          fs.last(Seq("s/m"), Some("0s"))("s/m")))
+      assert(got == (Some(9.0), Some(0.0), Some("2.0"), Some(6.0)), s"round $round")
+      assert(plans.isEmpty, s"round $round: ${plans.map(_.treeString)}")
+      val (rows, windowPlans) = plansOf(
+        fs.loadDataFrame(names, Some(ts("2024-01-04")), Some(ts("2024-01-05"))).collect())
+      assert(rows.map(_.getDouble(1)).toSeq == Seq(3.0, 4.0), s"round $round")
+      // the collect of the frame it returns: one plan
+      assert(windowPlans.size == 1, s"round $round: ${windowPlans.map(_.treeString)}")
+    }
+  }
+
+  test("a null saved after non-nullable values reads back as null on both paths") {
+    val (fs, _) = freshStore()
+    val ns = fs.catalog.getNamespace("s").get
+    // (Timestamp, Double) tuples: the first save's value column is not
+    // nullable, and created_time defaults to a non-nullable now()
+    val dense = (0 until 5).map(i => (ts(f"2024-01-0${i + 1}"), i.toDouble)).toDF("time", "value")
+    assert(!dense.schema("value").nullable)
+    def rewriteToNull(name: String): Unit =
+      fs.saveDataFrame(Seq((ts("2024-01-03"), ts("2030-01-01"), Option.empty[Double]))
+        .toDF("time", "created_time", "value"), Some(s"s/$name"))
+    fs.createFeature("s/dense")
+    fs.saveDataFrame(dense, Some("s/dense"))
+    rewriteToNull("dense")
+    // a log that declares the value not nullable, as logs written
+    // before epoch 0 declared every data column nullable did
+    fs.createFeature("s/declared")
+    fs.saveDataFrame(dense, Some("s/declared"))
+    fs.store(ns).evolveSchema("declared", org.apache.spark.sql.types.StructType.fromDDL(
+      "time timestamp, created_time timestamp, value double not null"))
+    rewriteToNull("declared")
+    for (name <- Seq("dense", "declared")) {
+      val rewritten = fs.store(ns).read(name).filter(col("created_time") === lit(ts("2030-01-01")))
+        .collect()
+      assert(rewritten.length == 1 && rewritten.head.isNullAt(rewritten.head.fieldIndex("value")),
+        s"$name: ${rewritten.toSeq}")
+      // the fill carries the day before over the null, with one schema
+      // and one set of rows on both paths
+      for ((from, to) <- Seq((None, None), (Some(ts("2024-01-02")), Some(ts("2024-01-04")))))
+        assertLoadsAgree(fs, s"$name $from..$to")(fs.loadDataFrame(Seq(s"s/$name"), from, to))
+      val rows = fs.loadDataFrame(Seq(s"s/$name")).collect().map(_.getDouble(1)).toSeq
+      assert(rows == Seq(0.0, 1.0, 1.0, 3.0, 4.0), s"$name: $rows")
+      // the endpoint at the null: the lookup keeps it
+      val f = fs.catalog.getFeature("s", name).get
+      val (_, reads) = fs.endpointLookup(ns, f, None, fromTail = true)
+      assert(reads.sparkFiles.isEmpty && fs.last(Seq(s"s/$name"))(s"s/$name").contains(4.0))
+      assert(viaDedup(fs, name, None, fromTail = true).map(_.getDouble(1)).contains(4.0))
+    }
+  }
+
+  test("the driver readers never write their shared conf, and read what a fresh reader reads") {
+    val (fs, warehouse) = freshStore()
+    saveLoose(fs, warehouse)
+    val st = fs.store(fs.catalog.getNamespace("s").get)
+    // evo holds two schema epochs: take the readers the store caches for
+    // them before anything reads through them
+    val log = new TxLog(spark.sparkContext.hadoopConfiguration, s"$warehouse/feature/evo")
+    val epochs = log.schemaHistory().map(j =>
+      TimeseriesStore.readable(org.apache.spark.sql.types.DataType.fromJson(j)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]))
+    assert(epochs.size == 2)
+    val readers = epochs.map(st.localReader)
+    def entries(r: org.apache.spark.sql.graftbridge.LocalParquetReader): Map[String, String] = {
+      import scala.jdk.CollectionConverters._
+      r.conf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+    }
+    val before = readers.map(entries)
+    // evo's files under travel, through every driver path
+    fs.last(Seq("s/evo"), Some("0s"))
+    fs.first(Seq("s/evo"), Some("1h"))
+    fs.loadDataFrame(Seq("s/evo", "s/tied"), timeTravel = Some("0s")).collect()
+    val files = log.snapshot().groupBy(_.sv.getOrElse(0L)).map { case (sv, adds) =>
+      sv.toInt -> adds.map(a => (new org.apache.hadoop.fs.Path(s"$warehouse/feature/evo/${a.path}"), a.fsize.get))
+    }
+    assert(files.keySet == Set(0, 1) && files.values.forall(_.size > 1), files)
+    def strings(schema: org.apache.spark.sql.types.StructType,
+        rows: Seq[org.apache.spark.sql.catalyst.InternalRow]) =
+      rows.map(_.toSeq(schema).map(String.valueOf))
+    for ((schema, i) <- epochs.zipWithIndex) {
+      val fresh = new org.apache.spark.sql.graftbridge.LocalParquetReader(
+        spark, schema, Map.empty, spark.sparkContext.hadoopConfiguration)
+      assert(strings(schema, readers(i).read(files(i))) == strings(schema, fresh.read(files(i))), s"epoch $i")
+      // the cached reader is the one the reads went through
+      assert(st.localReader(schema) eq readers(i))
+    }
+    for ((was, now) <- before.zip(readers.map(entries))) {
+      val written = (was.keySet ++ now.keySet).filter(k => was.get(k) != now.get(k))
+      assert(written.isEmpty, s"written: ${written.map(k => k -> now.get(k))}")
+    }
   }
 }
