@@ -34,18 +34,6 @@ import graft.transform.TransformRegistry
 object FeatureStore {
   import Catalog.parseName
 
-  /** The driver load path's bound (see [[FeatureStore.loadDataFrame]]):
-    * the most bytes a load's selections may decode to
-    * ([[graft.store.ReadSelection.decodedBytes]]) and still be served on
-    * the driver. Set below the measured crossover with the Spark path.
-    * Whole-feature loads of (time, created_time, double) rows, 32 bytes
-    * decoded each, on a 4-core VM with Spark local[2], driver vs Spark
-    * p50: one feature of 30,000 rows (0.96 MB) 281 vs 462 ms, 60,000
-    * rows 592 vs 572 ms, 100,000 rows 1,138 vs 934 ms; four features
-    * cross later (100,000 rows: 930 vs 1,366 ms). So 1 MB keeps the
-    * driver the faster side, and caps the rows one load holds there. */
-  val DriverLoadBytes: Long = 1L << 20
-
   /** The reference's factory dispatch (`__init__.py:33-50`): an
     * http(s) connection string is a hosted catalog — everything else
     * is a local metadata location. Token comes from the environment
@@ -125,9 +113,20 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
   def this(spark: SparkSession, catalogLocation: String) =
     this(spark, new Catalog(catalogLocation, spark.sparkContext.hadoopConfiguration))
 
-  /** [[FeatureStore.DriverLoadBytes]] for this facade; <= 0 turns the
-    * driver load path off. Specs lower it to pin the Spark path. */
-  @volatile private[graft] var driverLoadBytes: Long = FeatureStore.DriverLoadBytes
+  // The driver paths' bound for every namespace's store
+  // (TimeseriesStore.driverLoadBytes): stores built later take it too.
+  @volatile private var loadBound: Long = TimeseriesStore.DriverLoadBytes
+
+  /** The bound of this facade's stores ([[TimeseriesStore.driverLoadBytes]]). */
+  private[graft] def driverLoadBytes: Long = loadBound
+
+  /** Sets the bound on every store of this facade, present and future;
+    * <= 0 turns the driver paths off. Specs lower it to pin the Spark
+    * path. */
+  private[graft] def driverLoadBytes_=(bytes: Long): Unit = {
+    loadBound = bytes
+    storeCache.values.foreach(_._2.driverLoadBytes = bytes)
+  }
 
   // One store per namespace STATE, not per verb: for namespaces with
   // storageOptions every TimeseriesStore owns cache-bypassing
@@ -160,17 +159,23 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     }
   }
 
+  private def newStore(ns: Namespace): TimeseriesStore = {
+    val st = new TimeseriesStore(spark, ns.url, ns.storageOptions)
+    st.driverLoadBytes = loadBound
+    st
+  }
+
   private[graft] def store(ns: Namespace): TimeseriesStore = {
     drainRetired()
     while (true) {
       storeCache.get(ns.name) match {
         case Some((cached, st)) if cached == ns => return st
         case None =>
-          val st = new TimeseriesStore(spark, ns.url, ns.storageOptions)
+          val st = newStore(ns)
           if (storeCache.putIfAbsent(ns.name, (ns, st)).isEmpty) return st
           st.close() // lost the publish race; nobody ever saw these handles
         case Some(stale) =>
-          val st = new TimeseriesStore(spark, ns.url, ns.storageOptions)
+          val st = newStore(ns)
           if (storeCache.replace(ns.name, stale, (ns, st))) {
             retiredStores.add((System.currentTimeMillis(), stale._2))
             return st
@@ -758,7 +763,7 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     * is no `freq`, every feature is stored (no transform), and the
     * files the logs select for the range — one replay per feature —
     * decode, by the log's row counts, to at most
-    * [[FeatureStore.DriverLoadBytes]] (1 MB) together. The driver
+    * [[TimeseriesStore.DriverLoadBytes]] (1 MB) together. The driver
     * reads those files, applies the travel and the dedup
     * ([[graft.store.TimeseriesStore.latestOnDriver]]) and the unwrap
     * as rows, and aligns the series with [[TimeseriesOps.alignLocal]]
@@ -793,8 +798,8 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
       if (freq.isEmpty) storedSelections(features, fromDate, toDate, asOfVersion)
       else Map.empty[String, (Feature, TimeseriesStore, ReadSelection)]
     val decoded = stored.values.map(_._3.decodedBytes)
-    if (stored.nonEmpty && driverLoadBytes > 0 && decoded.forall(_.isDefined) &&
-        decoded.flatten.sum <= driverLoadBytes)
+      .foldLeft(Option(0L))((sum, d) => for (a <- sum; b <- d) yield a + b)
+    if (stored.nonEmpty && stored.values.forall(_._2.fitsDriver(decoded)))
       return TimeseriesOps.alignLocal(spark, features.map { full =>
         val (f, st, sel) = stored(full)
         val series = unwrapRows(st, st.latestOnDriver(sel, timeTravel, pinnedType(f)), f)

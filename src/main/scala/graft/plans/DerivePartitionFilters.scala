@@ -1,7 +1,5 @@
 package graft.plans
 
-import java.time.Instant
-
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -86,16 +84,14 @@ object DerivePartitionFilters extends Rule[LogicalPlan] with PredicateHelper {
     * drift from what `TimeseriesStore.read`/`prunePartitionValues`
     * would scan.
     */
-  private def partLit(p: Attribute, us: Long, skew: Int): Literal = {
-    val i = Instant.ofEpochSecond(Math.floorDiv(us, 1000000L))
+  private def partLit(p: Attribute, us: Long, skew: Int): Literal =
     p.dataType match {
       case StringType =>
         Literal(UTF8String.fromString(
-          graft.store.PartitionBounds.dateString(i, skew)), StringType)
+          graft.store.PartitionBounds.dateString(us, skew)), StringType)
       case DateType => // hive partition inference parses date-shaped dirs
-        Literal(graft.store.PartitionBounds.date(i, skew).toEpochDay.toInt, DateType)
+        Literal(graft.store.PartitionBounds.date(us, skew).toEpochDay.toInt, DateType)
       case _ =>
-        Literal(graft.store.PartitionBounds.year(i, skew), IntegerType)
+        Literal(graft.store.PartitionBounds.year(us, skew), IntegerType)
     }
-  }
 }

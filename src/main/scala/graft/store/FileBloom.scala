@@ -102,6 +102,16 @@ object FileBloom {
       case _ => true
     }
 
+  /** One `bits`-bit / `k`-hash bloom per file over `(file, value)`
+    * pairs: the per-file builder behind both writers, the scan tasks of
+    * [[buildForStage]] and the driver writer, which feed it the same
+    * non-null string renderings. */
+  def accumulate(pairs: Iterator[(String, String)], bits: Int, k: Int): Map[String, Array[Long]] = {
+    val m = scala.collection.mutable.Map[String, Array[Long]]()
+    pairs.foreach { case (f, v) => add(m.getOrElseUpdate(f, new Array[Long](bits / 64)), v, k) }
+    m.toMap
+  }
+
   /** Build one bloom per staged file in ONE Spark job: map-side
     * builders keyed by the file each row came from, OR-merged across
     * splits (a file large enough to span input splits yields partial
@@ -120,7 +130,6 @@ object FileBloom {
       k: Int): Map[String, String] = {
     require(bits % 64 == 0 && bits > 0, s"bloom bits must be a positive multiple of 64: $bits")
     require(k >= 1 && k <= 127, s"bloom hash count out of range: $k")
-    val words = bits / 64
     val stagePrefix = {
       val u = new Path(stageDir).toUri.getPath
       if (u.endsWith("/")) u else u + "/"
@@ -129,14 +138,7 @@ object FileBloom {
       .select(input_file_name().as("f"), col(column).cast("string").as("v"))
       .filter(col("v").isNotNull)
     rows.rdd
-      .mapPartitions { it =>
-        val m = scala.collection.mutable.Map[String, Array[Long]]()
-        it.foreach { r =>
-          val arr = m.getOrElseUpdate(r.getString(0), new Array[Long](words))
-          add(arr, r.getString(1), k)
-        }
-        m.iterator
-      }
+      .mapPartitions(it => accumulate(it.map(r => (r.getString(0), r.getString(1))), bits, k).iterator)
       .reduceByKey(union)
       .collect()
       .map { case (f, arr) =>

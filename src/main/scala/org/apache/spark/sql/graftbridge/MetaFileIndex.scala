@@ -1,7 +1,12 @@
 package org.apache.spark.sql.graftbridge
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.mapred.JobConf
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, BindReferences, BoundReference, Expression, InterpretedOrdering, InterpretedProjection, Predicate}
@@ -9,6 +14,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, Logic
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.unsafe.types.UTF8String
@@ -145,6 +151,59 @@ final class LocalParquetReader(
       try it.map(_.copy()).toVector
       finally it match { case c: java.io.Closeable => c.close(); case _ => () }
     }
+}
+
+/** Parquet files written ON THE DRIVER with Spark's own writer
+  * ([[ParquetFileFormat.prepareWrite]] and the output writers it makes):
+  * the encoding, calendar rebase and footer a write task produces,
+  * without a job, a committer or its `_temporary` tree. Prepared once
+  * per physical schema, then reused for every file written under it.
+  * Meant for the small batches the caller bounds: every row it writes
+  * is already in driver memory.
+  *
+  * The write context has its own conf, [[conf]]: a `JobConf` copy of
+  * `hadoopConf`, so a store's per-namespace options reach the file
+  * creates, with the timestamp type set to TIMESTAMP_MICROS there and
+  * never in the session's conf. Being a `JobConf`, the task attempt
+  * context shares it instead of copying it per file. Writes read it
+  * and never write to it; the session's SQL conf is the one in effect
+  * while they run, as it is in a write task.
+  */
+final class LocalParquetWriter(
+    spark: SparkSession,
+    dataSchema: StructType,
+    options: Map[String, String],
+    hadoopConf: Configuration) {
+
+  private val job = Job.getInstance(hadoopConf)
+
+  private val factory = new ParquetFileFormat().prepareWrite(spark, job, options, dataSchema)
+
+  val conf: JobConf = job.getConfiguration.asInstanceOf[JobConf]
+  conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
+    SQLConf.ParquetOutputTimestampType.TIMESTAMP_MICROS.toString)
+
+  private val context =
+    new TaskAttemptContextImpl(conf, new TaskAttemptID(new TaskID(new JobID(), TaskType.MAP, 0), 0))
+
+  private val sqlConf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+
+  /** The file name extension of what [[write]] writes: `.snappy.parquet`
+    * under snappy compression. */
+  val extension: String = factory.getFileExtension(context)
+
+  /** Writes `rows`, laid out as `dataSchema`, as one parquet file at
+    * `path`. A failed write leaves a partial file there. */
+  def write(path: Path, rows: Iterator[InternalRow]): Unit = SQLConf.withExistingConf(sqlConf) {
+    val w = factory.newInstance(path.toString, dataSchema, context)
+    try rows.foreach(w.write)
+    catch {
+      case NonFatal(e) =>
+        try w.close() catch { case NonFatal(c) => e.addSuppressed(c) }
+        throw e
+    }
+    w.close()
+  }
 }
 
 /** Rows the driver holds, in internal form, laid out as `schema`. */

@@ -5,35 +5,51 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FilterFileSystem, FutureDataInputStreamBuilder, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, FilterFileSystem, FutureDataInputStreamBuilder, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 
 /** Local filesystem under the `countfs` scheme that counts every file
-  * open and directory listing by path, for specs that pin what an
-  * operation touches. A store reaches it through its namespace's
-  * storage options ([[CountingFs.options]]): the scheme resolves only
-  * through `fs.countfs.impl`, so a read that drops the namespace's
-  * options fails instead of passing silently.
+  * open, file create and directory listing by path, for specs that pin
+  * what an operation touches. A store reaches it through its
+  * namespace's storage options ([[CountingFs.options]]): the scheme
+  * resolves only through `fs.countfs.impl`, so a read or write that
+  * drops the namespace's options fails instead of passing silently.
   *
   * With `graft.countfs.fatalStagedOpens` set, opens of STAGED parquet
   * files (the store's per-file footer reads during an install) die of
-  * a fatal error, as an OOM in the middle of an install would.
+  * a fatal error, as an OOM in the middle of an install would; with
+  * `graft.countfs.fatalStagedCreates`, so do creates of them (the
+  * writer's file creates).
   */
 class CountingFs extends FilterFileSystem(new RawLocalFileSystem {
   override def getUri: URI = CountingFs.Uri
 }) {
   private var fatalStagedOpens = false
+  private var fatalStagedCreates = false
 
   override def getScheme: String = CountingFs.Uri.getScheme
 
   override def initialize(name: URI, conf: Configuration): Unit = {
     super.initialize(name, conf)
     fatalStagedOpens = conf.getBoolean(CountingFs.FatalStagedOpens, false)
+    fatalStagedCreates = conf.getBoolean(CountingFs.FatalStagedCreates, false)
   }
 
+  private def staged(p: Path): Boolean =
+    p.toString.contains("/.stage/") && p.getName.endsWith(".parquet")
+
   private def opened(p: Path): Unit = {
-    if (fatalStagedOpens && p.toString.contains("/.stage/") && p.getName.endsWith(".parquet"))
-      throw new CountingFs.InjectedFatal(p)
+    if (fatalStagedOpens && staged(p)) throw new CountingFs.InjectedFatal("opening", p)
     CountingFs.count(CountingFs.opens, p)
+  }
+
+  override def create(
+      f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    if (fatalStagedCreates && staged(f)) throw new CountingFs.InjectedFatal("creating", f)
+    CountingFs.count(CountingFs.creates, f)
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
   }
 
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
@@ -53,10 +69,13 @@ class CountingFs extends FilterFileSystem(new RawLocalFileSystem {
 object CountingFs {
   val Uri: URI = URI.create("countfs:///")
   val FatalStagedOpens = "graft.countfs.fatalStagedOpens"
+  val FatalStagedCreates = "graft.countfs.fatalStagedCreates"
 
-  final class InjectedFatal(p: Path) extends VirtualMachineError(s"injected fatal error opening $p")
+  final class InjectedFatal(what: String, p: Path)
+    extends VirtualMachineError(s"injected fatal error $what $p")
 
   private val opens = new ConcurrentHashMap[String, AtomicInteger]()
+  private val creates = new ConcurrentHashMap[String, AtomicInteger]()
   private val lists = new ConcurrentHashMap[String, AtomicInteger]()
 
   private def count(m: ConcurrentHashMap[String, AtomicInteger], p: Path): Unit = {
@@ -67,10 +86,11 @@ object CountingFs {
   /** Storage options that route a namespace through this filesystem.
     * The cache stays off so every handle is built from the options of
     * the store asking for it. */
-  def options(fatalStagedOpens: Boolean = false): Map[String, String] =
+  def options(fatalStagedOpens: Boolean = false, fatalStagedCreates: Boolean = false): Map[String, String] =
     Map("fs.countfs.impl" -> classOf[CountingFs].getName,
       "fs.countfs.impl.disable.cache" -> "true") ++
-      (if (fatalStagedOpens) Map(FatalStagedOpens -> "true") else Map.empty)
+      (if (fatalStagedOpens) Map(FatalStagedOpens -> "true") else Map.empty) ++
+      (if (fatalStagedCreates) Map(FatalStagedCreates -> "true") else Map.empty)
 
   /** `dir` (a local path) as a `countfs` URL. */
   def url(dir: String): String = s"countfs://$dir"
@@ -83,6 +103,10 @@ object CountingFs {
   /** Opens per path below local directory `dir` during `body`. */
   def opensDuring[T](dir: String)(body: => T): (T, Map[String, Int]) =
     during(opens, dir)(body)
+
+  /** File creates per path below local directory `dir` during `body`. */
+  def createsDuring[T](dir: String)(body: => T): (T, Map[String, Int]) =
+    during(creates, dir)(body)
 
   /** Listings per path below local directory `dir` during `body`. */
   def listsDuring[T](dir: String)(body: => T): (T, Map[String, Int]) =

@@ -33,12 +33,21 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
-  /** Runs `body` with `fs`'s driver load bound at `bytes` (-1 pins
-    * loads to the Spark path), then restores the bound. */
+  /** Runs `body` with the driver bound of `fs`'s stores at `bytes` (-1
+    * pins loads, saves and compactions to the Spark path), then
+    * restores the bound. */
   def withDriverLoadBound[T](fs: graft.api.FeatureStore, bytes: Long)(body: => T): T = {
     val prev = fs.driverLoadBytes
     fs.driverLoadBytes = bytes
     try body
     finally fs.driverLoadBytes = prev
+  }
+
+  /** [[withDriverLoadBound]] for one store. */
+  def withDriverLoadBound[T](st: graft.store.TimeseriesStore, bytes: Long)(body: => T): T = {
+    val prev = st.driverLoadBytes
+    st.driverLoadBytes = bytes
+    try body
+    finally st.driverLoadBytes = prev
   }
 }

@@ -36,9 +36,11 @@ class StoreWriteSpec extends SparkSpec with JobCounting {
   }
 
   test("an ordinary save starts no emptiness probe: three jobs, first save or not") {
-    // the count a log-backed 10-day save has always cost; an emptiness
-    // probe in front of every batch would add a fourth job
+    // the count a log-backed 10-day save has always cost on the Spark
+    // path; an emptiness probe in front of every batch would add a
+    // fourth job
     val st = new TimeseriesStore(spark, tmpDir("graft-save-jobs"))
+    st.driverLoadBytes = -1
     val (_, first) = jobsOf(st.save("f", days("2024-01-01", 10, 0.0)))
     val (_, second) = jobsOf(st.save("f", days("2024-01-05", 10, 100.0)))
     assert(first.size == 3, s"jobs: $first")
