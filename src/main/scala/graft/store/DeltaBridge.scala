@@ -116,180 +116,26 @@ object DeltaBridge {
   private def encodePath(rel: String): String =
     new java.net.URI(null, null, rel, null).getRawPath.stripPrefix("/")
 
-  /** A file path in the exact string form Spark's `_metadata.file_path`
-    * reports (probed empirically — tools/PathProbe): URI-percent-encoded
-    * path with the AUTHORITY-LESS single-slash scheme form for local
-    * files (`file:/tmp/a%20b/x.parquet` — neither `Path.toString`,
-    * which keeps raw characters, nor `Path.toUri.toString`, which
-    * renders an empty authority as `file:///`). Used as the
-    * partition-value join key by both format bridges: a mismatched
-    * form silently drops every row of the affected file.
-    */
-  private[store] def scanPathKey(fs: org.apache.hadoop.fs.FileSystem, p: Path): String = {
-    val u = fs.makeQualified(p).toUri
-    val auth = u.getAuthority match { case "" => null; case a => a }
-    new java.net.URI(u.getScheme, auth, u.getPath, null, null).toString
-  }
-
-  /** Order-preserving bounded-parallel map for the bridges' per-file
-    * footer-stats reads: the reads are independent metadata IO
-    * (ParquetFileReader open/footer/close — Hadoop FileSystem is
-    * read-thread-safe), and the sequential loop was the measured
-    * bottleneck of describing a many-file tree (tools/BridgeProbe:
-    * ~15 ms/file → ~25 min at a 100k-file table). 16 daemon threads:
-    * enough to hide IO latency, bounded so a million-file tree cannot
-    * fork a thread storm.
-    */
-  private[graft] def parMapOrdered[A, B](items: Seq[A])(f: A => B): Seq[B] = {
-    if (items.size <= 1) return items.map(f)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      16, (r: Runnable) => { val t = new Thread(r); t.setDaemon(true); t })
-    try {
-      implicit val ec: scala.concurrent.ExecutionContextExecutorService =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      // every outcome comes back as a value: a Future body that dies of
-      // a FATAL error (OOM, VirtualMachineError) never completes its
-      // promise, so awaiting the bare futures would hang forever. The
-      // caller's thread rethrows the first failure in input order.
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(items.map(a => scala.concurrent.Future(
-          try Right(f(a)) catch { case t: Throwable => Left(t) }))),
-        scala.concurrent.duration.Duration.Inf)
-        .map {
-          case Right(b) => b
-          case Left(t)  => throw t
-        }
-    } finally pool.shutdown()
-  }
-
-  /** [[parMapOrdered]] with a per-worker Hadoop Configuration clone:
-    * Configuration's lazy resource loading has historically raced
-    * under concurrent first reads, so the 16 footer-read threads must
-    * never share one instance cold (tools/BridgeProbe pools copies for
-    * the same reason). Pool size matches the thread count; clones are
-    * amortized across all files, not paid per file.
-    */
-  private[graft] def parMapOrderedConf[A, B](
-      items: Seq[A], hc: Configuration)(f: (A, Configuration) => B): Seq[B] = {
-    if (items.size <= 1) return items.map(f(_, hc))
-    val confs = new java.util.concurrent.ConcurrentLinkedQueue[Configuration]()
-    (0 until 16).foreach(_ => confs.add(new Configuration(hc)))
-    parMapOrdered(items) { a =>
-      val c = confs.poll()
-      try f(a, c) finally confs.add(c)
-    }
-  }
-
-  /** Hadoop Configuration shipped by VALUE (write/readFields), so each
-    * Spark task deserializes its OWN copy — Configuration itself is not
-    * Serializable, and sharing one instance across concurrent tasks
-    * would reintroduce the lazy-load race the per-thread clones avoid.
-    */
-  private[graft] final class SerializableHadoopConf(
-      @transient var value: Configuration) extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject()
-      value.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new Configuration(false)
-      value.readFields(in)
-    }
-  }
-
-  /** Per-file metadata describe, shaped to the file count. Small syncs
-    * (the daily case: tens of files) use the bounded driver thread
-    * pool — job-launch overhead would dominate. Above
-    * `graft.bridge.describeJobThreshold` (default 64 — an initial
-    * export of a 10k-100k-file table would stall the driver for
-    * minutes at the measured ~15 ms/footer, and the pool tops out at
-    * 16× while a cluster has thousands of cores) the reads run as ONE
-    * Spark job over the executors, results collected in input order.
-    * Collecting is safe by construction: each result is a manifest
-    * entry's worth of stats (KBs per FILE, never per row) — the same
-    * driver-resident state every table-format planner keeps.
-    */
-  private[graft] def describeFiles[A, B](
-      spark: SparkSession, hc: Configuration, items: Seq[A])(
-      f: (A, Configuration) => B)(
-      implicit ta: scala.reflect.ClassTag[A],
-      tb: scala.reflect.ClassTag[B]): Seq[B] = {
-    val threshold = spark.conf.getOption("graft.bridge.describeJobThreshold")
-      .map(_.toInt).getOrElse(64)
-    if (items.size < math.max(threshold, 2))
-      return parMapOrderedConf(items, hc)(f)
-    val ser = new SerializableHadoopConf(hc)
-    val slices = math.min(items.size, spark.sparkContext.defaultParallelism * 2)
-    spark.sparkContext.parallelize(items.zipWithIndex, slices)
-      .map { case (a, i) => (i, f(a, ser.value)) }
-      .collect().sortBy(_._1).map(_._2).toSeq
-  }
-
   private def decodePath(enc: String): String =
     new java.net.URI(enc).getPath
 
   /** Per-file Delta `stats` JSON from ONE footer read: exact row count
-    * always; min/max/nullCount for top-level numeric primitives
-    * (INT32/INT64 without temporal annotation, FLOAT, DOUBLE). This is
-    * what downstream Delta readers use for data skipping and count(*)
-    * pushdown — numRecords alone answers COUNT from the log with zero
-    * data IO. Temporal/string/nested columns are deliberately omitted:
-    * their stats need per-reader serialization rules (ISO forms,
-    * truncation semantics) and a wrong stat causes silent row loss in
-    * a skipping reader, while a missing stat only costs pruning.
+    * always; min/max/nullCount for the [[FileMeta.ColumnStats.plainNumeric]]
+    * columns. This is what downstream Delta readers use for data
+    * skipping and count(*) pushdown — numRecords alone answers COUNT
+    * from the log with zero data IO. An unreadable footer gives no
+    * stats: a file without stats is never skipped.
     */
-  private def fileStats(p: Path, hc: Configuration): Option[String] =
+  private def statsJson(p: Path, hc: Configuration): Option[String] =
     try {
-      var rows = 0L
-      val mins = mutable.LinkedHashMap.empty[String, Any]
-      val maxs = mutable.LinkedHashMap.empty[String, Any]
-      val nulls = mutable.LinkedHashMap.empty[String, Long]
-      val bad = mutable.Set.empty[String] // any block without stats poisons the column
-      ParquetFooter.read(p, hc).getBlocks.forEach { b =>
-        rows += b.getRowCount
-        b.getColumns.forEach { cc =>
-          val path = cc.getPath.toArray
-          if (path.length == 1) {
-            val name = path.head
-            val pt = cc.getPrimitiveType
-            import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-            val numeric = (pt.getPrimitiveTypeName match {
-              case INT32 | INT64 | FLOAT | DOUBLE => true
-              case _ => false
-            }) && (pt.getLogicalTypeAnnotation match {
-              case null => true
-              case _: org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation => true
-              case _ => false // dates, timestamps, decimals: skip
-            })
-            val st = cc.getStatistics
-            if (!numeric || st == null || !st.hasNonNullValue || st.getNumNulls < 0)
-              bad += name
-            else {
-              def asNum(v: AnyRef): Any = v match {
-                case n: java.lang.Number => n
-                case other => other.toString
-              }
-              val mn = asNum(st.genericGetMin.asInstanceOf[AnyRef])
-              val mx = asNum(st.genericGetMax.asInstanceOf[AnyRef])
-              def lt(a: Any, b: Any): Boolean = (a, b) match {
-                case (x: java.lang.Number, y: java.lang.Number) =>
-                  x.doubleValue < y.doubleValue
-                case _ => false
-              }
-              if (!mins.contains(name) || lt(mn, mins(name))) mins(name) = mn
-              if (!maxs.contains(name) || lt(maxs(name), mx)) maxs(name) = mx
-              nulls(name) = nulls.getOrElse(name, 0L) + st.getNumNulls
-            }
-          }
-        }
-      }
-      bad.foreach { n => mins.remove(n); maxs.remove(n); nulls.remove(n) }
+      val s = FileMeta.stats(p, hc)
+      val num = s.columns.filter(_._2.plainNumeric)
       Some(mapper.writeValueAsString(Map(
-        "numRecords" -> rows,
-        "minValues" -> mins.toMap, "maxValues" -> maxs.toMap,
-        "nullCount" -> nulls.toMap)))
-    } catch { case NonFatal(_) => None } // a file without stats is never skipped
+        "numRecords" -> s.rows,
+        "minValues" -> num.map { case (n, c) => n -> c.min }.toMap,
+        "maxValues" -> num.map { case (n, c) => n -> c.max }.toMap,
+        "nullCount" -> num.map { case (n, c) => n -> c.nulls }.toMap)))
+    } catch { case NonFatal(_) => None }
 
   /** Write `_delta_log/00000000000000000000.json` describing every
     * `*.parquet` data file already under `dir`. Partition columns and
@@ -310,37 +156,12 @@ object DeltaBridge {
     val hc = if (conf == null) spark.sessionState.newHadoopConf() else conf
     val root = new Path(dir)
     val fs = root.getFileSystem(hc)
-    val rootUri = fs.makeQualified(root).toUri.getPath.stripSuffix("/")
 
-    // every data file, with its path RELATIVE to the table root
-    val files = mutable.ArrayBuffer.empty[(String, Long, Long)] // (rel, size, mtime)
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val p = st.getPath.toUri.getPath
-      val rel = p.stripPrefix(rootUri).stripPrefix("/")
-      // exclude the log DIRECTORY itself, not a name prefix: a data
-      // partition directory named _delta_logs=x/ can't occur (leading
-      // '_' is already skipped) but the directory-vs-prefix distinction
-      // is kept explicit to match IcebergBridge.writeTable
-      if (rel.endsWith(".parquet") && !rel.startsWith(LogDirName + "/") &&
-        !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
-        files += ((rel, st.getLen, st.getModificationTime))
-    }
-    require(files.nonEmpty, s"no parquet data files under $dir to describe")
-    val sorted = files.sortBy(_._1).toSeq
-
-    // partition columns: ordered k=v directory keys of the first file;
-    // every file must agree (exportSnapshot guarantees one layout)
-    def partsOf(rel: String): Seq[(String, String)] =
-      rel.split('/').dropRight(1).toSeq.flatMap { seg =>
-        val i = seg.indexOf('=')
-        if (i > 0) Some(seg.substring(0, i) -> seg.substring(i + 1)) else None
-      }
-    val partCols = partsOf(sorted.head._1).map(_._1)
-    sorted.foreach { case (rel, _, _) =>
-      require(partsOf(rel).map(_._1) == partCols,
-        s"inconsistent partition layout: $rel vs columns $partCols") }
+    // every data file, with its path RELATIVE to the table root, and
+    // the partition columns: the k=v directory keys every file shares
+    // (exportSnapshot lays down one layout)
+    val sorted = FileMeta.dataFiles(fs, root, LogDirName)
+    val partCols = FileMeta.partitionKeys(sorted.map(_._1))
 
     // data schema from one footer; full schema appends partition cols
     val dataSchema = spark.read.parquet(
@@ -373,13 +194,13 @@ object DeltaBridge {
       "partitionColumns" -> partCols,
       "configuration" -> Map.empty[String, String],
       "createdTime" -> maxMtime))
-    actions ++= describeFiles(spark, hc, sorted) { case ((rel, size, mtime), c) =>
+    actions ++= FileMeta.describeFiles(spark, hc, sorted) { case ((rel, size, mtime), c) =>
       val base = Map[String, Any](
         "path" -> encodePath(rel),
-        "partitionValues" -> partsOf(rel).toMap,
+        "partitionValues" -> FileMeta.hiveParts(rel).toMap,
         "size" -> size, "modificationTime" -> mtime,
         "dataChange" -> true)
-      val withStats = fileStats(new Path(root, rel), c)
+      val withStats = statsJson(new Path(root, rel), c)
         .map(s => base + ("stats" -> s)).getOrElse(base)
       Map("add" -> withStats): Map[String, Any]
     }
@@ -653,13 +474,8 @@ object DeltaBridge {
         "only syncs unmapped exports")
     val version = state.latestVersion + 1
 
-    def partsOf(rel: String): Seq[(String, String)] =
-      rel.split('/').dropRight(1).toSeq.flatMap { seg =>
-        val i = seg.indexOf('=')
-        if (i > 0) Some(seg.substring(0, i) -> seg.substring(i + 1)) else None
-      }
     addRel.foreach { rel =>
-      require(partsOf(rel).map(_._1) == state.partCols,
+      require(FileMeta.hiveParts(rel).map(_._1) == state.partCols,
         s"sync add $rel does not match partition columns ${state.partCols}")
       require(!state.live.contains(rel), s"sync add $rel is already live")
     }
@@ -667,10 +483,10 @@ object DeltaBridge {
       require(state.live.contains(rel), s"sync remove $rel is not live")
     }
 
-    val addSt = describeFiles(spark, hc, addRel.sorted) { (rel, c) =>
+    val addSt = FileMeta.describeFiles(spark, hc, addRel.sorted) { (rel, c) =>
       val p = new Path(root, rel)
       val st = p.getFileSystem(c).getFileStatus(p)
-      (rel, st.getLen, st.getModificationTime, fileStats(p, c))
+      (rel, st.getLen, st.getModificationTime, statsJson(p, c))
     }
     val ts = (addSt.map(_._3) ++ state.live.values.map(_.modificationTime)).max
 
@@ -682,7 +498,7 @@ object DeltaBridge {
     addSt.foreach { case (rel, size, mtime, stats) =>
       val base = Map[String, Any](
         "path" -> encodePath(rel),
-        "partitionValues" -> partsOf(rel).toMap,
+        "partitionValues" -> FileMeta.hiveParts(rel).toMap,
         "size" -> size, "modificationTime" -> mtime,
         "dataChange" -> true)
       actions += Map("add" -> stats.map(s => base + ("stats" -> s)).getOrElse(base))
@@ -967,55 +783,31 @@ object DeltaBridge {
     // positions — so each vector decodes in an EXECUTOR task
     // ([[DeletionVectors.positions]]), expanding straight into join
     // rows that never materialize on the driver, then ONE left-anti
-    // join on (_metadata.file_path, _metadata.row_index) — the same
-    // plan shape as Iceberg position deletes, row-scale on the anti
-    // side so AQE can pick the join strategy.
+    // join ([[FileMeta.dropPositions]]) — the same plan shape as
+    // Iceberg position deletes.
     val dvAdds = adds.filter(_.dv.isDefined)
     val data =
       if (dvAdds.isEmpty) dataScanned
       else {
         val rootStr = root.toString
-        val ser = new SerializableHadoopConf(hc)
+        val ser = new FileMeta.SerializableHadoopConf(hc)
         val descs = dvAdds.map(a =>
-          (scanPathKey(fs, new Path(root, a.path)), a.dv.get))
+          (FileMeta.scanPathKey(fs, new Path(root, a.path)), a.dv.get))
         val delRows = spark.sparkContext
           .parallelize(descs, math.min(descs.size, 256).max(1))
           .flatMap { case (key, d) =>
             DeletionVectors.positions(d, rootStr, ser.value)
               .iterator.map(p => Row(key, p))
           }
-        val delDf = spark.createDataFrame(delRows, StructType(Seq(
+        FileMeta.dropPositions(dataScanned, spark.createDataFrame(delRows, StructType(Seq(
           StructField("__file", StringType, nullable = false),
-          StructField("__pos", LongType, nullable = false))))
-        dataScanned.withColumn("__pos", col("_metadata.row_index"))
-          .join(delDf, Seq("__file", "__pos"), "left_anti")
-          .drop("__pos")
+          StructField("__pos", LongType, nullable = false)))))
       }
-    if (partCols.isEmpty)
-      return data.select(schema.fields.toIndexedSeq.map(f =>
-        col(scanName(f.name)).as(f.name)): _*)
-
-    // LEFT join + per-row assert, not an inner join: a drift in the
-    // empirically-probed _metadata.file_path form must fail LOUDLY,
-    // never silently drop a file's rows (see IcebergBridge.readPruned)
-    val pvSchema = StructType((StructField("__file", StringType) +:
-      partCols.map(c => StructField(s"__pv_$c", StringType, nullable = true))) :+
-      StructField("__pv_ok", BooleanType, nullable = false))
-    val pvRows = adds.map(a => Row.fromSeq(
-      (scanPathKey(fs, new Path(root, a.path)) +:
-        partCols.map(c => a.partitionValues.getOrElse(physOf.getOrElse(c, c), null))) :+ true))
-    val pvDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(pvRows, 1), pvSchema)
-
-    val joined = data.join(broadcast(pvDf), Seq("__file"), "left")
-      .filter(isnull(assert_true(col("__pv_ok").isNotNull, concat(
-        lit("DeltaBridge: scanned file missing from the log partition map " +
-          "(has Spark's _metadata.file_path form changed?): "),
-        col("__file")))))
-    joined.select(schema.fields.toIndexedSeq.map { f =>
-      if (partCols.contains(f.name))
-        col(s"__pv_${f.name}").cast(f.dataType).as(f.name)
-      else col(scanName(f.name)).as(f.name)
-    }: _*)
+    FileMeta.fillPartitions(spark, data, schema, partCols,
+      adds.map(a => FileMeta.scanPathKey(fs, new Path(root, a.path)) ->
+        partCols.map(c => a.partitionValues.getOrElse(physOf.getOrElse(c, c), null))),
+      scanName,
+      "DeltaBridge: scanned file missing from the log partition map " +
+        "(has Spark's _metadata.file_path form changed?): ")
   }
 }

@@ -282,85 +282,27 @@ object IcebergBridge {
   // Per-file stats from one parquet footer read
   // ---------------------------------------------------------------
 
-  private final case class ColStats(
-      min: Any, max: Any, nulls: Long, values: Long, typeName: String)
-
-  /** Exact row count always; per-column bounds for top-level
-    * non-temporal numeric primitives (the [[DeltaBridge.fileStats]]
-    * doctrine: a wrong bound loses rows in a skipping reader, a
-    * missing one only costs pruning).
-    */
-  private def footerStats(p: Path, hc: Configuration): (Long, Map[String, ColStats]) = {
-    var rows = 0L
-    val acc = mutable.LinkedHashMap.empty[String, ColStats]
-    val bad = mutable.Set.empty[String]
-    ParquetFooter.read(p, hc).getBlocks.forEach { b =>
-      rows += b.getRowCount
-      b.getColumns.forEach { cc =>
-        val path = cc.getPath.toArray
-        if (path.length == 1) {
-          val name = path.head
-          val pt = cc.getPrimitiveType
-          import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-          val tn = pt.getPrimitiveTypeName match {
-            case INT32 => "int"
-            case INT64 => "long"
-            case FLOAT => "float"
-            case DOUBLE => "double"
-            case _ => null
-          }
-          val numeric = tn != null && (pt.getLogicalTypeAnnotation match {
-            case null => true
-            case _: org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation => true
-            case _ => false // dates/timestamps/decimals: skip bounds
-          })
-          val st = cc.getStatistics
-          if (!numeric || st == null || !st.hasNonNullValue || st.getNumNulls < 0)
-            bad += name
-          else {
-            val mn = st.genericGetMin.asInstanceOf[java.lang.Number]
-            val mx = st.genericGetMax.asInstanceOf[java.lang.Number]
-            acc.get(name) match {
-              case None =>
-                acc(name) = ColStats(mn, mx, st.getNumNulls, b.getRowCount, tn)
-              case Some(prev) =>
-                // EXACT comparison per physical type: int64 values
-                // above 2^53 collapse under a double round-trip and
-                // a wrong bound silently loses rows in a skipping
-                // reader — the one failure this file must never have
-                def lt(a: Any, b0: Any): Boolean = tn match {
-                  case "int" | "long" =>
-                    a.asInstanceOf[java.lang.Number].longValue() <
-                      b0.asInstanceOf[java.lang.Number].longValue()
-                  case _ =>
-                    a.asInstanceOf[java.lang.Number].doubleValue() <
-                      b0.asInstanceOf[java.lang.Number].doubleValue()
-                }
-                acc(name) = ColStats(
-                  if (lt(mn, prev.min)) mn else prev.min,
-                  if (lt(prev.max, mx)) mx else prev.max,
-                  prev.nulls + st.getNumNulls, prev.values + b.getRowCount, tn)
-            }
-          }
-        }
+  /** The Iceberg stats of a file's [[FileMeta.ColumnStats.plainNumeric]]
+    * columns that have a field id: (field id, null count, lower bound,
+    * upper bound) sorted by id, the bounds in Iceberg single-value
+    * serialization (spec "Appendix D": little-endian fixed-width
+    * bytes). Plain arrays, so the stats ship from an executor. */
+  private def bounds(
+      s: FileMeta.Stats, fieldIds: Map[String, Int]): Seq[(Int, Long, Array[Byte], Array[Byte])] = {
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    def bytes(c: FileMeta.ColumnStats, v: Any): Array[Byte] = {
+      val n = v.asInstanceOf[java.lang.Number]
+      val bb = c.physical match {
+        case INT32 => ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN).putInt(n.intValue())
+        case INT64 => ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN).putLong(n.longValue())
+        case FLOAT => ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN).putFloat(n.floatValue())
+        case DOUBLE => ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN).putDouble(n.doubleValue())
       }
+      bb.array()
     }
-    (rows, (acc -- bad).toMap)
-  }
-
-  /** Iceberg single-value serialization: little-endian fixed-width
-    * bytes for numeric primitives (spec "Appendix D: Single-value
-    * serialization").
-    */
-  private def boundBytes(v: Any, typeName: String): ByteBuffer = {
-    val n = v.asInstanceOf[java.lang.Number]
-    val bb = typeName match {
-      case "int" => ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN).putInt(n.intValue())
-      case "long" => ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN).putLong(n.longValue())
-      case "float" => ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN).putFloat(n.floatValue())
-      case "double" => ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN).putDouble(n.doubleValue())
-    }
-    bb.flip(); bb
+    s.columns.collect { case (n, c) if c.plainNumeric && fieldIds.contains(n) =>
+      (fieldIds(n), c.nulls, bytes(c, c.min), bytes(c, c.max))
+    }.sortBy(_._1)
   }
 
   // ---------------------------------------------------------------
@@ -401,19 +343,20 @@ object IcebergBridge {
   }
 
   /** The ADDED data_file record both writers share: footer stats read
-    * from the file (by [[footerStats]], possibly on an executor —
+    * from the file (by [[bounds]], possibly on an executor —
     * everything here is driver-side Avro assembly over the
     * serializable stats), partition struct filled from hive segments,
     * stat maps keyed by field id — export and sync must emit IDENTICAL
-    * entry shapes or readers see two dialects of the same table.
+    * entry shapes or readers see two dialects of the same table. Every
+    * row of a file is a value of each column, so the value counts are
+    * the row count.
     */
   private def dataFileRecord(
       dataFileSchema: Schema,
       location: String, rel: String,
       partValues: Seq[(String, Any)],
-      fieldIds: Map[String, Int],
       rows: Long, size: Long,
-      stats: Map[String, ColStats]): GenericData.Record = {
+      stats: Seq[(Int, Long, Array[Byte], Array[Byte])]): GenericData.Record = {
     val partSchema = dataFileSchema.getField("partition").schema()
     val part = new GenericData.Record(partSchema)
     partValues.foreach { case (k, v) => part.put(k, v) }
@@ -424,21 +367,13 @@ object IcebergBridge {
     df.put("partition", part)
     df.put("record_count", rows)
     df.put("file_size_in_bytes", size)
-    val statEntries = stats.toSeq
-      .flatMap { case (n, s) => fieldIds.get(n).map(_ -> s) }.sortBy(_._1)
-    if (statEntries.nonEmpty) {
-      df.put("value_counts", kvArray(
-        dataFileSchema.getField("value_counts").schema(),
-        statEntries.map { case (id, s) => id -> (s.values: Any) }))
-      df.put("null_value_counts", kvArray(
-        dataFileSchema.getField("null_value_counts").schema(),
-        statEntries.map { case (id, s) => id -> (s.nulls: Any) }))
-      df.put("lower_bounds", kvArray(
-        dataFileSchema.getField("lower_bounds").schema(),
-        statEntries.map { case (id, s) => id -> (boundBytes(s.min, s.typeName): Any) }))
-      df.put("upper_bounds", kvArray(
-        dataFileSchema.getField("upper_bounds").schema(),
-        statEntries.map { case (id, s) => id -> (boundBytes(s.max, s.typeName): Any) }))
+    if (stats.nonEmpty) {
+      def put(field: String, value: ((Int, Long, Array[Byte], Array[Byte])) => Any): Unit =
+        df.put(field, kvArray(dataFileSchema.getField(field).schema(), stats.map(s => s._1 -> value(s))))
+      put("value_counts", _ => rows)
+      put("null_value_counts", _._2)
+      put("lower_bounds", s => ByteBuffer.wrap(s._3))
+      put("upper_bounds", s => ByteBuffer.wrap(s._4))
     }
     df
   }
@@ -461,35 +396,9 @@ object IcebergBridge {
     val hc = if (conf == null) spark.sessionState.newHadoopConf() else conf
     val root = new Path(dir)
     val fs = root.getFileSystem(hc)
-    val rootUri = fs.makeQualified(root).toUri.getPath.stripSuffix("/")
     val location = fs.makeQualified(root).toString.stripSuffix("/")
-
-    val files = mutable.ArrayBuffer.empty[(String, Long, Long)] // (rel, size, mtime)
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val p = st.getPath.toUri.getPath
-      val rel = p.stripPrefix(rootUri).stripPrefix("/")
-      // the exclusion must be the metadata DIRECTORY itself, not a
-      // name prefix: a data partition directory named metadata_id=3/
-      // would otherwise silently drop out of the manifest — missing
-      // rows in every Iceberg reader
-      if (rel.endsWith(".parquet") && !rel.startsWith(MetaDirName + "/") &&
-        !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
-        files += ((rel, st.getLen, st.getModificationTime))
-    }
-    require(files.nonEmpty, s"no parquet data files under $dir to describe")
-    val sorted = files.sortBy(_._1).toSeq
-
-    def partsOf(rel: String): Seq[(String, String)] =
-      rel.split('/').dropRight(1).toSeq.flatMap { seg =>
-        val i = seg.indexOf('=')
-        if (i > 0) Some(seg.substring(0, i) -> seg.substring(i + 1)) else None
-      }
-    val partCols = partsOf(sorted.head._1).map(_._1)
-    sorted.foreach { case (rel, _, _) =>
-      require(partsOf(rel).map(_._1) == partCols,
-        s"inconsistent partition layout: $rel vs columns $partCols") }
+    val sorted = FileMeta.dataFiles(fs, root, MetaDirName)
+    val partCols = FileMeta.partitionKeys(sorted.map(_._1))
     if (spec.nonEmpty) {
       require(spec.map(_.name) == partCols,
         s"spec fields ${spec.map(_.name)} do not match the tree's hive keys $partCols")
@@ -546,20 +455,18 @@ object IcebergBridge {
     val entrySchema = manifestEntrySchema(partTypes)
     val dataFileSchema = entrySchema.getField("data_file").schema()
     // footer reads thread-pooled or as ONE Spark job over executors,
-    // shaped to the file count (DeltaBridge.describeFiles): the
-    // sequential loop was ~15 ms/file — the dominant term describing a
-    // many-file tree (tools/BridgeProbe); Avro assembly stays on the
-    // driver over the serializable (rows, stats) pairs
-    val descr = DeltaBridge.describeFiles(spark, hc, sorted) { case ((rel, size, _), c) =>
-      val (rows, stats) = footerStats(new Path(root, rel), c)
-      (rel, size, rows, stats)
+    // shaped to the file count (FileMeta.describeFiles); Avro assembly
+    // stays on the driver over the serializable (rows, stats) pairs
+    val descr = FileMeta.describeFiles(spark, hc, sorted) { case ((rel, size, _), c) =>
+      val stats = FileMeta.stats(new Path(root, rel), c)
+      (rel, size, stats.rows, bounds(stats, fieldIds))
     }
     val built = descr.map { case (rel, size, rows, stats) =>
-      val pvTyped = partsOf(rel).map { case (k, v) =>
+      val pvTyped = FileMeta.hiveParts(rel).map { case (k, v) =>
         k -> transformedValue(effSpec.find(_._1 == k).get._2, v, rel)
       }
       val df = dataFileRecord(
-        dataFileSchema, location, rel, pvTyped, fieldIds, rows, size, stats)
+        dataFileSchema, location, rel, pvTyped, rows, size, stats)
       val e = new GenericData.Record(entrySchema)
       e.put("status", 1) // ADDED
       e.put("snapshot_id", snapshotId)
@@ -711,9 +618,7 @@ object IcebergBridge {
         "deletes applied) before syncing")
     val partCols = prevState.partCols
 
-    def relOf(p: String): String =
-      if (p.startsWith(location.stripSuffix("/") + "/"))
-        p.substring(location.stripSuffix("/").length + 1) else p
+    val relOf = FileMeta.relativeTo(location) _
     val removedSet = removedFiles.map(relOf).toSet
     val carried = prevState.files.filterNot(f => removedSet(relOf(f.path)))
     val carriedRel = carried.map(f => relOf(f.path)).toSet
@@ -781,12 +686,7 @@ object IcebergBridge {
     val effSchemaId = evolved.map(_._2).getOrElse(curSchemaId)
     val fieldIds: Map[String, Int] = effFields.map(f => f._1 -> f._2).toMap
 
-    def partsOf(rel: String): Seq[(String, String)] =
-      rel.split('/').dropRight(1).toSeq.flatMap { seg =>
-        val i = seg.indexOf('=')
-        if (i > 0) Some(seg.substring(0, i) -> seg.substring(i + 1)) else None
-      }
-    freshNew.foreach(rel => require(partsOf(rel).map(_._1) == partCols,
+    freshNew.foreach(rel => require(FileMeta.hiveParts(rel).map(_._1) == partCols,
       s"appendSnapshot: $rel does not match partition columns $partCols"))
 
     val entrySchema = manifestEntrySchema(partCols.map(_ -> "\"string\""))
@@ -794,16 +694,16 @@ object IcebergBridge {
     val partSchema = dataFileSchema.getField("partition").schema()
     var addedRows = 0L
     var existingRows = 0L
-    val descrNew = DeltaBridge.describeFiles(spark, hc, freshNew) { (rel, c) =>
+    val descrNew = FileMeta.describeFiles(spark, hc, freshNew) { (rel, c) =>
       val p = new Path(root, rel)
       val fsl = p.getFileSystem(c)
       require(fsl.exists(p), s"appendSnapshot: new file $rel not under $dir")
-      val (rows, stats) = footerStats(p, c)
-      (rel, fsl.getFileStatus(p).getLen, rows, stats)
+      val stats = FileMeta.stats(p, c)
+      (rel, fsl.getFileStatus(p).getLen, stats.rows, bounds(stats, fieldIds))
     }
     val builtNew = descrNew.map { case (rel, size, rows, stats) =>
       val df = dataFileRecord(
-        dataFileSchema, location, rel, partsOf(rel), fieldIds, rows, size, stats)
+        dataFileSchema, location, rel, FileMeta.hiveParts(rel), rows, size, stats)
       val e = new GenericData.Record(entrySchema)
       e.put("status", 1) // ADDED
       e.put("snapshot_id", snapshotId)
@@ -1019,8 +919,7 @@ object IcebergBridge {
     val fs = root.getFileSystem(hc)
     val loc = jStr(readMetaNode(fs, root)._1, "location").stripSuffix("/")
     val state = loadState(spark, fs, root)
-    def relOf(p: String): String =
-      if (p.startsWith(loc + "/")) p.substring(loc.length + 1) else p
+    val relOf = FileMeta.relativeTo(loc) _
     val liveRel = state.files.map(f => relOf(f.path)).toSet
     deletes.foreach { case (rel, pos) =>
       require(liveRel(rel),
@@ -1116,8 +1015,7 @@ object IcebergBridge {
     require(state.specFields.forall(f => canonTransform(f.transform) == "identity"),
       "compactDeletes: identity-partitioned bridge tables only")
     val loc = state.location.stripSuffix("/")
-    def relOf(p: String): String =
-      if (p.startsWith(loc + "/")) p.substring(loc.length + 1) else p
+    val relOf = FileMeta.relativeTo(loc) _
     val posDeletes = state.deleteFiles.filter(_.equalityIds.isEmpty)
     val eqDeletes = state.deleteFiles.filter(_.equalityIds.nonEmpty)
     // position-delete targets: rel path -> max delete sequence naming it
@@ -1930,12 +1828,12 @@ object IcebergBridge {
           "rather than reading nulls")
     }
     // join key: the file path in the exact form Spark's scan reports
-    // (DeltaBridge.scanPathKey — URI-encoded, authority-less scheme):
+    // (FileMeta.scanPathKey — URI-encoded, authority-less scheme):
     // a raw Path.toString key would match nothing for a partition
     // value with a space/'#'/'%' and silently drop the file's rows.
     // Unique per file by the duplicate-add refusal above.
     val qualified = files.zip(paths).map { case (f, p) =>
-      (DeltaBridge.scanPathKey(fs, new Path(p)), f)
+      (FileMeta.scanPathKey(fs, new Path(p)), f)
     }
     val data0 = spark.read.schema(dataSchema).parquet(paths: _*)
       .withColumn("__file", col("_metadata.file_path"))
@@ -1959,14 +1857,11 @@ object IcebergBridge {
     var data = data0
     if (posDeletes.nonEmpty) {
       // POSITION deletes: drop rows by (data file, row ordinal) via
-      // one left-anti join on (_metadata.file_path,
-      // _metadata.row_index); applies iff deleteSeq >= dataSeq. The
-      // spec's partition scope is implied by the file_path equality (a
-      // well-formed writer's position delete only names files whose
-      // partition its own tuple covers), so no explicit gate here. The
-      // anti-join side is row-scale (one row per deleted position),
-      // so it stays a plain join for AQE to shape — never a forced
-      // driver-side collect.
+      // one left-anti join ([[FileMeta.dropPositions]]); applies iff
+      // deleteSeq >= dataSeq. The spec's partition scope is implied by
+      // the file_path equality (a well-formed writer's position delete
+      // only names files whose partition its own tuple covers), so no
+      // explicit gate here.
       val delSchema = StructType(Seq(
         StructField("file_path", StringType),
         StructField("pos", LongType)))
@@ -1978,9 +1873,7 @@ object IcebergBridge {
         .join(broadcast(mapDf), col("file_path") === col("__dfile"))
         .filter(col("__delseq") >= col("__dataseq"))
         .select(col("__file"), col("pos").as("__pos"))
-      data = data.withColumn("__pos", col("_metadata.row_index"))
-        .join(dels, Seq("__file", "__pos"), "left_anti")
-        .drop("__pos")
+      data = FileMeta.dropPositions(data, dels)
     }
     if (eqDeletes.nonEmpty) {
       // EQUALITY deletes: a data row dies when every equality column
@@ -2027,33 +1920,13 @@ object IcebergBridge {
       }
       data = data.drop("__dataseq").drop("__partkey")
     }
-    if (partCols.isEmpty) return data.drop("__file")
-
-    // LEFT join + per-row assert, not an inner join: the join key is
-    // the empirically-probed _metadata.file_path string form, and a
-    // future Spark change to SparkPath rendering must fail LOUDLY —
-    // an inner join would silently drop whole files' rows instead.
-    // The marker column distinguishes "no match" from a legitimately
-    // null partition value.
-    val pvSchema = StructType((StructField("__file", StringType) +:
-      partCols.map(c => StructField(s"__pv_$c", StringType, nullable = true))) :+
-      StructField("__pv_ok", BooleanType, nullable = false))
     // partitionValues is keyed by spec-field NAME; identityFill maps
     // each to the SOURCE column the output schema names
-    val pvRows = qualified.map { case (q, f) => Row.fromSeq(
-      (q +: state.identityFill.map { case (fieldName, _) =>
-        f.partitionValues.getOrElse(fieldName, null) }) :+ true) }
-    val pvDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(pvRows, 1), pvSchema)
-    val joined = data.join(broadcast(pvDf), Seq("__file"), "left")
-      .filter(isnull(assert_true(col("__pv_ok").isNotNull, concat(
-        lit("IcebergBridge: scanned file missing from the manifest partition " +
-          "map (has Spark's _metadata.file_path form changed?): "),
-        col("__file")))))
-    joined.select(schema.fields.toIndexedSeq.map { f =>
-      if (partCols.contains(f.name))
-        col(s"__pv_${f.name}").cast(f.dataType).as(f.name)
-      else col(f.name)
-    }: _*)
+    FileMeta.fillPartitions(spark, data, schema, partCols,
+      qualified.map { case (q, f) =>
+        q -> state.identityFill.map { case (fieldName, _) => f.partitionValues.getOrElse(fieldName, null) } },
+      identity,
+      "IcebergBridge: scanned file missing from the manifest partition " +
+        "map (has Spark's _metadata.file_path form changed?): ")
   }
 }

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -555,9 +556,6 @@ class TimeseriesStore(
     // usable footer statistics (deprecated), and the per-file time
     // bounds below are what make log-metadata FILE skipping possible.
     // Scoped set/restore so caller sessions keep their own setting.
-    val tsKey = "spark.sql.parquet.outputTimestampType"
-    val prevTs = spark.conf.get(tsKey)
-    spark.conf.set(tsKey, "TIMESTAMP_MICROS")
     // Writer parallelism on SMALL batches (guide §2.2/§6): AQE's
     // partition coalescer targets advisoryPartitionSizeInBytes (64 MB),
     // so a micro-batch-sized append collapses the ranged exchange to ONE
@@ -573,22 +571,14 @@ class TimeseriesStore(
     // unaffected (their bytes/parallelism exceeds the advisory cap,
     // which still bounds the target). Scoped set/restore like the
     // timestamp type above.
-    val minKey = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    val prevMin = spark.conf.getOption(minKey)
-    spark.conf.set(minKey, "16k")
     // preLaid: the caller already chose the row layout (a z-order
     // clustered rewrite) — re-ranging by (partition, time) here would
     // destroy exactly the multi-dimensional locality being installed
     val laid = if (preLaid) normalized else layoutForWrite(normalized, outPartitions)
-    try laid.write
-      .options(storageOptions).option("compression", "snappy")
-      .partitionBy("partition").parquet(stage.toString)
-    finally {
-      spark.conf.set(tsKey, prevTs)
-      prevMin match {
-        case Some(v) => spark.conf.set(minKey, v)
-        case None    => spark.conf.unset(minKey)
-      }
+    withSessionConf(TimestampMicros, "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16k") {
+      laid.write
+        .options(storageOptions).option("compression", "snappy")
+        .partitionBy("partition").parquet(stage.toString)
     }
     // per-file bloom build BEFORE the renames (one Spark job over the
     // staged tree, page-cached bytes): rewrites (DELETE/UPDATE/merge/
@@ -600,6 +590,22 @@ class TimeseriesStore(
         try FileBloom.buildForStage(spark, stage.toString, bcol, bits, k)
         catch { case NonFatal(_) => Map.empty }
       case _ => Map.empty
+    }
+  }
+
+  private val TimestampMicros = "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"
+
+  /** `body` with the session confs `kv` set; afterwards each key the
+    * session had set gets its value back and every other key is unset.
+    * (`RuntimeConfig.get` answers a registered key's default, so putting
+    * that back would pin a value the session never chose, and change
+    * `spark.conf.getAll`, which keys the [[driverCached]] readers.) */
+  private def withSessionConf[T](kv: (String, String)*)(body: => T): T = {
+    val prev = kv.map { case (k, _) => k -> Option.when(spark.sessionState.conf.contains(k))(spark.conf.get(k)) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
     }
   }
 
@@ -655,12 +661,11 @@ class TimeseriesStore(
     val blooms = write(stage)
     val f = fs(url)
     val featureRoot = new Path(featurePath(name))
-    // per-file footer read + install rename, PARALLELIZED on the bridges'
-    // bounded driver pool (guide §1/§5: the sequential loop was the
-    // measured driver-side gap after every staged write — ~10 ms/file of
-    // footer IO plus a rename round-trip, ×(files per append) on the
-    // commit path of every save/stream micro-batch; on an object store
-    // each round-trip is 10-100× worse). The per-partition-dir mkdirs +
+    // per-file footer read + install rename, PARALLELIZED on the bounded
+    // driver pool of FileMeta (guide §1/§5: a footer read and a rename
+    // round-trip per file, ×(files per append) on the commit path of
+    // every save/stream micro-batch; on an object store each round-trip
+    // is 10-100× a local one). The per-partition-dir mkdirs +
     // listing runs on the pool too, one task per dir (a local mkdirs
     // forks a chmod, ~3 ms each — serial, a 30-day save spent ~90 ms
     // there); per-thread Configuration clones as everywhere else.
@@ -671,7 +676,7 @@ class TimeseriesStore(
       try f.listStatus(stage).filter(_.isDirectory).toSeq
       catch { case _: java.io.FileNotFoundException => Nil }
     val staged: Seq[(String, org.apache.hadoop.fs.FileStatus, Path)] =
-      DeltaBridge.parMapOrdered(partitionDirs) { pdir =>
+      FileMeta.parMapOrdered(partitionDirs) { pdir =>
         val pname = pdir.getPath.getName // "partition=<p>"
         val destDir = new Path(featureRoot, pname)
         if (!f.exists(destDir)) f.mkdirs(destDir)
@@ -679,19 +684,27 @@ class TimeseriesStore(
           .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
           .map(st => (pname, st, new Path(destDir, st.getPath.getName)))
       }.flatten
-    val adds = DeltaBridge.parMapOrderedConf(staged, hadoopConf) {
+    val adds = FileMeta.parMapOrderedConf(staged, hadoopConf) {
       case ((pname, st, dest), conf) =>
         val src = st.getPath
         // footer stats BEFORE the rename: the file was just written,
         // the footer is page-cached, and a stats failure degrades to
-        // a never-skipped file, never to a failed install
-        val fst = footerStats(src, conf)
+        // a never-skipped file, never to a failed install. Time bounds
+        // are epoch micros (TIMESTAMP_MICROS, physical INT64); value
+        // bounds exist when the value column is physically DOUBLE (not
+        // for serialized features or pre-widening epochs). A file
+        // without a bound is never skipped on that dimension.
+        val fst = try Some(FileMeta.stats(src, conf)) catch { case NonFatal(_) => None }
+        def bounds(c: String, t: PrimitiveTypeName) =
+          fst.flatMap(_.column(c)).filter(_.physical == t)
+        val (tb, vb) = (bounds(TimeCol, PrimitiveTypeName.INT64), bounds(ValueCol, PrimitiveTypeName.DOUBLE))
         if (!f.rename(src, dest))
           throw new java.io.IOException(s"stage install failed: $src -> $dest")
         val rel = s"$pname/${src.getName}"
         TxAdd(rel, pname.stripPrefix("partition="),
-          tmin = fst.tmin, tmax = fst.tmax, vmin = fst.vmin, vmax = fst.vmax,
-          nrec = fst.nrec,
+          tmin = tb.map(_.min.asInstanceOf[Long]), tmax = tb.map(_.max.asInstanceOf[Long]),
+          vmin = vb.map(_.min.asInstanceOf[Double]), vmax = vb.map(_.max.asInstanceOf[Double]),
+          nrec = fst.map(_.rows),
           blc = blooms.get(rel).flatMap(_ => bloomCfg.map(_._1)),
           bl = blooms.get(rel),
           fsize = Some(st.getLen))
@@ -699,65 +712,6 @@ class TimeseriesStore(
     f.delete(stage, true)
     adds
   }
-
-  /** Per-file statistics from ONE footer read: event-time bounds
-    * (epoch micros, TIMESTAMP_MICROS physical int64), exact row count,
-    * and — when the value column's physical type is DOUBLE — value
-    * bounds. Each dimension degrades independently: unusable time
-    * stats only lose time skipping, a non-double value (serialized
-    * features, pre-widening epochs) only loses value skipping, and
-    * the row count needs nothing but a readable footer. A file
-    * without a stat is simply never skipped on that dimension. */
-  private case class FooterStats(
-      tmin: Option[Long], tmax: Option[Long], nrec: Option[Long],
-      vmin: Option[Double], vmax: Option[Double])
-
-  private def footerStats(
-      p: Path,
-      conf: org.apache.hadoop.conf.Configuration = hadoopConf): FooterStats =
-    try {
-      import scala.jdk.CollectionConverters._
-      var mn = Long.MaxValue
-      var mx = Long.MinValue
-      var vmn = Double.MaxValue
-      var vmx = Double.MinValue
-      var rows = 0L
-      var tOk = true
-      var vOk = true
-      val blocks = ParquetFooter.read(p, conf).getBlocks
-      if (blocks.isEmpty) { tOk = false; vOk = false }
-      blocks.forEach { b =>
-        rows += b.getRowCount
-        b.getColumns.asScala.find(_.getPath.toDotString == TimeCol) match {
-          case Some(c) =>
-            val st = c.getStatistics
-            if (st == null || st.isEmpty || !st.hasNonNullValue) tOk = false
-            else (st.genericGetMin, st.genericGetMax) match {
-              case (a: java.lang.Long, z: java.lang.Long) =>
-                mn = math.min(mn, a.longValue); mx = math.max(mx, z.longValue)
-              case _ => tOk = false
-            }
-          case None => tOk = false
-        }
-        b.getColumns.asScala.find(_.getPath.toDotString == ValueCol) match {
-          case Some(c) =>
-            val st = c.getStatistics
-            if (st == null || st.isEmpty || !st.hasNonNullValue) vOk = false
-            else (st.genericGetMin, st.genericGetMax) match {
-              case (a: java.lang.Double, z: java.lang.Double) =>
-                vmn = math.min(vmn, a.doubleValue); vmx = math.max(vmx, z.doubleValue)
-              case _ => vOk = false
-            }
-          case None => vOk = false
-        }
-      }
-      FooterStats(
-        if (tOk && mn != Long.MaxValue) Some(mn) else None,
-        if (tOk && mn != Long.MaxValue) Some(mx) else None,
-        Some(rows),
-        if (vOk && vmn != Double.MaxValue) Some(vmn) else None,
-        if (vOk && vmn != Double.MaxValue) Some(vmx) else None)
-    } catch { case NonFatal(_) => FooterStats(None, None, None, None, None) }
 
   /** S2: hive-partitioned snappy parquet append; the new files become
     * visible in ONE atomic log commit.
@@ -1800,13 +1754,11 @@ class TimeseriesStore(
       }
     } else if (adds.nonEmpty) {
       val df = openAdds(name, adds, schemas, partitionStyle = "date")
-      val tsKey = "spark.sql.parquet.outputTimestampType"
-      val prevTs = spark.conf.get(tsKey)
-      spark.conf.set(tsKey, "TIMESTAMP_MICROS")
-      try layoutForWrite(df).write
-        .options(storageOptions).option("compression", "snappy")
-        .partitionBy("partition").mode("append").parquet(dstDir)
-      finally spark.conf.set(tsKey, prevTs)
+      withSessionConf(TimestampMicros) {
+        layoutForWrite(df).write
+          .options(storageOptions).option("compression", "snappy")
+          .partitionBy("partition").mode("append").parquet(dstDir)
+      }
       // drop Spark's _SUCCESS marker: the tree should carry ONLY data
       // files and the manifest
       dstFs.delete(new Path(dst, "_SUCCESS"), false)

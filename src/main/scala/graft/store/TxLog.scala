@@ -711,10 +711,4 @@ object TxLog {
   val CheckpointEvery = 10
   private val CommitName = raw"(\d{20})\.json".r
   private val CheckpointName = raw"(\d{20})\.checkpoint\.json".r
-
-  /** A table is log-backed iff its log dir exists. */
-  def isLogTable(hadoopConf: Configuration, tableDir: String): Boolean = {
-    val p = new Path(tableDir, LogDirName)
-    p.getFileSystem(hadoopConf).exists(p)
-  }
 }

@@ -4,10 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Metadata-scale probe for the open-format bridges: how long do
-  * writeTable/writeLog take on a MANY-FILE tree, where the per-file
-  * footer-stats read is the dominant term? At 100 TB a table is
-  * 10k-100k files; a sequential driver-side footer loop is the shape
-  * that breaks first.
+  * writeTable/writeLog take on a MANY-FILE tree, and how much of it is
+  * the per-file footer-stats read ([[graft.store.FileMeta.stats]])? At
+  * 100 TB a table is 10k-100k files. Run with
+  * `sbt 'runMain graft.tools.BridgeProbe <files>'` (default 500).
   */
 object BridgeProbe {
   def main(args: Array[String]): Unit = {
@@ -30,36 +30,22 @@ object BridgeProbe {
       println(f"[bridgeprobe] $label: ${(System.nanoTime() - t0) / 1e9}%.1fs")
       r
     }
-    // isolate the footer-read term from the rest of writeTable
-    timed(s"raw parallel footer reads over $nFiles files") {
-      val hc = spark.sessionState.newHadoopConf()
+    // isolate the footer-stats term from the rest of writeTable: the
+    // same FileMeta.stats read the store and both bridges run per file
+    val hc = spark.sessionState.newHadoopConf()
+    val files = {
       val rootP = new org.apache.hadoop.fs.Path(s"$root/tree")
-      val fs2 = rootP.getFileSystem(hc)
-      val files = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
-      val it = fs2.listFiles(rootP, true)
-      while (it.hasNext) { val st = it.next(); if (st.getPath.getName.endsWith(".parquet")) files += st.getPath }
-      val confs = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.hadoop.conf.Configuration]()
-      (0 until 16).foreach(_ => confs.add(new org.apache.hadoop.conf.Configuration(hc)))
-      val rows = graft.store.DeltaBridge.parMapOrdered(files.toSeq) { p0 =>
-        val hcl = confs.poll()
-        try {
-          var n = 0L
-          graft.store.ParquetFooter.read(p0, hcl).getBlocks.forEach(b => n += b.getRowCount)
-          n
-        } finally confs.add(hcl)
-      }
+      graft.store.FileMeta.dataFiles(rootP.getFileSystem(hc), rootP, "metadata")
+        .map(f => new org.apache.hadoop.fs.Path(rootP, f._1))
+    }
+    timed(s"parallel footer stats over $nFiles files") {
+      val rows = graft.store.FileMeta.parMapOrderedConf(files, hc)((p0, c) =>
+        graft.store.FileMeta.stats(p0, c).rows)
       require(rows.sum == nFiles.toLong * 10)
     }
-    timed("sequential 100 footer reads (single thread)") {
-      val hc = spark.sessionState.newHadoopConf()
-      val rootP = new org.apache.hadoop.fs.Path(s"$root/tree")
-      val fs2 = rootP.getFileSystem(hc)
-      val files = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
-      val it = fs2.listFiles(rootP, true)
-      while (it.hasNext && files.size < 100) { val st = it.next(); if (st.getPath.getName.endsWith(".parquet")) files += st.getPath }
-      files.foreach { p0 =>
-        graft.store.ParquetFooter.read(p0, hc).getBlocks.size()
-      }
+    val seq = files.take(100)
+    timed(s"sequential footer stats over ${seq.size} files (single thread)") {
+      seq.foreach(p0 => graft.store.FileMeta.stats(p0, hc))
     }
     // pool vs executor-job describe paths on the same tree: the pool
     // tops out at 16 threads against one driver JVM; the job path

@@ -43,7 +43,7 @@ class DriverWriteSpec extends SparkSpec with JobCounting {
   /** Every add's file: its parquet schema and the codecs of its chunks. */
   private def physical(root: String, name: String, st: TimeseriesStore): Seq[(String, Set[String])] =
     adds(st, name).map { a =>
-      val md = ParquetFooter.read(new Path(s"$root/feature/$name/${a.path}"), st.hadoopConf)
+      val md = FileMeta.footer(new Path(s"$root/feature/$name/${a.path}"), st.hadoopConf)
       (md.getFileMetaData.getSchema.toString,
         md.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet)
     }
