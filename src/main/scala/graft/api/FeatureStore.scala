@@ -304,7 +304,12 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
 
   /** Collapse a feature's append history to one row per time (optionally
     * only in the given partitions) — bounds the read-side dedup cost the
-    * reference pays forever (SURVEY §7.5.3).
+    * reference pays forever (SURVEY §7.5.3). Partitions already in
+    * compacted form are skipped, so a repeated call costs what changed
+    * since the last one, not the history: every add a compaction writes
+    * carries the log's `dd` flag, and an add without it (any save or
+    * other rewrite, or one written before the flag existed) marks its
+    * partition for rewriting. See `TimeseriesStore.compact`.
     */
   def compactFeature(fullName: String, partitions: Seq[String] = Nil): Unit = {
     val (nsObj, f) = featureOf(fullName)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.SessionConf
+
 /** Readers for the driver's testdata tables. One quirk: `events.ts` has
   * shipped in two parquet generations, and the reader must accept both:
   *
@@ -93,13 +95,9 @@ object Tables {
     // Schema resolution happens eagerly at spark.read.parquet, and the
     // resolved relation carries its own conf snapshot, so restoring
     // immediately after is safe.
-    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
-    val ntzKey   = "spark.sql.parquet.inferTimestampNTZ.enabled"
-    val priorNanos = spark.conf.getOption(nanosKey)
-    val priorNtz   = spark.conf.getOption(ntzKey)
-    spark.conf.set(nanosKey, "true")
-    spark.conf.set(ntzKey, "false")
-    try {
+    SessionConf.scoped(spark)(
+        "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+        "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false") {
       val raw = spark.read.parquet(s"$dir/events.parquet")
       raw.schema("ts").dataType match {
         case LongType => // nanos generation: raw int64 nanos → µs instant
@@ -111,14 +109,8 @@ object Tables {
           // (ResolveTimeZone), and Datasets analyze eagerly, so scoping
           // the session TZ around withColumn pins UTC regardless of the
           // caller's zone.
-          val tzKey = "spark.sql.session.timeZone"
-          val priorTz = spark.conf.getOption(tzKey)
-          spark.conf.set(tzKey, "UTC")
-          try raw.withColumn("ts", col("ts").cast(TimestampType))
-          finally priorTz match {
-            case Some(v) => spark.conf.set(tzKey, v)
-            case None    => spark.conf.unset(tzKey)
-          }
+          SessionConf.scoped(spark)("spark.sql.session.timeZone" -> "UTC")(
+            raw.withColumn("ts", col("ts").cast(TimestampType)))
         case TimestampType => // micros generation: already instant-semantics µs
           raw
         case other =>
@@ -133,13 +125,6 @@ object Tables {
               "TimestampType); a new testdata generation needs an explicit " +
               "branch in Tables.events")
       }
-    } finally {
-      def restore(key: String, prior: Option[String]): Unit = prior match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-      restore(nanosKey, priorNanos)
-      restore(ntzKey, priorNtz)
     }
   }
 }

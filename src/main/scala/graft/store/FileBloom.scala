@@ -120,21 +120,23 @@ object FileBloom {
     * keys are not added (a bloom can't index null; `key IS NULL`
     * probes must scan, which absent-bit semantics already guarantee
     * only for files where null rows contributed nothing — so the
-    * probe API only accepts non-null literals).
+    * probe API only accepts non-null literals). The stage is read with
+    * the namespace's storage `options`, as the write that staged it.
     */
   def buildForStage(
       spark: SparkSession,
       stageDir: String,
       column: String,
       bits: Int,
-      k: Int): Map[String, String] = {
+      k: Int,
+      options: Map[String, String]): Map[String, String] = {
     require(bits % 64 == 0 && bits > 0, s"bloom bits must be a positive multiple of 64: $bits")
     require(k >= 1 && k <= 127, s"bloom hash count out of range: $k")
     val stagePrefix = {
       val u = new Path(stageDir).toUri.getPath
       if (u.endsWith("/")) u else u + "/"
     }
-    val rows: DataFrame = spark.read.parquet(stageDir)
+    val rows: DataFrame = spark.read.options(options).parquet(stageDir)
       .select(input_file_name().as("f"), col(column).cast("string").as("v"))
       .filter(col("v").isNotNull)
     rows.rdd

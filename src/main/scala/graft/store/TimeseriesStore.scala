@@ -16,6 +16,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.{LocalParquetReader, LocalParquetWriter, LocalPlan, LocalRows, MetaFileIndex}
 import org.apache.spark.sql.types._
 
+import graft.SessionConf
 import graft.ops.TimeseriesOps._
 import graft.store.TimeseriesStore.readable
 
@@ -575,7 +576,8 @@ class TimeseriesStore(
     // clustered rewrite) — re-ranging by (partition, time) here would
     // destroy exactly the multi-dimensional locality being installed
     val laid = if (preLaid) normalized else layoutForWrite(normalized, outPartitions)
-    withSessionConf(TimestampMicros, "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16k") {
+    SessionConf.scoped(spark)(TimestampMicros,
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16k") {
       laid.write
         .options(storageOptions).option("compression", "snappy")
         .partitionBy("partition").parquet(stage.toString)
@@ -587,27 +589,13 @@ class TimeseriesStore(
     // never-skipped files, never to a failed install.
     bloomCfg match {
       case Some((bcol, bits, k)) if laid.columns.contains(bcol) =>
-        try FileBloom.buildForStage(spark, stage.toString, bcol, bits, k)
+        try FileBloom.buildForStage(spark, stage.toString, bcol, bits, k, storageOptions)
         catch { case NonFatal(_) => Map.empty }
       case _ => Map.empty
     }
   }
 
   private val TimestampMicros = "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"
-
-  /** `body` with the session confs `kv` set; afterwards each key the
-    * session had set gets its value back and every other key is unset.
-    * (`RuntimeConfig.get` answers a registered key's default, so putting
-    * that back would pin a value the session never chose, and change
-    * `spark.conf.getAll`, which keys the [[driverCached]] readers.) */
-  private def withSessionConf[T](kv: (String, String)*)(body: => T): T = {
-    val prev = kv.map { case (k, _) => k -> Option.when(spark.sessionState.conf.contains(k))(spark.conf.get(k)) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
 
   /** The driver's write step: each `(partition value, rows)` of `parts`
     * (rows laid out as `schema`, a null value for the null partition)
@@ -1137,14 +1125,31 @@ class TimeseriesStore(
     * time ([[latestRows]]) and written as one file by the driver
     * writer ([[driverWrite]]). Larger victims, or files the log records
     * no row count or size for, are rewritten by Spark.
+    *
+    * Only partitions that changed since their last compaction are
+    * rewritten, on the whole-feature call and the named one alike: a
+    * target partition is skipped when it is already what a rewrite
+    * would write ([[compacted]]) — every live add carries the `dd` flag
+    * both rewrite paths set, at the latest schema epoch, under the
+    * bloom declaration in effect. Any save, optimize, z-order, row
+    * rewrite, merge, import, stream batch, schema epoch or changed
+    * bloom declaration since makes it dirty again (a [[restore]]
+    * republishes a version's adds as they were, so each partition
+    * holds exactly the files, flags included, it held then). So the
+    * cost follows what changed, not the history: an hourly-appended
+    * feature rewrites its newest day. When every target is clean
+    * nothing is read, written or committed.
     */
   def compact(name: String, partitions: Seq[String] = Nil): Unit = {
     val log = txLog(name)
     val TxSnapshot(all, schemas, _, bloom) = log.state()
-    if (all.isEmpty) return
     val targetParts: Set[String] =
       if (partitions.nonEmpty) partitions.toSet else all.map(_.partition).toSet
-    val victims = all.filter(a => targetParts(a.partition))
+    // what a rewrite stamps on every file it writes: the latest epoch,
+    // and the declared bloom when the table has the bloom's column
+    val (sv, indexed) = (svTag(schemas), bloom.filter(b => dataCols(schemas).contains(b._1)))
+    val dirty = all.filter(a => targetParts(a.partition) && !compacted(a, sv, indexed)).map(_.partition).toSet
+    val victims = all.filter(a => dirty(a.partition))
     if (victims.isEmpty) return
     // epoch-aware open + rewrite at the LATEST schema (the Delta
     // rewrite convention); pre-compaction versions still read their
@@ -1162,8 +1167,22 @@ class TimeseriesStore(
         stageInstall(name,
           deduped.select((dataCols(schemas).map(col) :+ col("partition")).toIndexedSeq: _*), bloom)
       }
-    log.commit(adds.map(_.copy(sv = svTag(schemas))), victims.map(a => TxRemove(a.path)))
+    log.commit(adds.map(_.copy(sv = sv, dd = Some(true))), victims.map(a => TxRemove(a.path)))
   }
+
+  /** Could a [[compact]] that rewrites files at epoch `sv` with bloom
+    * `indexed` (column, bits, hashes) leave `a` as it is? Only when `a`
+    * is a compaction's output (`dd`) at that epoch carrying that bloom,
+    * or no bloom when none is declared over a column of the table. A
+    * file the declaration indexes but that has no bloom (its column all
+    * null, or a failed build) counts as dirty: the log cannot tell it
+    * from one written before the declaration. */
+  private def compacted(a: TxAdd, sv: Option[Long], indexed: Option[(String, Int, Int)]): Boolean =
+    a.dd.contains(true) && a.sv == sv && (indexed match {
+      case None => a.blc.isEmpty
+      case Some((c, bits, k)) =>
+        a.blc.contains(c) && a.bl.flatMap(FileBloom.decode).exists(d => d._1 == k && d._2.length * 64 == bits)
+    })
 
   /** Small-file bin-packing compaction (the Delta paper's OPTIMIZE):
     * coalesce each partition's undersized live files
@@ -1754,7 +1773,7 @@ class TimeseriesStore(
       }
     } else if (adds.nonEmpty) {
       val df = openAdds(name, adds, schemas, partitionStyle = "date")
-      withSessionConf(TimestampMicros) {
+      SessionConf.scoped(spark)(TimestampMicros) {
         layoutForWrite(df).write
           .options(storageOptions).option("compression", "snappy")
           .partitionBy("partition").mode("append").parquet(dstDir)

@@ -53,7 +53,16 @@ final case class TxAdd(
     // FileIndex from log metadata alone — no filesystem listing, no
     // footer probe for split planning. Absent on pre-upgrade adds,
     // which fall back to the listing read path only
-    fsize: Option[Long] = None)
+    fsize: Option[Long] = None,
+    // deduped: Some(true) on the adds a compaction writes — its
+    // partition's one-row-per-time output, at the epoch and bloom
+    // declaration of that compaction (TimeseriesStore.compact skips a
+    // partition whose every add says so, at today's epoch and bloom).
+    // Every other writer leaves it absent, and absent means dirty: a
+    // save, optimize or row rewrite may add duplicates or change the
+    // file set, and a legacy or foreign add proves nothing, so its
+    // partition is rewritten by the next compaction
+    dd: Option[Boolean] = None)
 
 /** A table version as one replay yields it: the live files, the
   * ordered schema declarations their `sv` epochs index, the active
@@ -696,6 +705,8 @@ object TxLog {
     .registerReferencedValueType(classOf[TxAdd], "nrec", classOf[Long])
   com.fasterxml.jackson.module.scala.introspect.ScalaAnnotationIntrospectorModule
     .registerReferencedValueType(classOf[TxAdd], "fsize", classOf[Long])
+  com.fasterxml.jackson.module.scala.introspect.ScalaAnnotationIntrospectorModule
+    .registerReferencedValueType(classOf[TxAdd], "dd", classOf[Boolean])
 
   // NON_ABSENT: a log line carries only the action fields it uses
   // (an add line must not spell out null txn markers — at checkpoint

@@ -17,6 +17,8 @@ import graft.api.FeatureStore
   * physical schema and the reads the Spark path leaves, when it is and
   * is not taken, that a crash at its file create or footer open commits
   * nothing, and that pre-1582 rows written by it read back in range.
+  * Then, on both paths, that a compaction rewrites only the partitions
+  * that changed since the last one, and reads as a full rewrite would.
   */
 class DriverWriteSpec extends SparkSpec with JobCounting {
   import spark.implicits._
@@ -38,7 +40,7 @@ class DriverWriteSpec extends SparkSpec with JobCounting {
 
   /** What the exactness contract compares of an add: everything but its
     * file name and size. */
-  private def meta(a: TxAdd) = (a.partition, a.tmin, a.tmax, a.vmin, a.vmax, a.nrec, a.sv, a.blc, a.bl)
+  private def meta(a: TxAdd) = (a.partition, a.tmin, a.tmax, a.vmin, a.vmax, a.nrec, a.sv, a.blc, a.bl, a.dd)
 
   /** Every add's file: its parquet schema and the codecs of its chunks. */
   private def physical(root: String, name: String, st: TimeseriesStore): Seq[(String, Set[String])] =
@@ -295,6 +297,132 @@ class DriverWriteSpec extends SparkSpec with JobCounting {
       assert(load() == want, style)
       assert(withDriverLoadBound(fs, -1)(load()) == want, s"$style on Spark")
       assert(fs.loadDataFrame(Seq(s"w/old_$style")).count() == 20L)
+    }
+  }
+
+  // --- incremental compaction ---------------------------------------
+
+  /** A facade over a fresh countfs warehouse, with namespace `w` and
+    * feature `w/f` holding three days of six hourly rows, each day's
+    * even hours saved again with a newer created_time, so every day has
+    * rows a compaction drops. Returns the facade, its catalog path and
+    * the warehouse's local path. */
+  private def threeDays(prefix: String): (FeatureStore, String, String) = {
+    val dir = tmpDir(prefix)
+    val fs = new FeatureStore(spark, s"$dir/catalog.json")
+    fs.createNamespace("w", CountingFs.url(s"$dir/warehouse"), storageOptions = CountingFs.options())
+    fs.createFeature("w/f")
+    val st = storeOf(fs)
+    st.save("f", (0 until 18).map(i => (at(i / 6, i % 6), at(0), i.toDouble)).toDF("time", "created_time", "value"))
+    st.save("f", (0 until 18 by 2).map(i => (at(i / 6, i % 6), at(1), -i.toDouble))
+      .toDF("time", "created_time", "value"))
+    (fs, s"$dir/catalog.json", s"$dir/warehouse")
+  }
+
+  private val Days = Seq("2024-01-01", "2024-01-02", "2024-01-03")
+
+  private def paths(st: TimeseriesStore, day: String): Set[String] =
+    adds(st, "f").filter(_.partition == day).map(_.path).toSet
+
+  /** `compact` of `w/f` (of `partitions`, when given), checked against
+    * the full rewrite it stands in for: afterwards `read` returns the
+    * history's latest row per time, which rewriting every partition
+    * leaves, and `loadDataFrame` the rows it returned before, on both
+    * read paths. Returns the parquet files the compaction created and
+    * the adds it retired. */
+  private def compactChecked(fs: FeatureStore, root: String, partitions: Seq[String] = Nil): (Int, Set[String]) = {
+    val st = storeOf(fs)
+    val full = sortedRows(graft.ops.TimeseriesOps.dedupLatest(st.read("f")))
+    def loads() = Seq(TimeseriesStore.DriverLoadBytes, -1L).map(b =>
+      withDriverLoadBound(fs, b)(sortedRows(fs.loadDataFrame(Seq("w/f")))))
+    val loaded = loads()
+    val before = adds(st, "f").map(_.path).toSet
+    val (_, creates) = CountingFs.createsDuring(root)(fs.compactFeature("w/f", partitions))
+    assert(sortedRows(st.read("f")) == full)
+    assert(loads() == loaded && loaded.distinct.size == 1)
+    (creates.keys.count(_.endsWith(".parquet")), before -- adds(st, "f").map(_.path))
+  }
+
+  /** `body` once per compaction path: the driver's, then Spark's. */
+  private def onBothPaths(prefix: String)(body: (FeatureStore, String, String) => Unit): Unit =
+    for ((path, bound) <- Seq("driver" -> TimeseriesStore.DriverLoadBytes, "spark" -> -1L)) {
+      val (fs, catalog, root) = threeDays(s"$prefix-$path")
+      withDriverLoadBound(fs, bound)(body(fs, catalog, root))
+    }
+
+  test("a compaction right after a compaction opens, creates and commits nothing") {
+    onBothPaths("graft-dw-again") { (fs, _, root) =>
+      val st = storeOf(fs)
+      assert(compactChecked(fs, root)._1 == 3)
+      assert(adds(st, "f").forall(_.dd.contains(true)))
+      val version = st.tableVersion("f")
+      for (parts <- Seq(Nil, Days.take(2))) {
+        val ((_, opens), creates) =
+          CountingFs.createsDuring(root)(CountingFs.opensDuring(root)(fs.compactFeature("w/f", parts)))
+        assert(creates.isEmpty && !opens.keys.exists(_.endsWith(".parquet")), s"$opens $creates")
+        assert(st.tableVersion("f") == version)
+      }
+    }
+  }
+
+  test("after a save into one of three compacted days, a compaction rewrites that day alone") {
+    onBothPaths("graft-dw-one-day") { (fs, _, root) =>
+      val st = storeOf(fs)
+      compactChecked(fs, root)
+      st.save("f", Seq((at(1, 2), at(3), 99.0), (at(1, 9), at(3), 98.0)).toDF("time", "created_time", "value"))
+      val (touched, kept) = (paths(st, Days(1)), Seq(Days(0), Days(2)).map(paths(st, _)))
+      assert(touched.size == 2)
+      // the named call skips its clean day; the whole-feature call then has nothing left
+      assert(compactChecked(fs, root, Days.take(2)) == (1, touched))
+      assert(Seq(Days(0), Days(2)).map(paths(st, _)) == kept)
+      assert(compactChecked(fs, root) == (0, Set.empty))
+    }
+  }
+
+  test("the compaction flag survives a checkpoint: a fresh store still skips the clean days") {
+    onBothPaths("graft-dw-checkpoint") { (fs, catalog, root) =>
+      val st = storeOf(fs)
+      compactChecked(fs, root)
+      var hour = 6
+      while (st.tableVersion("f") < TxLog.CheckpointEvery) {
+        st.save("f", Seq((at(2, hour), at(4), hour.toDouble)).toDF("time", "created_time", "value"))
+        hour += 1
+      }
+      val checkpoint = new java.io.File(f"$root/feature/f/_txlog/${TxLog.CheckpointEvery}%020d.checkpoint.json")
+      assert(scala.io.Source.fromFile(checkpoint).getLines().count(_.contains("\"dd\":true")) == 3)
+      val touched = paths(st, Days(2))
+      val fresh = new FeatureStore(spark, catalog)
+      withDriverLoadBound(fresh, fs.driverLoadBytes)(assert(compactChecked(fresh, root) == (1, touched)))
+    }
+  }
+
+  test("a schema epoch, a changed bloom declaration, optimize and a row delete make the days they touch dirty") {
+    onBothPaths("graft-dw-dirty") { (fs, _, root) =>
+      val st = storeOf(fs)
+      compactChecked(fs, root)
+      // a new epoch: every day is rewritten at it
+      st.evolveSchema("f", StructType.fromDDL(
+        "time timestamp, created_time timestamp, value double, region string"))
+      assert(compactChecked(fs, root)._1 == 3 && adds(st, "f").forall(_.sv.contains(1L)))
+      // a bloom declaration: every day; the same one again: none; other bits: every day
+      st.declareBloomIndex("f", "value", bits = 512, k = 3)
+      assert(compactChecked(fs, root)._1 == 3)
+      st.declareBloomIndex("f", "value", bits = 512, k = 3)
+      assert(compactChecked(fs, root)._1 == 0)
+      st.declareBloomIndex("f", "value", bits = 1024, k = 3)
+      assert(compactChecked(fs, root)._1 == 3)
+      assert(adds(st, "f").forall(_.bl.flatMap(FileBloom.decode).exists(_._2.length == 16)))
+      // optimize packs the first day's three files into one unflagged file
+      Seq(7, 8).foreach(h => st.save("f", Seq((at(0, h), at(5), h.toDouble)).toDF("time", "created_time", "value")))
+      assert(st.optimize("f") == 3L)
+      val packed = paths(st, Days(0))
+      assert(packed.size == 1 && adds(st, "f").forall(a => a.dd.isEmpty == packed(a.path)))
+      assert(compactChecked(fs, root) == (1, packed))
+      // a row delete rewrites the last day's file
+      assert(fs.deleteRows("w/f", col("time") === lit(at(2, 1))) == 1L)
+      val rewritten = paths(st, Days(2))
+      assert(compactChecked(fs, root) == (1, rewritten))
+      assert(compactChecked(fs, root) == (0, Set.empty))
     }
   }
 }
