@@ -775,7 +775,7 @@ class FeatureStore(val spark: SparkSession, val catalog: graft.catalog.CatalogAp
     * into the one frame it builds: a local frame equal, row for row and
     * in schema, to the Spark path's. A
     * selection over the bound, or one with a file the log records no
-    * row count or size for, takes the Spark path, which opens the same
+    * row count for (an unreadable footer), takes the Spark path, which opens the same
     * selections; so do resampled loads, transforms and
     * [[trainingFrame]].
     */

@@ -4,13 +4,17 @@ import java.sql.Timestamp
 
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.execution.streaming.sinks.FileStreamSinkLog
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.{LocalParquetReader, LocalParquetWriter, LocalPlan, LocalRows, MetaFileIndex}
@@ -18,7 +22,7 @@ import org.apache.spark.sql.types._
 
 import graft.SessionConf
 import graft.ops.TimeseriesOps._
-import graft.store.TimeseriesStore.readable
+import graft.store.TimeseriesStore.{readable, Declared}
 
 /** Metadata-only table statistics ([[TimeseriesStore.tableStatsFast]]):
   * exact stored-row count, event-time bounds in epoch micros, and —
@@ -56,13 +60,12 @@ final case class ReadSelection(
     * times 8 plus the declared row's default field sizes — never less
     * than the files' own bytes, which a long string can outgrow. Row
     * counts, not file sizes, because a steady or dictionary-encoded
-    * series compresses many times over. None when the driver cannot
-    * read or size it: an add without a recorded row count or size, or
-    * files under a log that declares no schema (they infer theirs). A
-    * selection of no files holds 0. */
+    * series compresses many times over. None when an add records no
+    * row count: its footer could not be read, so the driver cannot size
+    * it. A selection of no files holds 0. */
   def decodedBytes: Option[Long] =
     if (adds.isEmpty) Some(0L)
-    else if (schemas.isEmpty || adds.exists(a => a.nrec.isEmpty || a.fsize.isEmpty)) None
+    else if (adds.exists(_.nrec.isEmpty)) None
     else {
       val width = 8L + DataType.fromJson(schemas.last).asInstanceOf[StructType]
         .fields.map(_.dataType.defaultSize.toLong).sum
@@ -102,9 +105,11 @@ final case class ReadSelection(
   *
   * Read schemas come from the log: the first write declares the batch's
   * schema as epoch 0 and [[evolveSchema]] appends later epochs, so a
-  * read runs no schema-inference job (only a log written before schema
-  * declarations existed still infers). `valueType` arguments only type
-  * the empty envelope of a feature with no data yet.
+  * read runs no schema-inference job. Every add states its epoch, byte
+  * size and footer stats, and reads plan from those alone; a log
+  * written before any of them existed is brought to this one format by
+  * [[declare]] as it is replayed. `valueType` arguments only type the
+  * empty envelope of a feature with no data yet.
   *
   * Legacy trees: a feature directory written before the store became
   * log-only (plain `df.write.partitionBy("partition").parquet(...)`, or
@@ -163,16 +168,16 @@ class TimeseriesStore(
     * store's lifetime.
     */
   private val fsInstances =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.hadoop.fs.FileSystem]
+    scala.collection.concurrent.TrieMap.empty[String, FileSystem]
 
-  private def fs(p: String): org.apache.hadoop.fs.FileSystem = {
+  private def fs(p: String): FileSystem = {
     val path = new Path(p)
     if (storageOptions.isEmpty) path.getFileSystem(hadoopConf)
     else {
       val uri = path.toUri
       val key = s"${uri.getScheme}://${Option(uri.getAuthority).getOrElse("")}"
       fsInstances.getOrElseUpdate(key,
-        org.apache.hadoop.fs.FileSystem.newInstance(uri, hadoopConf))
+        FileSystem.newInstance(uri, hadoopConf))
     }
   }
 
@@ -197,11 +202,6 @@ class TimeseriesStore(
     StructField(TimeCol, TimestampType),
     StructField(CreatedCol, TimestampType),
     StructField(ValueCol, valueType)))
-
-  /** The documented empty-feature contract: a 0-row 3-column envelope. */
-  private def emptyFrame(valueType: DataType): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema(valueType))
 
   /** S3 (save validation + normalization, dask.py:223-263):
     *  - `time` and `value` columns required, nothing else but
@@ -261,21 +261,16 @@ class TimeseriesStore(
     case _                                                           => false
   }
 
-  /** Current (or as-of) declared logical schema, if the table has one.
-    * None = legacy table (pre-evolution log) — uniform files, inferred
-    * schema, exactly today's read path. */
-  def tableSchema(name: String, asOfVersion: Option[Long] = None): Option[StructType] = {
-    if (!exists(name)) None
-    else txLog(name).schemaHistory(asOfVersion).lastOption.map(schemaOf)
-  }
+  /** Current (or as-of) declared logical schema: the log's newest
+    * epoch. None for a feature with no data and no declaration. */
+  def tableSchema(name: String, asOfVersion: Option[Long] = None): Option[StructType] =
+    if (!exists(name)) None else snapshot(name, asOfVersion).schemas.lastOption.map(schemaOf)
 
   /** Declare a new schema epoch: existing columns may only WIDEN (the
     * lattice above), new columns append (old files read them as null),
-    * drops are rejected. Returns the committed log version. On a legacy
-    * table the current file schema is declared as epoch 0 first, so the
-    * existing files keep a truthful physical schema to be opened with.
-    * Rare admin operation — racing declarations follow the same
-    * optimistic-commit discipline as racing compactions.
+    * drops are rejected. Returns the committed log version. Rare admin
+    * operation — racing declarations follow the same optimistic-commit
+    * discipline as racing compactions.
     */
   def evolveSchema(name: String, newSchema: StructType): Long = {
     require(exists(name), s"no such feature: $name")
@@ -284,24 +279,21 @@ class TimeseriesStore(
     Seq(TimeCol, CreatedCol, ValueCol).foreach(c =>
       require(newSchema.fieldNames.contains(c), s"schema must keep the '$c' column"))
     val log = txLog(name)
-    val current: StructType = log.schemaHistory().lastOption.map(schemaOf).getOrElse {
-      // legacy: pin the files' actual schema as epoch 0 before evolving
-      val inferred = StructType(
-        spark.read.options(storageOptions).option("basePath", featurePath(name))
-          .parquet(log.snapshot().map(a => s"${featurePath(name)}/${a.path}"): _*)
-          .schema.fields.filterNot(_.name == "partition").toIndexedSeq)
-      log.commit(Nil, schema = Some(inferred.json))
-      inferred
-    }
+    val d = declare(name, log.state())
+    d.snap.schemas.lastOption.foreach(cur => requireEvolves(schemaOf(cur), newSchema))
+    log.commit(Nil, schemas = d.owed :+ newSchema.json, restated = d.restated)
+  }
+
+  /** `next` keeps every column of `current`, each at its type or one it
+    * widens to ([[widens]]). */
+  private def requireEvolves(current: StructType, next: StructType): Unit =
     current.fields.foreach { f =>
-      val nf = newSchema.fields.find(_.name == f.name).getOrElse(
+      val nf = next.fields.find(_.name == f.name).getOrElse(
         throw new IllegalArgumentException(
           s"schema evolution cannot drop column '${f.name}'"))
       require(nf.dataType == f.dataType || widens(f.dataType, nf.dataType),
         s"column '${f.name}': ${f.dataType.simpleString} does not widen to ${nf.dataType.simpleString}")
     }
-    log.commit(Nil, schema = Some(newSchema.json))
-  }
 
   /** Convenience: widen just the value column's type. */
   def evolveValueType(name: String, to: DataType): Long = {
@@ -344,7 +336,7 @@ class TimeseriesStore(
   def addCheck(name: String, constraintName: String, boolExpr: String): Long = {
     require(constraintName.nonEmpty, "constraint name must be non-empty")
     if (exists(name)) {
-      val TxSnapshot(live, schemas, _, _) = txLog(name).state()
+      val TxSnapshot(live, schemas, _, _) = snapshot(name)
       if (live.nonEmpty) {
         val cur = openAdds(name, live, schemas, partitionStyle = "date")
         val bad = cur.filter(!expr(boolExpr) || expr(boolExpr).isNull).count()
@@ -381,28 +373,38 @@ class TimeseriesStore(
     }
   }
 
-  /** Stage a batch under the table's CURRENT schema epoch: first write
-    * declares the batch's own schema as epoch 0; later writes conform
-    * to the declared epoch and their adds carry its index. Returns the
-    * installed adds plus the schema to declare in the same commit.
-    * Active CHECK constraints are enforced HERE — before any file is
-    * staged, so a rejected batch leaves nothing to vacuum. `snap` is
-    * the caller's one replay: checks, epoch and bloom config all come
-    * from the same version. With `onDriver`, a batch [[driverBatch]]
-    * admits is checked, conformed and written on the driver
-    * ([[driverStage]]); every other batch runs on Spark. */
+  /** Stage a batch under the table's CURRENT schema epoch: the batch
+    * conforms to the declared epoch and its adds carry its index. A log
+    * that declares no schema yet takes the batch's as its newest epoch —
+    * epoch 0 on a first write, or the one after the epoch [[declare]]
+    * derived from older files, which must evolve to it unless it has
+    * the batch's columns. Returns the installed adds plus the schemas to
+    * declare in the same commit. Active CHECK constraints are enforced
+    * HERE — before any file is staged, so a rejected batch leaves
+    * nothing to vacuum. `d` is the caller's one replay: checks, epoch
+    * and bloom config all come from the same version. With `onDriver`,
+    * a batch [[driverBatch]] admits is checked, conformed and written on
+    * the driver ([[driverStage]]); every other batch runs on Spark. */
   private def stageForCommit(
-      snap: TxSnapshot, name: String, normalized: DataFrame, onDriver: Boolean = false)
-      : (Seq[TxAdd], Option[String]) = {
+      d: Declared, name: String, normalized: DataFrame, onDriver: Boolean = false)
+      : (Seq[TxAdd], Seq[String]) = {
     val local = if (onDriver) driverBatch(normalized) else None
-    enforceChecks(snap.checks, name, local.toRight(normalized))
-    val target = snap.schemas.lastOption.map(schemaOf)
-    val adds = local match {
-      case Some(rows) => driverStage(name, rows, target, snap.bloom)
-      case None => stageInstall(name, target.fold(normalized)(conformForWrite(normalized, _)), snap.bloom)
+    enforceChecks(d.snap.checks, name, local.toRight(normalized))
+    val declared = d.snap.schemas
+    val target = if (d.recorded > 0) Some(schemaOf(declared.last)) else None
+    val epochs = if (target.isDefined) declared else {
+      val batch = structJson(normalized)
+      declared.lastOption.map(schemaOf) match {
+        case Some(files) if columns(files) == columns(schemaOf(batch)) => declared
+        case Some(files) => requireEvolves(files, schemaOf(batch)); declared :+ batch
+        case None => Seq(batch)
+      }
     }
-    (adds.map(_.copy(sv = Some(math.max(snap.schemas.size - 1L, 0L)))),
-      if (target.isEmpty) Some(structJson(normalized)) else None)
+    val adds = local match {
+      case Some(rows) => driverStage(name, rows, target, d.snap.bloom)
+      case None => stageInstall(name, target.fold(normalized)(conformForWrite(normalized, _)), d.snap.bloom)
+    }
+    (adds.map(_.copy(sv = Some(epochs.size - 1L))), epochs.drop(d.recorded))
   }
 
   /** A normalized save batch's rows, when the driver may write it: its
@@ -452,17 +454,20 @@ class TimeseriesStore(
 
   /** Epoch of internally REWRITTEN files (compaction/optimize/delete —
     * frames already aligned to the latest declared schema). */
-  private def svTag(schemas: Seq[String]): Option[Long] =
-    if (schemas.isEmpty) None else Some(schemas.size - 1L)
+  private def svTag(schemas: Seq[String]): Long = schemas.size - 1L
 
   /** Epoch-aware open of a live-file subset: each schema epoch's file
     * group is read with the physical schema it was WRITTEN under, then
     * aligned to the newest visible epoch (widening casts; later-added
-    * columns null), and the groups union. Legacy tables (no declared
-    * schema) keep the inferred uniform read. Always includes the
+    * columns null), and the groups union. Always includes the
     * `partition` column; `withFilePath` adds `_f` = the source file
     * path (resolved inside each group — `_metadata` cannot be
     * referenced across a union).
+    *
+    * The scan is a log-metadata scan (Delta's TahoeFileIndex shape):
+    * its FileIndex is built straight from the adds — path, byte size,
+    * partition value — with no driver listing pass and no "Listing
+    * leaf files" job.
     */
   private def openAdds(
       name: String,
@@ -471,40 +476,21 @@ class TimeseriesStore(
       partitionStyle: String,
       withFilePath: Boolean = false): DataFrame = {
     val root = featurePath(name)
-    def path(a: TxAdd) = s"$root/${a.path}"
-    if (schemas.isEmpty) {
-      val df = spark.read.options(storageOptions).option("basePath", root)
-        .parquet(adds.map(path): _*)
-      if (withFilePath) df.withColumn("_f", col("_metadata.file_path")) else df
-    } else {
-      val pType = if (partitionStyle == "year") IntegerType else StringType
-      val target = schemaOf(schemas.last)
-      adds.groupBy(_.sv.getOrElse(0L)).toSeq.sortBy(_._1).map { case (sv, group) =>
-        val fileSchema = readable(schemaOf(schemas(sv.toInt)))
-        // log-metadata scan (Delta's TahoeFileIndex shape): when every
-        // add carries its byte size, the FileIndex is built straight
-        // from the log — partition values from the add, no driver
-        // listing pass, no "Listing leaf files" job (guide §6: manifest
-        // metadata beats directory listing; this closes the half of
-        // that promise the old spark.read.parquet(paths) open left on
-        // the table). Pre-upgrade adds (no fsize) keep the listing read.
-        val df =
-          if (group.forall(_.fsize.isDefined))
-            MetaFileIndex.read(
-              spark,
-              group.map(a => (new Path(path(a)), a.fsize.get,
-                if (pType == IntegerType) a.partition.toInt else a.partition)),
-              partitionSchema = StructType(Seq(StructField("partition", pType))),
-              dataSchema = fileSchema,
-              options = storageOptions)
-          else spark.read.options(storageOptions).option("basePath", root)
-            .schema(StructType(fileSchema.fields.toIndexedSeq :+ StructField("partition", pType)))
-            .parquet(group.map(path): _*)
-        val aligned = alignTo(fileSchema, target) :+ col("partition")
-        val base = if (withFilePath) aligned :+ col("_metadata.file_path").as("_f") else aligned
-        df.select(base.toIndexedSeq: _*)
-      }.reduce(_ unionByName _)
-    }
+    val pType = if (partitionStyle == "year") IntegerType else StringType
+    val target = schemaOf(schemas.last)
+    adds.groupBy(_.sv.get).toSeq.sortBy(_._1).map { case (sv, group) =>
+      val fileSchema = readable(schemaOf(schemas(sv.toInt)))
+      val df = MetaFileIndex.read(
+        spark,
+        group.map(a => (new Path(s"$root/${a.path}"), a.fsize.get,
+          if (pType == IntegerType) a.partition.toInt else a.partition)),
+        partitionSchema = StructType(Seq(StructField("partition", pType))),
+        dataSchema = fileSchema,
+        options = storageOptions)
+      val aligned = alignTo(fileSchema, target) :+ col("partition")
+      val base = if (withFilePath) aligned :+ col("_metadata.file_path").as("_f") else aligned
+      df.select(base.toIndexedSeq: _*)
+    }.reduce(_ unionByName _)
   }
 
   /** One epoch's columns aligned to the `target` epoch: widening casts,
@@ -516,10 +502,102 @@ class TimeseriesStore(
     }
 
   /** Data columns a read should surface: the declared schema's fields,
-    * or the classic 3-column envelope for legacy tables. */
+    * or the classic 3-column envelope for a feature with no data. */
   private def dataCols(schemas: Seq[String]): Seq[String] =
     schemas.lastOption.map(schemaOf(_).fieldNames.toSeq)
       .getOrElse(Seq(TimeCol, CreatedCol, ValueCol))
+  // ---------------------------------------------------------------------
+
+  // ---- the one log format ----------------------------------------------
+  /** `raw`, a replay of `name`'s log, in the one log format readers
+    * and writers work on: a feature that holds files declares its
+    * schema, and every add states its epoch, byte size and footer
+    * stats. On a log so written, one pass over the adds that opens
+    * nothing. A log from before schema declarations or per-file stats,
+    * or a foreign or hand-edited one, is brought to it here:
+    *  - live adds under no schema declaration get an epoch 0 derived
+    *    from the files' footers ([[footerEpoch]]);
+    *  - an add without an epoch is at epoch 0;
+    *  - an add without its byte size or footer stats is stated by the
+    *    footer-and-size step an install runs ([[stated]]).
+    * Reads use the result in memory (a read never writes); the next
+    * write commits what was derived with its own actions ([[Declared]]),
+    * as the reference migrates old state in place (bytehub/_upgrade.py).
+    * An add at an epoch the log does not declare fails here, naming the
+    * feature and the file, before any read is planned. */
+  private def declare(name: String, raw: TxSnapshot): Declared = {
+    val n = raw.schemas.size
+    def complete(a: TxAdd) = a.fsize.isDefined && a.nrec.isDefined
+    if (raw.adds.forall(a => a.sv.exists(v => v >= 0 && v < n) && complete(a)))
+      return Declared(raw, n, Nil)
+    val schemas = if (n > 0 || raw.adds.isEmpty) raw.schemas else Seq(footerEpoch(name, raw.adds))
+    raw.adds.find(_.sv.exists(v => v < 0 || v >= schemas.size)).foreach { a =>
+      throw new IllegalStateException(
+        s"feature '$name': ${a.path} is written under schema epoch ${a.sv.get}, but its log " +
+          s"declares ${schemas.size} epoch(s)")
+    }
+    val root = featurePath(name)
+    val f = fs(root)
+    val adds = FileMeta.parMapOrderedConf(raw.adds, hadoopConf) { (a, conf) =>
+      val at = if (a.sv.isDefined) a else a.copy(sv = Some(0L))
+      if (complete(at)) at else stated(at, f.getFileStatus(new Path(root, a.path)), conf)
+    }
+    Declared(raw.copy(adds = adds, schemas = schemas), n,
+      adds.zip(raw.adds).collect { case (a, was) if a != was => a })
+  }
+
+  /** `name`'s snapshot at `asOf` (default: latest) in the one log
+    * format: one replay, [[declare]]d in memory. */
+  private def snapshot(name: String, asOf: Option[Long] = None): TxSnapshot =
+    declare(name, txLog(name).state(asOf)).snap
+
+  /** Epoch 0 of a log whose files predate schema declarations: the
+    * schema the live files' footers hold, read as Spark infers a file's
+    * and [[readable]] as a first write declares it. Files whose footers
+    * disagree on a column's name, position or type fail fast, naming
+    * the file. */
+  private def footerEpoch(name: String, adds: Seq[TxAdd]): String = {
+    val root = featurePath(name)
+    val footers = FileMeta.parMapOrderedConf(adds, hadoopConf) { (a, conf) =>
+      val p = new Path(root, a.path)
+      new Footer(p, FileMeta.footer(p, conf))
+    }
+    val converter = new ParquetToSparkSchemaConverter(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf)
+    val schemas = footers.map(ft => readable(StructType(ParquetFileFormat.readSchemaFromFooter(ft, converter)
+      .fields.filterNot(_.name == "partition").toIndexedSeq)))
+    adds.zip(schemas).find(as => columns(as._2) != columns(schemas.head)).foreach { case (a, s) =>
+      throw new IllegalStateException(
+        s"feature '$name' declares no schema and its files disagree: ${a.path} holds " +
+          s"${s.simpleString}, ${adds.head.path} holds ${schemas.head.simpleString}")
+    }
+    schemas.head.json
+  }
+
+  private def columns(s: StructType): Seq[(String, DataType)] = s.fields.toSeq.map(f => f.name -> f.dataType)
+
+  /** `a` stating the file `st`: its byte size, and from ONE footer read
+    * its row count and its time and value bounds — epoch micros from an
+    * INT64 micros `time`, and from a DOUBLE `value` (not serialized
+    * features or pre-widening epochs). A footer that cannot be read
+    * states no stats and fails nothing. A bound without usable footer
+    * stats stays absent and the file is never skipped on it: the safe
+    * direction, which a file from a foreign writer or a hand-edited log
+    * takes. The one stats step: an install runs it on each staged file,
+    * [[declare]] on each add a log records without size or stats. */
+  private def stated(a: TxAdd, st: FileStatus, conf: Configuration): TxAdd = {
+    val fst = try Some(FileMeta.stats(st.getPath, conf)) catch { case NonFatal(_) => None }
+    def bounds(c: String, t: PrimitiveTypeName) = fst.flatMap(_.column(c)).filter(_.physical == t)
+    val tb = bounds(TimeCol, PrimitiveTypeName.INT64).filter(_.logical match {
+      case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation => t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS
+      case _ => false
+    })
+    val vb = bounds(ValueCol, PrimitiveTypeName.DOUBLE)
+    a.copy(
+      tmin = tb.map(_.min.asInstanceOf[Long]), tmax = tb.map(_.max.asInstanceOf[Long]),
+      vmin = vb.map(_.min.asInstanceOf[Double]), vmax = vb.map(_.max.asInstanceOf[Double]),
+      nrec = fst.map(_.rows), fsize = Some(st.getLen))
+  }
   // ---------------------------------------------------------------------
 
   /** Write-side layout: one ranged exchange so each task owns a
@@ -675,27 +753,14 @@ class TimeseriesStore(
     val adds = FileMeta.parMapOrderedConf(staged, hadoopConf) {
       case ((pname, st, dest), conf) =>
         val src = st.getPath
-        // footer stats BEFORE the rename: the file was just written,
-        // the footer is page-cached, and a stats failure degrades to
-        // a never-skipped file, never to a failed install. Time bounds
-        // are epoch micros (TIMESTAMP_MICROS, physical INT64); value
-        // bounds exist when the value column is physically DOUBLE (not
-        // for serialized features or pre-widening epochs). A file
-        // without a bound is never skipped on that dimension.
-        val fst = try Some(FileMeta.stats(src, conf)) catch { case NonFatal(_) => None }
-        def bounds(c: String, t: PrimitiveTypeName) =
-          fst.flatMap(_.column(c)).filter(_.physical == t)
-        val (tb, vb) = (bounds(TimeCol, PrimitiveTypeName.INT64), bounds(ValueCol, PrimitiveTypeName.DOUBLE))
+        val rel = s"$pname/${src.getName}"
+        // footer stats BEFORE the rename: the file was just written and
+        // its footer is page-cached
+        val add = stated(TxAdd(rel, pname.stripPrefix("partition="),
+          blc = blooms.get(rel).flatMap(_ => bloomCfg.map(_._1)), bl = blooms.get(rel)), st, conf)
         if (!f.rename(src, dest))
           throw new java.io.IOException(s"stage install failed: $src -> $dest")
-        val rel = s"$pname/${src.getName}"
-        TxAdd(rel, pname.stripPrefix("partition="),
-          tmin = tb.map(_.min.asInstanceOf[Long]), tmax = tb.map(_.max.asInstanceOf[Long]),
-          vmin = vb.map(_.min.asInstanceOf[Double]), vmax = vb.map(_.max.asInstanceOf[Double]),
-          nrec = fst.map(_.rows),
-          blc = blooms.get(rel).flatMap(_ => bloomCfg.map(_._1)),
-          bl = blooms.get(rel),
-          fsize = Some(st.getLen))
+        add
     }
     f.delete(stage, true)
     adds
@@ -706,18 +771,25 @@ class TimeseriesStore(
     */
   def write(name: String, normalized: DataFrame): Unit = {
     val log = txLog(name)
-    commitBatch(log, log.state(), name, normalized)
+    commitBatch(log, declare(name, log.state()), name, normalized)
     ()
   }
 
   /** Stage and commit one batch; true iff it committed (a batch with
     * no rows stages no files and commits nothing). */
   private def commitBatch(
-      log: TxLog, snap: TxSnapshot, name: String, normalized: DataFrame, onDriver: Boolean = false): Boolean = {
-    val (adds, schemaDecl) = stageForCommit(snap, name, normalized, onDriver)
-    if (adds.nonEmpty) log.commit(adds, schema = schemaDecl)
+      log: TxLog, d: Declared, name: String, normalized: DataFrame, onDriver: Boolean = false): Boolean = {
+    val (adds, schemas) = stageForCommit(d, name, normalized, onDriver)
+    if (adds.nonEmpty) log.commit(adds, schemas = schemas, restated = d.restated)
     adds.nonEmpty
   }
+
+  /** Columns beyond the 3-column envelope that the newest of `schemas`
+    * declares: the only extras a save or merge batch may carry —
+    * Delta-without-autoMerge, new columns enter through evolveSchema. */
+  private def declaredExtras(schemas: Seq[String]): Set[String] =
+    schemas.lastOption.map(schemaOf(_).fieldNames.toSet -- Set(TimeCol, CreatedCol, ValueCol))
+      .getOrElse(Set.empty)
 
   /** Validate, normalize and append `df`; returns true iff a commit
     * landed — false for an empty batch, which is a no-op. A refused
@@ -737,21 +809,15 @@ class TimeseriesStore(
     val log = txLog(name)
     // ONE replay (one `_txlog` listing) serves validation, checks,
     // staging epoch and bloom config alike
-    val snap = log.state()
-    // columns beyond the 3-column envelope pass validation ONLY when a
-    // declared (evolved) schema names them — Delta-without-autoMerge:
-    // new columns enter through evolveSchema, never through a save
-    val declaredExtras: Set[String] = snap.schemas.lastOption
-      .map(schemaOf(_).fieldNames.toSet -- Set(TimeCol, CreatedCol, ValueCol))
-      .getOrElse(Set.empty)
+    val d = declare(name, log.state())
     // An empty batch is a no-op BEFORE column validation (the reference
     // order, dask.py:231-232). The emptiness probe is a Spark job, so it
     // runs only for a batch that fails validation: a valid empty batch
     // stages no partition dirs, so it commits nothing anyway.
     val normalized =
-      try TimeseriesStore.normalize(df, partitionStyle, declaredExtras)
+      try TimeseriesStore.normalize(df, partitionStyle, declaredExtras(d.snap.schemas))
       catch { case e: IllegalArgumentException => if (df.isEmpty) return false else throw e }
-    commitBatch(log, snap, name, normalized, onDriver = true)
+    commitBatch(log, d, name, normalized, onDriver = true)
   }
 
   /** Idempotent transactional append: commits the batch
@@ -765,13 +831,14 @@ class TimeseriesStore(
     val log = txLog(name)
     if (log.txnSeen(txnId)) false // fast path: skip the staging work
     else {
-      val (adds, schemaDecl) = stageForCommit(log.state(), name, normalized)
+      val d = declare(name, log.state())
+      val (adds, schemas) = stageForCommit(d, name, normalized)
       // commit re-checks the txn id on every rename attempt — if a
       // concurrent writer (zombie driver + replacement replaying the
       // same micro-batch) landed it between the check above and here,
       // this returns -1 and the staged files are left unreferenced for
       // vacuum, instead of committing the batch twice
-      adds.nonEmpty && log.commit(adds, Nil, Some(txnId), schema = schemaDecl) >= 0
+      adds.nonEmpty && log.commit(adds, Nil, Some(txnId), schemas = schemas, restated = d.restated) >= 0
     }
   }
 
@@ -785,9 +852,10 @@ class TimeseriesStore(
     val log = txLog(name)
     if (log.txnSeen(streamId, batchId)) false // fast path: skip staging
     else {
-      val (adds, schemaDecl) = stageForCommit(log.state(), name, normalized)
-      adds.nonEmpty &&
-        log.commit(adds, Nil, txnAppVer = Some((streamId, batchId)), schema = schemaDecl) >= 0
+      val d = declare(name, log.state())
+      val (adds, schemas) = stageForCommit(d, name, normalized)
+      adds.nonEmpty && log.commit(adds, Nil, txnAppVer = Some((streamId, batchId)),
+        schemas = schemas, restated = d.restated) >= 0
     }
   }
 
@@ -827,7 +895,7 @@ class TimeseriesStore(
       to: Option[Timestamp],
       partitionStyle: String = "date",
       asOfVersion: Option[Long] = None): ReadSelection = {
-    val TxSnapshot(adds, schemas, _, _) = txLog(name).state(asOfVersion)
+    val TxSnapshot(adds, schemas, _, _) = snapshot(name, asOfVersion)
     ReadSelection(name,
       prunePartitionValues(adds, from, to, partitionStyle).filter(fileStatsOverlap(_, from, to)),
       schemas, from, to, partitionStyle)
@@ -835,8 +903,8 @@ class TimeseriesStore(
 
   /** [[read]]'s second step: a Spark scan of the selected files, the
     * exact range predicate dropping the rows pruning kept, the data
-    * columns selected. `valueType` types the envelope of a selection
-    * with no files under a log that declares no schema. */
+    * columns selected. `valueType` types the envelope of a feature with
+    * no data. */
   private[graft] def open(sel: ReadSelection, valueType: Option[DataType] = None): DataFrame =
     if (sel.adds.isEmpty) emptyOf(sel.schemas, valueType.getOrElse(DoubleType))
     else
@@ -884,8 +952,8 @@ class TimeseriesStore(
     * are read by the cached [[LocalParquetReader]]s, one read per schema
     * epoch, and aligned to the newest epoch ([[alignTo]]) and traveled
     * by a [[LocalPlan]] compiled once per shape: no Dataset per call.
-    * Every add must record its size, and the caller bounds what they
-    * decode to: all the rows land in driver memory. */
+    * The caller bounds what the adds decode to: all the rows land in
+    * driver memory. */
   private def driverRows(
       name: String,
       adds: Seq[TxAdd],
@@ -897,7 +965,7 @@ class TimeseriesStore(
     val t = target.fieldIndex(TimeCol)
     def inRange(r: InternalRow): Boolean = (lo.isEmpty && hi.isEmpty) ||
       !r.isNullAt(t) && lo.forall(r.getLong(t) >= _) && hi.forall(r.getLong(t) <= _)
-    adds.groupBy(_.sv.getOrElse(0L)).toSeq.sortBy(_._1).flatMap { case (sv, group) =>
+    adds.groupBy(_.sv.get).toSeq.sortBy(_._1).flatMap { case (sv, group) =>
       val fileSchema = readable(schemaOf(schemas(sv.toInt)))
       val plan = localPlan(fileSchema, (target, timeTravel))(df =>
         travel(df.select(alignTo(fileSchema, target): _*), timeTravel))
@@ -929,8 +997,9 @@ class TimeseriesStore(
     readable(schemas.lastOption.map(schemaOf).getOrElse(emptySchema(valueType.getOrElse(DoubleType))))
 
   /** File-level data skipping over log metadata: does the add's
-    * recorded event-time range intersect [from, to]? Files without
-    * stats (pre-upgrade, or unusable footers) always qualify. Exact
+    * recorded event-time range intersect [from, to]? A file without
+    * time stats always qualifies: its footer held none usable, as a
+    * foreign writer's file, or one a hand-edited log adds, may. Exact
     * micros — no widening needed, the bounds are the file's actual
     * min/max of the same column the read filters on. */
   private def fileStatsOverlap(
@@ -983,10 +1052,9 @@ class TimeseriesStore(
     * runs, compiled once per shape, so a stored endpoint starts no job
     * and builds no Dataset. The driver reads at most
     * `spark.sql.files.maxPartitionBytes` of files per call — what one
-    * scan task reads. Past that bound, or at a file whose size the log
-    * does not record, the candidates that can still win go to ONE
-    * `endpointRow` job over a log-built scan, so a masked history, or
-    * one without stats, never pulls unbounded data onto the driver.
+    * scan task reads. Past that bound the candidates that can still win
+    * go to ONE `endpointRow` job over a log-built scan, so a masked
+    * history never pulls unbounded data onto the driver.
     * `before` (tail only) restricts the search to rows strictly before
     * it: the fill seed of a resample.
     *
@@ -1000,7 +1068,9 @@ class TimeseriesStore(
       before: Option[Timestamp] = None,
       valueType: Option[DataType] = None): (LocalRows, EndpointReads) = {
     require(before.isEmpty || fromTail, "an endpoint search bounded by `before` runs from the tail")
-    val TxSnapshot(live, schemas, _, _) = txLog(name).state()
+    val TxSnapshot(live, schemas, _, _) = snapshot(name)
+    val schema = schemaOrEnvelope(schemas, valueType)
+    if (live.isEmpty) return (LocalRows(schema, Vector.empty), EndpointReads(Nil, Nil))
     def sparkTop(adds: Seq[TxAdd]): LocalRows = {
       val in = openAdds(name, adds, schemas, partitionStyle = "date").select(dataCols(schemas).map(col): _*)
       val top = endpointRow(
@@ -1009,12 +1079,6 @@ class TimeseriesStore(
         .createToCatalystConverter(top.schema)
       LocalRows(top.schema, top.collect().map(r => toInternal(r).asInstanceOf[InternalRow]).toIndexedSeq)
     }
-    if (live.isEmpty && schemas.isEmpty)
-      return (LocalRows(schemaOrEnvelope(Nil, valueType), Vector.empty), EndpointReads(Nil, Nil))
-    // a log from before schema declarations: its files infer their
-    // schema, so there is no typed driver read — one job over them all
-    if (schemas.isEmpty) return (sparkTop(live), EndpointReads(Nil, live.map(_.path)))
-    val schema = schemaOrEnvelope(schemas, valueType)
     val order = endpointOrdering(schema, fromTail)
     val timeAt = schema.fieldIndex(TimeCol)
     val cap = before.map(fromJavaTimestamp(_) - 1)
@@ -1046,7 +1110,7 @@ class TimeseriesStore(
     var sparkFiles = Seq.empty[String]
     while (rest.nonEmpty && canBeat(rest.head._1)) {
       val tier = rest.head._2
-      if (tier.forall(_.fsize.isDefined) && spent + tier.flatMap(_.fsize).sum <= budget) {
+      if (spent + tier.flatMap(_.fsize).sum <= budget) {
         spent += tier.flatMap(_.fsize).sum
         keep(driverRows(name, tier, schemas, timeTravel, None, cap))
         driverTiers += tier.map(_.path)
@@ -1123,8 +1187,8 @@ class TimeseriesStore(
     * job: each partition's files are read and aligned to the latest
     * epoch by [[driverRows]], reduced to `dedupLatest`'s winner per
     * time ([[latestRows]]) and written as one file by the driver
-    * writer ([[driverWrite]]). Larger victims, or files the log records
-    * no row count or size for, are rewritten by Spark.
+    * writer ([[driverWrite]]). Larger victims, or files without a row
+    * count (an unreadable footer), are rewritten by Spark.
     *
     * Only partitions that changed since their last compaction are
     * rewritten, on the whole-feature call and the named one alike: a
@@ -1142,7 +1206,8 @@ class TimeseriesStore(
     */
   def compact(name: String, partitions: Seq[String] = Nil): Unit = {
     val log = txLog(name)
-    val TxSnapshot(all, schemas, _, bloom) = log.state()
+    val d = declare(name, log.state())
+    val TxSnapshot(all, schemas, _, bloom) = d.snap
     val targetParts: Set[String] =
       if (partitions.nonEmpty) partitions.toSet else all.map(_.partition).toSet
     // what a rewrite stamps on every file it writes: the latest epoch,
@@ -1167,7 +1232,8 @@ class TimeseriesStore(
         stageInstall(name,
           deduped.select((dataCols(schemas).map(col) :+ col("partition")).toIndexedSeq: _*), bloom)
       }
-    log.commit(adds.map(_.copy(sv = sv, dd = Some(true))), victims.map(a => TxRemove(a.path)))
+    log.commit(adds.map(_.copy(sv = Some(sv), dd = Some(true))), victims.map(a => TxRemove(a.path)),
+      schemas = d.owed, restated = d.restated)
   }
 
   /** Could a [[compact]] that rewrites files at epoch `sv` with bloom
@@ -1177,8 +1243,8 @@ class TimeseriesStore(
     * file the declaration indexes but that has no bloom (its column all
     * null, or a failed build) counts as dirty: the log cannot tell it
     * from one written before the declaration. */
-  private def compacted(a: TxAdd, sv: Option[Long], indexed: Option[(String, Int, Int)]): Boolean =
-    a.dd.contains(true) && a.sv == sv && (indexed match {
+  private def compacted(a: TxAdd, sv: Long, indexed: Option[(String, Int, Int)]): Boolean =
+    a.dd.contains(true) && a.sv.contains(sv) && (indexed match {
       case None => a.blc.isEmpty
       case Some((c, bits, k)) =>
         a.blc.contains(c) && a.bl.flatMap(FileBloom.decode).exists(d => d._1 == k && d._2.length * 64 == bits)
@@ -1206,27 +1272,9 @@ class TimeseriesStore(
   def optimize(name: String, targetBytes: Long = 128L * 1024 * 1024): Long = {
     if (!exists(name)) return 0L
     val log = txLog(name)
-    val TxSnapshot(live, schemas, _, bloom) = log.state()
+    val d = declare(name, log.state())
+    val TxSnapshot(live, schemas, _, bloom) = d.snap
     if (live.isEmpty) return 0L
-    val f = fs(url)
-    val root = featurePath(name)
-    // Sizes come from ONE listStatus per partition directory (statuses
-    // carry lengths), not a stat RPC per live file — the many-small-
-    // files table this feature exists for would otherwise pay thousands
-    // of sequential HEAD requests before any repack work starts. A file
-    // that vanished before the listing (racing vacuum of an older
-    // layout) drops out of the plan here; one that vanishes between
-    // this listing and the rewrite read fails the Spark job LOUDLY —
-    // correct, since a live file can only vanish through external
-    // deletion or a concurrent retirement that the commit's
-    // remove-validation would have rejected anyway.
-    val sizesByPath: Map[String, Long] =
-      live.map(_.partition).distinct.flatMap { p =>
-        try f.listStatus(new Path(root, s"partition=$p")).toSeq
-          .filter(_.isFile)
-          .map(st => s"partition=$p/${st.getPath.getName}" -> st.getLen)
-        catch { case _: java.io.FileNotFoundException => Nil }
-      }.toMap
     // Victims per partition: files under HALF the target (outputs
     // average >= targetBytes/2 by construction, so a repack's own
     // outputs are never re-selected — without the half floor a
@@ -1238,7 +1286,8 @@ class TimeseriesStore(
     // straddling partitions, and the count-improvement guard stops
     // re-selecting once the achievable count is reached.)
     val victims = live.groupBy(_.partition).values.flatMap { adds =>
-      val sized = adds.flatMap(a => sizesByPath.get(a.path).filter(_ < targetBytes / 2).map((a, _)))
+      // sizes from the log: no listing, no stat per file
+      val sized = adds.map(a => (a, a.fsize.get)).filter(_._2 < targetBytes / 2)
       val achievable = math.max(1L, (sized.map(_._2).sum + targetBytes - 1) / targetBytes)
       if (sized.length >= 2 && sized.length > achievable) sized else Nil
     }.toSeq
@@ -1248,8 +1297,8 @@ class TimeseriesStore(
     val src = openAdds(name, victims.map(_._1), schemas, partitionStyle = "date")
       .select((dataCols(schemas).map(col) :+ col("partition")).toIndexedSeq: _*)
     val adds = stageInstall(name, src, bloom, outPartitions = Some(outParts))
-      .map(_.copy(sv = svTag(schemas)))
-    log.commit(adds, victims.map(v => TxRemove(v._1.path)))
+      .map(_.copy(sv = Some(svTag(schemas))))
+    log.commit(adds, victims.map(v => TxRemove(v._1.path)), schemas = d.owed, restated = d.restated)
     victims.size.toLong
   }
 
@@ -1278,15 +1327,10 @@ class TimeseriesStore(
       targetBytes: Long = 128L * 1024 * 1024): Long = {
     if (!exists(name)) return 0L
     val log = txLog(name)
-    val TxSnapshot(live, schemas, _, bloom) = log.state()
+    val d = declare(name, log.state())
+    val TxSnapshot(live, schemas, _, bloom) = d.snap
     if (live.isEmpty) return 0L
-    val f = fs(url)
-    val root = featurePath(name)
-    val totalBytes = live.map(_.partition).distinct.map { p =>
-      try f.listStatus(new Path(root, s"partition=$p")).toSeq
-        .filter(_.isFile).map(_.getLen).sum
-      catch { case _: java.io.FileNotFoundException => 0L }
-    }.sum
+    val totalBytes = live.flatMap(_.fsize).sum
     val outFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     val src = openAdds(name, live, schemas, partitionStyle = "date")
       .select((dataCols(schemas).map(col) :+ col("partition")).toIndexedSeq: _*)
@@ -1302,8 +1346,8 @@ class TimeseriesStore(
       .sortWithinPartitions(col("partition"), col("__zkey"))
       .drop("__zkey")
     val adds = stageInstall(name, laid, bloom, preLaid = true)
-      .map(_.copy(sv = svTag(schemas)))
-    log.commit(adds, live.map(a => TxRemove(a.path)))
+      .map(_.copy(sv = Some(svTag(schemas))))
+    log.commit(adds, live.map(a => TxRemove(a.path)), schemas = d.owed, restated = d.restated)
     live.size.toLong
   }
 
@@ -1317,7 +1361,7 @@ class TimeseriesStore(
       vhi: Double,
       from: Option[Timestamp] = None,
       to: Option[Timestamp] = None): Seq[TxAdd] =
-    valueRangeCandidates(txLog(name).snapshot(), vlo, vhi, from, to)
+    valueRangeCandidates(snapshot(name).adds, vlo, vhi, from, to)
 
   private def valueRangeCandidates(
       live: Seq[TxAdd], vlo: Double, vhi: Double,
@@ -1341,16 +1385,21 @@ class TimeseriesStore(
       vlo: Double,
       vhi: Double,
       from: Option[Timestamp] = None,
-      to: Option[Timestamp] = None): DataFrame = {
-    if (!exists(name)) return emptyFrame(org.apache.spark.sql.types.DoubleType)
-    val TxSnapshot(live, schemas, _, _) = txLog(name).state()
-    val pruned = prunePartitionValues(
-      valueRangeCandidates(live, vlo, vhi, from, to), from, to, "date")
+      to: Option[Timestamp] = None): DataFrame =
+    skippingScan(name, from, to, col(ValueCol) >= lit(vlo) && col(ValueCol) <= lit(vhi))(
+      valueRangeCandidates(_, vlo, vhi, from, to))
+
+  /** The scan behind [[readValueRange]] and [[readKeyEquals]]: the live
+    * files `candidates` keeps, pruned by partition value, opened, and
+    * filtered by `pred` and the time range. */
+  private def skippingScan(name: String, from: Option[Timestamp], to: Option[Timestamp], pred: Column)(
+      candidates: Seq[TxAdd] => Seq[TxAdd]): DataFrame = {
+    if (!exists(name)) return emptyOf(Nil, DoubleType)
+    val TxSnapshot(live, schemas, _, _) = snapshot(name)
+    val pruned = prunePartitionValues(candidates(live), from, to, "date")
     if (pruned.isEmpty) return emptyOf(schemas, DoubleType)
-    val df = openAdds(name, pruned, schemas, partitionStyle = "date")
-    val preds = Seq(col(ValueCol) >= lit(vlo), col(ValueCol) <= lit(vhi)) ++
-      from.map(t => col(TimeCol) >= lit(t)) ++ to.map(t => col(TimeCol) <= lit(t))
-    df.filter(preds.reduce(_ && _))
+    val preds = pred +: (from.map(t => col(TimeCol) >= lit(t)) ++ to.map(t => col(TimeCol) <= lit(t))).toSeq
+    openAdds(name, pruned, schemas, partitionStyle = "date").filter(preds.reduce(_ && _))
       .select(dataCols(schemas).map(col).toIndexedSeq: _*)
   }
 
@@ -1381,7 +1430,7 @@ class TimeseriesStore(
       value: String,
       from: Option[Timestamp] = None,
       to: Option[Timestamp] = None): Seq[TxAdd] =
-    keyCandidates(txLog(name).snapshot(), column, value, from, to)
+    keyCandidates(snapshot(name).adds, column, value, from, to)
 
   private def keyCandidates(
       live: Seq[TxAdd], column: String, value: String,
@@ -1413,24 +1462,15 @@ class TimeseriesStore(
         value.isInstanceOf[Boolean],
       s"unsupported probe type ${value.getClass.getName}: the bloom hashed the column's " +
         "STRING rendering, which only integral/string/boolean types reproduce exactly")
-    if (!exists(name)) return emptyFrame(org.apache.spark.sql.types.DoubleType)
-    val TxSnapshot(live, schemas, _, _) = txLog(name).state()
-    val pruned = prunePartitionValues(
-      keyCandidates(live, column, value.toString, from, to), from, to, "date")
-    if (pruned.isEmpty) return emptyOf(schemas, DoubleType)
-    val df = openAdds(name, pruned, schemas, partitionStyle = "date")
-    val preds = Seq(col(column) === lit(value)) ++
-      from.map(t => col(TimeCol) >= lit(t)) ++ to.map(t => col(TimeCol) <= lit(t))
-    df.filter(preds.reduce(_ && _))
-      .select(dataCols(schemas).map(col).toIndexedSeq: _*)
+    skippingScan(name, from, to, col(column) === lit(value))(keyCandidates(_, column, value.toString, from, to))
   }
 
   /** Metadata-only table statistics: exact stored-row
     * count and event-time bounds computed from the LOG alone — zero
     * Spark jobs, zero file opens; at 100 TB this is the difference
     * between an O(1) driver answer and a full-table count scan
-    * (Delta's numRecords fast path). Returns None when any live file
-    * predates the stats upgrade for the requested dimension: the row
+    * (Delta's numRecords fast path). Returns None when a live file's
+    * footer held no usable stats for the requested dimension: the row
     * count needs every add to carry `nrec`, each bound needs every add
     * to carry it — callers fall back to a scan, never get a wrong
     * number. Counts are STORED rows (every generation the log
@@ -1441,17 +1481,13 @@ class TimeseriesStore(
       name: String,
       asOfVersion: Option[Long] = None): Option[TableStats] = {
     if (!exists(name)) return None
-    val adds = txLog(name).snapshot(asOfVersion)
+    val adds = snapshot(name, asOfVersion).adds
     if (adds.isEmpty) return Some(TableStats(0L, None, None))
-    val rows =
-      if (adds.forall(_.nrec.nonEmpty)) Some(adds.flatMap(_.nrec).sum) else None
-    rows.map { n =>
-      TableStats(n,
-        if (adds.forall(_.tmin.nonEmpty)) Some(adds.flatMap(_.tmin).min) else None,
-        if (adds.forall(_.tmax.nonEmpty)) Some(adds.flatMap(_.tmax).max) else None,
-        if (adds.forall(_.vmin.nonEmpty)) Some(adds.flatMap(_.vmin).min) else None,
-        if (adds.forall(_.vmax.nonEmpty)) Some(adds.flatMap(_.vmax).max) else None)
-    }
+    // a stat every live add carries, else None
+    def every[T](stat: TxAdd => Option[T]): Option[Seq[T]] =
+      if (adds.forall(stat(_).nonEmpty)) Some(adds.flatMap(stat)) else None
+    every(_.nrec).map(n => TableStats(n.sum, every(_.tmin).map(_.min), every(_.tmax).map(_.max),
+      every(_.vmin).map(_.min), every(_.vmax).map(_.max)))
   }
 
   /** Row-level transactional delete (the lakehouse DELETE / GDPR
@@ -1497,7 +1533,8 @@ class TimeseriesStore(
       rewrite: DataFrame => DataFrame): Long = {
     if (!exists(name)) return 0L
     val log = txLog(name)
-    val TxSnapshot(live, schemas, _, bloom) = log.state()
+    val d = declare(name, log.state())
+    val TxSnapshot(live, schemas, _, bloom) = d.snap
     if (live.isEmpty) return 0L
     // driver-size by construction: one row per LIVE FILE with a match,
     // bounded by the snapshot size (same class as snapshot() itself)
@@ -1515,8 +1552,8 @@ class TimeseriesStore(
       val out = rewrite(vsrc)
       val adds =
         if (out.isEmpty) Nil
-        else stageInstall(name, out, bloom).map(_.copy(sv = svTag(schemas)))
-      log.commit(adds, victims.map(a => TxRemove(a.path)))
+        else stageInstall(name, out, bloom).map(_.copy(sv = Some(svTag(schemas))))
+      log.commit(adds, victims.map(a => TxRemove(a.path)), schemas = d.owed, restated = d.restated)
       matched
     } finally vsrc.unpersist(blocking = false)
   }
@@ -1545,21 +1582,19 @@ class TimeseriesStore(
       name: String,
       source: DataFrame, // time, value [, created_time, declared extras]
       partitionStyle: String = "date"): (Long, Long) = {
-    val declaredExtras: Set[String] =
-      if (exists(name))
-        tableSchema(name).map(_.fieldNames.toSet -- Set(TimeCol, CreatedCol, ValueCol))
-          .getOrElse(Set.empty)
-      else Set.empty
-    val normalized = TimeseriesStore.normalize(source, partitionStyle, declaredExtras)
     val log = txLog(name)
-    val TxSnapshot(live, schemas, checks, bloom) =
-      if (exists(name)) log.state() else TxSnapshot(Seq.empty, Seq.empty)
-    // the MERGE source is new data like any save batch — same CHECKs
+    // ONE replay serves validation, checks, epoch, victims and commit
+    val d = declare(name, log.state())
+    val TxSnapshot(live, schemas, checks, bloom) = d.snap
+    val normalized = TimeseriesStore.normalize(source, partitionStyle, declaredExtras(schemas))
+    // the MERGE source is new data like any save batch — same CHECKs,
+    // enforced once: the insert-only exits stage it with none left
     enforceChecks(checks, name, Left(normalized))
+    val checked = d.copy(snap = d.snap.copy(checks = Nil))
     if (live.isEmpty) {
       // empty target: MERGE degenerates to plain insert
       val n = normalized.count()
-      if (n > 0) write(name, normalized)
+      if (n > 0) commitBatch(log, checked, name, normalized)
       return (0L, n)
     }
     val srcTimes = normalized.select(col(TimeCol)).distinct()
@@ -1577,19 +1612,18 @@ class TimeseriesStore(
         val inserted = normalized.count() - updated
         if (victimUris.isEmpty) {
           // no overlap: MERGE is a plain transactional append
-          write(name, normalized)
+          commitBatch(log, checked, name, normalized)
           return (0L, inserted)
         }
         val victims = live.filter(a => victimUris.exists(_.endsWith("/" + a.path)))
         val keep = openAdds(name, victims, schemas, partitionStyle = "date")
           .join(srcTimes, Seq(TimeCol), "left_anti")
-        val target = schemas.lastOption.map(schemaOf)
-        val conformedSrc = target.map(conformForWrite(normalized, _)).getOrElse(normalized)
+        val conformedSrc = conformForWrite(normalized, schemaOf(schemas.last))
         val keepCols = (dataCols(schemas).map(col) :+ col("partition")).toIndexedSeq
         val adds = stageInstall(name,
           keep.select(keepCols: _*).unionByName(conformedSrc.select(keepCols: _*)), bloom)
-          .map(_.copy(sv = svTag(schemas)))
-        log.commit(adds, victims.map(a => TxRemove(a.path)))
+          .map(_.copy(sv = Some(svTag(schemas))))
+        log.commit(adds, victims.map(a => TxRemove(a.path)), schemas = d.owed, restated = d.restated)
         (updated, inserted)
       } finally hits.unpersist(blocking = false)
     } finally srcTimes.unpersist(blocking = false)
@@ -1610,12 +1644,12 @@ class TimeseriesStore(
       fromVersion: Long,
       toVersion: Option[Long] = None,
       valueType: DataType = DoubleType): DataFrame = {
-    if (!exists(name)) return emptyFrame(valueType)
+    if (!exists(name)) return emptyOf(Nil, valueType)
     val log = txLog(name)
     val before = log.snapshot(Some(fromVersion)).map(_.path).toSet
-    val TxSnapshot(after, schemas, _, _) = log.state(toVersion)
+    val TxSnapshot(after, schemas, _, _) = declare(name, log.state(toVersion)).snap
     val fresh = after.filterNot(a => before(a.path))
-    if (fresh.isEmpty) return emptyFrame(valueType)
+    if (fresh.isEmpty) return emptyOf(Nil, valueType)
     openAdds(name, fresh, schemas, partitionStyle = "date")
       .select(dataCols(schemas).map(col).toIndexedSeq: _*)
   }
@@ -1637,8 +1671,9 @@ class TimeseriesStore(
   def restore(name: String, v: Long): Long = {
     require(exists(name), s"no such feature: $name")
     val log = txLog(name)
-    val target = log.snapshot(Some(v))
-    val current = log.snapshot()
+    val d = declare(name, log.state())
+    val target = declare(name, log.state(Some(v))).snap.adds
+    val current = d.snap.adds
     val targetPaths = target.map(_.path).toSet
     val currentPaths = current.map(_.path).toSet
     val adds = target.filterNot(a => currentPaths(a.path))
@@ -1649,16 +1684,14 @@ class TimeseriesStore(
       throw new IllegalStateException(
         s"cannot restore '$name' to version $v: ${a.path} was vacuumed")
     }
-    log.commit(adds, removes)
+    log.commit(adds, removes, schemas = d.owed, restated = d.restated)
   }
 
   /** Resolve an AS OF TIMESTAMP instant to a table version (txlog
     * backend) — feed the result to `read(asOfVersion = …)` /
     * `readChanges`. Delta's commit-mtime fallback rule; see
     * [[TxLog.versionAt]] for the portability caveat. */
-  def versionAt(name: String, tsMillis: Long): Long = {
-    txLog(name).versionAt(tsMillis)
-  }
+  def versionAt(name: String, tsMillis: Long): Long = txLog(name).versionAt(tsMillis)
 
   /** Garbage-collect files retired by compaction:
     * deletes bytes unreferenced by the LATEST snapshot. Time travel to
@@ -1700,9 +1733,7 @@ class TimeseriesStore(
   /** Latest committed table version of a log-backed feature (-1 if no
     * commits yet) — the handle `read(asOfVersion = ...)` time-travels to.
     */
-  def tableVersion(name: String): Long = {
-    txLog(name).latestVersion()
-  }
+  def tableVersion(name: String): Long = txLog(name).latestVersion()
 
   /** S5: recursive delete of a feature's data. */
   def delete(name: String): Unit = {
@@ -1719,7 +1750,7 @@ class TimeseriesStore(
     * A feature with no live files copies nothing.
     */
   def copy(name: String, toName: String, dest: TimeseriesStore, partitionStyle: String = "date"): Unit = {
-    val TxSnapshot(adds, schemas, _, _) = txLog(name).state()
+    val TxSnapshot(adds, schemas, _, _) = snapshot(name)
     if (adds.isEmpty) return
     val df = openAdds(name, adds, schemas, partitionStyle)
     dest.write(toName, df.select(
@@ -1755,23 +1786,16 @@ class TimeseriesStore(
     val log = txLog(name)
     val v = asOfVersion.getOrElse(log.latestVersion())
     require(v >= 0, s"feature '$name' has no committed version to export")
-    val TxSnapshot(adds, schemas, _, _) = log.state(Some(v))
-    val f = fs(url)
+    val snap = declare(name, log.state(Some(v))).snap
+    val TxSnapshot(adds, schemas, _, _) = snap
     val dst = new Path(dstDir)
     val dstFs = dst.getFileSystem(hadoopConf)
     require(!dstFs.exists(dst) || dstFs.listStatus(dst).isEmpty,
       s"export destination $dstDir exists and is not empty")
     dstFs.mkdirs(dst)
-    val verbatim = adds.map(_.sv.getOrElse(0L)).distinct.size <= 1
-    if (verbatim) {
-      val root = new Path(featurePath(name))
-      adds.foreach { a =>
-        val to = new Path(dst, a.path)
-        if (!dstFs.exists(to.getParent)) dstFs.mkdirs(to.getParent)
-        org.apache.hadoop.fs.FileUtil.copy(
-          f, new Path(root, a.path), dstFs, to, false, hadoopConf)
-      }
-    } else if (adds.nonEmpty) {
+    val verbatim = adds.map(_.sv).distinct.size <= 1
+    if (verbatim) copyFiles(name, adds, dstFs, dst)
+    else if (adds.nonEmpty) {
       val df = openAdds(name, adds, schemas, partitionStyle = "date")
       SessionConf.scoped(spark)(TimestampMicros) {
         layoutForWrite(df).write
@@ -1782,16 +1806,45 @@ class TimeseriesStore(
       // files and the manifest
       dstFs.delete(new Path(dst, "_SUCCESS"), false)
     }
+    writeManifest(dstFs, dst, name, v, verbatim, snap)
+    v
+  }
+
+  /** Byte-copies `adds` of feature `name` into the tree at `dst`, each
+    * under its `partition=<p>/` directory. */
+  private def copyFiles(name: String, adds: Seq[TxAdd], dstFs: FileSystem, dst: Path): Unit = {
+    val (f, root) = (fs(url), new Path(featurePath(name)))
+    adds.foreach { a =>
+      val to = new Path(dst, a.path)
+      if (!dstFs.exists(to.getParent)) dstFs.mkdirs(to.getParent)
+      org.apache.hadoop.fs.FileUtil.copy(f, new Path(root, a.path), dstFs, to, false, hadoopConf)
+    }
+  }
+
+  /** The `_graft_manifest.json` of the tree at `dir`, if it has one. */
+  private def readManifest(dirFs: FileSystem, dir: Path): Option[com.fasterxml.jackson.databind.JsonNode] = {
+    val p = new Path(dir, TimeseriesStore.ManifestName)
+    if (!dirFs.exists(p)) None
+    else {
+      val in = dirFs.open(p)
+      try Some(TimeseriesStore.manifestMapper.readTree(new java.io.InputStreamReader(in, "UTF-8")))
+      finally in.close()
+    }
+  }
+
+  /** The `_graft_manifest.json` of a tree holding `snap`, version `v`
+    * of feature `name`: its files when the tree holds them `verbatim`. */
+  private def writeManifest(
+      dstFs: FileSystem, dst: Path, name: String, v: Long, verbatim: Boolean, snap: TxSnapshot): Unit = {
     val manifest = Map[String, Any](
       "table" -> name, "version" -> v,
       "mode" -> (if (verbatim) "verbatim" else "aligned"),
-      "files" -> (if (verbatim) adds.map(_.path) else Nil),
-      "rows" -> adds.flatMap(_.nrec).sum,
-      "schemaJson" -> schemas.lastOption.orNull)
+      "files" -> (if (verbatim) snap.adds.map(_.path) else Nil),
+      "rows" -> snap.adds.flatMap(_.nrec).sum,
+      "schemaJson" -> snap.schemas.lastOption.orNull)
     val out = dstFs.create(new Path(dst, TimeseriesStore.ManifestName), true)
     try out.write(TimeseriesStore.manifestMapper.writeValueAsBytes(manifest))
     finally out.close()
-    v
   }
 
   /** [[exportSnapshot]] plus a Delta-protocol `_delta_log` describing
@@ -1831,15 +1884,49 @@ class TimeseriesStore(
     * as the Delta sync: verbatim export, same table, no schema epoch
     * drift. Returns the synced txlog version; no-ops when idle.
     */
-  def syncSnapshotIceberg(name: String, dstDir: String): Long = {
+  def syncSnapshotIceberg(name: String, dstDir: String): Long =
+    syncSnapshot(name, dstDir, "Iceberg") { (snap, prevSchema) =>
+      // schema drift since the export: ADD-COLUMN-only evolution syncs —
+      // Iceberg's own evolution semantics make the mixed-epoch tree
+      // readable (old files lack the new column; readers null-fill via
+      // the name mapping, and appendSnapshot publishes a new schema-id
+      // so pinned snapshots keep their epoch) — while type changes or
+      // drops refuse: the verbatim-copied parquet cannot satisfy a
+      // widened read
+      val newDataSchema: Option[StructType] =
+        if (snap.schemas.lastOption == prevSchema) None
+        else {
+          val prevSt = prevSchema.map(schemaOf)
+          val newSt = snap.schemas.lastOption.map(schemaOf)
+          require(prevSt.isDefined && newSt.isDefined,
+            s"schema of '$name' changed since the export and one side is " +
+              "unreadable; re-export")
+          val newByName = newSt.get.fields.map(f => f.name -> f.dataType).toMap
+          val bad = prevSt.get.fields.filterNot(f =>
+            newByName.get(f.name).contains(f.dataType))
+          require(bad.isEmpty,
+            s"schema of '$name' changed beyond column adds since the export " +
+              s"(${bad.map(_.name).mkString(", ")}); re-export (a type change " +
+              "cannot be satisfied by the verbatim-copied parquet)")
+          newSt
+        }
+      (added, gone) => IcebergBridge.appendSnapshot(
+        spark, dstDir, added, gone, hadoopConf, newDataSchema = newDataSchema)
+    }._1
+
+  /** The sync both formats share: reads the manifest of the verbatim
+    * export of `name` at `dstDir` (written by `exportSnapshot<format>`)
+    * and, when the table moved since, lets `prepare` check the current
+    * snapshot against the exported schema, byte-copies the files new
+    * since the export, hands the new and gone paths to the publish step
+    * `prepare` returned, and rewrites the manifest. Returns the synced
+    * version and what the publish returned (None when idle). */
+  private def syncSnapshot[A](name: String, dstDir: String, format: String)(
+      prepare: (TxSnapshot, Option[String]) => (Seq[String], Seq[String]) => A): (Long, Option[A]) = {
     val dst = new Path(dstDir)
     val dstFs = dst.getFileSystem(hadoopConf)
-    val manifestPath = new Path(dst, TimeseriesStore.ManifestName)
-    require(dstFs.exists(manifestPath),
-      s"$dstDir carries no manifest — exportSnapshotIceberg first, then sync")
-    val in = dstFs.open(manifestPath)
-    val node = try TimeseriesStore.manifestMapper.readTree(
-      new java.io.InputStreamReader(in, "UTF-8")) finally in.close()
+    val node = readManifest(dstFs, dst).getOrElse(throw new IllegalArgumentException(
+      s"$dstDir carries no manifest — exportSnapshot$format first, then sync"))
     require(node.get("table").asText() == name,
       s"$dstDir was exported from '${node.get("table").asText()}', not '$name'")
     require(node.get("mode").asText() == "verbatim",
@@ -1850,64 +1937,18 @@ class TimeseriesStore(
       (0 until fn.size()).map(fn.get(_).asText()).toSet
     }
     val prevSchema = Option(node.get("schemaJson")).filterNot(_.isNull).map(_.asText())
-
     val log = txLog(name)
     val v = log.latestVersion()
-    if (v == prevV) return v
+    if (v == prevV) return (v, None)
     require(v > prevV, s"table '$name' is at version $v but $dstDir was " +
       s"exported at $prevV — a newer tree cannot sync backwards")
-    val TxSnapshot(adds, schemas, _, _) = log.state(Some(v))
-    // schema drift since the export: ADD-COLUMN-only evolution syncs —
-    // Iceberg's own evolution semantics make the mixed-epoch tree
-    // readable (old files lack the new column; readers null-fill via
-    // the name mapping, and appendSnapshot publishes a new schema-id
-    // so pinned snapshots keep their epoch) — while type changes or
-    // drops refuse: the verbatim-copied parquet cannot satisfy a
-    // widened read
-    val schemaChanged = schemas.lastOption != prevSchema
-    val newDataSchema: Option[StructType] =
-      if (!schemaChanged) None
-      else {
-        val prevSt = prevSchema.map(s =>
-          DataType.fromJson(s).asInstanceOf[StructType])
-        val newSt = schemas.lastOption.map(s =>
-          DataType.fromJson(s).asInstanceOf[StructType])
-        require(prevSt.isDefined && newSt.isDefined,
-          s"schema of '$name' changed since the export and one side is " +
-            "unreadable; re-export")
-        val newByName = newSt.get.fields.map(f => f.name -> f.dataType).toMap
-        val bad = prevSt.get.fields.filterNot(f =>
-          newByName.get(f.name).contains(f.dataType))
-        require(bad.isEmpty,
-          s"schema of '$name' changed beyond column adds since the export " +
-            s"(${bad.map(_.name).mkString(", ")}); re-export (a type change " +
-            "cannot be satisfied by the verbatim-copied parquet)")
-        newSt
-      }
-
-    val newFiles = adds.filterNot(a => prevFiles(a.path))
-    val goneFiles = (prevFiles -- adds.map(_.path)).toSeq.sorted
-    val f = fs(url)
-    val root = new Path(featurePath(name))
-    newFiles.foreach { a =>
-      val to = new Path(dst, a.path)
-      if (!dstFs.exists(to.getParent)) dstFs.mkdirs(to.getParent)
-      org.apache.hadoop.fs.FileUtil.copy(
-        f, new Path(root, a.path), dstFs, to, false, hadoopConf)
-    }
-    IcebergBridge.appendSnapshot(
-      spark, dstDir, newFiles.map(_.path), goneFiles, hadoopConf,
-      newDataSchema = newDataSchema)
-
-    val manifest = Map[String, Any](
-      "table" -> name, "version" -> v, "mode" -> "verbatim",
-      "files" -> adds.map(_.path),
-      "rows" -> adds.flatMap(_.nrec).sum,
-      "schemaJson" -> schemas.lastOption.orNull)
-    val out = dstFs.create(manifestPath, true)
-    try out.write(TimeseriesStore.manifestMapper.writeValueAsBytes(manifest))
-    finally out.close()
-    v
+    val snap = declare(name, log.state(Some(v))).snap
+    val publish = prepare(snap, prevSchema)
+    val newFiles = snap.adds.filterNot(a => prevFiles(a.path))
+    copyFiles(name, newFiles, dstFs, dst)
+    val published = publish(newFiles.map(_.path), (prevFiles -- snap.adds.map(_.path)).toSeq.sorted)
+    writeManifest(dstFs, dst, name, v, verbatim = true, snap)
+    (v, Some(published))
   }
 
   /** Incrementally publish txlog commits SINCE the last export/sync as
@@ -1929,60 +1970,15 @@ class TimeseriesStore(
     * format doesn't promise.
     */
   def syncSnapshotDelta(name: String, dstDir: String, checkpointEvery: Int = 10): Long = {
-    val dst = new Path(dstDir)
-    val dstFs = dst.getFileSystem(hadoopConf)
-    val manifestPath = new Path(dst, TimeseriesStore.ManifestName)
-    require(dstFs.exists(manifestPath),
-      s"$dstDir carries no manifest — exportSnapshotDelta first, then sync")
-    val in = dstFs.open(manifestPath)
-    val node = try TimeseriesStore.manifestMapper.readTree(
-      new java.io.InputStreamReader(in, "UTF-8")) finally in.close()
-    require(node.get("table").asText() == name,
-      s"$dstDir was exported from '${node.get("table").asText()}', not '$name'")
-    require(node.get("mode").asText() == "verbatim",
-      s"$dstDir is an aligned (rewritten) export; sync needs verbatim — re-export")
-    val prevV = node.get("version").asLong()
-    val prevFiles = {
-      val fn = node.get("files")
-      (0 until fn.size()).map(fn.get(_).asText()).toSet
+    val (v, deltaV) = syncSnapshot(name, dstDir, "Delta") { (snap, prevSchema) =>
+      require(snap.schemas.lastOption == prevSchema,
+        s"schema of '$name' changed since the export; re-export (sync " +
+          "cannot mix physical schema epochs in a plain-parquet tree)")
+      require(snap.adds.map(_.sv).distinct.size <= 1,
+        s"snapshot of '$name' spans schema epochs; re-export aligned")
+      (added, gone) => DeltaBridge.appendCommit(spark, dstDir, added, gone, hadoopConf)
     }
-    val prevSchema = Option(node.get("schemaJson")).filterNot(_.isNull).map(_.asText())
-
-    val log = txLog(name)
-    val v = log.latestVersion()
-    if (v == prevV) return v
-    require(v > prevV, s"table '$name' is at version $v but $dstDir was " +
-      s"exported at $prevV — a newer tree cannot sync backwards")
-    val TxSnapshot(adds, schemas, _, _) = log.state(Some(v))
-    require(schemas.lastOption == prevSchema,
-      s"schema of '$name' changed since the export; re-export (sync " +
-        "cannot mix physical schema epochs in a plain-parquet tree)")
-    require(adds.map(_.sv.getOrElse(0L)).distinct.size <= 1,
-      s"snapshot of '$name' spans schema epochs; re-export aligned")
-
-    val newFiles = adds.filterNot(a => prevFiles(a.path))
-    val goneFiles = (prevFiles -- adds.map(_.path)).toSeq.sorted
-    val f = fs(url)
-    val root = new Path(featurePath(name))
-    newFiles.foreach { a =>
-      val to = new Path(dst, a.path)
-      if (!dstFs.exists(to.getParent)) dstFs.mkdirs(to.getParent)
-      org.apache.hadoop.fs.FileUtil.copy(
-        f, new Path(root, a.path), dstFs, to, false, hadoopConf)
-    }
-    val deltaV = DeltaBridge.appendCommit(
-      spark, dstDir, newFiles.map(_.path), goneFiles, hadoopConf)
-
-    val manifest = Map[String, Any](
-      "table" -> name, "version" -> v, "mode" -> "verbatim",
-      "files" -> adds.map(_.path),
-      "rows" -> adds.flatMap(_.nrec).sum,
-      "schemaJson" -> schemas.lastOption.orNull)
-    val out = dstFs.create(manifestPath, true)
-    try out.write(TimeseriesStore.manifestMapper.writeValueAsBytes(manifest))
-    finally out.close()
-
-    if (checkpointEvery > 0 && deltaV % checkpointEvery == 0)
+    if (deltaV.exists(dv => checkpointEvery > 0 && dv % checkpointEvery == 0))
       DeltaBridge.writeCheckpoint(spark, dstDir, hadoopConf)
     v
   }
@@ -2002,14 +1998,8 @@ class TimeseriesStore(
       s"feature '$name' already has commits; import into a fresh name")
     val src = new Path(srcDir)
     val srcFs = src.getFileSystem(hadoopConf)
-    val manifestPath = new Path(src, TimeseriesStore.ManifestName)
-    val schemaJson: Option[String] =
-      if (srcFs.exists(manifestPath)) {
-        val in = srcFs.open(manifestPath)
-        val node = try TimeseriesStore.manifestMapper.readTree(
-          new java.io.InputStreamReader(in, "UTF-8")) finally in.close()
-        Option(node.get("schemaJson")).filterNot(_.isNull).map(_.asText())
-      } else None
+    val schemaJson = readManifest(srcFs, src)
+      .flatMap(node => Option(node.get("schemaJson")).filterNot(_.isNull).map(_.asText()))
     // a tree carrying table-format metadata imports THROUGH it (only
     // live files, partition values from the log/manifests) — the
     // return leg for exportSnapshotDelta/-Iceberg trees and for tables
@@ -2032,8 +2022,7 @@ class TimeseriesStore(
       df.withColumn("partition", col("partition").cast(StringType)), log.state().bloom)
       .map(_.copy(sv = Some(0L)))
     require(adds.nonEmpty, s"no rows found under $srcDir")
-    log.commit(adds, schema = schemaJson.orElse(Some(structJson(
-      df.drop("partition")))))
+    log.commit(adds, schemas = Seq(schemaJson.getOrElse(structJson(df.drop("partition")))))
   }
 
   /** A parquet file-sink tree's committed files, listed by its sink log
@@ -2079,6 +2068,16 @@ object TimeseriesStore {
     * So 1 MB keeps the driver the faster side, and caps the rows one
     * call holds there. */
   val DriverLoadBytes: Long = 1L << 20
+
+  /** A replay in the one log format ([[TimeseriesStore.declare]]). The
+    * log records the first `recorded` of `snap`'s schema epochs;
+    * `restated` are the adds it records without their epoch, size or
+    * stats, as `declare` stated them. A write commits [[owed]] and
+    * `restated` with its own actions, after which a replay opens no
+    * footer. */
+  private[store] final case class Declared(snap: TxSnapshot, recorded: Int, restated: Seq[TxAdd]) {
+    def owed: Seq[String] = snap.schemas.drop(recorded)
+  }
 
   /** Manifest file of an exported snapshot — underscore-prefixed so
     * parquet directory listings (Spark, Hadoop globs) skip it. */

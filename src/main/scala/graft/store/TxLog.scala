@@ -12,16 +12,21 @@ import org.apache.hadoop.fs.Path
   * under — an index into the table's ordered schema-declaration list —
   * so an evolved table's reader knows which physical schema to open
   * each file with (the parquet reader cannot widen e.g. int64→double
-  * on its own). None = written before the table declared any schema
-  * (epoch 0 by convention).
+  * on its own).
   *
   * `tmin`/`tmax` are the file's event-time bounds in epoch MICROS
   * (from the parquet footer at install time) — Delta-style file-level
   * data skipping: a ranged read drops non-overlapping files from log
   * metadata alone, one level finer than partition pruning (a
   * micro-batch-accumulated day holds many files, each covering a
-  * narrow slice). Absent on pre-upgrade adds or when the footer had no
-  * usable stats — such files are always scanned (the safe direction).
+  * narrow slice). Absent when the footer had no usable stats — such
+  * files are always scanned (the safe direction).
+  *
+  * The fields are optional in the JSON a log line carries: a log
+  * written before a field existed, or a foreign or hand-edited one,
+  * may leave `sv`, `fsize` or the stats out. The store replays every
+  * log into one format (`TimeseriesStore.declare`): there each add has
+  * its epoch and size, and its stats unless its footer holds none.
   */
 final case class TxAdd(
     path: String,
@@ -33,13 +38,14 @@ final case class TxAdd(
     // recorded by EVERY staged write whose value column is physically
     // DOUBLE (same footer read as the time bounds), so the stats
     // survive DELETE/UPDATE/merge/optimize rewrites; absent on
-    // pre-upgrade adds and non-numeric values, and a file without
-    // them simply always qualifies
+    // non-numeric values, and a file without them simply always
+    // qualifies
     vmin: Option[Double] = None,
     vmax: Option[Double] = None,
     // exact row count from the footer (Delta's numRecords): lets
-    // COUNT/bounds queries answer from log metadata with NO scan;
-    // absent on pre-upgrade adds, which disables the fast path only
+    // COUNT/bounds queries answer from log metadata with NO scan, and
+    // sizes a driver read; absent only when the footer could not be
+    // read, which disables those fast paths only
     nrec: Option[Long] = None,
     // per-file Bloom filter over column `blc` (Delta's bloom index):
     // exact-match probes skip files whose bloom excludes the key —
@@ -51,8 +57,7 @@ final case class TxAdd(
     bl: Option[String] = None,
     // file byte size (Delta's `size`): lets reads build the scan's
     // FileIndex from log metadata alone — no filesystem listing, no
-    // footer probe for split planning. Absent on pre-upgrade adds,
-    // which fall back to the listing read path only
+    // footer probe for split planning
     fsize: Option[Long] = None,
     // deduped: Some(true) on the adds a compaction writes — its
     // partition's one-row-per-time output, at the epoch and bloom
@@ -266,8 +271,8 @@ class TxLog(
 
   /** Ordered table-schema declarations visible at `asOf` (default:
     * latest) — the last entry is the schema in effect; an add's `sv`
-    * indexes this list. Empty for tables that never declared one
-    * (pre-evolution logs). */
+    * indexes this list. Empty for a table no write has declared one
+    * for yet. */
   def schemaHistory(asOf: Option[Long] = None): Seq[String] = replay(asOf)._4
 
   /** Active bloom-index declaration at `asOf` (default: latest), if
@@ -438,9 +443,13 @@ class TxLog(
     *    copies (2x storage and scan). The loser now fails with
     *    ConcurrentModificationException; its staged files are
     *    unreferenced and vacuumable.
+    *  - `restated` are adds of live files written again with more of
+    *    their metadata; one a concurrent commit retired (or this one
+    *    removes) is left out, since re-adding it would revive the file.
     *
     * Pure appends (adds only, no txn) never conflict semantically, so
-    * they keep the validation-free blind retry.
+    * they keep the validation-free blind retry. `schemas` are declared
+    * in order, ahead of the adds written under them.
     */
   def commit(
       adds: Seq[TxAdd],
@@ -448,26 +457,27 @@ class TxLog(
       txnId: Option[String] = None,
       maxAttempts: Int = 20,
       txnAppVer: Option[(String, Long)] = None,
-      schema: Option[String] = None,
+      schemas: Seq[String] = Nil,
       check: Option[(String, String)] = None,
-      bloom: Option[(String, Int, Int)] = None): Long = {
-    require(adds.nonEmpty || removes.nonEmpty || schema.isDefined || check.isDefined ||
+      bloom: Option[(String, Int, Int)] = None,
+      restated: Seq[TxAdd] = Nil): Long = {
+    require(adds.nonEmpty || removes.nonEmpty || schemas.nonEmpty || check.isDefined ||
       bloom.isDefined, "empty commit")
     // commit-info instant FIRST so versionAt reads one line per file;
     // a schema declaration precedes the adds written under it
     val commitTs = System.currentTimeMillis()
-    val actions = TxAction(commitTs = Some(commitTs)) +:
-      (schema.map(sj => TxAction(schemaJson = Some(sj))).toSeq ++
+    val removed = removes.map(_.path).toSet
+    def actionsWith(live: Seq[TxAdd]) = TxAction(commitTs = Some(commitTs)) +:
+      (schemas.map(sj => TxAction(schemaJson = Some(sj))) ++
         check.map { case (cn, ce) =>
           TxAction(checkName = Some(cn), checkExpr = Some(ce)) }.toSeq ++
         bloom.map { case (bc, bb, bk) =>
           TxAction(bloomCol = Some(bc), bloomBits = Some(bb), bloomK = Some(bk)) }.toSeq ++
-        adds.map(a => TxAction(add = Some(a))) ++
+        (live ++ adds).map(a => TxAction(add = Some(a))) ++
         removes.map(r => TxAction(remove = Some(r))) ++
         txnId.map(t => TxAction(txn = Some(t))) ++
         txnAppVer.map { case (app, ver) =>
           TxAction(txnApp = Some(app), txnVer = Some(ver)) })
-    val lines = actions.map(mapper.writeValueAsString).mkString("", "\n", "\n")
     if (!fs.exists(logDir)) fs.mkdirs(logDir)
     var attempt = 0
     // version guessing: a long-lived committer attempts knownHighWater+1
@@ -484,7 +494,8 @@ class TxLog(
         resync = false
       }
       val v = synchronized { math.max(knownHighWater, cacheVersion) } + 1
-      if (txnId.isDefined || txnAppVer.isDefined || removes.nonEmpty) {
+      var restatedLive = restated
+      if (txnId.isDefined || txnAppVer.isDefined || removes.nonEmpty || restated.nonEmpty) {
         // replay capped at v-1: exactly the commits this attempt builds
         // on; anything landing after is serialized by the rename below
         val (liveAdds, txns, apps, _, _, _) = replay(Some(v - 1))
@@ -493,14 +504,15 @@ class TxLog(
         // version OR NEWER (a zombie replaying an old batch no-ops)
         if (txnAppVer.exists { case (app, ver) => apps.get(app).exists(_ >= ver) })
           return -1L
-        if (removes.nonEmpty) {
-          val live = liveAdds.map(_.path).toSet
-          removes.find(r => !live.contains(r.path)).foreach { r =>
-            throw new java.util.ConcurrentModificationException(
-              s"commit conflict on $logDir: ${r.path} was already retired by a concurrent commit")
-          }
+        val live = liveAdds.map(_.path).toSet
+        removes.find(r => !live.contains(r.path)).foreach { r =>
+          throw new java.util.ConcurrentModificationException(
+            s"commit conflict on $logDir: ${r.path} was already retired by a concurrent commit")
         }
+        restatedLive = restated.filter(a => live(a.path) && !removed(a.path))
       }
+      val actions = actionsWith(restatedLive)
+      val lines = actions.map(mapper.writeValueAsString).mkString("", "\n", "\n")
       val tmp = new Path(logDir, s".tmp-${java.util.UUID.randomUUID()}.json")
       val out = fs.create(tmp, true)
       try out.write(lines.getBytes("UTF-8")) finally out.close()
@@ -585,23 +597,7 @@ class TxLog(
       // versionAt keeps resolving v after vacuum prunes the commit.
       // Schema declarations replay IN ORDER ahead of the adds — their
       // indices (the adds' `sv` epochs) must survive the checkpoint.
-      val (adds0, txns, apps, schemas, checks, blooms) = replay(Some(v))
-      // fsize BACKFILL (r20): pre-upgrade adds carry no byte size, which
-      // drops their whole read group back to the listing path
-      // (TimeseriesStore.openAdds). The checkpoint rewrite already
-      // touches every live add, so stat the missing sizes here ONCE —
-      // after one checkpoint cycle a reopened old-format table reads
-      // through MetaFileIndex like a freshly written one. Best-effort
-      // per file: an unstattable path just keeps fsize absent (the safe
-      // listing fallback). Cost is one getFileStatus per fsize-less add
-      // on the FIRST checkpoint only — later checkpoints replay the
-      // backfilled adds.
-      val adds = adds0.map { a =>
-        if (a.fsize.isDefined) a
-        else try a.copy(fsize =
-          Some(fs.getFileStatus(new Path(tableDir, a.path)).getLen))
-        catch { case scala.util.control.NonFatal(_) => a }
-      }
+      val (adds, txns, apps, schemas, checks, blooms) = replay(Some(v))
       val lines = (TxAction(commitTs = Some(commitTs)) +:
         (schemas.map(sj => TxAction(schemaJson = Some(sj))) ++
           checks.map { case (cn, ce) =>

@@ -352,11 +352,11 @@ class ServeReadSpec extends SparkSpec with JobCounting with PlanCounting {
     val (fs, warehouse) = freshStore()
     saveLoose(fs, warehouse)
     val reads = assertEndpoints(fs, looseNames)
-    // a file without a size cannot be read on the driver: the candidates
-    // that can win (the stat-less files and the newest bounded tier) go
-    // to the one Spark job
+    // adds the log records without size or stats are stated from their
+    // footers as it is replayed: the search reads them on the driver,
+    // newest tier first, like any others
     val bare = reads(("bare", None, true))
-    assert(bare.driverTiers.isEmpty && bare.sparkFiles.size == 3, bare)
+    assert(bare.driverTiers.size == 1 && bare.sparkFiles.isEmpty, bare)
     // the tail day's file and its four rewrites tie at tmax: one tier,
     // read together
     assert(reads(("tied", None, true)).driverTiers.map(_.size) == Seq(5))
@@ -502,8 +502,9 @@ class ServeReadSpec extends SparkSpec with JobCounting with PlanCounting {
         fs.loadDataFrame(Seq("s/tied", "s/evo", "s/num"), asOfVersion = Some(v)))
     val holes = fs.loadDataFrame(Seq("s/holes")).collect().map(_.getDouble(1)).toSeq
     assert(holes == Seq(0.0, 1.0, 1.0, 3.0, 4.0), holes)
-    // a file whose size the log does not record: the Spark path
-    assertLoadsAgree(fs, "bare", viaSpark = true)(fs.loadDataFrame(Seq("s/bare", "s/num")))
+    // files the log records without size or stats: stated from their
+    // footers, so the driver serves them too
+    assertLoadsAgree(fs, "bare")(fs.loadDataFrame(Seq("s/bare", "s/num")))
     // duplicate names fail alike on both paths
     def dup() = intercept[IllegalArgumentException](fs.loadDataFrame(Seq("s/num", "s/num"))).getMessage
     assert(dup() == withDriverLoadBound(fs, -1)(dup()))

@@ -11,8 +11,10 @@ import graft.SparkSpec
   * (2) that partition pruning still happens INSIDE the index (Spark
   * removes partition predicates from post-scan filters on the promise
   * the index applies them — a no-op listFiles would return every
-  * partition's rows), and (3) that pre-upgrade adds without fsize keep
-  * reading through the listing path unchanged.
+  * partition's rows), and (3) that adds a log records without fsize
+  * (a log written before adds carried it) are stated from their files
+  * as the log is replayed, read through the same index, and committed
+  * stated by the next write.
   */
 class MetaFileIndexSpec extends SparkSpec {
   import spark.implicits._
@@ -93,11 +95,9 @@ class MetaFileIndexSpec extends SparkSpec {
     assert(viaListing.nonEmpty)
   }
 
-  test("pre-upgrade adds (no fsize) fall back to the listing read, same rows") {
-    val (st, dir) = mkStore()
-    st.save("f", sampleDf)
-    // strip fsize from every add in the log, simulating an r18 table:
-    // rewrite each commit file dropping the field
+  /** Strips `fsize` from every add of feature `f`'s log under `dir`,
+    * as a log written before adds recorded their size. */
+  private def stripFsize(dir: String): Unit = {
     val logDir = java.nio.file.Paths.get(dir, "feature", "f", "_txlog")
     java.nio.file.Files.list(logDir).forEach { p =>
       if (p.getFileName.toString.endsWith(".json")) {
@@ -108,60 +108,45 @@ class MetaFileIndexSpec extends SparkSpec {
         java.nio.file.Files.write(p, stripped.getBytes("UTF-8"))
       }
     }
-    val st2 = new TimeseriesStore(spark, dir)
-    val df = st2.read("f")
-    val scan = df.queryExecution.executedPlan
-      .collectFirst { case s: FileSourceScanExec => s }.get
-    assert(scan.relation.location.getClass.getSimpleName != "MetaFileIndex")
-    assert(df.count() == 200)
   }
 
-  test("checkpoint rewrite backfills fsize: pre-upgrade table reads via MetaFileIndex after one cycle") {
+  private def location(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.executedPlan.collectFirst { case s: FileSourceScanExec => s }.get
+      .relation.location.getClass.getSimpleName
+
+  test("adds without fsize read through MetaFileIndex, same rows") {
     val (st, dir) = mkStore()
     st.save("f", sampleDf)
-    // simulate an r18 table: strip fsize from every committed add
-    val logDir = java.nio.file.Paths.get(dir, "feature", "f", "_txlog")
-    java.nio.file.Files.list(logDir).forEach { p =>
-      if (p.getFileName.toString.endsWith(".json")) {
-        val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        val stripped = txt.linesIterator
-          .map(_.replaceAll(""","fsize":\d+""", ""))
-          .mkString("", "\n", "\n")
-        java.nio.file.Files.write(p, stripped.getBytes("UTF-8"))
-      }
-    }
-    // drive the log to its next checkpoint boundary with empty-ish
-    // appends; the rewrite must stat + backfill the stripped adds
+    stripFsize(dir)
+    // the replay states each size-less add from its file, in memory
     val st2 = new TimeseriesStore(spark, dir)
-    val preScan = st2.read("f").queryExecution.executedPlan
-      .collectFirst { case s: FileSourceScanExec => s }.get
-    assert(preScan.relation.location.getClass.getSimpleName != "MetaFileIndex")
+    val df = st2.read("f")
+    assert(location(df) == "MetaFileIndex")
+    assert(df.count() == 200)
+    val viaListing = spark.read.parquet(s"$dir/feature/f")
+      .select(col("time"), col("value")).orderBy("time").collect().toSeq
+    assert(df.select("time", "value").orderBy("time").collect().toSeq == viaListing)
+  }
+
+  test("the first save after fsize was stripped commits the real sizes") {
+    val (st, dir) = mkStore()
+    st.save("f", sampleDf)
+    stripFsize(dir)
     val log = new TxLog(spark.sparkContext.hadoopConfiguration, s"$dir/feature/f")
-    // drive at least one commit (the save's commit is version 0, which
-    // satisfies v % N == 0 without ever checkpointing), then continue
-    // to the next checkpoint boundary. Each is a trivially-true CHECK
-    // declaration: a version bump with no effect on the live set.
-    var v = 0L
-    while ({
-      v = log.commit(Seq.empty, check = Some(("__ckpt_probe", "true")))
-      v % TxLog.CheckpointEvery != 0
-    }) ()
-    // a FRESH instance replays from the backfilled checkpoint
-    val log2 = new TxLog(spark.sparkContext.hadoopConfiguration, s"$dir/feature/f")
-    val adds = log2.snapshot()
-    assert(adds.nonEmpty && adds.forall(_.fsize.isDefined),
-      s"checkpoint did not backfill fsize: ${adds.count(_.fsize.isEmpty)} of ${adds.size} missing")
-    // and the backfilled sizes are the REAL byte sizes (a wrong length
-    // would corrupt parquet split planning)
+    assert(log.snapshot().forall(_.fsize.isEmpty))
+    // the save's own commit re-states every size-less add
+    new TimeseriesStore(spark, dir).save("f", Seq((ts("2024-02-01"), 1.0)).toDF("time", "value"))
+    val adds = new TxLog(spark.sparkContext.hadoopConfiguration, s"$dir/feature/f").snapshot()
+    assert(adds.size > 1 && adds.forall(_.fsize.isDefined),
+      s"the save did not state fsize: ${adds.count(_.fsize.isEmpty)} of ${adds.size} missing")
+    // the stated sizes are the REAL byte sizes (a wrong length would
+    // corrupt parquet split planning)
     adds.foreach { a =>
       val real = java.nio.file.Files.size(java.nio.file.Paths.get(dir, "feature", "f", a.path))
       assert(a.fsize.contains(real), s"${a.path}: fsize ${a.fsize} != $real")
     }
-    val st3 = new TimeseriesStore(spark, dir)
-    val df = st3.read("f")
-    val scan = df.queryExecution.executedPlan
-      .collectFirst { case s: FileSourceScanExec => s }.get
-    assert(scan.relation.location.getClass.getSimpleName == "MetaFileIndex")
-    assert(df.count() == 200)
+    val df = new TimeseriesStore(spark, dir).read("f")
+    assert(location(df) == "MetaFileIndex")
+    assert(df.count() == 201)
   }
 }
