@@ -3,9 +3,11 @@ package graft.queries
 import java.sql.Timestamp
 import java.time.Instant
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.{Dsir, SimilarityOps, TextOps}
 import graft.ops.TimeseriesOps
@@ -119,9 +121,10 @@ object QueryLib {
     * execution (cold + 3 warm), charging each timing a full batch write
     * job. The staged tree is deterministic per (tag, sfDir): build it
     * once per JVM and let every re-run replay the same files. Per-run
-    * state — catalog, warehouse, checkpoints, memory-sink views — stays
-    * per-invocation in scratchDir, so exactly-once and state-merge
-    * semantics are still exercised from scratch each run. Lives outside
+    * state — catalog, warehouse, checkpoints — stays per-invocation in
+    * scratchDir, and each memory sink's view lives only inside
+    * [[replayToMemory]], so exactly-once and state-merge semantics are
+    * still exercised from scratch each run. Lives outside
     * scratchDir's wipe roots; a leftover tree from a KILLED run is
     * wiped before rebuild (a partial stage must never feed a gate).
     */
@@ -160,7 +163,7 @@ object QueryLib {
     * batch boundaries are semantic.
     */
   private def stagedEventsWide(
-      s: SparkSession, dir: String): (String, org.apache.spark.sql.types.StructType) = {
+      s: SparkSession, dir: String): (String, StructType) = {
     val src = T(s, dir, "events").select(
       col("ts"), col("event_id"), col("user_id"), col("event_type"), col("value"))
     // r19: TIME-RANGED slices instead of round-robin. Batch membership
@@ -179,51 +182,57 @@ object QueryLib {
   }
 
   private def stagedDocsWide(
-      s: SparkSession, dir: String): (String, org.apache.spark.sql.types.StructType) = {
+      s: SparkSession, dir: String): (String, StructType) = {
     val src = T(s, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
     (stagedSrc("sdocw", dir)(p => src.repartition(4).write.parquet(p)), src.schema)
   }
 
-  /** Stage `src` as TIME-ORDERED slice files plus a final sentinel
-    * batch — the replay discipline that makes a finite file replay safe
-    * under a watermark: slices are calendar-disjoint ascending (so no
-    * later batch carries rows older than an earlier batch's watermark)
-    * and land with strictly ascending mtimes (FileStreamSource replays
-    * oldest-first); the sentinel advances the final watermark past
-    * every real window/session end so Append emits ALL finalized state,
-    * while the sentinel's own window can never finalize and is never
-    * emitted. Shared by the watermarked streaming gates; memoized like
-    * every staged source.
+  /** Slice ordinal of `c` against ascending `cuts`: how many cuts lie
+    * at or below it. */
+  private def sliceOrdinal(c: Column, cuts: Seq[Column]): Column =
+    cuts.map(cut => when(c >= cut, 1).otherwise(0)).reduce(_ + _)
+
+  /** The calendar weeks every time-ordered replay slices `ts` by:
+    * before 2024-01-08, before the 15th, before the 22nd, and after. */
+  private val weeklySlice: Column =
+    sliceOrdinal(col("ts"), Seq("2024-01-08", "2024-01-15", "2024-01-22").map(ts))
+
+  /** Stage `src` as ORDERED slice files plus a final sentinel batch —
+    * the replay discipline that makes a finite file replay safe under a
+    * watermark: slices, one per value of the `slice` ordinal, are
+    * disjoint ascending (so no later batch carries rows older than an
+    * earlier batch's watermark) and land with strictly ascending mtimes
+    * (FileStreamSource replays oldest-first); the sentinel advances the
+    * final watermark past every real window/session end so Append
+    * emits ALL finalized state, while the sentinel's own window can
+    * never finalize and is never emitted. Shared by the watermarked
+    * and the fold-order streaming gates (on [[weeklySlice]]) and
+    * fs_stream_dedup_lsh (on doc-id ranges); memoized like every staged
+    * source.
     */
   private def stageTimeOrderedReplay(
       tag: String, dir: String, tmp: String,
-      src: org.apache.spark.sql.DataFrame,
-      cuts: Seq[String],
-      sentinel: org.apache.spark.sql.DataFrame): String =
+      src: DataFrame, slice: Column, sentinel: DataFrame): String =
     stagedSrc(tag, dir) { rootStr =>
       val root = java.nio.file.Paths.get(rootStr)
       java.nio.file.Files.createDirectories(root)
-      // ONE job stages every slice. The slice ordinal is a COLUMN
-      // (count of cuts at-or-before ts; the sentinel rides as the
-      // final ordinal), and a slice-keyed repartition + partitionBy
-      // write lands exactly one part file per non-empty slice — hash
-      // partitioning on the ordinal puts each slice's rows in one
-      // task, and partitionBy splits a task holding two colliding
-      // ordinals into one file per directory either way. The r15
-      // shape (one filter+coalesce(1) job PER slice) re-ran the
+      // ONE job stages every slice. The slice ordinal is a COLUMN (the
+      // sentinel rides as the final ordinal), and a slice-keyed
+      // repartition + partitionBy write lands exactly one part file per
+      // non-empty slice — hash partitioning on the ordinal puts each
+      // slice's rows in one task, and partitionBy splits a task holding
+      // two colliding ordinals into one file per directory either way.
+      // The r15 shape (one filter+coalesce(1) job PER slice) re-ran the
       // source scan once per slice and cost fs_stream_ewma a 3.4x
       // clean-anchor regression; this is the same bytes in one scan.
-      // An EMPTY slice (e.g. the ewma/cusum limit(0) sentinel) now
-      // stages no file at all instead of an empty parquet — a batch
-      // that carried zero rows never changed any gate's state, so the
-      // replay is semantically identical with one fewer trigger.
-      val sliceOrd = cuts.map(c => when(col("ts") >= ts(c), 1).otherwise(0))
-        .reduceOption((a, b) => a + b).getOrElse(lit(0))
-      val staged = src.withColumn("__slice", sliceOrd)
-        .unionByName(sentinel.withColumn("__slice", lit(cuts.size + 1)))
+      // An EMPTY slice (e.g. the ewma/cusum limit(0) sentinel) stages
+      // no file at all instead of an empty parquet — a batch that
+      // carried zero rows never changed any gate's state, so the replay
+      // is semantically identical with one fewer trigger.
+      val staged = src.withColumn("__slice", slice)
+        .unionByName(sentinel.withColumn("__slice", lit(Int.MaxValue)))
       val stage = s"$tmp/stage/$tag"
-      staged.repartition(cuts.size + 2, col("__slice"))
-        .write.partitionBy("__slice").parquet(stage)
+      staged.repartition(col("__slice")).write.partitionBy("__slice").parquet(stage)
       import scala.jdk.CollectionConverters._
       val stagePath = java.nio.file.Paths.get(stage)
       val sliceDirs = {
@@ -231,8 +240,8 @@ object QueryLib {
         try listing.iterator().asScala.toList.filter(
           _.getFileName.toString.startsWith("__slice=")) finally listing.close()
       }
-      sliceDirs.map(p => (p.getFileName.toString.stripPrefix("__slice=").toInt, p))
-        .sortBy(_._1).foreach { case (i, sliceDir) =>
+      sliceDirs.sortBy(_.getFileName.toString.stripPrefix("__slice=").toInt)
+        .zipWithIndex.foreach { case (sliceDir, i) =>
           val listing = java.nio.file.Files.list(sliceDir)
           val part = try listing.iterator().asScala
             .find(p => p.getFileName.toString.startsWith("part-") &&
@@ -243,28 +252,55 @@ object QueryLib {
           java.nio.file.Files.move(part, target)
           // FileStreamSource orders new files by modification time;
           // stamp an explicit ascending minute per slice so replay order
-          // IS time order regardless of write timing granularity
+          // IS slice order regardless of write timing granularity
           java.nio.file.Files.setLastModifiedTime(target,
             java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
         }
     }
 
-  /** Run `body` (starting a streaming query) with shuffle partitions —
-    * and therefore STATE STORE count — sized to the gate's 4-batch
-    * replay. Stateful execs open one store per shuffle partition per
-    * stateful operator and commit every one each micro-batch; at the
-    * session default (32) the stream-stream join paid 32 partitions x 4
-    * stores x 4 batches of commit IO (~13 s at sf0.1) for 20k rows of
-    * actual data. A stateful query pins its partitioning at its FIRST
-    * checkpoint, so the scoped value survives the query's lifetime and
-    * the session default is restored for everything after. At real
+  /** The one stream replay every fs_stream_ gate runs. `src`, a staged
+    * parquet directory of `schema`, is read ONE FILE PER TRIGGER until
+    * all available data is processed, so each staged file is one real
+    * micro-batch, oldest mtime first; `sink` turns the stream into the
+    * gate's writer (its operator and sink), and the query runs to
+    * completion.
+    *
+    * The query starts with shuffle partitions — and therefore STATE
+    * STORE count — sized to the few-batch replay. Stateful execs open
+    * one store per shuffle partition per stateful operator and commit
+    * every one each micro-batch; at the session default (32) the
+    * stream-stream join paid 32 partitions x 4 stores x 4 batches of
+    * commit IO (~13 s at sf0.1) for 20k rows of actual data. A
+    * foreachBatch sink has no state stores, but each micro-batch's
+    * writeTx runs the ranged layout exchange — 4 partitions match the
+    * tiny per-batch volume instead of 32 near-empty write tasks. A
+    * started query keeps the partitioning it started with (a stateful
+    * one pins it at its FIRST checkpoint), so the scope ends at start
+    * and the session's own setting holds for everything after. At real
     * scale this knob is sized to data volume per trigger, not down.
     */
-  private def withStatePartitions[A](s: SparkSession, n: Int)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
+  private def replay(s: SparkSession, src: String, schema: StructType)(
+      sink: DataFrame => DataStreamWriter[Row]): Unit = {
+    val stream = s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+    graft.SessionConf.scoped(s)("spark.sql.shuffle.partitions" -> "4") {
+      sink(stream).trigger(Trigger.AvailableNow()).start()
+    }.awaitTermination()
+  }
+
+  /** [[replay]] of `op`, the gate's operator, into a memory sink in
+    * output `mode`; the result is the sink's final table. The sink
+    * registers a session temp view, named uniquely per call (bench
+    * re-runs a gate; a fixed name would collide). `table` resolves the
+    * frame eagerly, before the view is dropped, so it still reads the
+    * sink and the gate leaves no view behind.
+    */
+  private def replayToMemory(s: SparkSession, src: String, schema: StructType, mode: OutputMode)(
+      op: DataFrame => DataFrame): DataFrame = {
+    val view = "replay_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    try {
+      replay(s, src, schema)(in => op(in).writeStream.format("memory").queryName(view).outputMode(mode))
+      s.table(view)
+    } finally s.catalog.dropTempView(view)
   }
 
   // =====================================================================
@@ -1331,45 +1367,13 @@ object QueryLib {
       val tmp = scratchDir("slsh")
       val docs = T(s, dir, "documents").select(col("doc_id"),
         digestShingles(TextOps.wordShingles(toks, 3)).as("sh"))
-      val srcDir = stagedSrc("slsh", dir) { rootStr =>
-        val root = java.nio.file.Paths.get(rootStr)
-        java.nio.file.Files.createDirectories(root)
-        val cuts = Seq(0L, 150L, 300L, 450L, Long.MaxValue)
-        cuts.sliding(2).toSeq.zipWithIndex.foreach { case (Seq(lo, hi), i) =>
-          val stage = s"$tmp/stage/$i"
-          docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
-            .coalesce(1).write.parquet(stage)
-          import scala.jdk.CollectionConverters._
-          val listing = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
-          val part = try listing.iterator().asScala
-            .find(p => p.getFileName.toString.startsWith("part-") &&
-              p.getFileName.toString.endsWith(".parquet"))
-            .getOrElse(throw new IllegalStateException(s"no part file in $stage"))
-          finally listing.close()
-          val target = root.resolve(f"slice$i%02d.parquet")
-          java.nio.file.Files.move(part, target)
-          java.nio.file.Files.setLastModifiedTime(target,
-            java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-        }
-      }
-      val stream = s.readStream
-        .schema(docs.schema)
-        .option("maxFilesPerTrigger", "1") // 4 id-ranged micro-batches
-        .option("latestFirst", "false")
-        .parquet(srcDir)
-      val view = s"slsh_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val query = withStatePartitions(s, 4) {
-        graft.streaming.EventStreams.lshDedupStream(stream, threshold = 0.5)
-          .toDF("doc_id", "matched")
-          .writeStream.format("memory").queryName(view)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
+      val srcDir = stageTimeOrderedReplay("slsh", dir, tmp, docs,
+        sliceOrdinal(col("doc_id"), Seq(150L, 300L, 450L).map(lit)), sentinel = docs.limit(0))
+      val flagged = replayToMemory(s, srcDir, docs.schema, OutputMode.Append())(
+        graft.streaming.EventStreams.lshDedupStream(_, threshold = 0.5).toDF("doc_id", "matched"))
       // one verdict per (bucket, doc): a doc is a near-duplicate iff
       // ANY bucket flagged it — the stateless OR-reduce on the sink
-      s.table(view).groupBy(col("doc_id"))
+      flagged.groupBy(col("doc_id"))
         .agg(max(col("matched")).as("dup"))
         .filter(col("doc_id") >= 400 && !col("dup"))
         .select(col("doc_id").cast("long").as("doc_id"))
@@ -1529,8 +1533,8 @@ object QueryLib {
     "fs_stream_sink",
     // §2.10 streaming under the oracle gate (previously spec-only): the
     // purchase series is staged as a 4-file parquet directory, then
-    // DRIVEN AS A STREAM — maxFilesPerTrigger=1 under AvailableNow
-    // splits it into 4 real micro-batches, each normalized by the SAME
+    // DRIVEN AS A STREAM — the replay splits it into 4 real
+    // micro-batches, each normalized by the SAME
     // normalizer as the batch writer and committed atomically through
     // TimeseriesStore.writeTx with a `<streamId>#<batchId>` txn tag
     // (the foreachBatch + SetTransaction exactly-once pattern). The
@@ -1548,23 +1552,9 @@ object QueryLib {
       fs.createNamespace("st", s"$tmp/warehouse", backend = "txlog")
       fs.createFeature("st/purchase")
       val nsObj = fs.catalog.getNamespace("st").get
-      val stream = s.readStream
-        .schema(evSchema)
-        .option("maxFilesPerTrigger", "1") // 4 files -> 4 micro-batch txns
-        .parquet(srcDir)
-        .filter(col("event_type") === "purchase")
-        .select(col("ts").as("time"), col("value"))
-      // no state stores here (foreachBatch), but each micro-batch's
-      // writeTx runs the ranged layout exchange — 4 partitions matches
-      // the tiny per-batch volume instead of 32 near-empty write tasks
-      val query = withStatePartitions(s, 4) {
-        graft.streaming.EventStreams
-          .featureSinkTx(stream, fs.store(nsObj), "purchase",
-            checkpointDir = s"$tmp/ckpt", streamId = "ssink")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
+      replay(s, srcDir, evSchema)(in => graft.streaming.EventStreams.featureSinkTx(
+        in.filter(col("event_type") === "purchase").select(col("ts").as("time"), col("value")),
+        fs.store(nsObj), "purchase", checkpointDir = s"$tmp/ckpt", streamId = "ssink"))
       fs.loadDataFrame(Seq("st/purchase"),
           fromDate = Some(jts("2024-01-01")), toDate = Some(jts("2024-01-30")),
           freq = Some("1d"))
@@ -1603,18 +1593,8 @@ object QueryLib {
       // over the full half-month — fewer files per commit, same rows
       early.repartitionByRange(2, col("time")).write.parquet(sdir)
       val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse")
-      def drain(): Unit = {
-        val stream = s.readStream.schema(src.schema)
-          .option("maxFilesPerTrigger", "1").parquet(sdir)
-        val q = withStatePartitions(s, 4) {
-          graft.streaming.EventStreams
-            .featureSinkTx(stream, st, "clicks",
-              checkpointDir = s"$tmp/ckpt", streamId = "sdelta")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        }
-        q.awaitTermination()
-      }
+      def drain(): Unit = replay(s, sdir, src.schema)(graft.streaming.EventStreams
+        .featureSinkTx(_, st, "clicks", checkpointDir = s"$tmp/ckpt", streamId = "sdelta"))
       drain() // batches 0-1: the early files
       st.exportSnapshotDelta("clicks", s"$tmp/delta") // Delta v0
       late.repartitionByRange(2, col("time")).write.mode("append").parquet(sdir)
@@ -1652,18 +1632,8 @@ object QueryLib {
       // time-ranged halves — see fs_stream_delta
       early.repartitionByRange(2, col("time")).write.parquet(sdir)
       val st = new graft.store.TimeseriesStore(s, s"$tmp/warehouse")
-      def drain(): Unit = {
-        val stream = s.readStream.schema(src.schema)
-          .option("maxFilesPerTrigger", "1").parquet(sdir)
-        val q = withStatePartitions(s, 4) {
-          graft.streaming.EventStreams
-            .featureSinkTx(stream, st, "errors",
-              checkpointDir = s"$tmp/ckpt", streamId = "sib")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        }
-        q.awaitTermination()
-      }
+      def drain(): Unit = replay(s, sdir, src.schema)(graft.streaming.EventStreams
+        .featureSinkTx(_, st, "errors", checkpointDir = s"$tmp/ckpt", streamId = "sib"))
       drain() // batches 0-1: the early files
       st.exportSnapshotIceberg("errors", s"$tmp/iceberg") // snapshot 1
       late.repartitionByRange(2, col("time")).write.mode("append").parquet(sdir)
@@ -1691,23 +1661,9 @@ object QueryLib {
     // at 100 TB by construction.
     (s, dir) => {
       val (srcDir, evSchema) = stagedEventsWide(s, dir)
-      val stream = s.readStream
-        .schema(evSchema)
-        .option("maxFilesPerTrigger", "1") // 4 files -> 4 stateful micro-batches
-        .parquet(srcDir)
-        .select(col("ts"), col("event_type"), col("value"))
-      // unique per invocation: the memory sink registers a session temp
-      // view (bench re-runs the query; a fixed name would collide)
-      val view = s"swin_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val query = withStatePartitions(s, 4) {
-        graft.streaming.EventStreams.windowedStats(stream, "1 hour")
-          .writeStream.format("memory").queryName(view)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
-      s.table(view)
+      replayToMemory(s, srcDir, evSchema, OutputMode.Complete())(in =>
+        graft.streaming.EventStreams.windowedStats(
+          in.select(col("ts"), col("event_type"), col("value")), "1 hour"))
     },
     Some("""SELECT date_trunc('hour', ts) AS window_start,
            |       date_trunc('hour', ts) + INTERVAL 1 HOUR AS window_end,
@@ -1738,23 +1694,9 @@ object QueryLib {
       val sentinel = Seq((
         java.sql.Timestamp.from(java.time.Instant.parse("2024-03-01T00:00:00Z")),
         "__sentinel", 0.0)).toDF("ts", "event_type", "value")
-      val srcDir = stageTimeOrderedReplay("swinwm", dir, tmp, src,
-        cuts = Seq("2024-01-08", "2024-01-15", "2024-01-22"), sentinel = sentinel)
-      val stream = s.readStream
-        .schema(src.schema)
-        .option("maxFilesPerTrigger", "1") // 5 files -> 5 ordered micro-batches
-        .option("latestFirst", "false")
-        .parquet(srcDir)
-      val view = s"swinwm_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val query = withStatePartitions(s, 4) {
-        graft.streaming.EventStreams.windowedStats(stream, "1 hour")
-          .writeStream.format("memory").queryName(view)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
-      s.table(view)
+      val srcDir = stageTimeOrderedReplay("swinwm", dir, tmp, src, weeklySlice, sentinel)
+      replayToMemory(s, srcDir, src.schema, OutputMode.Append())(
+        graft.streaming.EventStreams.windowedStats(_, "1 hour"))
     },
     Some("""SELECT date_trunc('hour', ts) AS window_start,
            |       date_trunc('hour', ts) + INTERVAL 1 HOUR AS window_end,
@@ -1782,23 +1724,10 @@ object QueryLib {
       val sentinel = Seq((
         java.sql.Timestamp.from(java.time.Instant.parse("2024-03-01T00:00:00Z")),
         0.0)).toDF("ts", "value")
-      val srcDir = stageTimeOrderedReplay("sm4", dir, tmp, src,
-        cuts = Seq("2024-01-08", "2024-01-15", "2024-01-22"), sentinel = sentinel)
-      val stream = s.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
-        .parquet(srcDir)
-      val view = s"sm4_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val query = withStatePartitions(s, 4) {
-        graft.streaming.EventStreams.m4Stream(stream,
-            timeCol = "ts", valueCol = "value",
-            windowDur = "1 day", watermarkDelay = "1 hour")
-          .writeStream.format("memory").queryName(view)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
-      s.table(view)
+      val srcDir = stageTimeOrderedReplay("sm4", dir, tmp, src, weeklySlice, sentinel)
+      replayToMemory(s, srcDir, src.schema, OutputMode.Append())(
+        graft.streaming.EventStreams.m4Stream(_,
+          timeCol = "ts", valueCol = "value", windowDur = "1 day", watermarkDelay = "1 hour"))
     },
     Some("""WITH ev AS (SELECT date_trunc('day', ts) AS w, epoch_us(ts) AS tu, value AS v
            |            FROM events WHERE event_type = 'purchase'),
@@ -1836,21 +1765,9 @@ object QueryLib {
     // watermark and run Append.
     (s, dir) => {
       val (srcDir, evSchema) = stagedEventsWide(s, dir)
-      val stream = s.readStream
-        .schema(evSchema)
-        .option("maxFilesPerTrigger", "1") // 4 files -> 4 merging micro-batches
-        .parquet(srcDir)
-        .select(col("ts"), col("user_id"), col("value"))
-      val view = s"ssess_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val query = withStatePartitions(s, 4) {
-        graft.streaming.EventStreams.sessionStats(stream, "30 minutes", watermark = None)
-          .writeStream.format("memory").queryName(view)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
-      s.table(view)
+      replayToMemory(s, srcDir, evSchema, OutputMode.Complete())(in =>
+        graft.streaming.EventStreams.sessionStats(
+          in.select(col("ts"), col("user_id"), col("value")), "30 minutes", watermark = None))
     },
     Some("""WITH g AS (SELECT user_id, ts, event_id, value,
            |    CASE WHEN lag(ts) OVER w IS NULL
@@ -1895,24 +1812,9 @@ object QueryLib {
       val sentinel = Seq((
         java.sql.Timestamp.from(java.time.Instant.parse("2024-03-01T00:00:00Z")),
         -1L, 0.0)).toDF("ts", "user_id", "value")
-      val srcDir = stageTimeOrderedReplay("ssesswm", dir, tmp, src,
-        cuts = Seq("2024-01-08", "2024-01-15", "2024-01-22"), sentinel = sentinel)
-      val stream = s.readStream
-        .schema(src.schema)
-        .option("maxFilesPerTrigger", "1") // 5 files -> 5 ordered micro-batches
-        .option("latestFirst", "false")
-        .parquet(srcDir)
-      val view = s"ssesswm_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val query = withStatePartitions(s, 4) {
-        graft.streaming.EventStreams
-          .sessionStats(stream, "30 minutes", watermark = Some("10 minutes"))
-          .writeStream.format("memory").queryName(view)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
-      s.table(view)
+      val srcDir = stageTimeOrderedReplay("ssesswm", dir, tmp, src, weeklySlice, sentinel)
+      replayToMemory(s, srcDir, src.schema, OutputMode.Append())(
+        graft.streaming.EventStreams.sessionStats(_, "30 minutes", watermark = Some("10 minutes")))
     },
     Some("""WITH g AS (SELECT user_id, ts, event_id, value,
            |    CASE WHEN lag(ts) OVER w IS NULL
@@ -1971,23 +1873,9 @@ object QueryLib {
           java.nio.file.attribute.FileTime.fromMillis(
             java.nio.file.Files.getLastModifiedTime(part).toMillis + 60000L))
       }
-      val stream = s.readStream
-        .schema(src.schema)
-        .option("maxFilesPerTrigger", "1") // 5 files -> 5 micro-batches
-        .option("latestFirst", "false")
-        .parquet(srcDir)
-      val view = s"sdedup_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val query = withStatePartitions(s, 4) {
-        graft.streaming.EventStreams
-          .dedupStream(stream, keyCols = Seq("event_id"), timeCol = "ts",
-            watermark = "90 days")
-          .writeStream.format("memory").queryName(view)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
-      s.table(view)
+      replayToMemory(s, srcDir, src.schema, OutputMode.Append())(
+        graft.streaming.EventStreams.dedupStream(_, keyCols = Seq("event_id"), timeCol = "ts",
+          watermark = "90 days"))
     },
     Some("""SELECT ts, user_id, event_id, value
            |FROM events WHERE user_id % 5 = 0""".stripMargin))
@@ -2008,23 +1896,11 @@ object QueryLib {
       // (the oracle slices identically); the exec + cross-batch state
       // semantics certified are the same as a full replay
       val (srcDir, evSchema) = stagedEventsWide(s, dir)
-      val stream = s.readStream
-        .schema(evSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-        .filter(col("user_id") % 5 === 0)
-        .select(col("ts"), col("user_id"), col("event_type"), col("value"))
-      val view = s"sattr_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val query = withStatePartitions(s, 4) {
-        graft.streaming.EventStreams
-          .attributionJoin(stream, horizon = "1 hour", watermark = None)
-          .writeStream.format("memory").queryName(view)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
-      s.table(view)
+      replayToMemory(s, srcDir, evSchema, OutputMode.Append())(in =>
+        graft.streaming.EventStreams.attributionJoin(
+          in.filter(col("user_id") % 5 === 0)
+            .select(col("ts"), col("user_id"), col("event_type"), col("value")),
+          horizon = "1 hour", watermark = None))
     },
     Some("""SELECT c.user_id, c.ts AS click_ts, p.ts AS buy_ts, p.value
            |FROM events c JOIN events p
@@ -2063,26 +1939,13 @@ object QueryLib {
         (java.sql.Timestamp.from(java.time.Instant.parse("2024-03-01T00:00:00Z")),
           -998L, "purchase", 0.0))
         .toDF("ts", "user_id", "event_type", "value")
-      val srcDir = stageTimeOrderedReplay("sattro", dir, tmp, src,
-        cuts = Seq("2024-01-08", "2024-01-15", "2024-01-22"), sentinel = sentinel)
-      val stream = s.readStream
-        .schema(src.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-      val view = s"sattro_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val query = withStatePartitions(s, 4) {
-        graft.streaming.EventStreams
-          .attributionJoinOuter(stream, horizon = "1 hour", delay = "2 hours")
-          .writeStream.format("memory").queryName(view)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
+      val srcDir = stageTimeOrderedReplay("sattro", dir, tmp, src, weeklySlice, sentinel)
       // the sentinel click's own horizon never closes (the watermark
       // lags delay behind it), so it is still buffered — not emitted —
       // when the replay ends; the guard filter is belt-and-braces
-      s.table(view).filter(col("user_id") >= 0)
+      replayToMemory(s, srcDir, src.schema, OutputMode.Append())(
+        graft.streaming.EventStreams.attributionJoinOuter(_, horizon = "1 hour", delay = "2 hours"))
+        .filter(col("user_id") >= 0)
     },
     Some("""SELECT c.user_id, c.ts AS click_ts, p.ts AS buy_ts, p.value
            |FROM events c LEFT JOIN events p
@@ -2109,22 +1972,10 @@ object QueryLib {
       val (srcDir, evSchema) = stagedEventsWide(s, dir)
       val dim = T(s, dir, "customer")
         .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-      val stream = s.readStream
-        .schema(evSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-        .filter(col("event_type") === "purchase")
-        .select(col("ts"), col("user_id"), col("value"))
-      val view = s"senrich_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val query = withStatePartitions(s, 4) {
-        graft.streaming.EventStreams.enrich(stream, dim, "user_id")
-          .writeStream.format("memory").queryName(view)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
-      s.table(view)
+      replayToMemory(s, srcDir, evSchema, OutputMode.Append())(in =>
+        graft.streaming.EventStreams.enrich(
+          in.filter(col("event_type") === "purchase").select(col("ts"), col("user_id"), col("value")),
+          dim, "user_id"))
     },
     Some("""SELECT e.ts, e.user_id, e.value, c.c_mktsegment
            |FROM events e LEFT JOIN customer c ON c.c_custkey = e.user_id
@@ -6020,24 +5871,13 @@ object QueryLib {
       // tag shared with fs_stream_cusum: identical source, cuts and
       // (empty) sentinel, so the two certifications replay ONE staged
       // tree — the second gate's staging cost is a memo hit
-      val srcDir = stageTimeOrderedReplay("svreplay", dir, tmp, src,
-        cuts = Seq("2024-01-08", "2024-01-15", "2024-01-22"),
+      val srcDir = stageTimeOrderedReplay("svreplay", dir, tmp, src, weeklySlice,
         sentinel = src.limit(0)) // empty: nothing must perturb any key's state
-      val stream = s.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
-        .parquet(srcDir)
-      val view = s"sewma_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val query = withStatePartitions(s, 4) {
-        graft.streaming.EventStreams.ewmaStream(stream, alpha = 0.1, keyCol = "user_id")
-          .toDF("user_id", "n", "ewma")
-          .writeStream.format("memory").queryName(view)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
+      val updates = replayToMemory(s, srcDir, src.schema, OutputMode.Update())(
+        graft.streaming.EventStreams.ewmaStream(_, alpha = 0.1, keyCol = "user_id")
+          .toDF("user_id", "n", "ewma"))
       // the final state per key is the update with the largest n
-      s.table(view).groupBy(col("user_id"))
+      updates.groupBy(col("user_id"))
         .agg(max_by(col("ewma"), col("n")).as("ewma_last"))
         .select(col("user_id").cast("long").as("user_id"), col("ewma_last"))
     },
@@ -7530,27 +7370,16 @@ object QueryLib {
     // against the same oracle as the batch gate.
     (s, dir) => {
       val (srcDir, docSchema) = stagedDocsWide(s, dir)
-      val stream = s.readStream
-        .schema(docSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-        .select(col("text"))
-      val view = s"scms_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val sk = stream.select(explode(TextOps.tokens(col("text"))).as("term"))
-        .select(posexplode(array((0 until graft.functions.Cms.D).map(j =>
-          graft.functions.Cms.bucket(j, col("term"))): _*)).as(Seq("j", "bucket")))
-        .groupBy(col("j"), col("bucket")).agg(count(lit(1)).as("c"))
-      val query = withStatePartitions(s, 4) {
-        sk.writeStream.format("memory").queryName(view)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
+      val sk = replayToMemory(s, srcDir, docSchema, OutputMode.Complete())(
+        _.select(col("text"))
+          .select(explode(TextOps.tokens(col("text"))).as("term"))
+          .select(posexplode(array((0 until graft.functions.Cms.D).map(j =>
+            graft.functions.Cms.bucket(j, col("term"))): _*)).as(Seq("j", "bucket")))
+          .groupBy(col("j"), col("bucket")).agg(count(lit(1)).as("c")))
       val tokens = spread(T(s, dir, "documents")).select(explode(toks).as("term"))
       val top = tokens.groupBy(col("term")).agg(count(lit(1)).as("exact_cnt"))
         .orderBy(col("exact_cnt").desc, col("term")).limit(10)
-      graft.functions.Cms.estimate(s.table(view), top, "term")
+      graft.functions.Cms.estimate(sk, top, "term")
         .join(top, Seq("term"))
         .select(col("term"), col("exact_cnt"), col("cms_est"))
     },
@@ -7598,30 +7427,19 @@ object QueryLib {
     // the plain events table — stream/batch parity for sketches.
     (s, dir) => {
       val (srcDir, evSchema) = stagedEventsWide(s, dir)
-      val stream = s.readStream
-        .schema(evSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-        .select(col("event_type"),
-          concat(lit("hll:"), col("user_id").cast("string")).as("hin"))
-      val view = s"shll_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val regs = stream.select(col("event_type"),
-          graft.functions.Hll.idxCol(col("hin")).as("idx"),
-          graft.functions.Hll.rhoCol(col("hin")).as("rho"))
-        .groupBy(col("event_type"), col("idx")).agg(max(col("rho")).as("r"))
-      val query = withStatePartitions(s, 4) {
-        regs.writeStream.format("memory").queryName(view)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
-      // fresh output names on the observed side: the memory-sink view
+      val regs = replayToMemory(s, srcDir, evSchema, OutputMode.Complete())(
+        _.select(col("event_type"),
+            concat(lit("hll:"), col("user_id").cast("string")).as("hin"))
+          .select(col("event_type"),
+            graft.functions.Hll.idxCol(col("hin")).as("idx"),
+            graft.functions.Hll.rhoCol(col("hin")).as("rho"))
+          .groupBy(col("event_type"), col("idx")).agg(max(col("rho")).as("r")))
+      // fresh output names on the observed side: the memory-sink table
       // appears on both sides of the join and Spark's resolver rejects
       // the conflicting attribute ids otherwise
-      val obs = s.table(view).select(col("event_type").as("o_et"),
+      val obs = regs.select(col("event_type").as("o_et"),
         col("idx").as("o_idx"), col("r"))
-      val dense = s.table(view).select(col("event_type")).distinct()
+      val dense = regs.select(col("event_type")).distinct()
         .crossJoin(s.range(graft.functions.Hll.M).select(col("id").as("idx")))
         .join(obs, col("event_type") === col("o_et") && col("idx") === col("o_idx"), "left")
         .withColumn("r", coalesce(col("r"), lit(0L)))
@@ -7697,24 +7515,13 @@ object QueryLib {
     // hash BIT-FOR-BIT against the same oracle as q_kmv_distinct.
     (s, dir) => {
       val (srcDir, evSchema) = stagedEventsWide(s, dir)
-      val stream = s.readStream
-        .schema(evSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-        .select(col("event_type"), col("user_id"))
-      val view = s"skmv_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val query = withStatePartitions(s, 4) {
+      val updates = replayToMemory(s, srcDir, evSchema, OutputMode.Update())(in =>
         graft.streaming.EventStreams
-          .kmvStream(stream, k = 512, keyCol = "event_type", valCol = "user_id")
-          .toDF("k", "gen", "n_sample", "h_k")
-          .writeStream.format("memory").queryName(view)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
+          .kmvStream(in.select(col("event_type"), col("user_id")),
+            k = 512, keyCol = "event_type", valCol = "user_id")
+          .toDF("k", "gen", "n_sample", "h_k"))
       // final state per key = the emission with the largest gen
-      s.table(view).groupBy(col("k"))
+      updates.groupBy(col("k"))
         .agg(max_by(struct(col("n_sample"), col("h_k")), col("gen")).as("st"))
         .select(col("k").as("event_type"),
           when(col("st.n_sample") < 512, col("st.n_sample").cast("double"))
@@ -7770,25 +7577,13 @@ object QueryLib {
     // oracle as the batch gate — stream/batch parity for quantiles.
     (s, dir) => {
       val (srcDir, evSchema) = stagedEventsWide(s, dir)
-      val stream = s.readStream
-        .schema(evSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-        .select(col("event_type"), col("value"))
-      val view = s"squant_${java.util.UUID.randomUUID().toString.replace("-", "")}"
       val scaled = round(col("value") * lit(100), 0).cast("long")
-      val sk = stream
-        .select(col("event_type"),
-          graft.functions.QuantileSketch.bucketKey(scaled, 7).as("okey"))
-        .groupBy(col("event_type"), col("okey")).agg(count(lit(1)).as("cnt"))
-      val query = withStatePartitions(s, 4) {
-        sk.writeStream.format("memory").queryName(view)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
-      graft.functions.QuantileSketch.quantiles(s.table(view), Seq("event_type"),
+      val sk = replayToMemory(s, srcDir, evSchema, OutputMode.Complete())(
+        _.select(col("event_type"), col("value"))
+          .select(col("event_type"),
+            graft.functions.QuantileSketch.bucketKey(scaled, 7).as("okey"))
+          .groupBy(col("event_type"), col("okey")).agg(count(lit(1)).as("cnt")))
+      graft.functions.QuantileSketch.quantiles(sk, Seq("event_type"),
         Seq(("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100)), scale = 100)
     },
     Some(s"""WITH src AS (SELECT event_type, value AS v FROM events),
@@ -8746,25 +8541,13 @@ object QueryLib {
       val src = T(s, dir, "events").filter(col("value").isNotNull)
         .select(col("ts"), col("user_id"), col("value"))
       // tag shared with fs_stream_ewma (same source, cuts, sentinel)
-      val srcDir = stageTimeOrderedReplay("svreplay", dir, tmp, src,
-        cuts = Seq("2024-01-08", "2024-01-15", "2024-01-22"),
+      val srcDir = stageTimeOrderedReplay("svreplay", dir, tmp, src, weeklySlice,
         sentinel = src.limit(0)) // empty: nothing must perturb any key's state
-      val stream = s.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
-        .parquet(srcDir)
-      val view = s"scusum_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val query = withStatePartitions(s, 4) {
-        graft.streaming.EventStreams.cusumStream(stream,
-            target = 50.0, slack = 2.0, keyCol = "user_id")
-          .toDF("user_id", "n", "cusum_pos", "cusum_neg")
-          .writeStream.format("memory").queryName(view)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
+      val updates = replayToMemory(s, srcDir, src.schema, OutputMode.Update())(
+        graft.streaming.EventStreams.cusumStream(_, target = 50.0, slack = 2.0, keyCol = "user_id")
+          .toDF("user_id", "n", "cusum_pos", "cusum_neg"))
       // the final state per key is the update with the largest n
-      s.table(view).groupBy(col("user_id"))
+      updates.groupBy(col("user_id"))
         .agg(max_by(struct(col("cusum_pos"), col("cusum_neg")), col("n")).as("f"),
           max(col("n")).as("n"))
         .select(col("user_id").cast("long").as("user_id"), col("n"),
@@ -8792,24 +8575,13 @@ object QueryLib {
       val tmp = scratchDir("squota")
       val src = T(s, dir, "events").filter(col("event_type") === "purchase")
         .select(col("ts"), col("user_id"), col("event_id"))
-      val srcDir = stageTimeOrderedReplay("squota", dir, tmp, src,
-        cuts = Seq("2024-01-08", "2024-01-15", "2024-01-22"),
+      val srcDir = stageTimeOrderedReplay("squota", dir, tmp, src, weeklySlice,
         sentinel = src.limit(0))
-      val stream = s.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
-        .parquet(srcDir)
-      val view = s"squota_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val query = withStatePartitions(s, 4) {
-        graft.streaming.EventStreams.quotaStream(stream,
+      replayToMemory(s, srcDir, src.schema, OutputMode.Append())(
+        graft.streaming.EventStreams.quotaStream(_,
             keyCol = "user_id", timeCol = "ts", idCol = "event_id", cap = 3L)
-          .toDF("user_id", "event_id", "seq", "admitted")
-          .writeStream.format("memory").queryName(view)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
-      s.table(view).select("user_id", "event_id", "seq", "admitted")
+          .toDF("user_id", "event_id", "seq", "admitted"))
+        .select("user_id", "event_id", "seq", "admitted")
     },
     Some("""SELECT user_id, event_id,
            |  CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -8836,29 +8608,18 @@ object QueryLib {
     (s, dir) => {
       val tmp = scratchDir("stopk")
       val src = T(s, dir, "events").select(col("ts"), col("event_type"))
-      val srcDir = stageTimeOrderedReplay("stopk", dir, tmp, src,
-        cuts = Seq("2024-01-08", "2024-01-15", "2024-01-22"),
+      val srcDir = stageTimeOrderedReplay("stopk", dir, tmp, src, weeklySlice,
         sentinel = src.limit(0))
-      val stream = s.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
-        .parquet(srcDir)
-      val view = s"stopk_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val query = withStatePartitions(s, 4) {
-        graft.streaming.EventStreams.mgCandidatesStream(stream,
+      val summaries = replayToMemory(s, srcDir, src.schema, OutputMode.Append())(
+        graft.streaming.EventStreams.mgCandidatesStream(_,
             keyCol = "event_type", buckets = 4, capacity = 4)
-          .toDF("bucket", "epoch", "k")
-          .writeStream.format("memory").queryName(view)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
+          .toDF("bucket", "epoch", "k"))
       // each bucket's FINAL summary = its last-epoch emission; the
       // recount replays the very files that streamed
       // window-rank, not a self-join: a MemoryPlan joined against an
       // aggregate of itself trips conflicting-reference resolution
       val wLast = Window.partitionBy(col("bucket")).orderBy(col("epoch").desc)
-      val cands = s.table(view)
+      val cands = summaries
         .withColumn("__rk", rank().over(wLast)).filter(col("__rk") === 1)
         .select(col("k").as("event_type")).distinct()
       val replayed = s.read.parquet(srcDir).select(col("event_type"))
@@ -9029,21 +8790,11 @@ object QueryLib {
           count(lit(1)).as("n"),
           sum(col("cents")).as("sx"),
           sum(col("cents") * col("cents")).as("sxx"))
-      val stream = s.readStream.schema(evSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-        .select(col("ts"), col("event_id"), col("event_type"), col("value"))
-      val view = s"sanom_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val query = withStatePartitions(s, 4) {
-        graft.streaming.EventStreams.anomalyStream(stream, prof,
-            keyCol = "event_type", idCol = "event_id")
-          .writeStream.format("memory").queryName(view)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
-      s.table(view).select(col("event_id"), col("event_type"), col("bucket"),
+      replayToMemory(s, srcDir, evSchema, OutputMode.Append())(in =>
+        graft.streaming.EventStreams.anomalyStream(
+          in.select(col("ts"), col("event_id"), col("event_type"), col("value")), prof,
+          keyCol = "event_type", idCol = "event_id"))
+        .select(col("event_id"), col("event_type"), col("bucket"),
         col("cents").cast("long").as("cents"), col("zsq"))
     },
     // the SAME oracle as fs_seasonal_anomaly: the stream must reproduce
@@ -9155,23 +8906,13 @@ object QueryLib {
     // over the 4-file replay must hash-equal q_gini's oracle exactly.
     (s, dir) => {
       val (srcDir, evSchema) = stagedEventsWide(s, dir)
-      val stream = s.readStream.schema(evSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-        .filter(col("value").isNotNull)
-        .select(col("event_type"),
-          round(col("value") * 100).cast("decimal(38,0)").as("cents"))
-      val view = s"sgini_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val counts = stream.groupBy(col("event_type"), col("cents"))
-        .agg(count(lit(1)).as("c"))
-      val query = withStatePartitions(s, 4) {
-        counts.writeStream.format("memory").queryName(view)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
-      graft.functions.Eval.giniFromCounts(s.table(view),
+      val counts = replayToMemory(s, srcDir, evSchema, OutputMode.Complete())(
+        _.filter(col("value").isNotNull)
+          .select(col("event_type"),
+            round(col("value") * 100).cast("decimal(38,0)").as("cents"))
+          .groupBy(col("event_type"), col("cents"))
+          .agg(count(lit(1)).as("c")))
+      graft.functions.Eval.giniFromCounts(counts,
         keyCol = "event_type", valueCol = "cents", countCol = "c")
     },
     // the SAME oracle as q_gini: the stream-closed dictionary must
@@ -9455,23 +9196,13 @@ object QueryLib {
     // close over the 4-file replay must hash-equal ml_auc's oracle.
     (s, dir) => {
       val (srcDir, evSchema) = stagedEventsWide(s, dir)
-      val stream = s.readStream.schema(evSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-        .filter(col("value").isNotNull)
-        .select(round(col("value") * 100).cast("decimal(38,0)").as("cents"),
-          when(col("event_type") === "purchase", 1L).otherwise(0L).as("pos"))
-      val view = s"sauc_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val counts = stream.groupBy(col("cents"))
-        .agg(count(lit(1)).as("c"), sum(col("pos")).as("p"))
-      val query = withStatePartitions(s, 4) {
-        counts.writeStream.format("memory").queryName(view)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
-      graft.functions.Eval.aucFromCounts(s.table(view),
+      val counts = replayToMemory(s, srcDir, evSchema, OutputMode.Complete())(
+        _.filter(col("value").isNotNull)
+          .select(round(col("value") * 100).cast("decimal(38,0)").as("cents"),
+            when(col("event_type") === "purchase", 1L).otherwise(0L).as("pos"))
+          .groupBy(col("cents"))
+          .agg(count(lit(1)).as("c"), sum(col("pos")).as("p")))
+      graft.functions.Eval.aucFromCounts(counts,
         valueCol = "cents", countCol = "c", posCol = "p")
     },
     // the SAME oracle as ml_auc: the stream-closed dictionary must
@@ -9778,24 +9509,14 @@ object QueryLib {
     // 4-file replay must hash-equal the batch gate's oracle.
     (s, dir) => {
       val (srcDir, evSchema) = stagedEventsWide(s, dir)
-      val stream = s.readStream.schema(evSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-        .filter(col("value").isNotNull)
-        .select(col("event_type"),
-          round(col("value") * 100).cast("decimal(38,0)").as("cents"),
-          when(col("ts") < ts("2024-01-16"), 1L).otherwise(0L).as("ref"))
-      val view = s"sdrift_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val counts = stream.groupBy(col("event_type"), col("cents"))
-        .agg(sum(col("ref")).as("c_ref"), sum(lit(1L) - col("ref")).as("c_cur"))
-      val query = withStatePartitions(s, 4) {
-        counts.writeStream.format("memory").queryName(view)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
-      graft.functions.Drift.ksFromCounts(s.table(view),
+      val counts = replayToMemory(s, srcDir, evSchema, OutputMode.Complete())(
+        _.filter(col("value").isNotNull)
+          .select(col("event_type"),
+            round(col("value") * 100).cast("decimal(38,0)").as("cents"),
+            when(col("ts") < ts("2024-01-16"), 1L).otherwise(0L).as("ref"))
+          .groupBy(col("event_type"), col("cents"))
+          .agg(sum(col("ref")).as("c_ref"), sum(lit(1L) - col("ref")).as("c_cur")))
+      graft.functions.Drift.ksFromCounts(counts,
         keyCol = "event_type", valueCol = "cents",
         refCountCol = "c_ref", curCountCol = "c_cur")
     },
@@ -10695,22 +10416,11 @@ object QueryLib {
     // the 4-file replay must hash-equal the batch gate's oracle.
     (s, dir) => {
       val (srcDir, docSchema) = stagedDocsWide(s, dir)
-      val stream = s.readStream.schema(docSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-      val view = s"sconf_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val cells = stream
-        .select(col("lang").as("actual"), TextOps.langId(toks).as("pred"))
-        .groupBy(col("actual"), col("pred"))
-        .agg(count(lit(1)).as("n"))
-      val query = withStatePartitions(s, 4) {
-        cells.writeStream.format("memory").queryName(view)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      query.awaitTermination()
-      graft.functions.Eval.confusionFromCounts(s.table(view), "actual", "pred", "n")
+      val cells = replayToMemory(s, srcDir, docSchema, OutputMode.Complete())(
+        _.select(col("lang").as("actual"), TextOps.langId(toks).as("pred"))
+          .groupBy(col("actual"), col("pred"))
+          .agg(count(lit(1)).as("n")))
+      graft.functions.Eval.confusionFromCounts(cells, "actual", "pred", "n")
     },
     // the SAME oracle as ml_confusion: the stream-closed cell
     // dictionary must reproduce the batch matrix exactly

@@ -75,17 +75,20 @@ object FileMeta {
     def column(name: String): Option[ColumnStats] = columns.collectFirst { case (`name`, c) => c }
   }
 
-  /** Row count and per-column stats from ONE pass over `p`'s footer. A
+  /** [[stats]] of `p`'s footer. Throws when the footer cannot be read;
+    * each caller decides what that means. */
+  def stats(p: Path, conf: Configuration): Stats = stats(footer(p, conf))
+
+  /** Row count and per-column stats from ONE pass over a footer. A
     * column is left out when any row group lacks usable stats (none,
     * no non-null value, or an unknown null count): a file without a
     * stat is never skipped on that column. Nested columns are left
-    * out. Throws when the footer cannot be read; each caller decides
-    * what that means. */
-  def stats(p: Path, conf: Configuration): Stats = {
+    * out. */
+  def stats(footer: ParquetMetadata): Stats = {
     var rows = 0L
     val cols = mutable.LinkedHashMap.empty[String, ColumnStats]
     val bad = mutable.Set.empty[String]
-    footer(p, conf).getBlocks.forEach { b =>
+    footer.getBlocks.forEach { b =>
       rows += b.getRowCount
       b.getColumns.forEach { cc =>
         val path = cc.getPath.toArray

@@ -7,6 +7,7 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -530,7 +531,9 @@ class TimeseriesStore(
     def complete(a: TxAdd) = a.fsize.isDefined && a.nrec.isDefined
     if (raw.adds.forall(a => a.sv.exists(v => v >= 0 && v < n) && complete(a)))
       return Declared(raw, n, Nil)
-    val schemas = if (n > 0 || raw.adds.isEmpty) raw.schemas else Seq(footerEpoch(name, raw.adds))
+    val (schemas, footers) =
+      if (n > 0 || raw.adds.isEmpty) (raw.schemas, Map.empty[String, ParquetMetadata])
+      else { val (epoch0, read) = footerEpoch(name, raw.adds); (Seq(epoch0), read) }
     raw.adds.find(_.sv.exists(v => v < 0 || v >= schemas.size)).foreach { a =>
       throw new IllegalStateException(
         s"feature '$name': ${a.path} is written under schema epoch ${a.sv.get}, but its log " +
@@ -540,7 +543,7 @@ class TimeseriesStore(
     val f = fs(root)
     val adds = FileMeta.parMapOrderedConf(raw.adds, hadoopConf) { (a, conf) =>
       val at = if (a.sv.isDefined) a else a.copy(sv = Some(0L))
-      if (complete(at)) at else stated(at, f.getFileStatus(new Path(root, a.path)), conf)
+      if (complete(at)) at else stated(at, f.getFileStatus(new Path(root, a.path)), conf, footers.get(a.path))
     }
     Declared(raw.copy(adds = adds, schemas = schemas), n,
       adds.zip(raw.adds).collect { case (a, was) if a != was => a })
@@ -555,8 +558,9 @@ class TimeseriesStore(
     * schema the live files' footers hold, read as Spark infers a file's
     * and [[readable]] as a first write declares it. Files whose footers
     * disagree on a column's name, position or type fail fast, naming
-    * the file. */
-  private def footerEpoch(name: String, adds: Seq[TxAdd]): String = {
+    * the file. Also returns the footers it read, by add path, so that
+    * [[declare]] states the adds without opening the files again. */
+  private def footerEpoch(name: String, adds: Seq[TxAdd]): (String, Map[String, ParquetMetadata]) = {
     val root = featurePath(name)
     val footers = FileMeta.parMapOrderedConf(adds, hadoopConf) { (a, conf) =>
       val p = new Path(root, a.path)
@@ -571,13 +575,14 @@ class TimeseriesStore(
         s"feature '$name' declares no schema and its files disagree: ${a.path} holds " +
           s"${s.simpleString}, ${adds.head.path} holds ${schemas.head.simpleString}")
     }
-    schemas.head.json
+    (schemas.head.json, adds.map(_.path).zip(footers.map(_.getParquetMetadata)).toMap)
   }
 
   private def columns(s: StructType): Seq[(String, DataType)] = s.fields.toSeq.map(f => f.name -> f.dataType)
 
   /** `a` stating the file `st`: its byte size, and from ONE footer read
-    * its row count and its time and value bounds — epoch micros from an
+    * (`footer`, when the caller already read it) its row count and its
+    * time and value bounds — epoch micros from an
     * INT64 micros `time`, and from a DOUBLE `value` (not serialized
     * features or pre-widening epochs). A footer that cannot be read
     * states no stats and fails nothing. A bound without usable footer
@@ -585,8 +590,10 @@ class TimeseriesStore(
     * direction, which a file from a foreign writer or a hand-edited log
     * takes. The one stats step: an install runs it on each staged file,
     * [[declare]] on each add a log records without size or stats. */
-  private def stated(a: TxAdd, st: FileStatus, conf: Configuration): TxAdd = {
-    val fst = try Some(FileMeta.stats(st.getPath, conf)) catch { case NonFatal(_) => None }
+  private def stated(
+      a: TxAdd, st: FileStatus, conf: Configuration, footer: Option[ParquetMetadata] = None): TxAdd = {
+    val fst = try Some(FileMeta.stats(footer.getOrElse(FileMeta.footer(st.getPath, conf))))
+      catch { case NonFatal(_) => None }
     def bounds(c: String, t: PrimitiveTypeName) = fst.flatMap(_.column(c)).filter(_.physical == t)
     val tb = bounds(TimeCol, PrimitiveTypeName.INT64).filter(_.logical match {
       case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation => t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS

@@ -104,6 +104,17 @@ class LogFormatSpec extends SparkSpec with JobCounting {
     assertTwins()
   }
 
+  test("planning a read of a log from before schema declarations opens each data file once") {
+    val dir = tmpDir("graft-logformat-once")
+    val st = new TimeseriesStore(spark, CountingFs.url(dir), CountingFs.options())
+    st.save("f", batch("2024-01-01", 20, 0.0, "2024-02-01")) // five days, one file each
+    strip(s"$dir/feature/f")
+    // the footer that declares epoch 0 also states the add
+    val (_, opened) = CountingFs.opensDuring(s"$dir/feature/f")(st.select("f", None, None))
+    val files = opened.filter(_._1.endsWith(".parquet"))
+    assert(files.size == 5 && files.values.forall(_ == 1), opened)
+  }
+
   test("a double batch saved into a stripped log of long values reads back every row, widened") {
     val dir = tmpDir("graft-logformat-widen")
     val st = new TimeseriesStore(spark, dir)
