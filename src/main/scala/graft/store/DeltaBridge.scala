@@ -42,6 +42,13 @@ import org.apache.spark.sql.types._
   * the scan's `_metadata.file_path` basename — never re-inferred from
   * directory names, so the bridge reads Delta tables whose files do
   * NOT use hive-style paths (Delta does not require them).
+  *
+  * Write path: [[writeLog]] is commit 0 and [[appendCommit]] commit
+  * N+1, both through one commit-file writer (an exclusive create, the
+  * protocol's put-if-absent) and one add-action builder.
+  * [[writeCheckpoint]] writes its parquet through
+  * [[FileMeta.writeOneParquet]], which fails on a refused rename
+  * before `_last_checkpoint` can name the file.
   */
 object DeltaBridge {
 
@@ -137,8 +144,39 @@ object DeltaBridge {
         "nullCount" -> num.map { case (n, c) => n -> c.nulls }.toMap)))
     } catch { case NonFatal(_) => None }
 
-  /** Write `_delta_log/00000000000000000000.json` describing every
-    * `*.parquet` data file already under `dir`. Partition columns and
+  /** An `add` action for the data file at `rel` under the table root:
+    * its hive partition values, size, mtime and stats when its footer
+    * read. */
+  private def addAction(rel: String, size: Long, mtime: Long, stats: Option[String]): Map[String, Any] = {
+    val base = Map[String, Any](
+      "path" -> encodePath(rel),
+      "partitionValues" -> FileMeta.hiveParts(rel).toMap,
+      "size" -> size, "modificationTime" -> mtime,
+      "dataChange" -> true)
+    Map("add" -> stats.map(s => base + ("stats" -> s)).getOrElse(base))
+  }
+
+  /** Writes commit `version` of the log under `root`: a commitInfo
+    * stamped `ts` with `operation`, then `actions`, one JSON object a
+    * line. The file is created exclusively, so two writers racing for
+    * one version cannot both succeed (the protocol's put-if-absent
+    * commit). Returns `version`. */
+  private def writeCommit(
+      fs: org.apache.hadoop.fs.FileSystem, root: Path, version: Long,
+      ts: Long, operation: String, actions: Seq[Map[String, Any]]): Long = {
+    val commitInfo = Map("commitInfo" -> Map(
+      "timestamp" -> ts, "operation" -> operation,
+      "operationParameters" -> Map.empty[String, String],
+      "engineInfo" -> "graft-delta-bridge"))
+    val out = fs.create(new Path(new Path(root, LogDirName), f"$version%020d.json"), false)
+    try (commitInfo +: actions).foreach { a =>
+      out.write(mapper.writeValueAsBytes(a)); out.write('\n') }
+    finally out.close()
+    version
+  }
+
+  /** Write `_delta_log/00000000000000000000.json`, commit 0, describing
+    * every `*.parquet` data file already under `dir`. Partition columns and
     * their per-file values are parsed from the files' `k=v` directory
     * segments (the layout [[TimeseriesStore.exportSnapshot]] lays
     * down); the data schema comes from ONE footer (exports are
@@ -177,14 +215,9 @@ object DeltaBridge {
       partCols.map(c => StructField(c, StringType, nullable = true)))
 
     val maxMtime = sorted.map(_._3).max
-    val actions = mutable.ArrayBuffer.empty[Map[String, Any]]
-    actions += Map("commitInfo" -> Map(
-      "timestamp" -> maxMtime, "operation" -> "WRITE",
-      "operationParameters" -> Map.empty[String, String],
-      "engineInfo" -> "graft-delta-bridge"))
-    actions += Map("protocol" -> Map(
+    val protocol = Map("protocol" -> Map(
       "minReaderVersion" -> 1, "minWriterVersion" -> 2))
-    actions += Map("metaData" -> Map(
+    val metaData = Map("metaData" -> Map(
       // deterministic table id: same source+version => same log bytes
       "id" -> java.util.UUID.nameUUIDFromBytes(
         tableId.getBytes(StandardCharsets.UTF_8)).toString,
@@ -194,23 +227,10 @@ object DeltaBridge {
       "partitionColumns" -> partCols,
       "configuration" -> Map.empty[String, String],
       "createdTime" -> maxMtime))
-    actions ++= FileMeta.describeFiles(spark, hc, sorted) { case ((rel, size, mtime), c) =>
-      val base = Map[String, Any](
-        "path" -> encodePath(rel),
-        "partitionValues" -> FileMeta.hiveParts(rel).toMap,
-        "size" -> size, "modificationTime" -> mtime,
-        "dataChange" -> true)
-      val withStats = statsJson(new Path(root, rel), c)
-        .map(s => base + ("stats" -> s)).getOrElse(base)
-      Map("add" -> withStats): Map[String, Any]
+    val adds = FileMeta.describeFiles(spark, hc, sorted) { case ((rel, size, mtime), c) =>
+      addAction(rel, size, mtime, statsJson(new Path(root, rel), c))
     }
-
-    val logDir = new Path(root, LogDirName)
-    fs.mkdirs(logDir)
-    val out = fs.create(new Path(logDir, f"${0L}%020d.json"), true)
-    try actions.foreach { a =>
-      out.write(mapper.writeValueAsBytes(a)); out.write('\n') }
-    finally out.close()
+    writeCommit(fs, root, 0L, maxMtime, "WRITE", protocol +: metaData +: adds)
     sorted.size
   }
 
@@ -472,7 +492,6 @@ object DeltaBridge {
     require(state.mappingMode == "none",
       s"appendCommit: $dir uses column mapping — the bridge reads it but " +
         "only syncs unmapped exports")
-    val version = state.latestVersion + 1
 
     addRel.foreach { rel =>
       require(FileMeta.hiveParts(rel).map(_._1) == state.partCols,
@@ -490,31 +509,13 @@ object DeltaBridge {
     }
     val ts = (addSt.map(_._3) ++ state.live.values.map(_.modificationTime)).max
 
-    val actions = mutable.ArrayBuffer.empty[Map[String, Any]]
-    actions += Map("commitInfo" -> Map(
-      "timestamp" -> ts, "operation" -> "SYNC",
-      "operationParameters" -> Map.empty[String, String],
-      "engineInfo" -> "graft-delta-bridge"))
-    addSt.foreach { case (rel, size, mtime, stats) =>
-      val base = Map[String, Any](
-        "path" -> encodePath(rel),
-        "partitionValues" -> FileMeta.hiveParts(rel).toMap,
-        "size" -> size, "modificationTime" -> mtime,
-        "dataChange" -> true)
-      actions += Map("add" -> stats.map(s => base + ("stats" -> s)).getOrElse(base))
-    }
-    removeRel.sorted.foreach { rel =>
-      actions += Map("remove" -> Map(
+    val removes = removeRel.sorted.map { rel =>
+      Map("remove" -> Map(
         "path" -> encodePath(rel),
         "deletionTimestamp" -> ts, "dataChange" -> true))
     }
-
-    val out = fs.create(new Path(new Path(root, LogDirName),
-      f"$version%020d.json"), false)
-    try actions.foreach { a =>
-      out.write(mapper.writeValueAsBytes(a)); out.write('\n') }
-    finally out.close()
-    version
+    writeCommit(fs, root, state.latestVersion + 1, ts, "SYNC",
+      addSt.map((addAction _).tupled) ++ removes)
   }
 
   /** Write a Delta-protocol parquet checkpoint of the log's CURRENT
@@ -575,17 +576,9 @@ object DeltaBridge {
     }
 
     val logDir = new Path(root, LogDirName)
-    val tmp = new Path(logDir, s".ckpt_tmp_$v")
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, 1), schema)
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = fs.listStatus(tmp).map(_.getPath)
-      .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-      .getOrElse(sys.error(s"checkpoint write under $tmp produced no part file"))
-    val dst = new Path(logDir, f"$v%020d.checkpoint.parquet")
-    fs.delete(dst, false)
-    fs.rename(part, dst)
-    fs.delete(tmp, true)
+    FileMeta.writeOneParquet(
+      spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema),
+      fs, new Path(logDir, s".ckpt_tmp_$v"), new Path(logDir, f"$v%020d.checkpoint.parquet"))
 
     val out = fs.create(new Path(logDir, LastCheckpointName), true)
     try out.write(mapper.writeValueAsBytes(Map(

@@ -160,6 +160,22 @@ object FileMeta {
     files.sortBy(_._1).toSeq
   }
 
+  /** Writes `df` as ONE parquet file at `dst`: Spark writes it under
+    * `tmp`, its part file is renamed to `dst` and `tmp` is removed.
+    * The caller shapes `df` to one partition. A rename that returns
+    * false throws here, before any log or manifest can name `dst`. */
+  def writeOneParquet(df: DataFrame, fs: FileSystem, tmp: Path, dst: Path): Unit = {
+    df.write.mode("overwrite").parquet(tmp.toString)
+    val part = fs.listStatus(tmp).map(_.getPath)
+      .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
+      .getOrElse(sys.error(s"parquet write under $tmp produced no part file"))
+    fs.mkdirs(dst.getParent)
+    fs.delete(dst, false)
+    if (!fs.rename(part, dst))
+      throw new java.io.IOException(s"rename of $part to $dst failed")
+    fs.delete(tmp, true)
+  }
+
   /** `p` relative to the table `location` when it lies under it, else
     * `p` unchanged. */
   def relativeTo(location: String)(p: String): String = {

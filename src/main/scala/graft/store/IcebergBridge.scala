@@ -7,6 +7,7 @@ import java.nio.charset.StandardCharsets
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileReader, DataFileWriter, SeekableByteArrayInput}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
@@ -53,9 +54,21 @@ import org.apache.spark.sql.types._
   * an explicit schema; partition values ride a broadcast
   * (file -> values) map joined on the scan's `_metadata.file_path` —
   * never re-inferred from directory names (Iceberg files need not use
-  * hive paths). Deterministic output: table uuid / snapshot id derive
-  * from the caller's tableId and timestamps from data-file mtimes, so
-  * identical exports produce byte-identical metadata trees.
+  * hive paths).
+  *
+  * Write path: one private `commit` writes every snapshot — the export
+  * ([[writeTable]], the commit from an empty version 0), a sync
+  * ([[appendSnapshot]], [[compactDeletes]]) and both delete kinds —
+  * and [[expireSnapshots]]' metadata-only publish. In order it writes
+  * the manifest, the manifest-list, `v(N+1).metadata.json` and last
+  * `version-hint.text`, the commit point. Each operation reads the
+  * current metadata once and replays its snapshot's manifest-list and
+  * manifests once, and the commit builds on that replay.
+  *
+  * Deterministic output: table uuid / snapshot id derive from the
+  * caller's tableId, timestamps from data-file mtimes and each Avro
+  * file's sync marker from its name, so identical exports produce
+  * byte-identical metadata trees.
   */
 object IcebergBridge {
 
@@ -306,17 +319,24 @@ object IcebergBridge {
   }
 
   // ---------------------------------------------------------------
-  // Write path
+  // Write path: every snapshot and every metadata version is written
+  // by [[commit]], over one [[Table]] opened by the caller
   // ---------------------------------------------------------------
 
+  /** Writes `records` as one Avro file at `p` and returns its length.
+    * The sync marker is the MD5 of the file name: Avro otherwise draws
+    * a random marker per file, and two identical exports would differ
+    * byte-wise. */
   private def writeAvro(
       fs: FileSystem, p: Path, schema: Schema,
       meta: Seq[(String, String)], records: Seq[GenericRecord]): Long = {
     val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
     meta.foreach { case (k, v) => w.setMeta(k, v) }
+    val sync = java.security.MessageDigest.getInstance("MD5")
+      .digest(p.getName.getBytes(StandardCharsets.UTF_8))
     val out = fs.create(p, true)
     try {
-      w.create(schema, out)
+      w.create(schema, out, sync)
       records.foreach(w.append)
       w.close()
     } finally out.close()
@@ -342,50 +362,235 @@ object IcebergBridge {
     }.asJava
   }
 
-  /** The ADDED data_file record both writers share: footer stats read
-    * from the file (by [[bounds]], possibly on an executor —
-    * everything here is driver-side Avro assembly over the
-    * serializable stats), partition struct filled from hive segments,
-    * stat maps keyed by field id — export and sync must emit IDENTICAL
-    * entry shapes or readers see two dialects of the same table. Every
-    * row of a file is a value of each column, so the value counts are
-    * the row count.
-    */
+  /** The data_file record of every manifest entry the bridge writes:
+    * an ADDED data file with its footer stats, a carried EXISTING file
+    * with the bounds its previous entry recorded, or a delete file
+    * (`content` 1 = position, 2 = equality on `equalityIds`). Stat maps
+    * are keyed by field id and written only when non-empty, so every
+    * writer emits one entry dialect. */
   private def dataFileRecord(
       dataFileSchema: Schema,
-      location: String, rel: String,
+      path: String,
       partValues: Seq[(String, Any)],
       rows: Long, size: Long,
-      stats: Seq[(Int, Long, Array[Byte], Array[Byte])]): GenericData.Record = {
-    val partSchema = dataFileSchema.getField("partition").schema()
-    val part = new GenericData.Record(partSchema)
+      valueCounts: Seq[(Int, Long)] = Nil,
+      nullCounts: Seq[(Int, Long)] = Nil,
+      lower: Seq[(Int, Array[Byte])] = Nil,
+      upper: Seq[(Int, Array[Byte])] = Nil,
+      content: Int = 0,
+      equalityIds: Seq[Int] = Nil): GenericData.Record = {
+    val part = new GenericData.Record(dataFileSchema.getField("partition").schema())
     partValues.foreach { case (k, v) => part.put(k, v) }
     val df = new GenericData.Record(dataFileSchema)
-    df.put("content", 0)
-    df.put("file_path", s"$location/$rel")
+    df.put("content", content)
+    df.put("file_path", path)
     df.put("file_format", "PARQUET")
     df.put("partition", part)
     df.put("record_count", rows)
     df.put("file_size_in_bytes", size)
-    if (stats.nonEmpty) {
-      def put(field: String, value: ((Int, Long, Array[Byte], Array[Byte])) => Any): Unit =
-        df.put(field, kvArray(dataFileSchema.getField(field).schema(), stats.map(s => s._1 -> value(s))))
-      put("value_counts", _ => rows)
-      put("null_value_counts", _._2)
-      put("lower_bounds", s => ByteBuffer.wrap(s._3))
-      put("upper_bounds", s => ByteBuffer.wrap(s._4))
-    }
+    if (equalityIds.nonEmpty)
+      df.put("equality_ids", equalityIds.map(java.lang.Integer.valueOf).asJava)
+    def put(field: String, kvs: Seq[(Int, Any)]): Unit =
+      if (kvs.nonEmpty) df.put(field, kvArray(dataFileSchema.getField(field).schema(), kvs))
+    put("value_counts", valueCounts)
+    put("null_value_counts", nullCounts)
+    put("lower_bounds", lower.map { case (k, v) => k -> ByteBuffer.wrap(v) })
+    put("upper_bounds", upper.map { case (k, v) => k -> ByteBuffer.wrap(v) })
     df
+  }
+
+  /** A manifest entry: `status` 1 ADDED or 0 EXISTING, the snapshot
+    * that added the file and its data sequence number. */
+  private def entry(
+      entrySchema: Schema, status: Int, snapshotId: Long, seq: Long,
+      file: GenericRecord): GenericRecord = {
+    val e = new GenericData.Record(entrySchema)
+    e.put("status", status)
+    e.put("snapshot_id", snapshotId)
+    e.put("sequence_number", seq)
+    e.put("file_sequence_number", seq)
+    e.put("data_file", file)
+    e
+  }
+
+  /** The ADDED entry of a new data file at `location/rel`, from its
+    * footer stats ([[bounds]], possibly read on an executor). Every row
+    * of a file is a value of each column, so the value counts are the
+    * row count. */
+  private def addedEntry(
+      entrySchema: Schema, snapshotId: Long, seq: Long,
+      location: String, rel: String, partValues: Seq[(String, Any)],
+      rows: Long, size: Long,
+      stats: Seq[(Int, Long, Array[Byte], Array[Byte])]): GenericRecord =
+    entry(entrySchema, 1, snapshotId, seq,
+      dataFileRecord(entrySchema.getField("data_file").schema(),
+        s"$location/$rel", partValues, rows, size,
+        valueCounts = stats.map(s => s._1 -> rows),
+        nullCounts = stats.map(s => s._1 -> s._2),
+        lower = stats.map(s => s._1 -> s._3),
+        upper = stats.map(s => s._1 -> s._4)))
+
+  private def snapshotIdOf(uuid: java.util.UUID): Long =
+    uuid.getMostSignificantBits & Long.MaxValue
+
+  private def nameUuid(s: String): java.util.UUID =
+    java.util.UUID.nameUUIDFromBytes(s.getBytes(StandardCharsets.UTF_8))
+
+  /** An ordered JSON object for the metadata. */
+  private def obj(kvs: (String, Any)*): java.util.LinkedHashMap[String, Any] = {
+    val m = new java.util.LinkedHashMap[String, Any]()
+    kvs.foreach { case (k, v) => m.put(k, v) }
+    m
+  }
+
+  /** A schema entry of the metadata's `schemas`. */
+  private def schemaObj(fields: Seq[(String, Int, String)], schemaId: Int): Map[String, Any] =
+    Map[String, Any]("type" -> "struct", "schema-id" -> schemaId,
+      "fields" -> fields.map { case (n, id, t) => Map[String, Any](
+        "id" -> id, "name" -> n, "required" -> false, "type" -> t) })
+
+  /** A metadata JSON being edited into its next version. The
+    * scala-module mapper reads JSON arrays as Scala Seqs and objects
+    * as Scala or Java maps; [[append]] and [[retain]] rebuild a list
+    * in order. */
+  private final class MetaEdit(val map: java.util.LinkedHashMap[String, Object]) {
+    def put(key: String, v: Any): Unit = map.put(key, v.asInstanceOf[AnyRef])
+    def get(key: String): Option[Object] = Option(map.get(key))
+    private def list(key: String): Seq[Object] = get(key) match {
+      case Some(s: Seq[_]) => s.asInstanceOf[Seq[Object]]
+      case Some(l: java.util.List[_]) => l.asScala.toSeq.asInstanceOf[Seq[Object]]
+      case None => Seq.empty[Object]
+      case Some(other) => throw new IllegalArgumentException(
+        s"metadata '$key' is not a list: ${other.getClass}")
+    }
+    def append(key: String, item: Any): Unit = put(key, list(key) :+ item)
+    def retain(key: String)(keep: Object => Boolean): Unit =
+      if (map.containsKey(key)) put(key, list(key).filter(keep))
+  }
+
+  /** One new snapshot: its manifest (`entries` under `entrySchema`,
+    * written under partition spec `specId`/`specJson` as a data or a
+    * delete manifest), the prior manifest-list records its list
+    * carries, and what the metadata records of it. `mtime` is the
+    * newest file it adds (0 when none); its timestamp is the later of
+    * that and the head's `last-updated-ms`, never the wall clock. */
+  private final case class NewSnapshot(
+      uuid: java.util.UUID,
+      seq: Long,
+      entrySchema: Schema,
+      entries: Seq[GenericRecord],
+      deletes: Boolean,
+      specId: Int,
+      specJson: String,
+      schemaJson: String,
+      schemaId: Int,
+      carried: Seq[GenericRecord],
+      mtime: Long,
+      summary: Seq[(String, String)]) {
+    def id: Long = snapshotIdOf(uuid)
+  }
+
+  /** The manifest-list record of a snapshot's new manifest, counted
+    * from its entries. */
+  private def manifestRecord(path: String, length: Long, s: NewSnapshot): GenericRecord = {
+    def rows(e: GenericRecord): Long =
+      e.get("data_file").asInstanceOf[GenericRecord].get("record_count").asInstanceOf[Long]
+    val (added, existing) = s.entries.partition(_.get("status").asInstanceOf[Int] == 1)
+    val mf = new GenericData.Record(manifestFileSchema)
+    mf.put("manifest_path", path)
+    mf.put("manifest_length", length)
+    mf.put("partition_spec_id", s.specId)
+    mf.put("content", if (s.deletes) 1 else 0)
+    mf.put("sequence_number", s.seq)
+    mf.put("min_sequence_number",
+      (s.seq +: s.entries.map(_.get("sequence_number").asInstanceOf[Long])).min)
+    mf.put("added_snapshot_id", s.id)
+    mf.put("added_files_count", added.size)
+    mf.put("existing_files_count", existing.size)
+    mf.put("deleted_files_count", 0)
+    mf.put("added_rows_count", added.map(rows).sum)
+    mf.put("existing_rows_count", existing.map(rows).sum)
+    mf.put("deleted_rows_count", 0L)
+    mf
+  }
+
+  /** The one commit of the bridge, from `head` (version N) to version
+    * N+1. For a snapshot it writes, in order, the manifest, the
+    * manifest-list (the carried records copied, then the new
+    * manifest's), and then, as for a metadata-only publish, the
+    * metadata JSON: the head's, with the snapshot appended to
+    * `snapshots` and `snapshot-log`, and the head's file (if it was
+    * written) to `metadata-log`, then `edit` applied. The head's
+    * current snapshot, if any, is the new snapshot's parent.
+    * `v(N+1).metadata.json` comes next and `version-hint.text` last:
+    * the hint is the commit point, so a crash before it leaves the
+    * table at N.
+    */
+  private def commit(fs: FileSystem, root: Path, head: Head, snap: Option[NewSnapshot])(
+      edit: MetaEdit => Unit = _ => ()): Unit = {
+    val metaDir = new Path(root, MetaDirName)
+    val location = head.location.stripSuffix("/")
+    val meta = new MetaEdit(
+      mapper.convertValue(head.node, classOf[java.util.LinkedHashMap[String, Object]]))
+    snap.foreach { s =>
+      val manifest = new Path(metaDir, s"${s.uuid}-m0.avro")
+      val length = writeAvro(fs, manifest, s.entrySchema,
+        Seq(
+          "schema" -> s.schemaJson,
+          "partition-spec" -> s.specJson,
+          "partition-spec-id" -> s.specId.toString,
+          "format-version" -> "2",
+          "content" -> (if (s.deletes) "deletes" else "data")),
+        s.entries)
+      val parent = Some(head.currentSnapshotId).filter(_ >= 0)
+      val list = new Path(metaDir, s"snap-${s.id}-1-${s.uuid}.avro")
+      val carried = s.carried.map { r =>
+        val c = new GenericData.Record(manifestFileSchema)
+        manifestFileSchema.getFields.forEach(f => c.put(f.name(), r.get(f.name())))
+        c: GenericRecord
+      }
+      writeAvro(fs, list, manifestFileSchema,
+        Seq("snapshot-id" -> s.id.toString,
+          "parent-snapshot-id" -> parent.map(_.toString).getOrElse("null"),
+          "sequence-number" -> s.seq.toString,
+          "format-version" -> "2"),
+        carried :+ manifestRecord(s"$location/$MetaDirName/${manifest.getName}", length, s))
+
+      val prevMs = head.node.get("last-updated-ms").asLong()
+      val ts = math.max(s.mtime, prevMs)
+      meta.put("last-sequence-number", s.seq)
+      meta.put("last-updated-ms", ts)
+      meta.put("current-snapshot-id", s.id)
+      val snapshot = obj("snapshot-id" -> s.id)
+      parent.foreach(p => snapshot.put("parent-snapshot-id", p))
+      snapshot.put("timestamp-ms", ts)
+      snapshot.put("sequence-number", s.seq)
+      snapshot.put("summary", obj(s.summary: _*))
+      snapshot.put("manifest-list", s"$location/$MetaDirName/${list.getName}")
+      snapshot.put("schema-id", s.schemaId)
+      meta.append("snapshots", snapshot)
+      meta.append("snapshot-log", obj("snapshot-id" -> s.id, "timestamp-ms" -> ts))
+      head.file.foreach(f => meta.append("metadata-log", obj(
+        "metadata-file" -> s"$location/$MetaDirName/${f.getName}",
+        "timestamp-ms" -> prevMs)))
+    }
+    edit(meta)
+
+    val next = head.version + 1
+    val metaOut = fs.create(new Path(metaDir, s"v$next.metadata.json"), true)
+    try metaOut.write(mapper.writeValueAsBytes(meta.map)) finally metaOut.close()
+    val hintOut = fs.create(new Path(metaDir, "version-hint.text"), true)
+    try hintOut.write(next.toString.getBytes(StandardCharsets.UTF_8)) finally hintOut.close()
   }
 
   /** Write Iceberg v2 table metadata describing the parquet tree under
     * `dir`: one manifest, one manifest-list, `v1.metadata.json` and
     * `version-hint.text` (the HadoopCatalog convention) under
-    * `dir/metadata/`. Partition columns come from hive `k=v` path
-    * segments (identity transforms); per-file stats (record count,
-    * numeric bounds, null/value counts keyed by field-id) come from
-    * one footer read per file. Returns the number of data files
-    * described.
+    * `dir/metadata/`, as the [[commit]] from an empty version 0.
+    * Partition columns come from hive `k=v` path segments (identity
+    * transforms); per-file stats (record count, numeric bounds,
+    * null/value counts keyed by field-id) come from one footer read per
+    * file. Returns the number of data files described.
     */
   def writeTable(
       spark: SparkSession,
@@ -393,9 +598,7 @@ object IcebergBridge {
       tableId: String,
       conf: Configuration = null,
       spec: Seq[SpecCol] = Nil): Int = {
-    val hc = if (conf == null) spark.sessionState.newHadoopConf() else conf
-    val root = new Path(dir)
-    val fs = root.getFileSystem(hc)
+    val (hc, root, fs) = fsOf(spark, dir, conf)
     val location = fs.makeQualified(root).toString.stripSuffix("/")
     val sorted = FileMeta.dataFiles(fs, root, MetaDirName)
     val partCols = FileMeta.partitionKeys(sorted.map(_._1))
@@ -444,84 +647,36 @@ object IcebergBridge {
     val partTypes: Seq[(String, String)] =
       effSpec.map { case (n, t, _) => n -> transformAvroType(t, n) }
 
-    val uuid = java.util.UUID.nameUUIDFromBytes(
-      ("iceberg:" + tableId).getBytes(StandardCharsets.UTF_8))
-    val snapshotId = uuid.getMostSignificantBits & Long.MaxValue
+    val uuid = nameUuid("iceberg:" + tableId)
     val maxMtime = sorted.map(_._3).max
-    val metaDir = new Path(root, MetaDirName)
-    fs.mkdirs(metaDir)
+    fs.mkdirs(new Path(root, MetaDirName))
 
-    // ---- manifest: one ADDED entry per data file, with footer stats
+    // one ADDED entry per data file: footer reads thread-pooled or as
+    // ONE Spark job over executors, shaped to the file count
+    // (FileMeta.describeFiles); Avro assembly stays on the driver over
+    // the serializable (rows, stats) pairs
     val entrySchema = manifestEntrySchema(partTypes)
-    val dataFileSchema = entrySchema.getField("data_file").schema()
-    // footer reads thread-pooled or as ONE Spark job over executors,
-    // shaped to the file count (FileMeta.describeFiles); Avro assembly
-    // stays on the driver over the serializable (rows, stats) pairs
     val descr = FileMeta.describeFiles(spark, hc, sorted) { case ((rel, size, _), c) =>
       val stats = FileMeta.stats(new Path(root, rel), c)
       (rel, size, stats.rows, bounds(stats, fieldIds))
     }
-    val built = descr.map { case (rel, size, rows, stats) =>
+    val entries = descr.map { case (rel, size, rows, stats) =>
       val pvTyped = FileMeta.hiveParts(rel).map { case (k, v) =>
         k -> transformedValue(effSpec.find(_._1 == k).get._2, v, rel)
       }
-      val df = dataFileRecord(
-        dataFileSchema, location, rel, pvTyped, rows, size, stats)
-      val e = new GenericData.Record(entrySchema)
-      e.put("status", 1) // ADDED
-      e.put("snapshot_id", snapshotId)
-      e.put("sequence_number", 1L)
-      e.put("file_sequence_number", 1L)
-      e.put("data_file", df)
-      (e: GenericRecord, rows)
+      addedEntry(entrySchema, snapshotIdOf(uuid), 1L, location, rel, pvTyped, rows, size, stats)
     }
-    val entries = built.map(_._1)
-    val totalRows = built.map(_._2).sum
     val specFieldsJson = effSpec.zipWithIndex.map { case ((c, t, srcId), i) =>
       Map[String, Any]("name" -> c, "transform" -> t,
         "source-id" -> srcId, "field-id" -> (1000 + i))
     }
     val schemaJson = mapper.writeValueAsString(Map[String, Any](
       "type" -> "struct", "schema-id" -> 0, "fields" -> schemaFields))
-    val manifestPath = new Path(metaDir, s"$uuid-m0.avro")
-    val manifestLen = writeAvro(fs, manifestPath, entrySchema,
-      Seq(
-        "schema" -> schemaJson,
-        "partition-spec" -> mapper.writeValueAsString(specFieldsJson),
-        "partition-spec-id" -> "0",
-        "format-version" -> "2",
-        "content" -> "data"),
-      entries)
-
-    // ---- manifest-list: one entry naming the manifest
-    val mf = new GenericData.Record(manifestFileSchema)
-    mf.put("manifest_path", s"$location/$MetaDirName/${manifestPath.getName}")
-    mf.put("manifest_length", manifestLen)
-    mf.put("partition_spec_id", 0)
-    mf.put("content", 0) // data
-    mf.put("sequence_number", 1L)
-    mf.put("min_sequence_number", 1L)
-    mf.put("added_snapshot_id", snapshotId)
-    mf.put("added_files_count", sorted.size)
-    mf.put("existing_files_count", 0)
-    mf.put("deleted_files_count", 0)
-    mf.put("added_rows_count", totalRows)
-    mf.put("existing_rows_count", 0L)
-    mf.put("deleted_rows_count", 0L)
-    val listPath = new Path(metaDir, s"snap-$snapshotId-1-$uuid.avro")
-    writeAvro(fs, listPath, manifestFileSchema,
-      Seq("snapshot-id" -> snapshotId.toString,
-        "parent-snapshot-id" -> "null",
-        "sequence-number" -> "1",
-        "format-version" -> "2"),
-      Seq(mf))
-
-    // ---- vN.metadata.json + version-hint.text
-    val metadata = mutable.LinkedHashMap[String, Any](
+    val empty = mutable.LinkedHashMap[String, Any](
       "format-version" -> 2,
       "table-uuid" -> uuid.toString,
       "location" -> location,
-      "last-sequence-number" -> 1,
+      "last-sequence-number" -> 0,
       "last-updated-ms" -> maxMtime,
       "last-column-id" -> fieldIds.size,
       "current-schema-id" -> 0,
@@ -535,24 +690,17 @@ object IcebergBridge {
         "order-id" -> 0, "fields" -> Seq.empty[Object])),
       "properties" -> Map("schema.name-mapping.default" ->
         nameMappingJson(schemaColNames.map(n => n -> fieldIds(n)))),
-      "current-snapshot-id" -> snapshotId,
-      "snapshots" -> Seq(Map[String, Any](
-        "snapshot-id" -> snapshotId,
-        "timestamp-ms" -> maxMtime,
-        "sequence-number" -> 1,
-        "summary" -> Map(
+      "current-snapshot-id" -> -1,
+      "snapshots" -> Seq.empty[Object],
+      "snapshot-log" -> Seq.empty[Object],
+      "metadata-log" -> Seq.empty[Object])
+    commit(fs, root, Head(mapper.valueToTree[JsonNode](empty), None, 0L),
+      Some(NewSnapshot(uuid, 1L, entrySchema, entries, deletes = false,
+        specId = 0, mapper.writeValueAsString(specFieldsJson), schemaJson, schemaId = 0,
+        carried = Nil, maxMtime, Seq(
           "operation" -> "append",
           "added-data-files" -> sorted.size.toString,
-          "added-records" -> totalRows.toString),
-        "manifest-list" -> s"$location/$MetaDirName/${listPath.getName}",
-        "schema-id" -> 0)),
-      "snapshot-log" -> Seq(Map[String, Any](
-        "snapshot-id" -> snapshotId, "timestamp-ms" -> maxMtime)),
-      "metadata-log" -> Seq.empty[Object])
-    val metaOut = fs.create(new Path(metaDir, "v1.metadata.json"), true)
-    try metaOut.write(mapper.writeValueAsBytes(metadata)) finally metaOut.close()
-    val hintOut = fs.create(new Path(metaDir, "version-hint.text"), true)
-    try hintOut.write("1".getBytes(StandardCharsets.UTF_8)) finally hintOut.close()
+          "added-records" -> descr.map(_._3).sum.toString))))()
     sorted.size
   }
 
@@ -578,32 +726,29 @@ object IcebergBridge {
       removedFiles: Seq[String],
       conf: Configuration = null,
       newDataSchema: Option[StructType] = None): Long =
-    appendSnapshotImpl(spark, dir, newFiles, removedFiles, conf,
+    appendSnapshotImpl(spark, open(spark, dir, conf), newFiles, removedFiles,
       newDataSchema, dropDeletes = false)
 
-  /** [[appendSnapshot]] body; `dropDeletes` is true ONLY from
-    * [[compactDeletes]], whose rewritten files already reflect every
-    * delete — publishing the data-only manifest is then safe.
+  private def requireV2(head: Head, what: String): Unit = {
+    val fv = head.node.get("format-version").asInt()
+    require(fv == 2, s"$what needs a v2 table, got format-version $fv")
+  }
+
+  /** [[appendSnapshot]] body over the caller's replay `t`;
+    * `dropDeletes` is true ONLY from [[compactDeletes]], whose
+    * rewritten files already reflect every delete — publishing the
+    * data-only manifest is then safe.
     */
   private def appendSnapshotImpl(
       spark: SparkSession,
-      dir: String,
+      t: Table,
       newFiles: Seq[String],
       removedFiles: Seq[String],
-      conf: Configuration,
       newDataSchema: Option[StructType],
       dropDeletes: Boolean): Long = {
-    val hc = if (conf == null) spark.sessionState.newHadoopConf() else conf
-    val root = new Path(dir)
-    val fs = root.getFileSystem(hc)
-    val metaDir = new Path(root, MetaDirName)
-    val (metaFile, metaVersion) = currentMetaFile(fs, metaDir)
-    val in = fs.open(metaFile)
-    val node = try mapper.readTree(in) finally in.close()
-    val fv = node.get("format-version").asInt()
-    require(fv == 2, s"appendSnapshot needs a v2 table, got format-version $fv")
-    val location = jStr(node, "location")
-    val prevState = loadState(spark, fs, root)
+    val Table(fs, hc, root, head, prevState) = t
+    val node = head.node
+    requireV2(head, "appendSnapshot")
     // the sync writer's floor is identity-partitioned bridge tables
     // (the shape writeTable's default path and the store export lay
     // down); transform-partitioned foreign tables are read-only here
@@ -617,6 +762,7 @@ object IcebergBridge {
         "compactDeletes (rewrites the affected data files with the " +
         "deletes applied) before syncing")
     val partCols = prevState.partCols
+    val location = head.location.stripSuffix("/")
 
     val relOf = FileMeta.relativeTo(location) _
     val removedSet = removedFiles.map(relOf).toSet
@@ -627,11 +773,9 @@ object IcebergBridge {
       s"appendSnapshot: removing files not in the current snapshot: " +
         s"${(removedSet -- prevState.files.map(f => relOf(f.path)).toSet).take(3)}")
 
-    val newSeq = node.get("last-sequence-number").asLong() + 1
-    val tableUuid = jStr(node, "table-uuid")
-    val snapUuid = java.util.UUID.nameUUIDFromBytes(
-      (s"iceberg-snap:$tableUuid:$newSeq").getBytes(StandardCharsets.UTF_8))
-    val snapshotId = snapUuid.getMostSignificantBits & Long.MaxValue
+    val newSeq = head.seq + 1
+    val uuid = nameUuid(s"iceberg-snap:${jStr(node, "table-uuid")}:$newSeq")
+    val snapshotId = snapshotIdOf(uuid)
 
     // field ids from the current schema (stats keys)
     val curSchemaId = node.get("current-schema-id").asInt()
@@ -683,7 +827,6 @@ object IcebergBridge {
         }
       }
     val effFields = evolved.map(_._1).getOrElse(curFields)
-    val effSchemaId = evolved.map(_._2).getOrElse(curSchemaId)
     val fieldIds: Map[String, Int] = effFields.map(f => f._1 -> f._2).toMap
 
     freshNew.foreach(rel => require(FileMeta.hiveParts(rel).map(_._1) == partCols,
@@ -691,210 +834,70 @@ object IcebergBridge {
 
     val entrySchema = manifestEntrySchema(partCols.map(_ -> "\"string\""))
     val dataFileSchema = entrySchema.getField("data_file").schema()
-    val partSchema = dataFileSchema.getField("partition").schema()
-    var addedRows = 0L
-    var existingRows = 0L
     val descrNew = FileMeta.describeFiles(spark, hc, freshNew) { (rel, c) =>
       val p = new Path(root, rel)
       val fsl = p.getFileSystem(c)
-      require(fsl.exists(p), s"appendSnapshot: new file $rel not under $dir")
+      require(fsl.exists(p), s"appendSnapshot: new file $rel not under $root")
+      val st = fsl.getFileStatus(p)
       val stats = FileMeta.stats(p, c)
-      (rel, fsl.getFileStatus(p).getLen, stats.rows, bounds(stats, fieldIds))
+      (rel, st.getLen, st.getModificationTime, stats.rows, bounds(stats, fieldIds))
     }
-    val builtNew = descrNew.map { case (rel, size, rows, stats) =>
-      val df = dataFileRecord(
-        dataFileSchema, location, rel, FileMeta.hiveParts(rel), rows, size, stats)
-      val e = new GenericData.Record(entrySchema)
-      e.put("status", 1) // ADDED
-      e.put("snapshot_id", snapshotId)
-      e.put("sequence_number", newSeq)
-      e.put("file_sequence_number", newSeq)
-      e.put("data_file", df)
-      (e: GenericRecord, rows)
+    val newEntries = descrNew.map { case (rel, size, _, rows, stats) =>
+      addedEntry(entrySchema, snapshotId, newSeq, location, rel,
+        FileMeta.hiveParts(rel), rows, size, stats)
     }
-    val newEntries = builtNew.map(_._1)
-    addedRows += builtNew.map(_._2).sum
+    // carried files keep their skipping bounds — a sync must not erode
+    // the zone map (value/null counts are not carried: only bounds
+    // feed file skipping, and a missing count costs nothing). Their
+    // snapshot_id is the snapshot that ADDED them (spec), not this
+    // one: misattributing carried files to the sync snapshot corrupts
+    // incremental/changelog consumers.
     val carriedEntries = carried.map { f =>
-      existingRows += f.recordCount
-      val part = new GenericData.Record(partSchema)
-      f.partitionValues.foreach { case (k, v) => part.put(k, v) }
-      val df = new GenericData.Record(dataFileSchema)
-      df.put("content", 0)
-      df.put("file_path", f.path)
-      df.put("file_format", "PARQUET")
-      df.put("partition", part)
-      df.put("record_count", f.recordCount)
-      df.put("file_size_in_bytes", f.sizeBytes)
-      // carry the skipping bounds forward — a sync must not erode the
-      // zone map (value/null counts are not carried: only bounds feed
-      // file skipping, and a missing count costs nothing)
-      if (f.lowerBounds.nonEmpty)
-        df.put("lower_bounds", kvArray(
-          dataFileSchema.getField("lower_bounds").schema(),
-          f.lowerBounds.toSeq.sortBy(_._1)
-            .map { case (k, v) => k -> (ByteBuffer.wrap(v): Any) }))
-      if (f.upperBounds.nonEmpty)
-        df.put("upper_bounds", kvArray(
-          dataFileSchema.getField("upper_bounds").schema(),
-          f.upperBounds.toSeq.sortBy(_._1)
-            .map { case (k, v) => k -> (ByteBuffer.wrap(v): Any) }))
-      val e = new GenericData.Record(entrySchema)
-      e.put("status", 0) // EXISTING — keeps its original data sequence
-      // snapshot_id is the snapshot that ADDED the file (spec), not the
-      // one writing this manifest — misattributing carried files to the
-      // sync snapshot corrupts incremental/changelog consumers
-      e.put("snapshot_id",
-        if (f.addedSnapshotId >= 0) f.addedSnapshotId else snapshotId)
-      e.put("sequence_number", f.sequenceNumber)
-      e.put("file_sequence_number", f.sequenceNumber)
-      e.put("data_file", df)
-      e: GenericRecord
+      entry(entrySchema, 0, // EXISTING — keeps its original data sequence
+        if (f.addedSnapshotId >= 0) f.addedSnapshotId else snapshotId, f.sequenceNumber,
+        dataFileRecord(dataFileSchema, f.path, f.partitionValues.toSeq,
+          f.recordCount, f.sizeBytes,
+          lower = f.lowerBounds.toSeq.sortBy(_._1), upper = f.upperBounds.toSeq.sortBy(_._1)))
     }
     val entries = (newEntries ++ carriedEntries).sortBy(
       _.get("data_file").asInstanceOf[GenericRecord].get("file_path").toString)
-    val minSeq = (newSeq +: carried.map(_.sequenceNumber)).min
 
-    val schemaJson = evolved match {
-      case Some((fields, sid, _)) => mapper.writeValueAsString(Map[String, Any](
-        "type" -> "struct", "schema-id" -> sid,
-        "fields" -> fields.map { case (n, id, t) => Map[String, Any](
-          "id" -> id, "name" -> n, "required" -> false, "type" -> t) }))
-      case None => mapper.writeValueAsString(
-        mapper.treeToValue(schemaNode, classOf[Object]))
-    }
+    val schemaJson = mapper.writeValueAsString(evolved match {
+      case Some((fields, sid, _)) => schemaObj(fields, sid)
+      case None => mapper.treeToValue(schemaNode, classOf[Object])
+    })
     val specFieldsJson = partCols.zipWithIndex.map { case (c, i) =>
       Map[String, Any]("name" -> c, "transform" -> "identity",
         "source-id" -> fieldIds(c), "field-id" -> (1000 + i))
     }
-    val manifestPath = new Path(metaDir, s"$snapUuid-m0.avro")
-    val manifestLen = writeAvro(fs, manifestPath, entrySchema,
+    val snap = NewSnapshot(uuid, newSeq, entrySchema, entries, deletes = false,
+      specId = 0, mapper.writeValueAsString(specFieldsJson), schemaJson,
+      evolved.map(_._2).getOrElse(curSchemaId), carried = Nil,
+      (descrNew.map(_._3) :+ 0L).max,
       Seq(
-        "schema" -> schemaJson,
-        "partition-spec" -> mapper.writeValueAsString(specFieldsJson),
-        "partition-spec-id" -> "0",
-        "format-version" -> "2",
-        "content" -> "data"),
-      entries)
-
-    val mf = new GenericData.Record(manifestFileSchema)
-    mf.put("manifest_path", s"$location/$MetaDirName/${manifestPath.getName}")
-    mf.put("manifest_length", manifestLen)
-    mf.put("partition_spec_id", 0)
-    mf.put("content", 0)
-    mf.put("sequence_number", newSeq)
-    mf.put("min_sequence_number", minSeq)
-    mf.put("added_snapshot_id", snapshotId)
-    mf.put("added_files_count", newEntries.size)
-    mf.put("existing_files_count", carriedEntries.size)
-    mf.put("deleted_files_count", 0)
-    mf.put("added_rows_count", addedRows)
-    mf.put("existing_rows_count", existingRows)
-    mf.put("deleted_rows_count", 0L)
-    val listPath = new Path(metaDir, s"snap-$snapshotId-1-$snapUuid.avro")
-    writeAvro(fs, listPath, manifestFileSchema,
-      Seq("snapshot-id" -> snapshotId.toString,
-        "parent-snapshot-id" ->
-          Option(node.get("current-snapshot-id")).map(_.asText()).getOrElse("null"),
-        "sequence-number" -> newSeq.toString,
-        "format-version" -> "2"),
-      Seq(mf))
-
-    // new metadata json: the old one converted to mutable form, with
-    // the snapshot machinery advanced and history appended (timestamps
-    // derive from data-file mtimes, keeping exports replayable)
-    val maxMtime = (freshNew.map(rel =>
-      fs.getFileStatus(new Path(root, rel)).getModificationTime) :+
-      node.get("last-updated-ms").asLong()).max
-    advanceMetadata(fs, metaDir, node, metaFile, metaVersion, location,
-      snapshotId, newSeq, maxMtime, listPath.getName, effSchemaId,
-      summary = Seq(
         "operation" -> (if (removedSet.nonEmpty) "overwrite" else "append"),
         "added-data-files" -> newEntries.size.toString,
         "deleted-data-files" -> removedSet.size.toString,
-        "added-records" -> addedRows.toString),
-      mutate = (meta, appendTo) => evolved.foreach { case (fields, sid, lastColId) =>
-        appendTo("schemas", Map[String, Any](
-          "type" -> "struct", "schema-id" -> sid,
-          "fields" -> fields.map { case (n, id, t) => Map[String, Any](
-            "id" -> id, "name" -> n, "required" -> false, "type" -> t) }))
-        meta.put("current-schema-id", java.lang.Integer.valueOf(sid))
-        meta.put("last-column-id", java.lang.Integer.valueOf(lastColId))
+        "added-records" -> descrNew.map(_._4).sum.toString))
+    commit(fs, root, head, Some(snap)) { m =>
+      evolved.foreach { case (fields, sid, lastColId) =>
+        m.append("schemas", schemaObj(fields, sid))
+        m.put("current-schema-id", sid)
+        m.put("last-column-id", lastColId)
         // keep field-id-less data files resolvable by external readers
         // across the evolution
-        val prevProps: Map[String, String] = Option(meta.get("properties")) match {
-          case Some(m: java.util.Map[_, _]) =>
-            m.asScala.map { case (k, v) => k.toString -> String.valueOf(v) }.toMap
-          case Some(m: scala.collection.Map[_, _]) =>
-            m.map { case (k, v) => k.toString -> String.valueOf(v) }.toMap
+        val prevProps: Map[String, String] = m.get("properties") match {
+          case Some(p: java.util.Map[_, _]) =>
+            p.asScala.map { case (k, v) => k.toString -> String.valueOf(v) }.toMap
+          case Some(p: scala.collection.Map[_, _]) =>
+            p.map { case (k, v) => k.toString -> String.valueOf(v) }.toMap
           case _ => Map.empty
         }
-        meta.put("properties", prevProps + ("schema.name-mapping.default" ->
+        m.put("properties", prevProps + ("schema.name-mapping.default" ->
           nameMappingJson(fields.map(f => f._1 -> f._2))))
-      })
-    snapshotId
-  }
-
-  /** Publish v(N+1).metadata.json + version-hint: snapshot machinery
-    * advanced, history appended, `mutate` applied for caller-specific
-    * edits (schema evolution). Shared by every snapshot writer so the
-    * metadata dialect stays single-sourced.
-    */
-  private def advanceMetadata(
-      fs: FileSystem, metaDir: Path,
-      node: com.fasterxml.jackson.databind.JsonNode,
-      metaFile: Path, metaVersion: Long, location: String,
-      snapshotId: Long, newSeq: Long, maxMtime: Long,
-      listName: String, schemaId: Int,
-      summary: Seq[(String, String)],
-      mutate: (java.util.LinkedHashMap[String, Object],
-        (String, Object) => Unit) => Unit = (_, _) => ()): Unit = {
-    val meta = mapper.convertValue(node, classOf[java.util.LinkedHashMap[String, Object]])
-    meta.put("last-sequence-number", java.lang.Long.valueOf(newSeq))
-    meta.put("last-updated-ms", java.lang.Long.valueOf(maxMtime))
-    meta.put("current-snapshot-id", java.lang.Long.valueOf(snapshotId))
-    val newSnap = new java.util.LinkedHashMap[String, Object]()
-    newSnap.put("snapshot-id", java.lang.Long.valueOf(snapshotId))
-    newSnap.put("parent-snapshot-id",
-      Option(node.get("current-snapshot-id")).map(v =>
-        java.lang.Long.valueOf(v.asLong()): Object).orNull)
-    newSnap.put("timestamp-ms", java.lang.Long.valueOf(maxMtime))
-    newSnap.put("sequence-number", java.lang.Long.valueOf(newSeq))
-    val summaryMap = new java.util.LinkedHashMap[String, Object]()
-    summary.foreach { case (k, v) => summaryMap.put(k, v) }
-    newSnap.put("summary", summaryMap)
-    newSnap.put("manifest-list", s"$location/$MetaDirName/$listName")
-    newSnap.put("schema-id", java.lang.Integer.valueOf(schemaId))
-    // the scala-module mapper materializes JSON arrays as Scala Lists;
-    // append by rebuilding the sequence (order preserved)
-    def appendTo(key: String, item: Object): Unit = {
-      val prev = Option(meta.get(key)) match {
-        case Some(s: Seq[_]) => s.asInstanceOf[Seq[Object]]
-        case Some(l: java.util.List[_]) =>
-          l.asScala.toSeq.asInstanceOf[Seq[Object]]
-        case None => Seq.empty[Object]
-        case Some(other) => throw new IllegalArgumentException(
-          s"metadata '$key' is not a list: ${other.getClass}")
       }
-      meta.put(key, prev :+ item)
     }
-    mutate(meta, appendTo)
-    appendTo("snapshots", newSnap)
-    val logEntry = new java.util.LinkedHashMap[String, Object]()
-    logEntry.put("snapshot-id", java.lang.Long.valueOf(snapshotId))
-    logEntry.put("timestamp-ms", java.lang.Long.valueOf(maxMtime))
-    appendTo("snapshot-log", logEntry)
-    val metaLogEntry = new java.util.LinkedHashMap[String, Object]()
-    metaLogEntry.put("metadata-file", s"$location/$MetaDirName/${metaFile.getName}")
-    metaLogEntry.put("timestamp-ms",
-      java.lang.Long.valueOf(node.get("last-updated-ms").asLong()))
-    appendTo("metadata-log", metaLogEntry)
-
-    val newMetaOut = fs.create(
-      new Path(metaDir, s"v${metaVersion + 1}.metadata.json"), true)
-    try newMetaOut.write(mapper.writeValueAsBytes(meta)) finally newMetaOut.close()
-    val hintOut = fs.create(new Path(metaDir, "version-hint.text"), true)
-    try hintOut.write(s"${metaVersion + 1}".getBytes(StandardCharsets.UTF_8))
-    finally hintOut.close()
+    snapshotId
   }
 
   /** Publish one MERGE-ON-READ snapshot of POSITION deletes on a
@@ -914,13 +917,10 @@ object IcebergBridge {
       deletes: Seq[(String, Long)],
       conf: Configuration = null): Long = {
     require(deletes.nonEmpty, "appendPositionDeletes: no positions given")
-    val hc = if (conf == null) spark.sessionState.newHadoopConf() else conf
-    val root = new Path(dir)
-    val fs = root.getFileSystem(hc)
-    val loc = jStr(readMetaNode(fs, root)._1, "location").stripSuffix("/")
-    val state = loadState(spark, fs, root)
+    val t = open(spark, dir, conf)
+    val loc = t.head.location.stripSuffix("/")
     val relOf = FileMeta.relativeTo(loc) _
-    val liveRel = state.files.map(f => relOf(f.path)).toSet
+    val liveRel = t.state.files.map(f => relOf(f.path)).toSet
     deletes.foreach { case (rel, pos) =>
       require(liveRel(rel),
         s"appendPositionDeletes: $rel is not a live data file of the current snapshot")
@@ -939,7 +939,7 @@ object IcebergBridge {
       .sorted.map { case (p, pos) => Row(p, pos) }
     val delDf = spark.createDataFrame(
       spark.sparkContext.parallelize(delRows, 1), delSchema)
-    commitDeleteSnapshot(spark, hc, root, delDf, deletes.size.toLong,
+    commitDeletes(t, delDf, deletes.size.toLong,
       content = 1, equalityIds = Nil,
       summaryExtra = Seq("added-position-deletes" -> deletes.size.toString))
   }
@@ -958,15 +958,12 @@ object IcebergBridge {
       eqCols: Seq[String],
       conf: Configuration = null): Long = {
     require(eqCols.nonEmpty, "appendEqualityDeletes: no equality columns given")
-    val hc = if (conf == null) spark.sessionState.newHadoopConf() else conf
-    val root = new Path(dir)
-    val fs = root.getFileSystem(hc)
-    val state = loadState(spark, fs, root)
-    val idByName = state.fieldNamesById.map(_.swap)
+    val t = open(spark, dir, conf)
+    val idByName = t.state.fieldNamesById.map(_.swap)
     val eqIds = eqCols.map(c => idByName.getOrElse(c,
       throw new IllegalArgumentException(
         s"appendEqualityDeletes: '$c' is not a table column")))
-    require(eqCols.forall(c => !state.partCols.contains(c)),
+    require(eqCols.forall(c => !t.state.partCols.contains(c)),
       "appendEqualityDeletes: equality columns must be scanned data " +
         "columns, not metadata-filled identity partition columns")
     // equality-delete columns carry the TABLE's field ids as parquet
@@ -978,7 +975,7 @@ object IcebergBridge {
     }: _*).coalesce(1).sortWithinPartitions(eqCols.map(col): _*)
     val rows = delDf.count()
     require(rows > 0, "appendEqualityDeletes: no delete rows given")
-    commitDeleteSnapshot(spark, hc, root, delDf, rows,
+    commitDeletes(t, delDf, rows,
       content = 2, equalityIds = eqIds,
       summaryExtra = Seq("added-equality-deletes" -> rows.toString))
   }
@@ -1007,11 +1004,9 @@ object IcebergBridge {
       spark: SparkSession,
       dir: String,
       conf: Configuration = null): Long = {
-    val hc = if (conf == null) spark.sessionState.newHadoopConf() else conf
-    val root = new Path(dir)
-    val fs = root.getFileSystem(hc)
-    val state = loadState(spark, fs, root)
-    if (state.deleteFiles.isEmpty) return currentSnapshotId(spark, dir, conf)
+    val t = open(spark, dir, conf)
+    val Table(fs, _, root, head, state) = t
+    if (state.deleteFiles.isEmpty) return head.currentSnapshotId
     require(state.specFields.forall(f => canonTransform(f.transform) == "identity"),
       "compactDeletes: identity-partitioned bridge tables only")
     val loc = state.location.stripSuffix("/")
@@ -1043,13 +1038,12 @@ object IcebergBridge {
       byPos || byEq
     }
     val affectedRel = affected.map(f => relOf(f.path)).toSet
-    val metaV = currentMetaFile(fs, new Path(root, MetaDirName))._2
     val newRels = mutable.ArrayBuffer.empty[String]
     if (affected.nonEmpty) {
       // ONE job: the affected files through the normal read path (all
       // deletes applied, partition columns filled), written back in
       // the same hive layout the manifests derive values from
-      val survivors = readPruned(spark, dir, f => affectedRel(relOf(f.path)), hc)
+      val survivors = scan(spark, t, f => affectedRel(relOf(f.path)))
       val staging = new Path(root, ".compact_tmp")
       fs.delete(staging, true)
       val w = survivors.write.mode("overwrite")
@@ -1065,7 +1059,7 @@ object IcebergBridge {
               stack.push((st.getPath, if (rel.isEmpty) name else s"$rel/$name"))
           } else if (name.startsWith("part-") && name.endsWith(".parquet")) {
             val tgtRel = (if (rel.isEmpty) "" else rel + "/") +
-              s"compact-$metaV-${newRels.size}.parquet"
+              s"compact-${head.version}-${newRels.size}.parquet"
             val tgt = new Path(root, tgtRel)
             fs.mkdirs(tgt.getParent)
             require(!fs.exists(tgt), s"compactDeletes: $tgtRel already exists")
@@ -1076,62 +1070,39 @@ object IcebergBridge {
       }
       fs.delete(staging, true)
     }
-    appendSnapshotImpl(spark, dir, newRels.toSeq, affectedRel.toSeq, hc,
+    appendSnapshotImpl(spark, t, newRels.toSeq, affectedRel.toSeq,
       newDataSchema = None, dropDeletes = true)
   }
 
-  private def readMetaNode(
-      fs: FileSystem, root: Path): (com.fasterxml.jackson.databind.JsonNode, Path, Long) = {
-    val metaDir = new Path(root, MetaDirName)
-    val (metaFile, metaVersion) = currentMetaFile(fs, metaDir)
-    val in = fs.open(metaFile)
-    val node = try mapper.readTree(in) finally in.close()
-    (node, metaFile, metaVersion)
-  }
-
-  /** Shared delete-commit core: write the delete parquet, the DELETE
-    * manifest (entry content 1=position / 2=equality with its
-    * equality_ids), a manifest-list carrying the prior snapshot's
-    * manifests verbatim plus the new one, and the advanced metadata.
+  /** The delete snapshot both delete kinds share: the delete parquet
+    * written as one file, then one [[commit]] of a DELETE manifest
+    * naming it (entry content 1 = position / 2 = equality with its
+    * equality_ids), with the current snapshot's manifests carried
+    * verbatim in the new manifest-list (real writers reuse manifest
+    * files across snapshots exactly like this).
     */
-  private def commitDeleteSnapshot(
-      spark: SparkSession,
-      hc: Configuration,
-      root: Path,
+  private def commitDeletes(
+      t: Table,
       delDf: DataFrame,
       rowCount: Long,
       content: Int,
       equalityIds: Seq[Int],
       summaryExtra: Seq[(String, String)]): Long = {
-    val fs = root.getFileSystem(hc)
-    val metaDir = new Path(root, MetaDirName)
-    val (node, metaFile, metaVersion) = readMetaNode(fs, root)
-    require(node.get("format-version").asInt() == 2,
-      "row-level delete snapshots need a v2 table")
-    val location = jStr(node, "location")
-    val loc = location.stripSuffix("/")
-    val state = loadState(spark, fs, root)
+    val Table(fs, _, root, head, state) = t
+    val node = head.node
+    requireV2(head, "a row-level delete snapshot")
     require(state.specFields.forall(f => canonTransform(f.transform) == "identity"),
       "delete snapshots: identity-partitioned bridge tables only")
-
-    val newSeq = node.get("last-sequence-number").asLong() + 1
-    val tableUuid = jStr(node, "table-uuid")
-    val snapUuid = java.util.UUID.nameUUIDFromBytes(
-      s"iceberg-del:$tableUuid:$newSeq".getBytes(StandardCharsets.UTF_8))
-    val snapshotId = snapUuid.getMostSignificantBits & Long.MaxValue
+    require(state.listPath.isDefined, "row-level deletes: table has no current snapshot")
+    val loc = head.location.stripSuffix("/")
+    val newSeq = head.seq + 1
+    val uuid = nameUuid(s"iceberg-del:${jStr(node, "table-uuid")}:$newSeq")
 
     // the delete parquet (caller pre-sorted per spec), moved into place
     val delRel = s"deletes/del-$newSeq.parquet"
-    val tmp = new Path(root, s".del_tmp_$newSeq")
-    delDf.write.mode("overwrite").parquet(tmp.toString)
-    val part = fs.listStatus(tmp).map(_.getPath)
-      .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-      .getOrElse(sys.error(s"delete write under $tmp produced no part file"))
     val dst = new Path(root, delRel)
-    fs.mkdirs(dst.getParent)
-    fs.delete(dst, false)
-    fs.rename(part, dst)
-    fs.delete(tmp, true)
+    FileMeta.writeOneParquet(delDf, fs, new Path(root, s".del_tmp_$newSeq"), dst)
+    val written = fs.getFileStatus(dst)
 
     // DELETE manifest: one ADDED entry under an UNPARTITIONED spec —
     // the spec's ONLY way to express global scope. A delete file under
@@ -1146,7 +1117,7 @@ object IcebergBridge {
       .find(_.get("schema-id").asInt() == curSchemaId).get
     val specsNode = node.get("partition-specs")
     require(specsNode != null,
-      "commitDeleteSnapshot: v2 table without partition-specs — refusing")
+      "commitDeletes: v2 table without partition-specs — refusing")
     val existingSpecs = specsNode.elements().asScala.toSeq
     val unpartSpecId: Int = existingSpecs
       .find(sp => !sp.get("fields").elements().hasNext)
@@ -1154,90 +1125,27 @@ object IcebergBridge {
       .getOrElse(existingSpecs.map(_.get("spec-id").asInt()).max + 1)
     val needNewSpec = !existingSpecs.exists(_.get("spec-id").asInt() == unpartSpecId)
     val entrySchema = manifestEntrySchema(Seq.empty)
-    val dataFileSchema = entrySchema.getField("data_file").schema()
-    val partSchema = dataFileSchema.getField("partition").schema()
-    val df = new GenericData.Record(dataFileSchema)
-    df.put("content", content)
-    df.put("file_path", s"$loc/$delRel")
-    df.put("file_format", "PARQUET")
-    df.put("partition", new GenericData.Record(partSchema))
-    df.put("record_count", rowCount)
-    df.put("file_size_in_bytes", fs.getFileStatus(dst).getLen)
-    if (equalityIds.nonEmpty)
-      df.put("equality_ids", equalityIds.map(java.lang.Integer.valueOf).asJava)
-    val entry = new GenericData.Record(entrySchema)
-    entry.put("status", 1) // ADDED
-    entry.put("snapshot_id", snapshotId)
-    entry.put("sequence_number", newSeq)
-    entry.put("file_sequence_number", newSeq)
-    entry.put("data_file", df)
-    val schemaJson = mapper.writeValueAsString(
-      mapper.treeToValue(schemaNode, classOf[Object]))
-    val manifestPath = new Path(metaDir, s"$snapUuid-m0.avro")
-    val manifestLen = writeAvro(fs, manifestPath, entrySchema,
-      Seq(
-        "schema" -> schemaJson,
-        "partition-spec" -> "[]",
-        "partition-spec-id" -> unpartSpecId.toString,
-        "format-version" -> "2",
-        "content" -> "deletes"),
-      Seq(entry))
-
-    // manifest-list: the CURRENT snapshot's manifests carried
-    // verbatim + the new delete manifest (real writers reuse manifest
-    // files across snapshots exactly like this)
-    val curSnapId = node.get("current-snapshot-id").asLong()
-    val snap = node.get("snapshots").elements().asScala
-      .find(_.get("snapshot-id").asLong() == curSnapId)
-      .getOrElse(throw new IllegalArgumentException(
-        "appendPositionDeletes: table has no current snapshot"))
-    val (oldList, _) = readAvro(fs, resolve(root, location, jStr(snap, "manifest-list")))
-    val carried = oldList.map { r =>
-      val c = new GenericData.Record(manifestFileSchema)
-      manifestFileSchema.getFields.forEach(f => c.put(f.name(), r.get(f.name())))
-      c: GenericRecord
+    val delEntry = entry(entrySchema, 1, snapshotIdOf(uuid), newSeq,
+      dataFileRecord(entrySchema.getField("data_file").schema(), s"$loc/$delRel", Nil,
+        rowCount, written.getLen, content = content, equalityIds = equalityIds))
+    val snap = NewSnapshot(uuid, newSeq, entrySchema, Seq(delEntry), deletes = true,
+      unpartSpecId, "[]",
+      mapper.writeValueAsString(mapper.treeToValue(schemaNode, classOf[Object])),
+      curSchemaId, state.manifests, written.getModificationTime,
+      Seq("operation" -> "delete", "added-delete-files" -> "1") ++ summaryExtra)
+    commit(fs, root, head, Some(snap)) { m =>
+      if (needNewSpec)
+        m.append("partition-specs", Map[String, Any](
+          "spec-id" -> unpartSpecId, "fields" -> Seq.empty[Any]))
     }
-    val mf = new GenericData.Record(manifestFileSchema)
-    mf.put("manifest_path", s"$loc/$MetaDirName/${manifestPath.getName}")
-    mf.put("manifest_length", manifestLen)
-    mf.put("partition_spec_id", unpartSpecId)
-    mf.put("content", 1) // deletes
-    mf.put("sequence_number", newSeq)
-    mf.put("min_sequence_number", newSeq)
-    mf.put("added_snapshot_id", snapshotId)
-    mf.put("added_files_count", 1)
-    mf.put("existing_files_count", 0)
-    mf.put("deleted_files_count", 0)
-    mf.put("added_rows_count", rowCount)
-    mf.put("existing_rows_count", 0L)
-    mf.put("deleted_rows_count", 0L)
-    val listPath = new Path(metaDir, s"snap-$snapshotId-1-$snapUuid.avro")
-    writeAvro(fs, listPath, manifestFileSchema,
-      Seq("snapshot-id" -> snapshotId.toString,
-        "parent-snapshot-id" -> curSnapId.toString,
-        "sequence-number" -> newSeq.toString,
-        "format-version" -> "2"),
-      carried :+ (mf: GenericRecord))
-
-    val maxMtime = math.max(fs.getFileStatus(dst).getModificationTime,
-      node.get("last-updated-ms").asLong())
-    advanceMetadata(fs, metaDir, node, metaFile, metaVersion, location,
-      snapshotId, newSeq, maxMtime, listPath.getName, curSchemaId,
-      summary = Seq(
-        "operation" -> "delete",
-        "added-delete-files" -> "1") ++ summaryExtra,
-      mutate = (_, appendTo) =>
-        if (needNewSpec)
-          appendTo("partition-specs", Map[String, Any](
-            "spec-id" -> unpartSpecId, "fields" -> Seq.empty[Any])))
-    snapshotId
+    snap.id
   }
 
   // ---------------------------------------------------------------
   // Read path
   // ---------------------------------------------------------------
 
-  private def readAvro(fs: FileSystem, p: Path): (Seq[GenericRecord], Map[String, String]) = {
+  private def readAvro(fs: FileSystem, p: Path): Seq[GenericRecord] = {
     val len = fs.getFileStatus(p).getLen
     require(len < 256L * 1024 * 1024, s"$p: manifest over 256 MB — not metadata-sized")
     val bytes = new Array[Byte](len.toInt)
@@ -1245,11 +1153,7 @@ object IcebergBridge {
     try in.readFully(0, bytes) finally in.close()
     val rd = new DataFileReader[GenericRecord](
       new SeekableByteArrayInput(bytes), new GenericDatumReader[GenericRecord]())
-    try {
-      val metaKeys = rd.getMetaKeys.asScala.toSeq
-      val meta = metaKeys.filter(!_.startsWith("avro.")).map(k => k -> rd.getMetaString(k)).toMap
-      (rd.iterator().asScala.toVector, meta)
-    } finally rd.close()
+    try rd.iterator().asScala.toVector finally rd.close()
   }
 
   /** Resolve a path recorded in the metadata: Iceberg stores absolute
@@ -1285,24 +1189,60 @@ object IcebergBridge {
       // EQUALITY key that scopes row-level deletes
       specId: Int = 0)
 
-  /** The latest metadata file: version-hint first (HadoopCatalog
-    * convention), else max vN scan. Returns (path, version). */
-  private def currentMetaFile(fs: FileSystem, metaDir: Path): (Path, Long) = {
+  /** The table head: the current `vN.metadata.json` parsed, its file
+    * and N. The one metadata read of an operation; the first commit
+    * starts from an unwritten version 0, a table without snapshots
+    * (`current-snapshot-id` -1) and with no file. */
+  private final case class Head(node: JsonNode, file: Option[Path], version: Long) {
+    def location: String = jStr(node, "location")
+    def seq: Long = node.get("last-sequence-number").asLong()
+    def currentSnapshotId: Long =
+      Option(node.get("current-snapshot-id")).map(_.asLong()).getOrElse(-1L)
+  }
+
+  /** The head of the table at `root`: version-hint first (HadoopCatalog
+    * convention), else the highest `vN.metadata.json`. */
+  private def readHead(fs: FileSystem, root: Path): Head = {
+    val metaDir = new Path(root, MetaDirName)
     val hintPath = new Path(metaDir, "version-hint.text")
-    if (fs.exists(hintPath)) {
-      val in = fs.open(hintPath)
-      val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+    val version =
+      if (fs.exists(hintPath)) {
+        val in = fs.open(hintPath)
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
         finally in.close()
-      (new Path(metaDir, s"v$v.metadata.json"), v.toLong)
-    } else {
-      val vRe = """v(\d+)\.metadata\.json""".r
-      val versions = fs.listStatus(metaDir).toSeq.flatMap(_.getPath.getName match {
-        case vRe(v) => Some(v.toLong)
-        case _ => None
-      })
-      require(versions.nonEmpty, s"no vN.metadata.json under $metaDir")
-      (new Path(metaDir, s"v${versions.max}.metadata.json"), versions.max)
-    }
+      } else {
+        val vRe = """v(\d+)\.metadata\.json""".r
+        val versions = fs.listStatus(metaDir).toSeq.flatMap(_.getPath.getName match {
+          case vRe(v) => Some(v.toLong)
+          case _ => None
+        })
+        require(versions.nonEmpty, s"no vN.metadata.json under $metaDir")
+        versions.max
+      }
+    val file = new Path(metaDir, s"v$version.metadata.json")
+    val in = fs.open(file)
+    val node = try mapper.readTree(in) finally in.close()
+    Head(node, Some(file), version)
+  }
+
+  /** One operation's view of a table: its head, read once, and one
+    * replay of a snapshot over it (the current one by default). */
+  private final case class Table(
+      fs: FileSystem, hc: Configuration, root: Path, head: Head, state: TableState)
+
+  private def fsOf(
+      spark: SparkSession, dir: String, conf: Configuration): (Configuration, Path, FileSystem) = {
+    val hc = if (conf == null) spark.sessionState.newHadoopConf() else conf
+    val root = new Path(dir)
+    (hc, root, root.getFileSystem(hc))
+  }
+
+  private def open(
+      spark: SparkSession, dir: String, conf: Configuration,
+      snapshotId: Option[Long] = None): Table = {
+    val (hc, root, fs) = fsOf(spark, dir, conf)
+    val head = readHead(fs, root)
+    Table(fs, hc, root, head, loadState(fs, root, head, snapshotId))
   }
 
   private final case class SpecField(name: String, transform: String, sourceId: Int)
@@ -1365,22 +1305,25 @@ object IcebergBridge {
       // field id -> column name of the SNAPSHOT's schema (resolves
       // equality-delete ids)
       fieldNamesById: Map[Int, String] = Map.empty,
-      defaultSpecId: Int = 0)
+      defaultSpecId: Int = 0,
+      // the snapshot's manifest-list and its records, as read: a
+      // delete commit carries them, expiry collects their paths
+      listPath: Option[Path] = None,
+      manifests: Seq[GenericRecord] = Nil)
 
-  private def jStr(n: com.fasterxml.jackson.databind.JsonNode, k: String): String = {
+  private def jStr(n: JsonNode, k: String): String = {
     val v = n.get(k)
     require(v != null, s"Iceberg metadata missing '$k'")
     v.asText()
   }
 
+  /** The replay of snapshot `snapshotId` (default: the current one) of
+    * the table whose head is `head`: its manifest-list and every
+    * manifest it names, each read once. */
   private def loadState(
-      spark: SparkSession, fs: FileSystem, root: Path,
+      fs: FileSystem, root: Path, head: Head,
       snapshotId: Option[Long] = None): TableState = {
-    val metaDir = new Path(root, MetaDirName)
-    val (metaFile, _) = currentMetaFile(fs, metaDir)
-    val in = fs.open(metaFile)
-    val node = try mapper.readTree(in) finally in.close()
-
+    val node = head.node
     val fv = node.get("format-version").asInt()
     require(fv == 1 || fv == 2,
       s"Iceberg format-version $fv unsupported (bridge floor is v1/v2) — refusing")
@@ -1430,7 +1373,7 @@ object IcebergBridge {
     // columns read all-null instead of filling from partition
     // metadata) and BYPASS the transform refusal, so the legacy field
     // is parsed with the same rules.
-    def parseSpec(fields: com.fasterxml.jackson.databind.JsonNode): Seq[SpecField] =
+    def parseSpec(fields: JsonNode): Seq[SpecField] =
       fields.elements().asScala.map { f =>
         val t = jStr(f, "transform")
         require(transformSupported(t),
@@ -1486,7 +1429,7 @@ object IcebergBridge {
     val snap = snapOpt.get
     val listPath = resolve(root, location, jStr(snap, "manifest-list"))
 
-    val (manifests, _) = readAvro(fs, listPath)
+    val manifests = readAvro(fs, listPath)
     val files = mutable.ArrayBuffer.empty[DataFileEntry]
     val deletes = mutable.ArrayBuffer.empty[DeleteFileEntry]
     manifests.foreach { mf =>
@@ -1496,7 +1439,7 @@ object IcebergBridge {
       val mSpecId = Option(mf.get("partition_spec_id"))
         .map(_.asInstanceOf[Int]).getOrElse(0)
       val mPath = resolve(root, location, mf.get("manifest_path").toString)
-      val (entries, _) = readAvro(fs, mPath)
+      val entries = readAvro(fs, mPath)
       if (content == 1) {
         // DELETE manifest: position AND equality deletes apply on
         // read; anything else (or an equality file without its match
@@ -1595,7 +1538,7 @@ object IcebergBridge {
     TableState(StructType(fieldsById.values.toSeq), partCols, files.toSeq,
       location, identityFill, transformSources, specFields, deletes.toSeq,
       fieldNamesById = fieldsById.map { case (id, f) => id -> f.name }.toMap,
-      defaultSpecId = defaultSpecId)
+      defaultSpecId = defaultSpecId, listPath = Some(listPath), manifests = manifests)
   }
 
   /** Replay the table's CURRENT snapshot into a DataFrame: schema from
@@ -1606,7 +1549,7 @@ object IcebergBridge {
     * schema's column types) — never re-inferred from directory names.
     */
   def read(spark: SparkSession, dir: String, conf: Configuration = null): DataFrame =
-    readPruned(spark, dir, _ => true, conf)
+    scan(spark, open(spark, dir, conf), _ => true)
 
   /** [[read]] pinned to a SNAPSHOT ID — Iceberg's time travel: older
     * snapshots stay in the metadata and their manifests still name
@@ -1618,7 +1561,7 @@ object IcebergBridge {
       dir: String,
       snapshotId: Long,
       conf: Configuration = null): DataFrame =
-    readPruned(spark, dir, _ => true, conf, Some(snapshotId))
+    scan(spark, open(spark, dir, conf, Some(snapshotId)), _ => true)
 
   /** [[read]] with MANIFEST-DRIVEN partition pruning: `pred` sees each
     * data file's partition values and rejected files never reach the
@@ -1629,7 +1572,7 @@ object IcebergBridge {
       dir: String,
       pred: Map[String, String] => Boolean,
       conf: Configuration = null): DataFrame =
-    readPruned(spark, dir, f => pred(f.partitionValues), conf)
+    scan(spark, open(spark, dir, conf), f => pred(f.partitionValues))
 
   /** [[read]] with STATS-DRIVEN file skipping on one numeric column:
     * drops files whose manifest bounds prove `[lo, hi]` cannot match.
@@ -1645,41 +1588,30 @@ object IcebergBridge {
       lo: Double,
       hi: Double,
       conf: Configuration = null): DataFrame = {
-    val hc = if (conf == null) spark.sessionState.newHadoopConf() else conf
-    val root = new Path(dir)
-    val fs = root.getFileSystem(hc)
-    // resolve the column's field id + type once, from the metadata
-    val (metaFile, _) = currentMetaFile(fs, new Path(root, MetaDirName))
-    val in = fs.open(metaFile)
-    val node = try mapper.readTree(in) finally in.close()
-    val schemaNode = Option(node.get("schemas")).map { ss =>
-      val cur = node.get("current-schema-id").asInt()
-      ss.elements().asScala.find(_.get("schema-id").asInt() == cur).get
-    }.getOrElse(node.get("schema"))
-    val fieldNode = schemaNode.get("fields").elements().asScala
-      .find(f => jStr(f, "name") == column)
+    val t = open(spark, dir, conf)
+    // the column's field id and type, from the replayed schema
+    val fieldId = t.state.fieldNamesById.collectFirst { case (id, `column`) => id }
       .getOrElse(throw new IllegalArgumentException(
         s"readRange: no column '$column' in the Iceberg schema"))
-    val fieldId = fieldNode.get("id").asInt()
-    val tpe = fieldNode.get("type").asText()
+    val tpe = t.state.schema(column).dataType
     def decode(b: Array[Byte]): Option[Double] = {
       val bb = ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN)
-      tpe match {
-        case "int" if b.length == 4 => Some(bb.getInt.toDouble)
-        case "long" if b.length == 8 => Some(bb.getLong.toDouble)
-        case "float" if b.length == 4 => Some(bb.getFloat.toDouble)
-        case "double" if b.length == 8 => Some(bb.getDouble)
+      (tpe, b.length) match {
+        case (IntegerType, 4) => Some(bb.getInt.toDouble)
+        case (LongType, 8) => Some(bb.getLong.toDouble)
+        case (FloatType, 4) => Some(bb.getFloat.toDouble)
+        case (DoubleType, 8) => Some(bb.getDouble)
         case _ => None // unsupported/torn bound: must scan
       }
     }
-    readPruned(spark, dir, f => {
+    scan(spark, t, f => {
       val mn = f.lowerBounds.get(fieldId).flatMap(decode)
       val mx = f.upperBounds.get(fieldId).flatMap(decode)
       (mn, mx) match {
         case (Some(a), Some(b)) => b >= lo && a <= hi
         case _ => true // no bounds for the column: must scan
       }
-    }, conf)
+    })
   }
 
   /** The CURRENT snapshot id from the latest metadata — the handle a
@@ -1688,13 +1620,8 @@ object IcebergBridge {
     */
   def currentSnapshotId(
       spark: SparkSession, dir: String, conf: Configuration = null): Long = {
-    val hc = if (conf == null) spark.sessionState.newHadoopConf() else conf
-    val root = new Path(dir)
-    val fs = root.getFileSystem(hc)
-    val (metaFile, _) = currentMetaFile(fs, new Path(root, MetaDirName))
-    val in = fs.open(metaFile)
-    val node = try mapper.readTree(in) finally in.close()
-    Option(node.get("current-snapshot-id")).map(_.asLong()).getOrElse(-1L)
+    val (_, root, fs) = fsOf(spark, dir, conf)
+    readHead(fs, root).currentSnapshotId
   }
 
   /** Iceberg snapshot expiry (the `expire_snapshots` maintenance
@@ -1714,14 +1641,10 @@ object IcebergBridge {
       retainLast: Int = 1,
       conf: Configuration = null): Int = {
     require(retainLast >= 1, s"retainLast must be >= 1, got $retainLast")
-    val hc = if (conf == null) spark.sessionState.newHadoopConf() else conf
-    val root = new Path(dir)
-    val fs = root.getFileSystem(hc)
-    val metaDir = new Path(root, MetaDirName)
-    val (metaFile, metaVersion) = currentMetaFile(fs, metaDir)
-    val in = fs.open(metaFile)
-    val node = try mapper.readTree(in) finally in.close()
-    val location = jStr(node, "location")
+    val (_, root, fs) = fsOf(spark, dir, conf)
+    val head = readHead(fs, root)
+    val node = head.node
+    val location = head.location
     // v1 snapshots carry no sequence-number; order by it when every
     // snapshot has one, else by timestamp-ms (never NPE on a v1 table)
     val allSnaps = node.get("snapshots").elements().asScala.toSeq
@@ -1736,14 +1659,10 @@ object IcebergBridge {
       "expireSnapshots would drop the current snapshot — refusing")
 
     def filesOf(snapId: Long): (Set[String], Set[Path]) = {
-      val state = loadState(spark, fs, root, Some(snapId))
-      val snap = snaps.find(_.get("snapshot-id").asLong() == snapId).get
-      val listPath = resolve(root, location, jStr(snap, "manifest-list"))
-      val (manifests, _) = readAvro(fs, listPath)
-      val manifestPaths = (listPath +: manifests.map(mf =>
-        resolve(root, location, mf.get("manifest_path").toString))).toSet
+      val state = loadState(fs, root, head, Some(snapId))
       (state.files.map(f => resolve(root, location, f.path).toString).toSet,
-        manifestPaths)
+        (state.listPath.toSeq ++ state.manifests.map(mf =>
+          resolve(root, location, mf.get("manifest_path").toString))).toSet)
     }
     // EVERY read happens before ANY delete, and the reachable set is
     // the union over KEPT snapshots of both data files AND manifests:
@@ -1761,32 +1680,18 @@ object IcebergBridge {
     val deadFiles = expiredStates.flatMap(_._1).toSet -- keptFiles
     val deadManifests = expiredStates.flatMap(_._2).toSet -- keptManifests
 
-    val meta = mapper.convertValue(node, classOf[java.util.LinkedHashMap[String, Object]])
-    def keepOnly(key: String, idKey: String): Unit =
-      Option(meta.get(key)).foreach { v =>
-        val seq = v match {
-          case s: Seq[_] => s.asInstanceOf[Seq[Object]]
-          case l: java.util.List[_] => l.asScala.toSeq.asInstanceOf[Seq[Object]]
-          case _ => Seq.empty[Object]
-        }
-        meta.put(key, seq.filter {
-          case m: scala.collection.Map[_, _] =>
-            m.asInstanceOf[scala.collection.Map[String, Any]].get(idKey)
-              .exists(x => keptIds.contains(x.asInstanceOf[Number].longValue()))
-          case m: java.util.Map[_, _] =>
-            Option(m.asInstanceOf[java.util.Map[String, Object]].get(idKey))
-              .exists(x => keptIds.contains(x.asInstanceOf[Number].longValue()))
-          case _ => true
-        })
-      }
-    keepOnly("snapshots", "snapshot-id")
-    keepOnly("snapshot-log", "snapshot-id")
-    val newMetaOut = fs.create(
-      new Path(metaDir, s"v${metaVersion + 1}.metadata.json"), true)
-    try newMetaOut.write(mapper.writeValueAsBytes(meta)) finally newMetaOut.close()
-    val hintOut = fs.create(new Path(metaDir, "version-hint.text"), true)
-    try hintOut.write(s"${metaVersion + 1}".getBytes(StandardCharsets.UTF_8))
-    finally hintOut.close()
+    def keptId(x: Any): Boolean = keptIds.contains(x.asInstanceOf[Number].longValue())
+    def retained(item: Object): Boolean = item match {
+      case m: scala.collection.Map[_, _] =>
+        m.asInstanceOf[scala.collection.Map[String, Any]].get("snapshot-id").exists(keptId)
+      case m: java.util.Map[_, _] =>
+        Option(m.asInstanceOf[java.util.Map[String, Object]].get("snapshot-id")).exists(keptId)
+      case _ => true
+    }
+    commit(fs, root, head, None) { m =>
+      m.retain("snapshots")(retained)
+      m.retain("snapshot-log")(retained)
+    }
 
     // metadata is durable; now the bytes
     var deleted = 0
@@ -1795,16 +1700,9 @@ object IcebergBridge {
     deleted
   }
 
-  private def readPruned(
-      spark: SparkSession,
-      dir: String,
-      keep: DataFileEntry => Boolean,
-      conf: Configuration,
-      snapshotId: Option[Long] = None): DataFrame = {
-    val hc = if (conf == null) spark.sessionState.newHadoopConf() else conf
-    val root = new Path(dir)
-    val fs = root.getFileSystem(hc)
-    val state = loadState(spark, fs, root, snapshotId)
+  /** The rows of `t`'s replayed snapshot in the files `keep` admits. */
+  private def scan(spark: SparkSession, t: Table, keep: DataFileEntry => Boolean): DataFrame = {
+    val Table(fs, _, root, _, state) = t
     val files = state.files.filter(keep)
     val schema = state.schema
     val partCols = state.partCols

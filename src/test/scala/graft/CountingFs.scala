@@ -20,13 +20,22 @@ import org.apache.hadoop.util.Progressable
   * files (the store's per-file footer reads during an install) die of
   * a fatal error, as an OOM in the middle of an install would; with
   * `graft.countfs.fatalStagedCreates`, so do creates of them (the
-  * writer's file creates).
+  * writer's file creates). With `graft.countfs.failRenamesTo` set to a
+  * suffix, every rename to a name ending in it returns false, as a
+  * rename the store refuses does.
   */
 class CountingFs extends FilterFileSystem(new RawLocalFileSystem {
   override def getUri: URI = CountingFs.Uri
+  // plain copies: a local status loads its permissions lazily through
+  // java.io.File, which refuses the countfs scheme, and a recursive
+  // listFiles asks every status for them
+  override def listStatus(f: Path): Array[FileStatus] =
+    super.listStatus(f).map(st => new FileStatus(st.getLen, st.isDirectory,
+      st.getReplication, st.getBlockSize, st.getModificationTime, st.getPath))
 }) {
   private var fatalStagedOpens = false
   private var fatalStagedCreates = false
+  private var failRenamesTo: Option[String] = None
 
   override def getScheme: String = CountingFs.Uri.getScheme
 
@@ -34,6 +43,7 @@ class CountingFs extends FilterFileSystem(new RawLocalFileSystem {
     super.initialize(name, conf)
     fatalStagedOpens = conf.getBoolean(CountingFs.FatalStagedOpens, false)
     fatalStagedCreates = conf.getBoolean(CountingFs.FatalStagedCreates, false)
+    failRenamesTo = Option(conf.get(CountingFs.FailRenamesTo))
   }
 
   private def staged(p: Path): Boolean =
@@ -60,6 +70,9 @@ class CountingFs extends FilterFileSystem(new RawLocalFileSystem {
     opened(path)
     super.openFile(path)
   }
+  override def rename(src: Path, dst: Path): Boolean =
+    !failRenamesTo.exists(dst.getName.endsWith) && super.rename(src, dst)
+
   override def listStatus(f: Path): Array[FileStatus] = {
     CountingFs.count(CountingFs.lists, f)
     super.listStatus(f)
@@ -70,6 +83,7 @@ object CountingFs {
   val Uri: URI = URI.create("countfs:///")
   val FatalStagedOpens = "graft.countfs.fatalStagedOpens"
   val FatalStagedCreates = "graft.countfs.fatalStagedCreates"
+  val FailRenamesTo = "graft.countfs.failRenamesTo"
 
   final class InjectedFatal(what: String, p: Path)
     extends VirtualMachineError(s"injected fatal error $what $p")
@@ -86,11 +100,15 @@ object CountingFs {
   /** Storage options that route a namespace through this filesystem.
     * The cache stays off so every handle is built from the options of
     * the store asking for it. */
-  def options(fatalStagedOpens: Boolean = false, fatalStagedCreates: Boolean = false): Map[String, String] =
+  def options(
+      fatalStagedOpens: Boolean = false,
+      fatalStagedCreates: Boolean = false,
+      failRenamesTo: Option[String] = None): Map[String, String] =
     Map("fs.countfs.impl" -> classOf[CountingFs].getName,
       "fs.countfs.impl.disable.cache" -> "true") ++
       (if (fatalStagedOpens) Map(FatalStagedOpens -> "true") else Map.empty) ++
-      (if (fatalStagedCreates) Map(FatalStagedCreates -> "true") else Map.empty)
+      (if (fatalStagedCreates) Map(FatalStagedCreates -> "true") else Map.empty) ++
+      failRenamesTo.map(FailRenamesTo -> _)
 
   /** `dir` (a local path) as a `countfs` URL. */
   def url(dir: String): String = s"countfs://$dir"

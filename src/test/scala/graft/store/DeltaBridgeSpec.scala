@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{CountingFs, SparkSpec}
 
 /** The Delta-protocol bridge: export writes a log any Delta reader
   * opens; read replays adds/removes strictly from the log (no
@@ -683,5 +683,31 @@ class DeltaBridgeSpec extends SparkSpec {
       s"""{"storageType":"x","pathOrInlineDv":"zz","sizeInBytes":4,"cardinality":1}""")
     val e2 = intercept[Exception](DeltaBridge.read(spark, badStore).collect())
     assert(deepMsg(e2).contains("storageType"))
+  }
+
+  test("a checkpoint whose rename fails throws before _last_checkpoint can name it") {
+    val root = tmpDir("dlckrename")
+    // the bridge's Spark writes and scans resolve countfs through the
+    // session; the store's own handles fail the checkpoint's rename
+    withConf("fs.countfs.impl" -> classOf[CountingFs].getName) {
+      withConf("fs.countfs.impl.disable.cache" -> "true") {
+        val st = new TimeseriesStore(spark, CountingFs.url(s"$root/wh"),
+          CountingFs.options(failRenamesTo = Some(".checkpoint.parquet")))
+        val delta = CountingFs.url(s"$root/delta")
+        st.save("f", Seq((ts("2024-01-01T01:00:00"), 1.0)).toDF("time", "value"))
+        st.exportSnapshotDelta("f", delta)
+        DeltaBridge.writeCheckpoint(spark, delta) // session handles: renames work
+        val lastCkpt = Paths.get(s"$root/delta/_delta_log/_last_checkpoint")
+        val before = Files.readAllBytes(lastCkpt)
+
+        st.save("f", Seq((ts("2024-01-02T02:00:00"), 2.0)).toDF("time", "value"))
+        val e = intercept[java.io.IOException](
+          st.syncSnapshotDelta("f", delta, checkpointEvery = 1))
+        assert(e.getMessage.contains("00000000000000000001.checkpoint.parquet"))
+        assert(Files.readAllBytes(lastCkpt).sameElements(before))
+        assert(DeltaBridge.read(spark, delta).select("value").as[Double].collect().toSet ===
+          Set(1.0, 2.0))
+      }
+    }
   }
 }

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{CountingFs, SparkSpec}
 
 /** The Iceberg-format bridge: export writes v2 metadata any Iceberg
   * reader opens; read replays the current snapshot strictly from the
@@ -952,5 +952,66 @@ class IcebergBridgeSpec extends SparkSpec {
     try st.syncSnapshotIceberg("f", s"$r1/ib")
     finally spark.conf.unset("graft.bridge.describeJobThreshold")
     assert(readBack(s"$r1/ib").exists(_._2 == 5.0))
+  }
+
+  test("an identical export writes byte-identical Avro metadata") {
+    import scala.jdk.CollectionConverters._
+    val root = tmpDir("ibavro")
+    val st = new TimeseriesStore(spark, s"$root/wh")
+    st.save("f", Seq(
+      (ts("2024-01-01T01:00:00"), 1.0),
+      (ts("2024-01-02T02:00:00"), 2.0)).toDF("time", "value"))
+    val pinned = st.tableVersion("f")
+    st.save("f", Seq((ts("2024-01-03T03:00:00"), 3.0)).toDF("time", "value"))
+    st.exportSnapshotIceberg("f", s"$root/ib", asOfVersion = Some(pinned))
+    def avroFiles(): Map[String, Array[Byte]] = {
+      val l = Files.list(Paths.get(s"$root/ib/metadata"))
+      try l.iterator().asScala.filter(_.getFileName.toString.endsWith(".avro"))
+        .map(p => p.getFileName.toString -> Files.readAllBytes(p)).toMap
+      finally l.close()
+    }
+    val first = avroFiles()
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$root/ib"))
+    st.exportSnapshotIceberg("f", s"$root/ib", asOfVersion = Some(pinned))
+    val second = avroFiles()
+    assert(first.size === 2 && first.keySet === second.keySet)
+    first.foreach { case (name, bytes) => assert(bytes.sameElements(second(name)), name) }
+  }
+
+  test("each commit replays the table once: one head read, each manifest opened once") {
+    import scala.jdk.CollectionConverters._
+    val root = tmpDir("ibreplay")
+    withConf("fs.countfs.impl" -> classOf[CountingFs].getName) {
+      withConf("fs.countfs.impl.disable.cache" -> "true") {
+        val st = new TimeseriesStore(spark, CountingFs.url(s"$root/wh"), CountingFs.options())
+        val ib = CountingFs.url(s"$root/ib")
+        st.save("f", Seq(
+          (ts("2024-01-01T01:00:00"), 1.0),
+          (ts("2024-01-01T02:00:00"), 2.0),
+          (ts("2024-01-02T03:00:00"), 3.0)).toDF("time", "value"))
+        st.exportSnapshotIceberg("f", ib)
+        st.save("f", Seq((ts("2024-01-03T04:00:00"), 4.0)).toDF("time", "value"))
+        val relD1 = {
+          val l = Files.list(Paths.get(s"$root/ib/partition=2024-01-01"))
+          try "partition=2024-01-01/" + l.iterator().asScala
+            .map(_.getFileName.toString).find(_.endsWith(".parquet")).get
+          finally l.close()
+        }
+        def once(op: String)(body: => Any): Unit = {
+          val (_, opened) = CountingFs.opensDuring(s"$root/ib/metadata")(body)
+          val heads = opened.keys.filter(_.endsWith(".metadata.json"))
+          assert(heads.size === 1 && opened.values.forall(_ == 1) &&
+            opened.keys.exists(_.endsWith(".avro")), s"$op opened $opened")
+        }
+        once("syncSnapshotIceberg")(st.syncSnapshotIceberg("f", ib))
+        once("appendPositionDeletes")(
+          IcebergBridge.appendPositionDeletes(spark, ib, Seq(relD1 -> 0L)))
+        once("appendEqualityDeletes")(
+          IcebergBridge.appendEqualityDeletes(spark, ib, Seq(3.0).toDF("value"), Seq("value")))
+        once("compactDeletes")(IcebergBridge.compactDeletes(spark, ib))
+        assert(IcebergBridge.read(spark, ib).select("value").as[Double].collect().toSet ===
+          Set(2.0, 4.0))
+      }
+    }
   }
 }
